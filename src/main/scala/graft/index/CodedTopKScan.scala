@@ -10,55 +10,12 @@ import org.apache.spark.sql.types._
 import graft.functions.TopKHeap
 
 /**
- * Per-query code scoring for the packed coded-list scan: `forQuery`
- * runs once per (packed chunk, query) evaluation (LUT lookup / query
- * vector fetch), `score` runs once per code in the chunk's contiguous
- * code buffer. Both delegate to the SAME static kernels the row-path
- * expressions use (Pq.adcDistance*, Sq.l2Distance*), so distances are
- * bit-identical between the packed and row plans — the exhaustive
- * exact gates hold through either.
- */
-sealed trait CodedScorer extends Serializable {
-  def forQuery(qid: Long): AnyRef
-  def score(ctx: AnyRef, codes: Array[Byte], off: Int, width: Int): Double
-}
-
-/** ADC against the per-query LUT (FAISS IndexPQ search convention) */
-final case class PqLutScorer(luts: Map[Long, Array[Float]]) extends CodedScorer {
-  override def forQuery(qid: Long): AnyRef = luts(qid)
-  override def score(ctx: AnyRef, codes: Array[Byte], off: Int, width: Int): Double =
-    Pq.adcDistanceAt(codes, off, width, ctx.asInstanceOf[Array[Float]])
-}
-
-/** additive decode-inside-the-loop L2 (FAISS residual quantizer) */
-final case class RqScorer(
-    queries: Map[Long, Array[Float]],
-    books: Array[Array[Array[Float]]]) extends CodedScorer {
-  // task-local scratch for the additive decode (expression instances —
-  // and thus their scorers — are deserialized per task): avoids a
-  // dim-length float allocation PER CANDIDATE in the packed-scan loop
-  @transient private var scratch: Array[Float] = _
-  override def forQuery(qid: Long): AnyRef = queries(qid)
-  override def score(ctx: AnyRef, codes: Array[Byte], off: Int, width: Int): Double = {
-    if (scratch == null) scratch = new Array[Float](books(0)(0).length)
-    Rq.l2DistanceAt(codes, off, width, ctx.asInstanceOf[Array[Float]], books, scratch)
-  }
-}
-
-/** asymmetric decode-inside-the-loop L2 (FAISS ScalarQuantizer) */
-final case class SqScorer(
-    queries: Map[Long, Array[Float]], vmin: Array[Float], vdiff: Array[Float],
-    variant: Sq.Variant) extends CodedScorer {
-  override def forQuery(qid: Long): AnyRef = queries(qid)
-  override def score(ctx: AnyRef, codes: Array[Byte], off: Int, width: Int): Double =
-    Sq.l2DistanceAt(codes, off, width, ctx.asInstanceOf[Array[Float]], vmin, vdiff, variant)
-}
-
-/**
  * Packed coded-list scan: one IVF list chunk's (label, code) pairs
  * PACKED into a single array<struct<label bigint, code binary>> column,
  * scanned for one query with a bounded (distance, label) heap in a
- * primitive loop — the ADC/SQ twin of [[graft.search.ListTopKScan]].
+ * primitive loop — the coded twin of [[graft.search.ListTopKScan]]. The
+ * [[CodedScorer]] is the one the row plan's [[CodedDistance]] uses, so
+ * distances are bit-identical between the packed and row plans.
  *
  * Why: the row-per-candidate coded search joins probed codes against
  * the query batch and pays join/aggregate operator overhead per

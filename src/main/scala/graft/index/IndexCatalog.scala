@@ -50,7 +50,8 @@ object IndexCatalog {
       metric: String,
       params: Map[String, String])
 
-  /** parsed factory: [PCA<d>,] Flat | IDMap,Flat | IVF<n>[,Flat|,PQ<m>|,SQ8] | PQ<m> | SQ8 | LSH<b> | HNSW<m> */
+  /** parsed factory: [PCA<d>|OPQ<m>,] Flat | IVF<n>[_HNSW<m>][,Flat|,<codec>] | <codec> | IMI2x<n> | LSH<b> | HNSW<m>,
+    * where <codec> is PQ<m> | SQ8|SQ4|SQfp16 | RQ<m>[x8] | LSQ<m>[x8] */
   sealed trait Kind
   case object FlatKind extends Kind
   case class IvfKind(nlist: Int) extends Kind
@@ -60,22 +61,13 @@ object IndexCatalog {
     * layout and probing are IVF-identical — only assignment changes. */
   case class IvfHnswKind(nlist: Int, m: Int) extends Kind
   case class LshKind(bits: Int) extends Kind
-  /** coarseM > 0 = the coarse quantizer is an HNSW graph over the
-    * centroids (FAISS `IVF<n>_HNSW<m>,PQ<k>` / `,SQ8`): the 100 TB
-    * serving shape — nlist ≳ 1e5 needs the graph coarse AND byte codes
-    * need PQ/SQ storage. Training/codes are coarse-agnostic; only
-    * assignment and probing walk the graph. */
-  case class PqKind(m: Int, nlist: Int, coarseM: Int = 0) extends Kind
-  case class SqKind(nlist: Int, coarseM: Int = 0) extends Kind
-  /** residual quantizer (FAISS `RQ<m>[x8]`): m full-dim additive
-    * codebooks; same m-byte coded layout and search plumbing as PQ,
-    * different train/encode/distance kernels (Rq.scala) */
-  case class RqKind(m: Int, nlist: Int, coarseM: Int = 0) extends Kind
-  /** local-search additive quantizer (FAISS `LSQ<m>x8`): RQ's additive
-    * model with ICM encoding + least-squares codebook refit (Martinez
-    * et al. 2016); identical coded layout/search/save plumbing to RQ —
-    * only train/encode differ (Lsq.scala) */
-  case class LsqKind(m: Int, nlist: Int, coarseM: Int = 0) extends Kind
+  /** coded index (FAISS `[IVF<n>[_HNSW<m>],]<codec>`): vectors stored as
+    * codec codes in nlist inverted lists (nlist = 1: one list, no coarse
+    * quantizer). coarseM > 0 = the coarse quantizer is an HNSW graph over
+    * the centroids — the 100 TB serving shape, where nlist ≳ 1e5 needs
+    * the graph coarse AND byte codes need coded storage. Training and
+    * codes are coarse-agnostic; only assignment and probing walk the graph. */
+  case class CodedKind(codec: CodecSpec, nlist: Int, coarseM: Int = 0) extends Kind
   /** inverted multi-index coarse quantizer (FAISS `IMI2x<n>`): the
     * coarse space is the product of two half-dim codebooks of 2^n
     * centroids → nlist = 2^(2n) cells at assignment cost 2·2^n·(d/2);
@@ -88,6 +80,13 @@ object IndexCatalog {
   case class PcaKind(outDim: Int, inner: Kind) extends Kind
   /** learned-rotation pre-transform, e.g. "OPQ8,PQ8" (dim preserved) */
   case class OpqKind(m: Int, inner: Kind) extends Kind
+
+  /** the kind under at most one pretransform (nesting is rejected) */
+  private def unwrapped(kind: Kind): Kind = kind match {
+    case PcaKind(_, inner) => inner
+    case OpqKind(_, inner) => inner
+    case k => k
+  }
 
   def parseFactory(factory: String): Kind =
     parseParts(factory.split(",").map(_.trim)
@@ -110,45 +109,19 @@ object IndexCatalog {
         return OpqKind(spec.toInt, parseParts(parts.tail))
       case _ =>
     }
-    val pqPart = parts.find(_.startsWith("PQ")).map(_.stripPrefix("PQ").toInt)
-    val sqPart = parts.find(_.startsWith("SQ")).map(_.stripPrefix("SQ"))
-    // FAISS grammar RQ<m>x<b>: only 8-bit stages (byte codes) here —
-    // a different width would silently build a different structure
-    val rqPart = parts.find(_.startsWith("RQ")).map { p =>
-      val spec = p.stripPrefix("RQ")
-      spec.split("x", 2) match {
-        case Array(m) => m.toInt
-        case Array(m, b) =>
-          require(b == "8", s"only RQ<m>x8 (byte stages) is supported, got $p")
-          m.toInt
-      }
-    }
-    // FAISS grammar LSQ<m>x<b>: byte stages only, like RQ
-    val lsqPart = parts.find(_.startsWith("LSQ")).map { p =>
-      val spec = p.stripPrefix("LSQ")
-      spec.split("x", 2) match {
-        case Array(m) => m.toInt
-        case Array(m, b) =>
-          require(b == "8", s"only LSQ<m>x8 (byte stages) is supported, got $p")
-          m.toInt
-      }
-    }
-    sqPart.foreach { b =>
-      require(b == "8" || b == "4" || b == "fp16",
-        s"only SQ8/SQ4/SQfp16 scalar quantization is supported, got SQ$b")
-    }
+    // the fine codec token, validated by its own grammar (CodecSpec)
+    val codecs = parts.flatMap(CodecSpec.unapply)
+    require(codecs.length <= 1,
+      s"one codec per index, got ${codecs.length} in '${parts.mkString(",")}'")
+    val codec = codecs.headOption
     parts.headOption.getOrElse("Flat") match {
       case s if s.startsWith("IVF") && s.contains("_HNSW") =>
-        // FAISS grammar IVF<n>_HNSW<m>[,Flat|,PQ<k>|,SQ8]: the graph
-        // coarse composes with Flat, PQ, or SQ fine storage exactly as
+        // FAISS grammar IVF<n>_HNSW<m>[,Flat|,<codec>]: the graph coarse
+        // composes with Flat or coded fine storage exactly as
         // faiss::index_factory does (reference faiss_extension.cpp:155)
         val Array(nl, hm) = s.stripPrefix("IVF").split("_HNSW", 2)
         val cm = if (hm.isEmpty) 32 else hm.toInt
-        if (pqPart.isDefined) PqKind(pqPart.get, nl.toInt, cm)
-        else if (sqPart.isDefined) SqKind(nl.toInt, cm)
-        else if (lsqPart.isDefined) LsqKind(lsqPart.get, nl.toInt, cm)
-        else if (rqPart.isDefined) RqKind(rqPart.get, nl.toInt, cm)
-        else IvfHnswKind(nl.toInt, cm)
+        codec.map(CodedKind(_, nl.toInt, cm)).getOrElse(IvfHnswKind(nl.toInt, cm))
       case s if s.startsWith("IMI2x") =>
         // FAISS grammar IMI2x<n>[,Flat]: two half-space codebooks of
         // 2^n centroids, nlist = 2^(2n). Capped at 2x8 (65 536 cells —
@@ -158,22 +131,13 @@ object IndexCatalog {
         require(n >= 1 && n <= 8,
           s"IMI2x$n: supported range is IMI2x1..IMI2x8 (nlist = 2^(2n) <= 65536); " +
             "for larger coarse spaces use IVF<n>_HNSW<m>")
-        require(pqPart.isEmpty && sqPart.isEmpty && rqPart.isEmpty,
+        require(codec.isEmpty,
           s"IMI composes with Flat fine storage here; for coded storage at large " +
             "nlist use IVF<n>_HNSW<m>,PQ<k> / ,SQ8")
         ImiKind(n)
-      case s if s.startsWith("IVF") && pqPart.isDefined =>
-        PqKind(pqPart.get, s.stripPrefix("IVF").toInt)
-      case s if s.startsWith("IVF") && sqPart.isDefined =>
-        SqKind(s.stripPrefix("IVF").toInt)
-      case s if s.startsWith("IVF") && lsqPart.isDefined =>
-        LsqKind(lsqPart.get, s.stripPrefix("IVF").toInt)
-      case s if s.startsWith("IVF") && rqPart.isDefined =>
-        RqKind(rqPart.get, s.stripPrefix("IVF").toInt)
-      case s if s.startsWith("PQ") => PqKind(pqPart.get, 1)
-      case s if s.startsWith("LSQ") => LsqKind(lsqPart.get, 1)
-      case s if s.startsWith("SQ") => SqKind(1)
-      case s if s.startsWith("RQ") => RqKind(rqPart.get, 1)
+      case s if s.startsWith("IVF") && codec.isDefined =>
+        CodedKind(codec.get, s.stripPrefix("IVF").toInt)
+      case CodecSpec(c) => CodedKind(c, 1)
       case "Flat" => FlatKind
       case s if s.startsWith("IVF") => IvfKind(s.stripPrefix("IVF").toInt)
       case s if s.startsWith("LSH") =>
@@ -199,8 +163,9 @@ object IndexCatalog {
     var destroyed: Boolean = false // guarded by this Entry's monitor
     var pending: Option[DataFrame] = None // (label bigint, vec array<float>)
     var trained: Option[Array[Array[Float]]] = None // IVF centroids from manual_train
-    var trainedPq: Option[(Array[Array[Array[Float]]], Option[Array[Array[Float]]])] = None
-    var trainedSq: Option[(Array[Float], Array[Float], Option[Array[Array[Float]]])] = None
+    // coded kinds: (trained codec, coarse centroids when nlist > 1)
+    var trainedCodec: Option[(Codec, Option[Array[Array[Float]]])] = None
+    var imiBooks: Option[Array[Array[Array[Float]]]] = None // IMI's two half-space codebooks
     var trainedPca: Option[(Array[Float], Array[Array[Float]])] = None
     var built: Option[BuiltIndex] = None
     // (key, graph) restored by load() from a persisted coarse-graph
@@ -283,13 +248,10 @@ object IndexCatalog {
           if !Nsw.supportsMetric(mid) =>
         throw new IllegalArgumentException(
           s"HNSW supports metrics l2sq/l2/ip/cosine, got '$metric'")
-      case PqKind(_, _, _) | SqKind(_, _) | RqKind(_, _, _) | LsqKind(_, _, _) |
-          PcaKind(_, PqKind(_, _, _)) | PcaKind(_, SqKind(_, _)) |
-          PcaKind(_, RqKind(_, _, _)) | PcaKind(_, LsqKind(_, _, _)) |
-          OpqKind(_, PqKind(_, _, _)) |
-          OpqKind(_, SqKind(_, _)) if !isL2 =>
+      case CodedKind(_, _, _) | PcaKind(_, CodedKind(_, _, _)) | OpqKind(_, CodedKind(_, _, _))
+          if !isL2 =>
         throw new IllegalArgumentException(
-          s"PQ/SQ quantized search implements the FAISS L2 convention (ADC + L2 re-rank); got '$metric'")
+          s"PQ/SQ/RQ/LSQ quantized search implements the FAISS L2 convention (code distance + L2 re-rank); got '$metric'")
       case ImiKind(_) if mid == VectorMath.IP =>
         // the multi-index coarse space decomposes by L2 over the two
         // halves (the FAISS IMI convention); an IP index would assign
@@ -401,8 +363,9 @@ object IndexCatalog {
     * Same injection purpose as [[trainedCentroidsOf]]. */
   def trainedSqOf(name: String)
       : Option[(Array[Float], Array[Float], Option[Array[Array[Float]]])] =
-    entry(name).trainedSq.map { case (mn, df, cs) =>
-      (mn.clone(), df.clone(), cs.map(_.map(_.clone()))) }
+    entry(name).trainedCodec.flatMap { case (codec, cs) =>
+      codec.trainedBounds.map { case (mn, df) => (mn.clone(), df.clone(), cs.map(_.map(_.clone()))) }
+    }
 
   /** trained product/additive-quantizer state — (codebooks, coarse
     * centroids): the FAISS analog of reading `pq.centroids` off an
@@ -410,9 +373,12 @@ object IndexCatalog {
     * PQ, codebooks(stage)(code)(full-dim) for RQ/LSQ/IMI halves.
     * Same injection purpose as [[trainedCentroidsOf]]. */
   def trainedPqOf(name: String)
-      : Option[(Array[Array[Array[Float]]], Option[Array[Array[Float]]])] =
-    entry(name).trainedPq.map { case (books, cs) =>
-      (books.map(_.map(_.clone())), cs.map(_.map(_.clone()))) }
+      : Option[(Array[Array[Array[Float]]], Option[Array[Array[Float]]])] = {
+    val e = entry(name)
+    e.imiBooks.map(b => (b, Option.empty[Array[Array[Float]]]))
+      .orElse(e.trainedCodec.flatMap { case (codec, cs) => codec.trainedBooks.map((_, cs)) })
+      .map { case (books, cs) => (books.map(_.map(_.clone())), cs.map(_.map(_.clone()))) }
+  }
 
   /** the BUILT per-shard HNSW graphs (labels, levels, adjacency, entry,
     * dups), collected to the driver for injected replay oracles — the
@@ -439,11 +405,7 @@ object IndexCatalog {
     * read stays lazy (the accumulator fills when the coded layout
     * materializes), only the binding is pinned at gate time. */
   def lsqRoundsReaderOf(name: String): Option[() => Option[Int]] =
-    entry(name).built.collect {
-      case rq: RqBuilt if rq.lsqEnc => () =>
-        rq.icmRoundsAcc.map(_.value.toInt)
-          .filter(_ > 0).map(_ - 1) // encode stores rounds+1; 0 = never ran
-    }
+    entry(name).built.collect { case c: CodedBuilt => c.codec.roundsReader }.flatten
 
   /** catalog introspection: metadata of every registered index */
   def list(): Seq[IndexMeta] =
@@ -525,9 +487,7 @@ object IndexCatalog {
     e.built = e.built match {
       case Some(ivf: IvfBuilt) if ivf.centroids.nonEmpty =>
         Some(ivf.appended(normalized))
-      case Some(pq: PqBuilt) => Some(pq.appended(normalized, e.pending.get))
-      case Some(sq: SqBuilt) => Some(sq.appended(normalized, e.pending.get))
-      case Some(rq: RqBuilt) => Some(rq.appended(normalized, e.pending.get))
+      case Some(c: CodedBuilt) => Some(c.appended(normalized, e.pending.get))
       case other =>
         other.foreach(_.close())
         None
@@ -554,7 +514,6 @@ object IndexCatalog {
    * nlist rows per partition). Non-IVF kinds report one flat "list".
    */
   def stats(name: String): DataFrame = {
-    val e = entry(name)
     // unwrap pretransform wrappers: PCA/OPQ indexes must report their
     // INNER coarse structure, not a flat single list
     @scala.annotation.tailrec
@@ -567,17 +526,12 @@ object IndexCatalog {
     // not an inverted list, so it joins neither ntotal nor the skew sum
     // (matches FAISS imbalance_factor over the probe-able lists)
     val listSizes = (b match {
-      case ivf: IvfBuilt => ivf.data.where(col("list_id") >= 0)
-      case pq: PqBuilt => pq.data.where(col("list_id") >= 0)
-      case sq: SqBuilt => sq.data.where(col("list_id") >= 0)
-      case rq: RqBuilt => rq.data.where(col("list_id") >= 0)
+      case _: IvfBuilt | _: CodedBuilt => b.data.where(col("list_id") >= 0)
       case other => other.data.select(lit(0).as("list_id"), col("label"))
     }).groupBy(col("list_id")).agg(count(lit(1)).as("sz"))
     val nlist = b match {
       case ivf: IvfBuilt => math.max(ivf.centroids.length, 1)
-      case _: PqBuilt | _: RqBuilt =>
-        e.synchronized(e.trainedPq.flatMap(_._2).map(_.length).getOrElse(1))
-      case _: SqBuilt => e.synchronized(e.trainedSq.flatMap(_._3).map(_.length).getOrElse(1))
+      case c: CodedBuilt => c.centroids.map(_.length).getOrElse(1)
       case _ => 1
     }
     // square in DOUBLE: long*long overflows past ~3e9 rows — exactly the
@@ -607,56 +561,32 @@ object IndexCatalog {
     val e = entry(name)
     e.synchronized {
       if (e.destroyed) throw new NoSuchElementException(s"no index named '$name'")
-      e.built match {
+      // (folded index, its canonical (label, vec) rows)
+      val folded: Option[(BuiltIndex, DataFrame)] = e.built match {
         case Some(ivf: IvfBuilt) if ivf.hasAppends =>
           // eager localCheckpoint, not cache(): the fold must CUT lineage
           // so the per-add caches below can be released — a cache() could
           // be evicted and recompute through the (then-unpersisted)
           // zipWithIndex auto-id batches, destabilizing ids. Same
           // durability tradeoff the ingest path already accepts.
-          val folded = ivf.data.repartition(col("list_id")).localCheckpoint(true)
-          // pending fed every appended row into the built union; after the
-          // fold the canonical row set lives in `folded`, so pending can
-          // drop its per-add union tree (and the caches behind it)
-          e.pending = Some(folded.select(col("label"), col("vec")))
-          e.cachedBatches.foreach(_.unpersist(blocking = false))
-          e.cachedBatches.clear()
-          ivf.close()
-          e.built = Some(new IvfBuilt(
-            folded, ivf.meta, ivf.centroids, VectorMath.metricId(e.meta.metric),
-            coarseGraph = ivf.coarseGraph, imiBooks = ivf.imiBooks))
-        case Some(pq: PqBuilt) if pq.hasAppends =>
-          // coded fold: codes and raw vectors live in SEPARATE plans, so
-          // both checkpoint — codes re-co-partitioned by list, the raw
-          // side flattened so pending drops its per-add union tree
-          val foldedCodes = pq.data.repartition(col("list_id")).localCheckpoint(true)
-          val foldedRaw = pq.vecData.localCheckpoint(true)
-          e.pending = Some(foldedRaw.select(col("label"), col("vec")))
-          e.cachedBatches.foreach(_.unpersist(blocking = false))
-          e.cachedBatches.clear()
-          pq.close()
-          e.built = Some(new PqBuilt(
-            foldedCodes, foldedRaw, pq.meta, pq.codebooks, pq.centroids, pq.coarse))
-        case Some(sq: SqBuilt) if sq.hasAppends =>
-          val foldedCodes = sq.data.repartition(col("list_id")).localCheckpoint(true)
-          val foldedRaw = sq.vecData.localCheckpoint(true)
-          e.pending = Some(foldedRaw.select(col("label"), col("vec")))
-          e.cachedBatches.foreach(_.unpersist(blocking = false))
-          e.cachedBatches.clear()
-          sq.close()
-          e.built = Some(new SqBuilt(
-            foldedCodes, foldedRaw, sq.meta, sq.vmin, sq.vdiff, sq.centroids, sq.coarse))
-        case Some(rq: RqBuilt) if rq.hasAppends =>
-          val foldedCodes = rq.data.repartition(col("list_id")).localCheckpoint(true)
-          val foldedRaw = rq.vecData.localCheckpoint(true)
-          e.pending = Some(foldedRaw.select(col("label"), col("vec")))
-          e.cachedBatches.foreach(_.unpersist(blocking = false))
-          e.cachedBatches.clear()
-          rq.close()
-          e.built = Some(new RqBuilt(
-            foldedCodes, foldedRaw, rq.meta, rq.books, rq.centroids, rq.coarse,
-            lsqEnc = rq.lsqEnc, icmRoundsAcc = rq.icmRoundsAcc))
-        case _ => ()
+          val rows = ivf.data.repartition(col("list_id")).localCheckpoint(true)
+          Some((new IvfBuilt(
+            rows, ivf.meta, ivf.centroids, VectorMath.metricId(e.meta.metric),
+            coarseGraph = ivf.coarseGraph, imiBooks = ivf.imiBooks), rows))
+        case Some(c: CodedBuilt) if c.hasAppends =>
+          val f = c.compacted()
+          Some((f, f.raw))
+        case _ => None
+      }
+      folded.foreach { case (f, rows) =>
+        // pending fed every appended row into the built union; after the
+        // fold the canonical row set lives in `rows`, so pending can
+        // drop its per-add union tree (and the caches behind it)
+        e.pending = Some(rows.select(col("label"), col("vec")))
+        e.cachedBatches.foreach(_.unpersist(blocking = false))
+        e.cachedBatches.clear()
+        e.built.foreach(_.close())
+        e.built = Some(f)
       }
     }
   }
@@ -754,8 +684,7 @@ object IndexCatalog {
         // an empty sample trains nothing — leave untrained so build()
         // auto-trains from the real data (Some(empty) would block it)
         e.trained = if (cents.isEmpty) None else Some(cents)
-      case k @ (PqKind(_, _, _) | SqKind(_, _) | RqKind(_, _, _) | LsqKind(_, _, _) |
-          ImiKind(_)) =>
+      case k @ (CodedKind(_, _, _) | ImiKind(_)) =>
         trainPointsKind(e, k, samplePoints(sample), seed)
       case PcaKind(outDim, inner) =>
         // train the transform, then train the inner kind in the
@@ -823,41 +752,16 @@ object IndexCatalog {
       case IvfHnswKind(nlist, _) =>
         trainPointsKind(e, IvfKind(nlist), pts, seed) // same centroids; graph derives at build
       case ImiKind(nbits) =>
-        // two half-space codebooks through trainedPq's (codebooks, _)
-        // shape — persisted by the same pq_codebooks parquet, with the
-        // factory string disambiguating on rebuild (the RQ precedent)
-        e.trainedPq = Some((Imi.train(pts, 1 << nbits, seed,
-          e.meta.params.get("maxIter").map(_.toInt).getOrElse(10)), None))
-      case PqKind(m, nlist, _) =>
-        val codebooks = Pq.train(pts, m, seed)
+        e.imiBooks = Some(Imi.train(pts, 1 << nbits, seed,
+          e.meta.params.get("maxIter").map(_.toInt).getOrElse(10)))
+      case CodedKind(spec, nlist, _) =>
+        // codec before coarse k-means: the reverse order measured ~20%
+        // slower cold-JVM IVF-PQ builds
+        val codec = spec.train(pts, seed)
         val cents =
           if (nlist > 1) Some(Pq.localKMeans(pts, math.min(nlist, pts.length), seed + 999, 10))
           else None
-        e.trainedPq = Some((codebooks, cents))
-      case SqKind(nlist, _) =>
-        val (vmin, vdiff) = Sq.train(pts)
-        val cents =
-          if (nlist > 1) Some(Pq.localKMeans(pts, math.min(nlist, pts.length), seed + 999, 10))
-          else None
-        e.trainedSq = Some((vmin, vdiff, cents))
-      case RqKind(m, nlist, _) =>
-        // RQ shares trainedPq's (codebooks, coarse) shape — full-dim
-        // stage codebooks instead of subspace ones; save/load persist
-        // them through the same pq_codebooks/pq_coarse parquet, and the
-        // factory string disambiguates on rebuild
-        val books = Rq.train(pts, m, seed)
-        val cents =
-          if (nlist > 1) Some(Pq.localKMeans(pts, math.min(nlist, pts.length), seed + 999, 10))
-          else None
-        e.trainedPq = Some((books, cents))
-      case LsqKind(m, nlist, _) =>
-        // same trainedPq shape / persistence as RQ; only the trainer
-        // (ICM + least-squares refit) differs
-        val books = Lsq.train(pts, m, seed)
-        val cents =
-          if (nlist > 1) Some(Pq.localKMeans(pts, math.min(nlist, pts.length), seed + 999, 10))
-          else None
-        e.trainedPq = Some((books, cents))
+        e.trainedCodec = Some((codec, cents))
       case PcaKind(_, _) | OpqKind(_, _) =>
         throw new IllegalArgumentException("nested pretransforms are not supported")
       case _ => // Flat/LSH/HNSW need no training
@@ -943,33 +847,20 @@ object IndexCatalog {
     kind match {
       case FlatKind => new FlatBuilt(cachedLayout(Knn.widen(data)), e.meta) // widen once, before the cache
       case LshKind(bits) => LshBuilt.build(data, e.meta, bits)
-      case k @ PqKind(m, nlist, cm) =>
+      case k @ CodedKind(_, _, cm) =>
         // auto-train through the Entry (mirrors the IVF path) so save()
-        // persists the codebooks and load() never retrains from a
+        // persists the trained state and load() never retrains from a
         // partition-order-dependent sample
-        if (e.trainedPq.isEmpty) trainPointsKind(e, k, boundedSample(data), seed(e))
-        // graph coarse (IVF<n>_HNSW<m>,PQ<k>): a deterministic function
-        // of the trained coarse centroids, exactly as for IVF_HNSW,Flat —
-        // rebuilt (never persisted) on load
-        val g = if (cm > 0) e.trainedPq.flatMap(_._2).filter(_.length > 1)
+        if (e.trainedCodec.isEmpty) trainPointsKind(e, k, boundedSample(data), seed(e))
+        val (trained, cents) = e.trainedCodec.getOrElse(
+          throw new IllegalArgumentException("cannot train a coded index's quantizer on an empty index"))
+        val codec = trained.forBuild(data.sparkSession.sparkContext, e.meta.name)
+        // graph coarse (IVF<n>_HNSW<m>,<codec>): a deterministic function
+        // of the trained coarse centroids, exactly as for IVF_HNSW,Flat
+        val g = if (cm > 0) cents.filter(_.length > 1)
           .map(cs => coarseGraph(e, cs, cm, metricId)) else None
-        PqBuilt.build(data, e.meta, m, nlist, e.trainedPq, g, coarseEfOf(e.meta))
-      case k @ SqKind(nlist, cm) =>
-        if (e.trainedSq.isEmpty) trainPointsKind(e, k, boundedSample(data), seed(e))
-        val g = if (cm > 0) e.trainedSq.flatMap(_._3).filter(_.length > 1)
-          .map(cs => coarseGraph(e, cs, cm, metricId)) else None
-        SqBuilt.build(data, e.meta, nlist, e.trainedSq, g, coarseEfOf(e.meta))
-      case k @ RqKind(m, nlist, cm) =>
-        if (e.trainedPq.isEmpty) trainPointsKind(e, k, boundedSample(data), seed(e))
-        val g = if (cm > 0) e.trainedPq.flatMap(_._2).filter(_.length > 1)
-          .map(cs => coarseGraph(e, cs, cm, metricId)) else None
-        RqBuilt.build(data, e.meta, m, nlist, e.trainedPq, g, coarseEfOf(e.meta))
-      case k @ LsqKind(m, nlist, cm) =>
-        if (e.trainedPq.isEmpty) trainPointsKind(e, k, boundedSample(data), seed(e))
-        val g = if (cm > 0) e.trainedPq.flatMap(_._2).filter(_.length > 1)
-          .map(cs => coarseGraph(e, cs, cm, metricId)) else None
-        RqBuilt.build(data, e.meta, m, nlist, e.trainedPq, g, coarseEfOf(e.meta),
-          lsqEnc = true)
+        new CodedBuilt(cachedLayout(codedLayout(data, codec, cents, g, coarseEfOf(e.meta))),
+          data, e.meta, codec, cents, g)
       case HnswKind(m) => HnswBuilt.build(data, e.meta, m)
       case IvfKind(nlist) =>
         val centroids = e.trained.getOrElse {
@@ -991,8 +882,8 @@ object IndexCatalog {
         IvfBuilt.build(data, e.meta, centroids, metricId,
           Some(coarseGraph(e, centroids, m, metricId)))
       case k @ ImiKind(_) =>
-        if (e.trainedPq.isEmpty) trainPointsKind(e, k, boundedSample(data), seed(e))
-        val books = e.trainedPq.map(_._1).getOrElse(
+        if (e.imiBooks.isEmpty) trainPointsKind(e, k, boundedSample(data), seed(e))
+        val books = e.imiBooks.getOrElse(
           throw new IllegalStateException("cannot train an IMI quantizer on an empty index"))
         // the product table is the IVF-compatible coarse view (save
         // layout, stats, merge); assignment and probing use the books
@@ -1221,16 +1112,9 @@ object IndexCatalog {
     val idSet = ids.select(col(ids.columns.head).cast("long").as("label"))
     val rows = b.data.join(broadcast(idSet), Seq("label"), "left_semi")
     b match {
-      case sq: SqBuilt =>
-        rows.select(col("label"), GraftBridge.column(SqDecode(
-          GraftBridge.expression(col("code")), sq.vmin, sq.vdiff,
-          Sq.variantOf(sq.meta.factory))).as("vec"))
-      case pq: PqBuilt =>
-        rows.select(col("label"), GraftBridge.column(PqDecode(
-          GraftBridge.expression(col("code")), pq.codebooks)).as("vec"))
-      case rq: RqBuilt =>
-        rows.select(col("label"), GraftBridge.column(RqDecode(
-          GraftBridge.expression(col("code")), rq.books)).as("vec"))
+      case c: CodedBuilt =>
+        rows.select(col("label"), GraftBridge.column(CodecDecode(
+          GraftBridge.expression(col("code")), c.codec)).as("vec"))
       case _: PcaBuilt =>
         throw new UnsupportedOperationException(
           "reconstruct through a PCA/OPQ pretransform is not supported " +
@@ -1354,10 +1238,7 @@ object IndexCatalog {
     b match {
       case ivf: IvfBuilt =>
         ivf.data.write.mode("overwrite").option("compression", "zstd").partitionBy("list_id").parquet(s"$path/data")
-        import spark.implicits._
-        ivf.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-          .toSeq.toDF("centroid_id", "centroid")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+        writeCentroids(spark, ivf.centroids, s"$path/centroids")
       case lsh: LshBuilt =>
         // undo the per-band row duplication; distinct on (label, vec)
         // keeps genuinely different vectors that share a label
@@ -1368,14 +1249,10 @@ object IndexCatalog {
         // the transform re-applies deterministically on load
         e.pending.get.select(col("label"), vec.vector(col("vec")).as("vec"))
           .write.mode("overwrite").option("compression", "zstd").parquet(s"$path/data")
-      case pq: PqBuilt =>
+      case c: CodedBuilt =>
         // coded layouts hold codes only; the canonical (label, vec)
         // rows rebuild deterministically on load from the base plan
-        pq.vecData.write.mode("overwrite").option("compression", "zstd").parquet(s"$path/data")
-      case sq: SqBuilt =>
-        sq.vecData.write.mode("overwrite").option("compression", "zstd").parquet(s"$path/data")
-      case rq: RqBuilt =>
-        rq.vecData.write.mode("overwrite").option("compression", "zstd").parquet(s"$path/data")
+        c.vecData.write.mode("overwrite").option("compression", "zstd").parquet(s"$path/data")
       case other =>
         // canonical (label, vec) layout rebuilds deterministically on load
         other.data.select(col("label"), col("vec"))
@@ -1393,20 +1270,9 @@ object IndexCatalog {
           case (IvfHnswKind(_, m), Some(g)) => Some((ivf.centroids, m, g))
           case _ => None
         }
-      case pq: PqBuilt =>
-        (e.kind, pq.coarse, pq.centroids) match {
-          case (PqKind(_, _, cm), Some((g, _)), Some(cs)) if cm > 0 => Some((cs, cm, g))
-          case _ => None
-        }
-      case rq: RqBuilt =>
-        (e.kind, rq.coarse, rq.centroids) match {
-          case (RqKind(_, _, cm), Some((g, _)), Some(cs)) if cm > 0 => Some((cs, cm, g))
-          case (LsqKind(_, _, cm), Some((g, _)), Some(cs)) if cm > 0 => Some((cs, cm, g))
-          case _ => None
-        }
-      case sq: SqBuilt =>
-        (e.kind, sq.coarse, sq.centroids) match {
-          case (SqKind(_, cm), Some((g, _)), Some(cs)) if cm > 0 => Some((cs, cm, g))
+      case c: CodedBuilt =>
+        (e.kind, c.coarseGraph, c.centroids) match {
+          case (CodedKind(_, _, cm), Some(g), Some(cs)) if cm > 0 => Some((cs, cm, g))
           case _ => None
         }
       case _ => None
@@ -1423,17 +1289,13 @@ object IndexCatalog {
       Seq((key, g.entry, g.maxLevel)).toDF("key", "entry", "max_level")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse_graph_meta")
     }
-    // persist PQ training (FAISS saves trained quantizers in the index file)
-    e.trainedPq.foreach { case (codebooks, coarse) =>
-      codebooks.zipWithIndex.flatMap { case (book, sub) =>
-        book.zipWithIndex.map { case (cen, ci) => (sub, ci, cen.toSeq) }
-      }.toSeq.toDF("sub", "centroid_id", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/pq_codebooks")
-      coarse.foreach { cs =>
-        cs.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("centroid_id", "centroid")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/pq_coarse")
-      }
+    (unwrapped(e.kind), e.trainedCodec) match {
+      case (CodedKind(spec, _, _), Some((codec, coarse))) =>
+        codec.persist(spark, path)
+        coarse.foreach(writeCentroids(spark, _, s"$path/${spec.coarseDir}"))
+      case _ =>
     }
+    e.imiBooks.foreach(Codec.writeBooks(spark, _, s"$path/pq_codebooks")) // IMI shares PQ's book layout
     // persist the PCA transform and, when the built wrapper hides an
     // inner IVF, its projected-space centroids (the IvfBuilt save case
     // only fires for a top-level IVF)
@@ -1441,22 +1303,7 @@ object IndexCatalog {
       (Seq((-1, mean.toSeq)) ++ comps.zipWithIndex.map { case (c, j) => (j, c.toSeq) })
         .toDF("row_idx", "vals")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/pca")
-      e.trained.foreach { cents =>
-        cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-          .toDF("centroid_id", "centroid")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/pca_ivf_centroids")
-      }
-    }
-    // persist SQ training (bounds define the codes; re-encode on load
-    // is deterministic given the same bounds)
-    e.trainedSq.foreach { case (vmin, vdiff, coarse) =>
-      vmin.indices.map(i => (i, vmin(i), vdiff(i))).toSeq
-        .toDF("dim_idx", "vmin", "vdiff")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/sq_bounds")
-      coarse.foreach { cs =>
-        cs.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("centroid_id", "centroid")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/sq_coarse")
-      }
+      e.trained.foreach(writeCentroids(spark, _, s"$path/pca_ivf_centroids"))
     }
     // URL-encode keys/values: a raw ';' or '=' inside a param value
     // would corrupt (or crash) the k=v;k=v parse on load
@@ -1470,10 +1317,27 @@ object IndexCatalog {
   /** object-store-safe existence check: java.io.File would always say
     * "missing" for hdfs:// or s3:// paths and silently drop trained
     * codebooks on load */
-  private def pathExists(spark: SparkSession, p: String): Boolean = {
+  private[index] def pathExists(spark: SparkSession, p: String): Boolean = {
     val hp = new org.apache.hadoop.fs.Path(p)
     hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
   }
+
+  /** a centroid table (centroid_id, centroid) — the IVF, PCA-inner-IVF
+    * and coded-coarse layouts */
+  private def writeCentroids(
+      spark: SparkSession, cents: Array[Array[Float]], path: String): Unit = {
+    import spark.implicits._
+    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("centroid_id", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(path)
+  }
+
+  private def readCentroids(spark: SparkSession, path: String): Array[Array[Float]] =
+    spark.read.parquet(path).collect().sortBy(_.getInt(0)).map(_.getSeq[Float](1).toArray)
+
+  private def readCentroidsIfExists(
+      spark: SparkSession, path: String): Option[Array[Array[Float]]] =
+    Option.when(pathExists(spark, path))(readCentroids(spark, path))
 
   def load(name: String, savePath: String, spark: SparkSession): Unit = {
     val base = new org.apache.hadoop.fs.Path(savePath)
@@ -1507,8 +1371,7 @@ object IndexCatalog {
       case IvfKind(_) | IvfHnswKind(_, _) | ImiKind(_) =>
         val data = spark.read.parquet(s"$path/data")
         e.pending = Some(data.select(col("label"), col("vec")))
-        val cents = spark.read.parquet(s"$path/centroids").collect()
-          .sortBy(_.getInt(0)).map(_.getSeq[Float](1).toArray)
+        val cents = readCentroids(spark, s"$path/centroids")
         e.trained = Some(cents)
         // the coarse graph is a deterministic function of the saved
         // centroids (label-hash levels, no RNG) — restored from the
@@ -1519,19 +1382,10 @@ object IndexCatalog {
             Some(coarseGraph(e, cents, m, VectorMath.metricId(e.meta.metric)))
           case _ => None
         }
-        // IMI: restore the half books (pq_codebooks parquet, the RQ
-        // precedent) so assignment/probing keep the 2·K product path
-        val books = e.kind match {
-          case ImiKind(_) =>
-            val bs = spark.read.parquet(s"$path/pq_codebooks").collect()
-              .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-              .map { case (_, rows) =>
-                rows.sortBy(_.getInt(1)).map(_.getSeq[Float](2).toArray)
-              }.toArray
-            e.trainedPq = Some((bs, None))
-            Some(bs)
-          case _ => None
-        }
+        // IMI: restore the half books (pq_codebooks parquet) so
+        // assignment/probing keep the 2·K product path
+        if (e.kind.isInstanceOf[ImiKind])
+          e.imiBooks = Some(Codec.readBooks(spark, s"$path/pq_codebooks"))
         // rebuild from the partitioned layout without re-assigning.
         // NOT cached: the scan must stay file-backed so the static
         // probed-list filter prunes partitions on disk (a cache would
@@ -1539,21 +1393,16 @@ object IndexCatalog {
         e.built = Some(new IvfBuilt(
           data.select(col("list_id"), col("label"), col("vec")),
           e.meta, cents, VectorMath.metricId(e.meta.metric), coarseGraph = graph,
-          imiBooks = books))
+          imiBooks = e.imiBooks))
       case _ =>
         e.pending = Some(spark.read.parquet(s"$path/data").select(col("label"), col("vec")))
-        if (pathExists(spark, s"$path/pq_codebooks")) {
-          val books = spark.read.parquet(s"$path/pq_codebooks").collect()
-            .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-            .map { case (_, rows) =>
-              rows.sortBy(_.getInt(1)).map(_.getSeq[Float](2).toArray)
-            }.toArray
-          val coarse =
-            if (pathExists(spark, s"$path/pq_coarse"))
-              Some(spark.read.parquet(s"$path/pq_coarse").collect()
-                .sortBy(_.getInt(0)).map(_.getSeq[Float](1).toArray))
-            else None
-          e.trainedPq = Some((books, coarse))
+        unwrapped(e.kind) match {
+          case CodedKind(spec, _, _) =>
+            e.trainedCodec = spec.restore(spark, path)
+              .map((_, readCentroidsIfExists(spark, s"$path/${spec.coarseDir}")))
+          case ImiKind(_) => // a pretransform-wrapped IMI keeps its half books
+            e.imiBooks = CodecSpec.restoreBooks(spark, path)
+          case _ =>
         }
         if (pathExists(spark, s"$path/pca")) {
           val rows = spark.read.parquet(s"$path/pca").collect().sortBy(_.getInt(0))
@@ -1561,21 +1410,7 @@ object IndexCatalog {
           val comps = rows.filter(_.getInt(0) >= 0).sortBy(_.getInt(0))
             .map(_.getSeq[Float](1).toArray)
           e.trainedPca = Some((mean, comps))
-          if (pathExists(spark, s"$path/pca_ivf_centroids")) {
-            e.trained = Some(spark.read.parquet(s"$path/pca_ivf_centroids").collect()
-              .sortBy(_.getInt(0)).map(_.getSeq[Float](1).toArray))
-          }
-        }
-        if (pathExists(spark, s"$path/sq_bounds")) {
-          val rows = spark.read.parquet(s"$path/sq_bounds").collect().sortBy(_.getInt(0))
-          val vmin = rows.map(_.getFloat(1))
-          val vdiff = rows.map(_.getFloat(2))
-          val coarse =
-            if (pathExists(spark, s"$path/sq_coarse"))
-              Some(spark.read.parquet(s"$path/sq_coarse").collect()
-                .sortBy(_.getInt(0)).map(_.getSeq[Float](1).toArray))
-            else None
-          e.trainedSq = Some((vmin, vdiff, coarse))
+          e.trained = readCentroidsIfExists(spark, s"$path/pca_ivf_centroids")
         }
     }
     // restore the auto-id watermark persisted at save() time (the FAISS
@@ -1670,7 +1505,7 @@ object IndexCatalog {
      * folds everything into one co-partitioned cache.
      */
     private[index] def appended(newRows: DataFrame): IvfBuilt = {
-      val assign = IvfBuilt.assignCol(centroids, coarseGraph, metricId, coarseEf, imiBooks)
+      val assign = IvfBuilt.assignCol(centroids, coarseGraph, metricId, coarseEfOf(meta), imiBooks)
       val assignedNew = newRows
         .select(
           when(size(assign) > 0, element_at(assign, 1)).otherwise(lit(-1)).as("list_id"),
@@ -1679,10 +1514,6 @@ object IndexCatalog {
         if (cachedParts.isEmpty) Seq(data) else cachedParts,
         hasAppends = true, coarseGraph = coarseGraph, imiBooks = imiBooks)
     }
-
-    /** beam width for graph-coarse assignment/probing */
-    private def coarseEf: Int =
-      meta.params.get("coarseEfSearch").map(_.toInt).getOrElse(64)
 
     def search(queries: DataFrame, k: Int, params: Map[String, String]): DataFrame =
       searchRestricted(queries, k, params, identity)
@@ -1719,7 +1550,6 @@ object IndexCatalog {
     private def probedCandidates(
         queries: DataFrame, params: Map[String, String],
         restrict: DataFrame => DataFrame): DataFrame = {
-      val nprobe = params.get("nprobe").map(_.toInt).getOrElse(math.max(1, centroids.length / 8))
       // collect the (bounded, FAISS-batch-sized) queries ONCE and derive
       // probes driver-side: a single evaluation feeds both the pruning
       // filter and the join, with nothing left cached behind
@@ -1727,25 +1557,8 @@ object IndexCatalog {
       import spark.implicits._
       val qRows = collectQueryBatch(queries)
       // probe with the SAME metric vectors were assigned with (an IP
-      // index probed by L2 would look in lists its vectors never joined).
-      // Graph coarse: walk the centroid HNSW instead of the flat argmin —
-      // EXCEPT at exhaustive probe, where all lists are returned outright
-      // (a disconnected graph could otherwise silently skip a list and
-      // break the nprobe=nlist exactness contract the _exh gates pin).
-      val probeOne: Array[Float] => Seq[Int] = (coarseGraph, imiBooks) match {
-        case (Some(g), _) if nprobe < centroids.length =>
-          qv => Nsw.search(g, qv, nprobe, math.max(coarseEf, nprobe),
-            coarseMetricId(metricId)).map(_._2.toInt).toSeq
-        // IMI multi-sequence: exact ascending d1+d2 cell order at
-        // 2·K half scans — also valid at nprobe = nlist (it enumerates
-        // every cell), so no exhaustive special case is needed for the
-        // exactness contract; keep one anyway to skip the enumeration
-        case (None, Some(books)) if nprobe < centroids.length =>
-          qv => Imi.probeCells(qv, books, nprobe)
-        case (Some(_), _) | (None, Some(_)) => _ => centroids.indices
-        case (None, None) =>
-          qv => NearestCentroids.nearestIds(qv, centroids, nprobe, metricId)
-      }
+      // index probed by L2 would look in lists its vectors never joined)
+      val probeOne = coarseProbe(params, centroids, metricId, coarseGraph, coarseEfOf(meta), imiBooks)
       val byQuery = qRows.toSeq.map { case (qid, qv) => (qid, qv, probeOne(qv)) }
       val d = vec.dist(meta.metric, col("vec"), col("qvec"))
       def candidatesOf(group: Seq[(Long, Array[Float], Seq[Int])]): DataFrame = {
@@ -1822,8 +1635,7 @@ object IndexCatalog {
         centroids: Array[Array[Float]], metricId: Int,
         coarseGraph: Option[Nsw.Graph] = None,
         imiBooks: Option[Array[Array[Array[Float]]]] = None): IvfBuilt = {
-      val assign = assignCol(centroids, coarseGraph, metricId,
-        meta.params.get("coarseEfSearch").map(_.toInt).getOrElse(64), imiBooks)
+      val assign = assignCol(centroids, coarseGraph, metricId, coarseEfOf(meta), imiBooks)
       // all-NaN vectors probe nothing -> park them in list -1 (never
       // probed), instead of failing the build on element_at(empty, 1).
       // Widen first: assignment is the map stage of the list_id shuffle,
@@ -1838,25 +1650,66 @@ object IndexCatalog {
     }
   }
 
+  /** the coarse lists one query probes: the centroid-graph walk
+    * (IVF<n>_HNSW<m>), the IMI multi-sequence over the half books, or
+    * the flat argmin. Graph coarse returns every list outright at
+    * exhaustive probe: a disconnected graph could otherwise silently
+    * skip a list and break the nprobe = nlist exactness contract the
+    * _exh gates pin. The IMI multi-sequence enumerates cells in exact
+    * ascending d1+d2 order, so it is exact at nprobe = nlist anyway; the
+    * same shortcut just skips the enumeration. Shared by IVF and coded
+    * indexes (coded indexes assign and probe by L2SQ, the FAISS PQ
+    * convention). */
+  private def coarseProbe(
+      params: Map[String, String], centroids: Array[Array[Float]], metricId: Int,
+      graph: Option[Nsw.Graph], ef: Int,
+      imiBooks: Option[Array[Array[Array[Float]]]] = None): Array[Float] => Seq[Int] = {
+    val nprobe = positiveIntParam(params, "nprobe", math.max(1, centroids.length / 8))
+    (graph, imiBooks) match {
+      case (Some(g), _) if nprobe < centroids.length =>
+        qv => Nsw.search(g, qv, nprobe, math.max(ef, nprobe), coarseMetricId(metricId))
+          .map(_._2.toInt).toSeq
+      case (None, Some(books)) if nprobe < centroids.length =>
+        qv => Imi.probeCells(qv, books, nprobe)
+      case (Some(_), _) | (None, Some(_)) => _ => centroids.indices
+      case (None, None) =>
+        qv => NearestCentroids.nearestIds(qv, centroids, nprobe, metricId)
+    }
+  }
+
+  /** a search param that must be a positive integer (nprobe, refine,
+    * efSearch), or `default` when absent. FAISS rejects nprobe <= 0; a
+    * bare toInt would turn 0 into an empty result or an error naming
+    * another argument, and a non-integer into an error naming no key. */
+  private def positiveIntParam(params: Map[String, String], key: String, default: => Int): Int =
+    params.get(key) match {
+      case None => default
+      case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse(
+        throw new IllegalArgumentException(s"search param '$key' must be a positive integer, got '$v'"))
+    }
+
   /**
-   * PQ / IVF-PQ: vectors stored as m-byte codes; ADC search against
-   * per-query LUTs, then exact re-rank of the top k x refine
-   * candidates on the original vectors. L2 metric (FAISS PQ
-   * convention). At 100 TB the `vec` column for re-ranking would live
-   * in the base table and join back by label — kept inline here.
+   * Coded index (FAISS `[IVF<n>[_HNSW<m>],]PQ<m>|SQ8|SQ4|SQfp16|RQ<m>|LSQ<m>`):
+   * vectors stored as fixed-width [[Codec]] codes in inverted lists
+   * (one list 0 without a coarse quantizer). Search scores codes against
+   * per-query state — ADC tables for PQ, decode-in-loop L2 for the
+   * scalar and additive codecs — keeps the top k x refine, then re-ranks
+   * those on the original vectors. L2 metric (FAISS convention). The
+   * re-rank vectors live in the base table and join back by label; the
+   * cached layout holds codes only.
    */
-  final class PqBuilt(
+  final class CodedBuilt(
       val data: DataFrame, // (list_id int, label bigint, code binary) — codes only
       private[index] val raw: DataFrame, // the base (label, vec) plan, NOT cached here
       val meta: IndexMeta,
-      private[index] val codebooks: Array[Array[Array[Float]]],
+      private[index] val codec: Codec,
       private[index] val centroids: Option[Array[Array[Float]]],
-      private[index] val coarse: Option[(Nsw.Graph, Int)] = None, // HNSW coarse (graph, ef)
+      private[index] val coarseGraph: Option[Nsw.Graph] = None, // IVF<n>_HNSW<m> coarse
       cachedParts: Seq[DataFrame] = Nil, // union components to release on close
       private[index] val hasAppends: Boolean = false)
       extends BuiltIndex {
 
-    /** base-table (label, vec) view for exact flat scans and save() */
+    /** base-table (label, vec) view for exact flat scans, re-rank and save() */
     private[index] def vecData: DataFrame =
       raw.select(col("label").cast("long").as("label"), vec.vector(col("vec")).as("vec"))
     override def flatData: DataFrame = vecData
@@ -1866,70 +1719,179 @@ object IndexCatalog {
       if (packedCache == null) packedCache = packCoded(data)
       packedCache
     }
-
-    /** Incremental append, coded flavor (same contract as
-      * IvfBuilt.appended): encode + assign ONLY the new rows with the
-      * already-trained codebooks/centroids (graph coarse included) and
-      * union with the cached coded layout — O(batch) per micro-batch,
-      * identical to a rebuild because encode/assign are pure functions
-      * of the pinned trained state. `newRaw` is the full raw plan (old
-      * + batch) so exact re-rank sees appended vectors too. The packed
-      * chunk cache covers pre-append rows only, so it is dropped here
-      * and lazily rebuilt over the union on next search. */
-    private[index] def appended(newRows: DataFrame, newRaw: DataFrame): PqBuilt = {
-      val encode = GraftBridge.column(PqEncode(GraftBridge.expression(col("vec")), codebooks))
-      val newCoded = codedLayout(newRows, encode, centroids,
-        coarse.map(_._1), coarse.map(_._2).getOrElse(64), repartitionLists = false)
+    private def dropPacked(): Unit =
       synchronized { if (packedCache != null) { packedCache.unpersist(); packedCache = null } }
-      new PqBuilt(data.unionByName(newCoded), newRaw, meta, codebooks, centroids, coarse,
+
+    /** Incremental append (same contract as IvfBuilt.appended): encode +
+      * assign ONLY the new rows with the already-trained codec and
+      * centroids (graph coarse included) and union with the cached coded
+      * layout — O(batch) per micro-batch, identical to a rebuild because
+      * encode/assign are pure functions of the pinned trained state.
+      * `newRaw` is the full raw plan (old + batch) so exact re-rank sees
+      * appended vectors too. The packed chunk cache covers pre-append
+      * rows only, so it is dropped here and lazily rebuilt over the union
+      * on next search. */
+    private[index] def appended(newRows: DataFrame, newRaw: DataFrame): CodedBuilt = {
+      val newCoded = codedLayout(newRows, codec, centroids, coarseGraph, coarseEfOf(meta),
+        repartitionLists = false)
+      dropPacked()
+      new CodedBuilt(data.unionByName(newCoded), newRaw, meta, codec, centroids, coarseGraph,
         if (cachedParts.isEmpty) Seq(data) else cachedParts, hasAppends = true)
     }
 
-    def search(queries: DataFrame, k: Int, params: Map[String, String]): DataFrame =
-      doSearch(queries, k, params, identity, unrestricted = true)
+    /** appends folded into one materialization: codes and raw vectors
+      * live in SEPARATE plans, so both checkpoint — codes
+      * re-co-partitioned by list, the raw side flattened so pending
+      * drops its per-add union tree */
+    private[index] def compacted(): CodedBuilt =
+      new CodedBuilt(data.repartition(col("list_id")).localCheckpoint(true),
+        vecData.localCheckpoint(true), meta, codec, centroids, coarseGraph)
 
-    /** ADC + re-rank over the restricted rows only: the selector joins
-      * the candidate source (probed lists or full coded scan), keeping
-      * compression + pruning instead of a flat fallback scan. */
+    def search(queries: DataFrame, k: Int, params: Map[String, String]): DataFrame =
+      doSearch(queries, k, params, None)
+
+    /** code scoring + re-rank over the restricted rows only: the selector
+      * joins the candidate source (probed lists or full coded scan),
+      * keeping compression + pruning instead of a flat fallback scan. */
     override def searchRestricted(
         queries: DataFrame, k: Int, params: Map[String, String],
         restrict: DataFrame => DataFrame): DataFrame =
-      doSearch(queries, k, params, restrict, unrestricted = false)
+      doSearch(queries, k, params, Some(restrict))
 
+    /** probed lists (or the full coded scan) -> approximate per-code
+      * distance -> bounded k x refine heap -> exact L2 re-rank on the
+      * original vectors.
+      *
+      * Unrestricted searches scan PACKED chunk rows with
+      * [[CodedTopKScan]] instead of joining probed codes against the
+      * query batch: the row path pays join/aggregate overhead per
+      * (code, query) PAIR (~35 s of the 100x rung's 42 s IVF-PQ search at
+      * 100 queries x 2.5M probed codes), while the packed path's plan
+      * cardinality is chunk x query and the pair loop runs at memory
+      * speed. A row selector needs the row layout (chunks can't apply
+      * per-row predicates), so restricted searches take the row plan.
+      * Distances and (distance, label) tie-breaks are bit-identical (one
+      * [[CodedScorer]], same heap), so the exhaustive exact gates hold
+      * through either plan. */
     private def doSearch(
         queries: DataFrame, k: Int, params: Map[String, String],
-        restrict: DataFrame => DataFrame, unrestricted: Boolean): DataFrame = {
+        restrict: Option[DataFrame => DataFrame]): DataFrame = {
+      val spark = raw.sparkSession
+      import spark.implicits._
       val qArr = collectQueryBatch(queries)
-      val luts = qArr.map { case (qid, qv) => qid -> Pq.lutFor(qv, codebooks) }.toMap
-      val adc = GraftBridge.column(PqAdcDistance(
-        GraftBridge.expression(col("code")), GraftBridge.expression(col("qid")), luts))
-      // packed scan only for unrestricted searches: a row selector needs
-      // the row layout (chunks can't apply per-row predicates)
-      val packed =
-        if (unrestricted && packedScanEnabled(data.sparkSession))
-          Some((packedItems, PqLutScorer(luts): CodedScorer))
-        else None
-      codedSearch(restrictCoded(data, vecData, restrict), raw, queries, qArr, k, params,
-        centroids, adc, packed, coarse)
+      val scorer = codec.scorer(qArr)
+      val kk = k * positiveIntParam(params, "refine", 4)
+      // the union of probed lists across the query batch, a static IN
+      // filter on the coded scan (guaranteed partition pruning on a
+      // list-partitioned saved layout, same as IvfBuilt's probe path)
+      val probePairs = centroids.map { cents =>
+        val probeOne = coarseProbe(params, cents, VectorMath.L2SQ, coarseGraph, coarseEfOf(meta))
+        qArr.toSeq.flatMap { case (qid, qv) => probeOne(qv).map(l => (qid, l)) }
+      }
+      val cands = restrict match {
+        case None =>
+          // probes for the non-IVF case hit the single packed list 0
+          val probes = probePairs.map(_.toDF("qid", "list_id"))
+            .getOrElse(qArr.map(q => (q._1, 0)).toSeq.toDF("qid", "list_id"))
+          packedItems.join(broadcast(probes), "list_id")
+            .select(col("qid"), explode(GraftBridge.column(CodedTopKScan(
+              GraftBridge.expression(col("items")),
+              GraftBridge.expression(col("qid")), kk, scorer))).as("c"))
+            .select(col("qid"), col("c.label").as("label"), col("c.distance").as("_cd"))
+            .groupBy(col("qid"))
+            .agg(vec.topk(kk, col("_cd"), col("label"), ascending = true).as("nn"))
+            .select(col("qid"), explode(col("nn.label")).as("label"))
+        case Some(r) =>
+          val base = restrictCoded(r)
+          val candSource = (probePairs, centroids) match {
+            case (Some(pairs), Some(cents)) =>
+              val probes = pairs.toDF("qid", "list_id")
+              val lists = pairs.map(_._2).distinct
+              val pruned =
+                if (lists.size < cents.length) base.where(col("list_id").isInCollection(lists))
+                else base
+              pruned.join(broadcast(probes), "list_id")
+            case _ =>
+              base.crossJoin(broadcast(qArr.map(_._1).toSeq.toDF("qid")))
+          }
+          val codeDist = GraftBridge.column(CodedDistance(
+            GraftBridge.expression(col("code")), GraftBridge.expression(col("qid")), scorer))
+          candSource
+            .select(col("qid"), col("label"), codeDist.as("_code_dist"))
+            .groupBy(col("qid"))
+            .agg(vec.topk(kk, col("_code_dist"), col("label"), ascending = true).as("nn"))
+            .select(col("qid"), explode(col("nn.label")).as("label"))
+      }
+      // exact re-rank joins the BASE-TABLE vectors by label: the coded
+      // layout caches codes only, so the raw `vec` never rides the list
+      // shuffle or the cache. The candidate set is <= |q| x k x refine
+      // rows and broadcasts; the vector side is one pruned-column pass
+      // of the (uncached) base plan — the 100 TB shape, where re-rank
+      // vectors live in the base table, not the index.
+      val qdf = queries.select(col("qid").cast("long").as("qid"), vec.vector(col("qvec")).as("qvec"))
+      Knn.rankResults(
+        vecData
+          .join(broadcast(cands), "label")
+          .join(broadcast(qdf), "qid")
+          .select(col("qid"), col("label"), vec.l2sq(col("vec"), col("qvec")).as("_dist")),
+        k, ascending = true, padToK = params.get("pad").exists(_.toBoolean))
     }
+
+    /** Apply a selector to the codes-only layout. The coded layout
+      * carries (list_id, label, code); a predicate referencing `vec`
+      * would fail analysis against it. Try the cheap label-side restrict
+      * first; on an unresolved column, join the base-table vec back by
+      * label, filter, and drop it — the extra join is paid only by
+      * vec-referencing predicates. */
+    private def restrictCoded(restrict: DataFrame => DataFrame): DataFrame =
+      try restrict(data)
+      catch {
+        case _: org.apache.spark.sql.AnalysisException =>
+          restrict(data.join(vecData, Seq("label"))).select(data.columns.map(col): _*)
+      }
 
     override def close(): Unit = {
       data.unpersist()
       cachedParts.foreach(_.unpersist())
-      synchronized { if (packedCache != null) { packedCache.unpersist(); packedCache = null } }
+      dropPacked()
+    }
+  }
+
+  /** shared coded layout: widen -> encode -> (optional) coarse
+    * assignment with NaN rows parked in never-probed list -1 ->
+    * repartition by list. */
+  private def codedLayout(
+      data: DataFrame, codec: Codec, cents: Option[Array[Array[Float]]],
+      coarseGraph: Option[Nsw.Graph], coarseEf: Int,
+      repartitionLists: Boolean = true): DataFrame = {
+    // codes ONLY — no raw vectors. The re-rank stage joins the base
+    // table by label instead (CodedBuilt.doSearch), so the cached layout
+    // is m-byte codes (FAISS IVFPQ stores codes, not vectors): at the
+    // 100x rung (10M-row bigData) this cut the per-index cache ~8x,
+    // which was the difference between fitting and thrashing when
+    // several indexes coexist in one session
+    val encode = GraftBridge.column(CodecEncode(GraftBridge.expression(col("vec")), codec))
+    val wide = Knn.widen(data)
+    cents match {
+      case Some(cs) =>
+        // flat argmin, or (IVF_HNSW,<codec>) the graph walk — the same
+        // shared assignment column IVF uses, L2 per FAISS PQ convention
+        val assign = IvfBuilt.assignCol(cs, coarseGraph, VectorMath.L2SQ, coarseEf)
+        val assigned = wide.select(
+            when(size(assign) > 0, element_at(assign, 1)).otherwise(lit(-1)).as("list_id"),
+            col("label"), encode.as("code"))
+        // append micro-batches skip the list shuffle (IvfBuilt.appended
+        // parity): the batch is small and uncached, a per-search
+        // repartition would only add an exchange
+        if (repartitionLists) assigned.repartition(col("list_id")) else assigned
+      case None =>
+        wide.select(lit(0).as("list_id"), col("label"), encode.as("code"))
     }
   }
 
   /** max codes per packed chunk row (bounds packed-row size; smaller
     * corpora just emit fewer/smaller chunks) */
-  private[graft] val CodedPackRowSizeConf = "spark.graft.index.codedPackRowSize"
-
-  /** escape hatch: disable the packed coded scan (row-join plan) —
-    * parity between the two plans is spec-pinned */
-  private[graft] val PackedCodedScanConf = "spark.graft.index.packedCodedScan"
-
-  private def packedScanEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption(PackedCodedScanConf).forall(_.toBoolean)
+  private val PackedChunkCodes = 65536
 
   /** Pack a coded layout into (list_id, items array<struct<label,code>>)
     * chunk rows, cached on the built index — every subsequent search
@@ -1945,7 +1907,6 @@ object IndexCatalog {
   private def packCoded(coded: DataFrame): DataFrame = {
     val spark = coded.sparkSession
     import spark.implicits._
-    val maxRow = spark.conf.getOption(CodedPackRowSizeConf).map(_.toInt).getOrElse(65536)
     coded
       .where(col("code").isNotNull) // row path skips null codes in nullSafeEval
       .select(col("list_id"), col("label"), col("code"))
@@ -1967,7 +1928,7 @@ object IndexCatalog {
               }
               bufList = list
               buf += ((label, code))
-              if (pending == null && buf.length >= maxRow) {
+              if (pending == null && buf.length >= PackedChunkCodes) {
                 pending = (bufList, buf.toSeq); buf.clear()
               }
             }
@@ -2048,382 +2009,6 @@ object IndexCatalog {
       }
     }.getOrElse(MaxQueryBatchDefault)
 
-  /** shared PQ/SQ coded-search pipeline: probed lists (or full coded
-    * scan) -> approximate per-code distance -> bounded k x refine heap
-    * -> exact L2 re-rank on original vectors. PQ and SQ differ only in
-    * the code-distance expression (mirrors codedLayout on the build
-    * side). `base` is the (possibly selector-restricted) coded data;
-    * re-rank vectors come from the full layout by candidate label.
-    *
-    * When `packed` is given (unrestricted searches only), the candidate
-    * stage scans PACKED chunk rows with [[CodedTopKScan]] instead of
-    * joining probed codes against the query batch: the row path pays
-    * join/aggregate overhead per (code, query) PAIR (~35 s of the 100x
-    * rung's 42 s IVF-PQ search at 100 queries x 2.5M probed codes),
-    * while the packed path's plan cardinality is chunk x query and the
-    * pair loop runs at memory speed. Distances and (distance, label)
-    * tie-breaks are bit-identical (same static kernels, same heap), so
-    * the exhaustive exact gates hold through either plan. */
-  /** Apply a selector to a codes-only layout. The coded layout carries
-    * (list_id, label, code); a predicate referencing `vec` (which
-    * resolved when PQ/SQ layouts stored raw vectors inline, pre
-    * codes-only) would fail analysis against it. Try the cheap
-    * label-side restrict first; on an unresolved column, join the
-    * base-table vec back by label, filter, and drop it — the extra
-    * join is paid only by vec-referencing predicates. */
-  private def restrictCoded(
-      coded: DataFrame, vecView: DataFrame,
-      restrict: DataFrame => DataFrame): DataFrame =
-    try restrict(coded)
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        restrict(coded.join(vecView, Seq("label")))
-          .select(coded.columns.map(col): _*)
-    }
-
-  private def codedSearch(
-      base: DataFrame, rerankData: DataFrame, queries: DataFrame,
-      qArr: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
-      centroids: Option[Array[Array[Float]]], codeDist: Column,
-      packed: Option[(DataFrame, CodedScorer)] = None,
-      coarse: Option[(Nsw.Graph, Int)] = None): DataFrame = {
-    val spark = rerankData.sparkSession
-    import spark.implicits._
-    val refine = params.get("refine").map(_.toInt).getOrElse(4)
-    // the union of probed lists across the query batch, a static IN
-    // filter on the coded scan (guaranteed partition pruning on a
-    // list-partitioned saved layout, same as IvfBuilt's probe path)
-    val probePairs = centroids.map { cents =>
-      val nprobe = params.get("nprobe").map(_.toInt).getOrElse(math.max(1, cents.length / 8))
-      // coarse probing is L2 by FAISS convention (assignment uses L2SQ
-      // too). Graph coarse: walk the centroid HNSW — EXCEPT at
-      // exhaustive probe, where all lists are returned outright so a
-      // disconnected graph can't break the nprobe=nlist exactness
-      // contract (same rule as IvfBuilt.probedCandidates)
-      val probeOne: Array[Float] => Seq[Int] = coarse match {
-        case Some((g, ef)) if nprobe < cents.length =>
-          qv => Nsw.search(g, qv, nprobe, math.max(ef, nprobe), VectorMath.L2SQ)
-            .map(_._2.toInt).toSeq
-        case Some(_) => _ => cents.indices
-        case None =>
-          qv => NearestCentroids.nearestIds(qv, cents, nprobe, VectorMath.L2SQ)
-      }
-      qArr.toSeq.flatMap { case (qid, qv) => probeOne(qv).map(l => (qid, l)) }
-    }
-    val cands = packed match {
-      case Some((packedDf, scorer)) =>
-        // probes for the non-IVF case hit the single packed list 0
-        val probes = probePairs.map(_.toDF("qid", "list_id"))
-          .getOrElse(qArr.map(q => (q._1, 0)).toSeq.toDF("qid", "list_id"))
-        val kk = k * refine
-        packedDf.join(broadcast(probes), "list_id")
-          .select(col("qid"), explode(GraftBridge.column(CodedTopKScan(
-            GraftBridge.expression(col("items")),
-            GraftBridge.expression(col("qid")), kk, scorer))).as("c"))
-          .select(col("qid"), col("c.label").as("label"), col("c.distance").as("_cd"))
-          .groupBy(col("qid"))
-          .agg(vec.topk(kk, col("_cd"), col("label"), ascending = true).as("nn"))
-          .select(col("qid"), explode(col("nn.label")).as("label"))
-      case None =>
-        val candSource = (probePairs, centroids) match {
-          case (Some(pairs), Some(cents)) =>
-            val probes = pairs.toDF("qid", "list_id")
-            val lists = pairs.map(_._2).distinct
-            val pruned =
-              if (lists.size < cents.length) base.where(col("list_id").isInCollection(lists))
-              else base
-            pruned.join(broadcast(probes), "list_id")
-          case _ =>
-            base.crossJoin(broadcast(qArr.map(_._1).toSeq.toDF("qid")))
-        }
-        candSource
-          .select(col("qid"), col("label"), codeDist.as("_code_dist"))
-          .groupBy(col("qid"))
-          .agg(vec.topk(k * refine, col("_code_dist"), col("label"), ascending = true).as("nn"))
-          .select(col("qid"), explode(col("nn.label")).as("label"))
-    }
-    // exact re-rank on original vectors: lookup restricted to probed
-    // lists, and the bounded candidate set (<= |q| x k x refine rows)
-    // broadcast so the corpus-side vectors never shuffle
-    // exact re-rank joins the BASE-TABLE vectors by label: the coded
-    // layout caches codes only, so the raw `vec` never rides the list
-    // shuffle or the cache. The candidate set is <= |q| x k x refine
-    // rows and broadcasts; the vector side is one pruned-column pass
-    // of the (uncached) base plan — the 100 TB shape, where re-rank
-    // vectors live in the base table, not the index.
-    val rerankSrc = rerankData.select(col("label").cast("long").as("label"),
-      vec.vector(col("vec")).as("vec"))
-    val qdf = queries.select(col("qid").cast("long").as("qid"), vec.vector(col("qvec")).as("qvec"))
-    Knn.rankResults(
-      rerankSrc
-        .join(broadcast(cands), "label")
-        .join(broadcast(qdf), "qid")
-        .select(col("qid"), col("label"), vec.l2sq(col("vec"), col("qvec")).as("_dist")),
-      k, ascending = true, padToK = params.get("pad").exists(_.toBoolean))
-  }
-
-  /** shared quantized-index layout: widen -> encode -> (optional) coarse
-    * assignment with NaN rows parked in never-probed list -1 ->
-    * repartition by list. PQ and SQ differ only in the encode column. */
-  private def codedLayout(
-      data: DataFrame, encode: Column, cents: Option[Array[Array[Float]]],
-      coarseGraph: Option[Nsw.Graph] = None, coarseEf: Int = 64,
-      repartitionLists: Boolean = true): DataFrame = {
-    // codes ONLY — no raw vectors. The re-rank stage joins the base
-    // table by label instead (codedSearch), so the cached layout is
-    // m-byte codes (FAISS IVFPQ stores codes, not vectors): at the
-    // 100x rung (10M-row bigData) this cut the per-index cache ~8x,
-    // which was the difference between fitting and thrashing when
-    // several indexes coexist in one session
-    val wide = Knn.widen(data)
-    cents match {
-      case Some(cs) =>
-        // flat argmin, or (IVF_HNSW,PQ/SQ) the graph walk — the same
-        // shared assignment column IVF uses, L2 per FAISS PQ convention
-        val assign = IvfBuilt.assignCol(cs, coarseGraph, VectorMath.L2SQ, coarseEf)
-        val assigned = wide.select(
-            when(size(assign) > 0, element_at(assign, 1)).otherwise(lit(-1)).as("list_id"),
-            col("label"), encode.as("code"))
-        // append micro-batches skip the list shuffle (IvfBuilt.appended
-        // parity): the batch is small and uncached, a per-search
-        // repartition would only add an exchange
-        if (repartitionLists) assigned.repartition(col("list_id")) else assigned
-      case None =>
-        wide.select(lit(0).as("list_id"), col("label"), encode.as("code"))
-    }
-  }
-
-  object PqBuilt {
-    def build(
-        data: DataFrame, meta: IndexMeta, m: Int, nlist: Int,
-        pretrained: Option[(Array[Array[Array[Float]]], Option[Array[Array[Float]]])] = None,
-        coarseGraph: Option[Nsw.Graph] = None,
-        coarseEf: Int = 64): PqBuilt = {
-      val seed = IndexCatalog.seedOf(meta.params)
-      val (codebooks, cents) = pretrained.getOrElse {
-        // bounded auto-train sample, matching boundedSample: ~64 points
-        // per k=256 sub-centroid is plenty for a quantizer (FAISS's own
-        // guidance is ~39x k), and the collect stays ~4 MB at dim 64
-        val sample = data.select(col("vec")).limit(16384).collect()
-          .map(_.getSeq[Float](0).toArray)
-        (Pq.train(sample, m, seed),
-          if (nlist > 1) Some(Pq.localKMeans(sample, math.min(nlist, sample.length), seed + 999, 10))
-          else None)
-      }
-      val encode = GraftBridge.column(PqEncode(GraftBridge.expression(col("vec")), codebooks))
-      new PqBuilt(cachedLayout(codedLayout(data, encode, cents, coarseGraph, coarseEf)),
-        data, meta, codebooks, cents, coarseGraph.map(g => (g, coarseEf)))
-    }
-  }
-
-  /**
-   * RQ / IVF-RQ (FAISS `RQ<m>x8` residual quantizer): same m-byte
-   * coded layout, probing, packed scan, save/load and incremental
-   * append as PqBuilt — only the train/encode/distance kernels differ
-   * (additive full-dim stages, decode-in-loop asymmetric L2; Rq.scala).
-   */
-  final class RqBuilt(
-      val data: DataFrame, // (list_id int, label bigint, code binary) — codes only
-      private[index] val raw: DataFrame, // the base (label, vec) plan, NOT cached here
-      val meta: IndexMeta,
-      private[index] val books: Array[Array[Array[Float]]],
-      private[index] val centroids: Option[Array[Array[Float]]],
-      private[index] val coarse: Option[(Nsw.Graph, Int)] = None,
-      cachedParts: Seq[DataFrame] = Nil,
-      private[index] val hasAppends: Boolean = false,
-      // LSQ<m>: same additive layout/search, ICM encoder (Lsq.scala)
-      private[index] val lsqEnc: Boolean = false,
-      // observed max effective ICM rounds over every encoded vector
-      // (fills when the coded layout materializes; replay-oracle input)
-      private[index] val icmRoundsAcc: Option[MaxAccumulator] = None)
-      extends BuiltIndex {
-
-    /** base-table (label, vec) view for exact flat scans and save() */
-    private[index] def vecData: DataFrame =
-      raw.select(col("label").cast("long").as("label"), vec.vector(col("vec")).as("vec"))
-    override def flatData: DataFrame = vecData
-
-    @transient private var packedCache: DataFrame = _
-    private def packedItems: DataFrame = synchronized {
-      if (packedCache == null) packedCache = packCoded(data)
-      packedCache
-    }
-
-    /** coded incremental append — see [[PqBuilt.appended]] */
-    private[index] def appended(newRows: DataFrame, newRaw: DataFrame): RqBuilt = {
-      val encode = GraftBridge.column(
-        if (lsqEnc) LsqEncode(GraftBridge.expression(col("vec")), books, icmRoundsAcc.orNull)
-        else RqEncode(GraftBridge.expression(col("vec")), books))
-      val newCoded = codedLayout(newRows, encode, centroids,
-        coarse.map(_._1), coarse.map(_._2).getOrElse(64), repartitionLists = false)
-      synchronized { if (packedCache != null) { packedCache.unpersist(); packedCache = null } }
-      new RqBuilt(data.unionByName(newCoded), newRaw, meta, books, centroids, coarse,
-        if (cachedParts.isEmpty) Seq(data) else cachedParts, hasAppends = true,
-        lsqEnc = lsqEnc, icmRoundsAcc = icmRoundsAcc)
-    }
-
-    def search(queries: DataFrame, k: Int, params: Map[String, String]): DataFrame =
-      doSearch(queries, k, params, identity, unrestricted = true)
-
-    override def searchRestricted(
-        queries: DataFrame, k: Int, params: Map[String, String],
-        restrict: DataFrame => DataFrame): DataFrame =
-      doSearch(queries, k, params, restrict, unrestricted = false)
-
-    private def doSearch(
-        queries: DataFrame, k: Int, params: Map[String, String],
-        restrict: DataFrame => DataFrame, unrestricted: Boolean): DataFrame = {
-      val qArr = collectQueryBatch(queries)
-      val rqd = GraftBridge.column(RqL2Distance(
-        GraftBridge.expression(col("code")), GraftBridge.expression(col("qid")),
-        qArr.toMap, books))
-      val packed =
-        if (unrestricted && packedScanEnabled(data.sparkSession))
-          Some((packedItems, RqScorer(qArr.toMap, books): CodedScorer))
-        else None
-      codedSearch(restrictCoded(data, vecData, restrict), raw, queries, qArr, k, params,
-        centroids, rqd, packed, coarse)
-    }
-
-    override def close(): Unit = {
-      data.unpersist()
-      cachedParts.foreach(_.unpersist())
-      synchronized { if (packedCache != null) { packedCache.unpersist(); packedCache = null } }
-    }
-  }
-
-  object RqBuilt {
-    def build(
-        data: DataFrame, meta: IndexMeta, m: Int, nlist: Int,
-        pretrained: Option[(Array[Array[Array[Float]]], Option[Array[Array[Float]]])] = None,
-        coarseGraph: Option[Nsw.Graph] = None,
-        coarseEf: Int = 64,
-        lsqEnc: Boolean = false): RqBuilt = {
-      val seed = IndexCatalog.seedOf(meta.params)
-      val (books, cents) = pretrained.getOrElse {
-        val sample = data.select(col("vec")).limit(16384).collect()
-          .map(_.getSeq[Float](0).toArray)
-        (if (lsqEnc) Lsq.train(sample, m, seed) else Rq.train(sample, m, seed),
-          if (nlist > 1) Some(Pq.localKMeans(sample, math.min(nlist, sample.length), seed + 999, 10))
-          else None)
-      }
-      val roundsAcc =
-        if (lsqEnc) {
-          val a = new MaxAccumulator
-          data.sparkSession.sparkContext.register(a, s"lsq_icm_rounds_${meta.name}")
-          Some(a)
-        } else None
-      val encode = GraftBridge.column(
-        if (lsqEnc) LsqEncode(GraftBridge.expression(col("vec")), books, roundsAcc.orNull)
-        else RqEncode(GraftBridge.expression(col("vec")), books))
-      new RqBuilt(cachedLayout(codedLayout(data, encode, cents, coarseGraph, coarseEf)),
-        data, meta, books, cents, coarseGraph.map(g => (g, coarseEf)), lsqEnc = lsqEnc,
-        icmRoundsAcc = roundsAcc)
-    }
-  }
-
-  /**
-   * SQ8 / SQ4 / SQfp16 (+ IVF- prefixes): vectors stored as fixed-width
-   * per-dim codes — uint8 against trained [min, max] bounds (4x
-   * compression), packed 4-bit nibbles (8x), or raw IEEE halves (2x,
-   * training-independent) — the FAISS ScalarQuantizer family;
-   * asymmetric search decodes inside the fused distance loop, then
-   * exact re-rank of the top k x refine candidates. Same
-   * candidate-source shape as PqBuilt (probed lists or full scan).
-   * The variant is carried by the factory string, so save/load and
-   * auto-train persistence are variant-agnostic.
-   */
-  final class SqBuilt(
-      val data: DataFrame, // (list_id int, label bigint, code binary) — codes only
-      private[index] val raw: DataFrame, // the base (label, vec) plan, NOT cached here
-      val meta: IndexMeta,
-      val vmin: Array[Float],
-      val vdiff: Array[Float],
-      private[index] val centroids: Option[Array[Array[Float]]],
-      private[index] val coarse: Option[(Nsw.Graph, Int)] = None, // HNSW coarse (graph, ef)
-      cachedParts: Seq[DataFrame] = Nil, // union components to release on close
-      private[index] val hasAppends: Boolean = false)
-      extends BuiltIndex {
-
-    /** base-table (label, vec) view for exact flat scans and save() */
-    private[index] def vecData: DataFrame =
-      raw.select(col("label").cast("long").as("label"), vec.vector(col("vec")).as("vec"))
-    override def flatData: DataFrame = vecData
-
-    @transient private var packedCache: DataFrame = _
-    private def packedItems: DataFrame = synchronized {
-      if (packedCache == null) packedCache = packCoded(data)
-      packedCache
-    }
-
-    /** coded incremental append — see [[PqBuilt.appended]] */
-    private[index] def appended(newRows: DataFrame, newRaw: DataFrame): SqBuilt = {
-      val encode = GraftBridge.column(SqEncode(
-        GraftBridge.expression(col("vec")), vmin, vdiff, Sq.variantOf(meta.factory)))
-      val newCoded = codedLayout(newRows, encode, centroids,
-        coarse.map(_._1), coarse.map(_._2).getOrElse(64), repartitionLists = false)
-      synchronized { if (packedCache != null) { packedCache.unpersist(); packedCache = null } }
-      new SqBuilt(data.unionByName(newCoded), newRaw, meta, vmin, vdiff, centroids, coarse,
-        if (cachedParts.isEmpty) Seq(data) else cachedParts, hasAppends = true)
-    }
-
-    def search(queries: DataFrame, k: Int, params: Map[String, String]): DataFrame =
-      doSearch(queries, k, params, identity, unrestricted = true)
-
-    /** same selector-inside-index shape as PqBuilt: restriction joins
-      * the coded candidate source, decode + re-rank unchanged */
-    override def searchRestricted(
-        queries: DataFrame, k: Int, params: Map[String, String],
-        restrict: DataFrame => DataFrame): DataFrame =
-      doSearch(queries, k, params, restrict, unrestricted = false)
-
-    private def doSearch(
-        queries: DataFrame, k: Int, params: Map[String, String],
-        restrict: DataFrame => DataFrame, unrestricted: Boolean): DataFrame = {
-      val qArr = collectQueryBatch(queries)
-      val variant = Sq.variantOf(meta.factory)
-      val sqd = GraftBridge.column(SqL2Distance(
-        GraftBridge.expression(col("code")), GraftBridge.expression(col("qid")),
-        qArr.toMap, vmin, vdiff, variant))
-      val packed =
-        if (unrestricted && packedScanEnabled(data.sparkSession))
-          Some((packedItems, SqScorer(qArr.toMap, vmin, vdiff, variant): CodedScorer))
-        else None
-      codedSearch(restrictCoded(data, vecData, restrict), raw, queries, qArr, k, params,
-        centroids, sqd, packed, coarse)
-    }
-
-    override def close(): Unit = {
-      data.unpersist()
-      cachedParts.foreach(_.unpersist())
-      synchronized { if (packedCache != null) { packedCache.unpersist(); packedCache = null } }
-    }
-  }
-
-  object SqBuilt {
-    def build(
-        data: DataFrame, meta: IndexMeta, nlist: Int,
-        pretrained: Option[(Array[Float], Array[Float], Option[Array[Array[Float]]])] = None,
-        coarseGraph: Option[Nsw.Graph] = None,
-        coarseEf: Int = 64): SqBuilt = {
-      val seed = IndexCatalog.seedOf(meta.params)
-      val (vmin, vdiff, cents) = pretrained.getOrElse {
-        // bounded auto-train sample (see PqBuilt.build): per-dim [min,max]
-        // bounds and a small coarse quantizer don't need more
-        val sample = data.select(col("vec")).limit(16384).collect()
-          .map(_.getSeq[Float](0).toArray)
-        val (mn, df) = Sq.train(sample)
-        (mn, df,
-          if (nlist > 1) Some(Pq.localKMeans(sample, math.min(nlist, sample.length), seed + 999, 10))
-          else None)
-      }
-      val encode = GraftBridge.column(SqEncode(
-        GraftBridge.expression(col("vec")), vmin, vdiff, Sq.variantOf(meta.factory)))
-      new SqBuilt(cachedLayout(codedLayout(data, encode, cents, coarseGraph, coarseEf)),
-        data, meta, vmin, vdiff, cents, coarseGraph.map(g => (g, coarseEf)))
-    }
-  }
-
   /**
    * Sharded HNSW: each partition builds an independent NSW graph over
    * its vectors (RDD of graphs, cached as live objects); a search runs
@@ -2450,7 +2035,7 @@ object IndexCatalog {
     def search(queries: DataFrame, k: Int, params: Map[String, String]): DataFrame = {
       val spark = data.sparkSession
       import spark.implicits._
-      val efSearch = params.get("efSearch").map(_.toInt).getOrElse(math.max(2 * k, 64))
+      val efSearch = positiveIntParam(params, "efSearch", math.max(2 * k, 64))
       val metricId = VectorMath.metricId(meta.metric)
       val qArr = collectQueryBatch(queries)
       val qB = spark.sparkContext.broadcast(qArr)
@@ -2491,7 +2076,7 @@ object IndexCatalog {
       else {
         val spark = data.sparkSession
         import spark.implicits._
-        val efSearch = params.get("efSearch").map(_.toInt).getOrElse(math.max(2 * k, 64))
+        val efSearch = positiveIntParam(params, "efSearch", math.max(2 * k, 64))
         val metricId = VectorMath.metricId(meta.metric)
         val qArr = collectQueryBatch(queries)
         val qB = spark.sparkContext.broadcast(qArr)

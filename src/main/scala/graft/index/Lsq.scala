@@ -1,11 +1,5 @@
 package graft.index
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
-
 /**
  * Local-search additive quantizer — the FAISS `LSQ<m>x8` factory
  * family (Martinez, Clement, Hoos & Little 2016, "Revisiting additive
@@ -32,7 +26,8 @@ import org.apache.spark.sql.types._
  * visits stages in fixed order with ties to the lowest code, and the
  * LS solve is a fixed-order Cholesky. Search-side plumbing (coded
  * layout, packed scan, save/load via pq_codebooks, incremental
- * append) is RqBuilt's, shared verbatim — only train/encode differ.
+ * append) is CodedBuilt's, shared with every codec; LsqCodec differs
+ * from RqCodec only in train/encode.
  */
 object Lsq {
 
@@ -320,36 +315,4 @@ class MaxAccumulator extends org.apache.spark.util.AccumulatorV2[Long, Long] {
   override def merge(other: org.apache.spark.util.AccumulatorV2[Long, Long]): Unit =
     add(other.value)
   override def value: Long = cur.get
-}
-
-/** ICM encode of an array<float> vector to its m-byte LSQ code —
-  * RqEncode's shape with the local-search encoder. `roundsAcc` (nullable)
-  * observes the max effective ICM rounds for the replay oracle. */
-case class LsqEncode(
-    child: Expression, books: Array[Array[Array[Float]]],
-    roundsAcc: MaxAccumulator = null)
-    extends UnaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "lsq_encode"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"lsq_encode needs array<float>, got ${t.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
-    val v = new Array[Float](a.numElements())
-    var i = 0
-    while (i < v.length) { v(i) = a.getFloat(i); i += 1 }
-    val (code, rounds) = Lsq.encodeArrRounds(v, books)
-    // +1 so the accumulator's zero-state distinguishes "never ran" from
-    // a legitimate all-zero-rounds corpus (greedy init at the fixpoint)
-    if (roundsAcc != null) roundsAcc.add(rounds.toLong + 1L)
-    code
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

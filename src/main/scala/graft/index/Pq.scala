@@ -1,10 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
 import graft.functions.Hash64
 
@@ -181,11 +177,9 @@ object Pq {
     lut
   }
 
-  def adcDistance(code: Array[Byte], lut: Array[Float]): Double =
-    adcDistanceAt(code, 0, code.length, lut)
-
-  /** [[adcDistance]] over a slice of a packed code buffer — identical
-    * accumulation order, so distances are bit-equal to the row path */
+  /** ADC distance of the code at code[off, off + width): the sum of
+    * per-subspace LUT entries in subspace order (the row plan passes
+    * off = 0, the packed scan a chunk slice — bit-equal either way) */
   def adcDistanceAt(code: Array[Byte], off: Int, width: Int, lut: Array[Float]): Double = {
     var d = 0.0
     var sub = 0
@@ -195,68 +189,4 @@ object Pq {
     }
     d
   }
-}
-
-/** encode an array<float> vector to its m-byte PQ code */
-case class PqEncode(child: Expression, codebooks: Array[Array[Array[Float]]])
-    extends UnaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "pq_encode"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"pq_encode needs array<float>, got ${t.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    Pq.encodeOne(input.asInstanceOf[ArrayData], codebooks)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
- * ADC distance: (code binary, qid bigint) -> approximate L2^2 using the
- * plan-embedded per-query LUTs (queries are a bounded broadcast batch by
- * the search contract, same as a FAISS query batch).
- */
-case class PqAdcDistance(left: Expression, right: Expression, luts: Map[Long, Array[Float]])
-    extends BinaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "pq_adc_distance"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"pq_adc_distance needs (binary, bigint), got (${l.catalogString}, ${r.catalogString})")
-    }
-
-  override protected def nullSafeEval(code: Any, qid: Any): Any =
-    Pq.adcDistance(code.asInstanceOf[Array[Byte]], luts(qid.asInstanceOf[Long]))
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** decode PQ codes back to the stored approximation (reconstruct) */
-case class PqDecode(child: Expression, codebooks: Array[Array[Array[Float]]])
-    extends UnaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def prettyName: String = "pq_decode"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"pq_decode needs binary, got ${t.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Pq.decodeOne(input.asInstanceOf[Array[Byte]], codebooks))
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -1,10 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
 /**
  * Residual (additive) quantization — the FAISS `RQ<m>x8` factory
@@ -118,12 +114,10 @@ object Rq {
     out
   }
 
-  def l2Distance(code: Array[Byte], q: Array[Float], books: Array[Array[Array[Float]]]): Double =
-    l2DistanceAt(code, 0, code.length, q, books)
-
-  /** [[l2Distance]] over a slice of a packed code buffer — identical
-    * decode + accumulation order, so distances are bit-equal between
-    * the row and packed plans */
+  /** asymmetric L2^2 of the additive approximation of the code at
+    * code[off, off + width) — identical decode + accumulation order for
+    * every slice, so distances are bit-equal between the row and packed
+    * plans */
   def l2DistanceAt(
       code: Array[Byte], off: Int, width: Int, q: Array[Float],
       books: Array[Array[Array[Float]]]): Double =
@@ -140,8 +134,8 @@ object Rq {
   def l2DistanceAt(
       code: Array[Byte], off: Int, width: Int, q: Array[Float],
       books: Array[Array[Array[Float]]], scratch: Array[Float]): Double = {
-    // opt-in SIMD twin (graft.functions.SimdKernels.rqL2, shared by the
-    // LSQ scorers since LSQ rides RqBuilt): the additive decode runs
+    // opt-in SIMD twin (graft.functions.SimdKernels.rqL2, shared by LSQ,
+    // whose codes decode additively like RQ's): the additive decode runs
     // per-lane in stage order — decoded values BIT-equal to this scratch
     // loop — and only the distance sum is lane-reassociated; registers
     // replace the scratch entirely. OFF by default, same gate as distArr.
@@ -161,75 +155,4 @@ object Rq {
     while (i < dim) { val t = q(i).toDouble - scratch(i); d += t * t; i += 1 }
     d
   }
-}
-
-/** encode an array<float> vector to its m-byte RQ code */
-case class RqEncode(child: Expression, books: Array[Array[Array[Float]]])
-    extends UnaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "rq_encode"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"rq_encode needs array<float>, got ${t.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    Rq.encodeOne(input.asInstanceOf[ArrayData], books)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** asymmetric decode-in-loop L2: (code binary, qid bigint) -> L2^2 of
-  * the additive approximation against the plan-embedded query batch */
-case class RqL2Distance(
-    left: Expression, right: Expression,
-    queries: Map[Long, Array[Float]], books: Array[Array[Array[Float]]])
-    extends BinaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "rq_l2_distance"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"rq_l2_distance needs (binary, bigint), got (${l.catalogString}, ${r.catalogString})")
-    }
-
-  // task-local decode scratch — same per-candidate-allocation argument
-  // as RqScorer (expressions are deserialized per task, eval is
-  // single-threaded within one)
-  @transient private var scratch: Array[Float] = _
-
-  override protected def nullSafeEval(code: Any, qid: Any): Any = {
-    if (scratch == null) scratch = new Array[Float](books(0)(0).length)
-    val c = code.asInstanceOf[Array[Byte]]
-    Rq.l2DistanceAt(c, 0, c.length, queries(qid.asInstanceOf[Long]), books, scratch)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** decode RQ codes back to the stored approximation (reconstruct) */
-case class RqDecode(child: Expression, books: Array[Array[Array[Float]]])
-    extends UnaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def prettyName: String = "rq_decode"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"rq_decode needs binary, got ${t.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Rq.decodeOne(input.asInstanceOf[Array[Byte]], books))
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

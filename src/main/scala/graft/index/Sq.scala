@@ -1,10 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
 /**
  * Scalar quantization (FAISS `SQ8`/`SQ4`/`SQfp16`, cf. duckdb-faiss-ext
@@ -23,13 +19,6 @@ object Sq {
   case object V8 extends Variant("8")      // 1 byte/dim, 255 levels
   case object V4 extends Variant("4")      // 2 dims/byte, 15 levels
   case object Fp16 extends Variant("fp16") // 2 bytes/dim, IEEE half
-
-  def variantOf(factory: String): Variant =
-    factory.split(",").map(_.trim).find(_.startsWith("SQ")).map(_.stripPrefix("SQ")) match {
-      case Some("4") => V4
-      case Some("fp16") => Fp16
-      case _ => V8
-    }
 
   // ---- IEEE 754 half-precision codec (JDK 17 has no Float.float16*) ----
 
@@ -167,15 +156,10 @@ object Sq {
     out
   }
 
-  /** asymmetric L2^2: query float vs decoded code, fused loop */
-  def l2Distance(
-      code: Array[Byte], q: Array[Float], vmin: Array[Float], vdiff: Array[Float],
-      variant: Variant = V8): Double =
-    l2DistanceAt(code, 0, code.length, q, vmin, vdiff, variant)
-
-  /** [[l2Distance]] over a slice of a packed code buffer — the packed
-    * coded-list scan reads codes at (offset, width) of one big byte
-    * array; identical accumulation order, so distances are bit-equal */
+  /** asymmetric L2^2 of the code at code[off, off + width): query
+    * float vs decoded code in one fused loop. The packed coded-list scan
+    * passes a slice of one big byte array, the row plan off = 0 — the
+    * same accumulation order, so distances are bit-equal */
   def l2DistanceAt(
       code: Array[Byte], off: Int, width: Int, q: Array[Float],
       vmin: Array[Float], vdiff: Array[Float], variant: Variant): Double = {
@@ -215,73 +199,4 @@ object Sq {
     }
     d
   }
-}
-
-/** encode an array<float> vector to per-dim codes (variant-width) */
-case class SqEncode(
-    child: Expression, vmin: Array[Float], vdiff: Array[Float],
-    variant: Sq.Variant = Sq.V8)
-    extends UnaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "sq_encode"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"sq_encode needs array<float>, got ${t.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    Sq.encodeOne(input.asInstanceOf[ArrayData], vmin, vdiff, variant)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** asymmetric SQ distance: (code binary, qid bigint) -> L2^2 against
-  * the plan-embedded query batch (same contract as PqAdcDistance) */
-case class SqL2Distance(
-    left: Expression, right: Expression,
-    queries: Map[Long, Array[Float]], vmin: Array[Float], vdiff: Array[Float],
-    variant: Sq.Variant = Sq.V8)
-    extends BinaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "sq_l2_distance"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"sq_l2_distance needs (binary, bigint), got (${l.catalogString}, ${r.catalogString})")
-    }
-
-  override protected def nullSafeEval(code: Any, qid: Any): Any =
-    Sq.l2Distance(code.asInstanceOf[Array[Byte]], queries(qid.asInstanceOf[Long]),
-      vmin, vdiff, variant)
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** decode per-dim codes back to the stored approximation (reconstruct) */
-case class SqDecode(
-    child: Expression, vmin: Array[Float], vdiff: Array[Float],
-    variant: Sq.Variant = Sq.V8)
-    extends UnaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def prettyName: String = "sq_decode"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"sq_decode needs binary, got ${t.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Sq.decodeOne(input.asInstanceOf[Array[Byte]], vmin, vdiff, variant))
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -278,9 +278,30 @@ class IndexCatalogSpec extends SparkSpec {
       === labelsOf(Knn.searchFlat(grid, qs, 4, "l2sq")))
   }
 
+  test("pretransform-wrapped IMI save/load restores its half books, results identical") {
+    for ((nm, fac) <- Seq(("t_pca_imi", "IDMap,PCA2,IMI2x1"), ("t_opq_imi", "IDMap,OPQ2,IMI2x1"))) {
+      IndexCatalog.create(nm, 2, fac, "l2sq", Map("nprobe" -> "2"))
+      IndexCatalog.add(grid, nm)
+      val rowsBefore = resultRowsOf(nm)
+      val booksBefore = IndexCatalog.trainedPqOf(nm).map(_._1.map(_.map(_.toSeq).toSeq).toSeq)
+      assert(booksBefore.isDefined, s"$nm: built IMI must expose its half books")
+      val dir = Files.createTempDirectory("graft_wrapped_imi").toString
+      IndexCatalog.save(nm, dir)
+      IndexCatalog.destroy(nm)
+      IndexCatalog.load(nm, dir, spark)
+      // restored by load itself, not retrained at the next build
+      assert(IndexCatalog.trainedPqOf(nm).map(_._1.map(_.map(_.toSeq).toSeq).toSeq) === booksBefore,
+        s"$nm: load must restore the saved half books")
+      assert(resultRowsOf(nm) === rowsBefore, s"$nm: save/load changed results")
+    }
+  }
+
   test("IVF_HNSW factory grammar: Flat, PQ, and SQ storage all compose with the graph coarse") {
-    assert(IndexCatalog.parseFactory("IVF64_HNSW8,PQ8") === IndexCatalog.PqKind(8, 64, 8))
-    assert(IndexCatalog.parseFactory("IVF64_HNSW8,SQ8") === IndexCatalog.SqKind(64, 8))
+    assert(IndexCatalog.parseFactory("IVF64_HNSW8,PQ8") === IndexCatalog.CodedKind(PqCodecSpec(8), 64, 8))
+    assert(IndexCatalog.parseFactory("IVF64_HNSW8,SQ8") === IndexCatalog.CodedKind(SqCodecSpec(Sq.V8), 64, 8))
+    // one codec per index: a second codec token is an error, not ignored
+    intercept[IllegalArgumentException](IndexCatalog.parseFactory("IVF4,PQ2,SQ8"))
+    intercept[IllegalArgumentException](IndexCatalog.parseFactory("IVF4,PQ2,SQ16"))
     assert(IndexCatalog.parseFactory("IVF64_HNSW8,Flat") === IndexCatalog.IvfHnswKind(64, 8))
     assert(IndexCatalog.parseFactory("IVF64_HNSW") === IndexCatalog.IvfHnswKind(64, 32))
   }
@@ -320,7 +341,9 @@ class IndexCatalogSpec extends SparkSpec {
   test("coded incremental append: add-after-build keeps built state, appended rows searchable (incl. graph coarse)") {
     import spark.implicits._
     for ((nm, fac) <- Seq(("t_pq_incr", "IDMap,IVF4,PQ2"), ("t_ivfhpq_incr", "IDMap,IVF8_HNSW4,PQ2"),
-                          ("t_sq_incr", "IDMap,IVF4,SQ8"))) {
+                          ("t_sq_incr", "IDMap,IVF4,SQ8"), ("t_rq_incr", "IDMap,IVF4,RQ2"),
+                          ("t_lsq_incr", "IDMap,IVF4,LSQ2"), ("t_sq4_incr", "IDMap,SQ4"),
+                          ("t_sqfp16_incr", "IDMap,SQfp16"), ("t_ivfhsq_incr", "IDMap,IVF8_HNSW4,SQ8"))) {
       IndexCatalog.create(nm, 2, fac, "l2sq", Map("nprobe" -> "8", "refine" -> "64"))
       IndexCatalog.add(grid, nm)
       IndexCatalog.search(nm, 1, qs).count() // force build
@@ -338,12 +361,30 @@ class IndexCatalogSpec extends SparkSpec {
       val before = resultSetOf(nm)
       IndexCatalog.compact(nm)
       assert(resultSetOf(nm) === before, s"$nm: compact changed results")
+      // save -> destroy -> load: same rows (distances included) and the
+      // same decoded codes, so trained state and layout round-trip
+      val ids = Seq(17L, 200L, 999L).toDF("id")
+      def decoded() = IndexCatalog.reconstruct(nm, ids).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toMap
+      val rowsBefore = resultRowsOf(nm)
+      val recBefore = decoded()
+      assert(recBefore.keySet === Set(17L, 200L, 999L), s"$nm: reconstruct lost labels")
+      val dir = Files.createTempDirectory("graft_coded_rt").toString
+      IndexCatalog.save(nm, dir)
+      IndexCatalog.destroy(nm)
+      IndexCatalog.load(nm, dir, spark)
+      assert(resultRowsOf(nm) === rowsBefore, s"$nm: save/load changed results")
+      assert(decoded() === recBefore, s"$nm: save/load changed reconstruct")
     }
   }
 
   private def resultSetOf(name: String) =
     IndexCatalog.search(name, 4, qs).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+
+  private def resultRowsOf(name: String) =
+    IndexCatalog.search(name, 4, qs).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
 
   test("index layout cache honors spark.graft.index.cacheStorageLevel") {
     spark.conf.set("spark.graft.index.cacheStorageLevel", "MEMORY_AND_DISK_SER")
@@ -811,7 +852,7 @@ class IndexCatalogSpec extends SparkSpec {
     assert(got === want)
     // codes really are nibble-packed: 2 dims -> 1 byte per vector
     val codeLen = IndexCatalog.build("t_sq4") match {
-      case sq: IndexCatalog.SqBuilt => sq.data.select("code").head.getAs[Array[Byte]](0).length
+      case c: IndexCatalog.CodedBuilt => c.data.select("code").head.getAs[Array[Byte]](0).length
       case other => fail(s"unexpected built kind $other")
     }
     assert(codeLen === 1, s"expected 1 packed byte for 2 dims, got $codeLen")
@@ -1147,6 +1188,24 @@ class IndexCatalogSpec extends SparkSpec {
     assert(got === want)
   }
 
+  test("nprobe / refine / efSearch below 1 or non-integer fail naming the key") {
+    IndexCatalog.create("t_par_ivf", 2, "IDMap,IVF4,Flat", "l2sq")
+    IndexCatalog.add(grid, "t_par_ivf")
+    IndexCatalog.create("t_par_pq", 2, "IDMap,IVF4,PQ2", "l2sq")
+    IndexCatalog.add(grid, "t_par_pq")
+    IndexCatalog.create("t_par_hnsw", 2, "IDMap,HNSW8", "l2sq")
+    IndexCatalog.add(grid, "t_par_hnsw")
+    for ((nm, key) <- Seq(("t_par_ivf", "nprobe"), ("t_par_pq", "nprobe"),
+                          ("t_par_pq", "refine"), ("t_par_hnsw", "efSearch"));
+         bad <- Seq("0", "-2", "x", "1.5")) {
+      val e = intercept[IllegalArgumentException](
+        IndexCatalog.search(nm, 4, qs, Map(key -> bad)).collect())
+      assert(e.getMessage.contains(s"'$key'"), s"$nm $key=$bad: ${e.getMessage}")
+    }
+    // the smallest valid value still serves
+    assert(IndexCatalog.search("t_par_pq", 4, qs, Map("nprobe" -> "1", "refine" -> "1")).count() === 8)
+  }
+
   test("oversized query batch fails loudly on the programmatic path, not OOM") {
     import spark.implicits._
     IndexCatalog.create("t_batchcap", 2, "IDMap,IVF4,Flat", "l2sq", Map("nprobe" -> "4"))
@@ -1166,9 +1225,10 @@ class IndexCatalogSpec extends SparkSpec {
   }
 
   test("packed coded scan is bit-equal to the row-join plan (IVF-PQ, PQ, SQ variants)") {
-    // same index searched with the packed chunk scan (default) and with
-    // the row-join plan (escape hatch) must produce IDENTICAL rows --
-    // same kernels, same (distance, label) heap order, different plan
+    // the same index searched unrestricted (packed chunk scan) and with
+    // an always-true filter (the row plan every restricted search takes)
+    // must produce IDENTICAL rows -- same scorer, same (distance, label)
+    // heap order, different plan
     import spark.implicits._
     val data = (for (i <- 0 until 400) yield {
       val r = new scala.util.Random(i)
@@ -1182,15 +1242,17 @@ class IndexCatalogSpec extends SparkSpec {
       ("t_pk_ivfpq", "IDMap,IVF8,PQ4", Map("nprobe" -> "3", "refine" -> "8")),
       ("t_pk_pq", "IDMap,PQ4", Map("refine" -> "8")),
       ("t_pk_sq8", "IDMap,SQ8", Map("refine" -> "4")),
-      ("t_pk_ivfsq", "IDMap,IVF8,SQfp16", Map("nprobe" -> "8")))
+      ("t_pk_ivfsq", "IDMap,IVF8,SQfp16", Map("nprobe" -> "8")),
+      ("t_pk_rq", "IDMap,RQ2", Map("refine" -> "4")),
+      ("t_pk_ivflsq", "IDMap,IVF4,LSQ2", Map("nprobe" -> "2", "refine" -> "4")),
+      ("t_pk_sq4", "IDMap,SQ4", Map("refine" -> "4")))
     for ((name, factory, params) <- cases) {
       IndexCatalog.create(name, 8, factory, "l2sq", params)
       IndexCatalog.add(data, name)
-      def rows() = IndexCatalog.search(name, 5, queries)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
-      val packed = rows()
-      spark.conf.set(IndexCatalog.PackedCodedScanConf, "false")
-      val rowPlan = try rows() finally spark.conf.unset(IndexCatalog.PackedCodedScanConf)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
+      val packed = rows(IndexCatalog.search(name, 5, queries))
+      val rowPlan = rows(IndexCatalog.searchFilter(name, 5, queries, lit(true)))
       assert(packed === rowPlan, s"$factory: packed vs row plan diverged")
       assert(packed.nonEmpty)
       IndexCatalog.destroy(name)

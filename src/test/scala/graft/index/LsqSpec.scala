@@ -69,9 +69,9 @@ class LsqSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val spark = graft.SparkSpec.session
     import spark.implicits._
-    assert(IndexCatalog.parseFactory("LSQ8x8") === IndexCatalog.LsqKind(8, 1))
-    assert(IndexCatalog.parseFactory("IVF8,LSQ4") === IndexCatalog.LsqKind(4, 8))
-    assert(IndexCatalog.parseFactory("IVF64_HNSW8,LSQ4") === IndexCatalog.LsqKind(4, 64, 8))
+    assert(IndexCatalog.parseFactory("LSQ8x8") === IndexCatalog.CodedKind(LsqCodecSpec(8), 1))
+    assert(IndexCatalog.parseFactory("IVF8,LSQ4") === IndexCatalog.CodedKind(LsqCodecSpec(4), 8))
+    assert(IndexCatalog.parseFactory("IVF64_HNSW8,LSQ4") === IndexCatalog.CodedKind(LsqCodecSpec(4), 64, 8))
     intercept[IllegalArgumentException](IndexCatalog.parseFactory("LSQ8x4"))
     intercept[IllegalArgumentException](
       IndexCatalog.create("t_lsq_ip", 2, "IDMap,LSQ2", "ip"))

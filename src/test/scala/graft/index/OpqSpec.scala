@@ -98,9 +98,11 @@ class OpqSpec extends SparkSpec {
   }
 
   test("OPQ with a non-L2 metric fails at create (PQ ADC convention)") {
-    intercept[IllegalArgumentException] {
-      IndexCatalog.create("t_opq_ip", 8, "IDMap,OPQ4,PQ4", "ip")
-    }
+    for ((nm, fac) <- Seq(("t_opq_ip", "IDMap,OPQ4,PQ4"), ("t_opq_rq_ip", "IDMap,OPQ4,RQ2"),
+                          ("t_opq_lsq_ip", "IDMap,OPQ4,LSQ2")))
+      intercept[IllegalArgumentException] {
+        IndexCatalog.create(nm, 8, fac, "ip")
+      }
   }
 
   test("dim-reducing OPQ factory suffix fails loudly instead of silently ignoring it") {
