@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR,
  * emitting one JSON line. A warmup pass (tiny query + tiny KMeans)
@@ -18,32 +16,47 @@ object BenchEnv {
 }
 
 object Bench {
+  /** timed passes per query; each query reports its fastest */
+  private val Passes = 3
+
+  /** What the timed passes measured: each query's fastest time, the
+    * `PhaseTimer` phases recorded by that fastest pass, the queries that
+    * threw (name -> "Class: message", no time), and each pass's total. */
+  final case class Timings(
+      times: Map[String, Double],
+      phases: Map[String, Double],
+      failed: Map[String, String],
+      passTotals: Seq[Double])
+
+  /** Run the queries in order, `passes` times over. A query that throws
+    * in any pass is failed: it leaves `times` and `phases` and is not run
+    * again, so its time-to-failure never reads as a fast query. */
+  def timePasses(queries: Seq[(String, () => Unit)], passes: Int): Timings = {
+    val best = scala.collection.mutable.Map.empty[String, (Double, Map[String, Double])]
+    val failed = scala.collection.mutable.Map.empty[String, String]
+    val passTotals = (1 to passes).map { _ =>
+      queries.filterNot { case (name, _) => failed.contains(name) }.map { case (name, run) =>
+        graft.queries.PhaseTimer.clear()
+        val t0 = System.nanoTime()
+        try {
+          run()
+          val t = (System.nanoTime() - t0) / 1e9
+          if (best.get(name).forall(t < _._1)) best(name) = (t, graft.queries.PhaseTimer.snapshot)
+          t
+        } catch { case e: Throwable =>
+          failed(name) = Verify.failure(e)
+          best -= name
+          0.0
+        }
+      }.sum
+    }
+    Timings(best.map { case (name, (t, _)) => name -> t }.toMap,
+      best.values.flatMap(_._2).toMap, failed.toMap, passTotals)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // TypedImperativeAggregates (top-k heaps, sketches) fall back to
-      // SORT-based aggregation past 128 distinct keys by default — at the
-      // 100x rung that sorted 1.6e9 candidate rows to disk (70 GB spill).
-      // 2M heap objects per partition is still only ~200 MB.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2097152")
-      // the whole-stage-codegen compile cache defaults to 100 entries;
-      // this suite carries 251 distinct query plans (~6 codegen units
-      // each), so at the default every pass Janino-recompiles nearly
-      // every stage — measured r14 on a 60-query slice at sf0.1/32:
-      // 46.0 s -> 31.9 s (-31%) from sizing the cache to the workload.
-      // Generated classes are KB-scale (metaspace), so 4096 entries is
-      // a few hundred MB at worst; any long-lived production session
-      // running a mixed workload wants the same sizing (static conf,
-      // driver + executors). Env-overridable for A/B legs (a -D system
-      // property alone would lose to this builder .config).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // optional comma-separated query filter for local iteration
@@ -53,22 +66,13 @@ object Bench {
     def selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
 
-    // r15 (guide §1.4): the timed action is the NOOP SINK by default —
-    // it computes every column of every row and discards it, where
-    // `.count()` let the optimizer prune columns (and sometimes whole
-    // subtrees), undercounting the real query. Declared loudly, not
-    // switched silently: the one-round dual artifact (BENCH_COUNT.json
-    // from SPARK_GRAFT_TIMED_ACTION=count alongside the default
-    // BENCH_QUERIES.json) quantifies the methodology delta per query,
-    // BENCH_FLOOR.json is re-based on noop numbers, and both JSON
-    // artifacts self-describe via the "timed_action" field.
-    val timedActionName = sys.env.getOrElse("SPARK_GRAFT_TIMED_ACTION", "noop")
-    val timedAction: org.apache.spark.sql.DataFrame => Unit = timedActionName match {
-      case "count" => df => { df.count(); () }
-      case "noop" => df => df.write.format("noop").mode("overwrite").save()
-      case other => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_TIMED_ACTION must be 'noop' or 'count', got '$other'")
-    }
+    // r15 (guide §1.4): the timed action is the NOOP SINK — it computes
+    // every column of every row and discards it, where `.count()` let
+    // the optimizer prune columns (and sometimes whole subtrees),
+    // undercounting the real query. Both output lines keep the
+    // "timed_action" field, so they still compare with r15 artifacts.
+    def timedAction(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
 
     // warmup: run every query once at the smallest scale factor so the
     // timed pass measures steady-state execution, not first-touch
@@ -134,15 +138,12 @@ object Bench {
     // timed passes, keep the per-query min: run-to-run noise on a
     // shared box is +-30%, and the faster pass is the truer cost of the
     // plan (the first pass also still pays JIT warmup at full sf)
-    def timedPass(): Map[String, Double] =
-      selected.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { timedAction(fn(spark, sfDir)) } catch { case _: Throwable => () }
-        name -> (System.nanoTime() - t0) / 1e9
-      }.toMap
-    val nPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    val passes = (1 to nPasses).map(_ => timedPass())
-    val results = passes.head.keys.toSeq.sorted.map(k => k -> passes.map(_(k)).min)
+    val timings = timePasses(
+      selected.map { case (name, fn) => name -> (() => timedAction(fn(spark, sfDir))) }, Passes)
+    val results = timings.times.toSeq.sorted
+    timings.failed.toSeq.sorted.foreach { case (name, err) =>
+      System.err.println(s"[bench] FAILED $name: $err")
+    }
 
     // perf-regression guard: flag any query >2x its committed floor
     // (BENCH_FLOOR.json, the best per-query time of prior rounds) so a
@@ -210,11 +211,12 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     System.err.println(
-      passes.zipWithIndex.map { case (p, i) => f"pass${i + 1}=${p.values.sum}%.1f" }
+      timings.passTotals.zipWithIndex.map { case (t, i) => f"pass${i + 1}=$t%.1f" }
         .mkString("[bench] ", " ", f" min-total=$total%.1f"))
     // per-phase splits recorded by the scale-family queries (build vs
-    // search; last pass wins — informative, not part of the min-total)
-    val phases = graft.queries.PhaseTimer.snapshot
+    // search), each from its query's min pass — informative, not part of
+    // the min-total
+    val phases = timings.phases
     phases.toSeq.sorted.foreach { case (k, v) =>
       System.err.println(f"[bench] phase $k = $v%.2f s")
     }
@@ -223,11 +225,17 @@ object Bench {
       else phases.toSeq.sorted.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString(""","phases":{""", ",", "}")
     val medianJson = if (medianMeasured) f"$medianRatio%.4f" else "null"
-    val jsonLine =
+    // summary fields shared by the file line and the stdout line; a
+    // failed query is in neither `queries` nor the total
+    val summary =
       s"""{"metric":"total","value":$total,"unit":"sec",""" +
         s""""env_factor":${f"$envFactor%.4f"},"env_median_ratio":$medianJson,""" +
-        s""""timed_action":"$timedActionName"""" +
-        s"""$phasesJson,"queries":$qs,"sf":"$sfDir"}"""
+        s""""timed_action":"noop","failed_count":${timings.failed.size}"""
+    val failedJson = timings.failed.toSeq.sorted
+      .map { case (k, v) => s"${Verify.jsonString(k)}:${Verify.jsonString(v)}" }
+      .mkString("{", ",", "}")
+    val jsonLine =
+      s"""$summary,"failed":$failedJson$phasesJson,"queries":$qs,"sf":"$sfDir"}"""
     // Persist the FULL per-query map (all queries, full precision) to a
     // file: the driver captures only a ~2000-char stdout tail as
     // BENCH_rN.json ("tail" + "parsed"), which truncated the ~7.5 KB
@@ -240,9 +248,6 @@ object Bench {
     // 16-query artifact in git).
     val dumpName =
       if (only.nonEmpty) "BENCH_QUERIES_partial.json"
-      // the legacy count-action run (one-round dual artifact of the r15
-      // noop migration) must never clobber the artifact of record
-      else if (timedActionName == "count") "BENCH_COUNT.json"
       // SIMD is the engine default since r14, so the default-mode full
       // map goes to BENCH_QUERIES.json; an explicit scalar A/B run
       // (-Dgraft.simd.enabled=false) gets its own scratch artifact
@@ -255,7 +260,7 @@ object Bench {
     System.err.println(
       s"[bench] simd enabled=${graft.functions.VectorMath.Simd.enabled} " +
         s"active=${graft.functions.VectorMath.Simd.active} " +
-        s"timed_action=$timedActionName dump=$dumpName")
+        s"dump=$dumpName")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(dumpName),
       (jsonLine + "\n").getBytes("UTF-8"))
@@ -271,10 +276,7 @@ object Bench {
     // per-query budget (they are always in the full file line)
     val phasesShort = if (phasesJson.length <= 400) phasesJson else ""
     val fixed =
-      s"""{"metric":"total","value":$total,"unit":"sec",""" +
-        s""""env_factor":${f"$envFactor%.4f"},"env_median_ratio":$medianJson,""" +
-        s""""timed_action":"$timedActionName"""" +
-        s"""$phasesShort,"queries_count":${results.size},""" +
+      s"""$summary$phasesShort,"queries_count":${results.size},""" +
         s""""queries_file":"$dumpName","sf":"$sfDir","queries":"""
     val closing = "}"
     var used = fixed.length + 2 + closing.length // "{" + "}" of the queries map

@@ -40,7 +40,7 @@ import graft.functions.TopKHeap
  *
  * CodegenFallback is deliberate and measured: companion columns in
  * the same projection evaluate once per CHUNK row — the tax is within
- * run noise (tools/PackedScanProfile), see ListTopKScan's doc.
+ * run noise (SURVEY §21.7), see ListTopKScan's doc.
  */
 case class CodedTopKScan(
     items: Expression, // array<struct<label bigint, code binary>>

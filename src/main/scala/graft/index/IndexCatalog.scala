@@ -807,8 +807,8 @@ object IndexCatalog {
   /** driver-built HNSW over the (bounded) centroid table — deterministic
     * in (centroids, m, efConstruction) via Nsw's label-hash levels, so
     * save/load CAN rebuild the identical graph from the saved centroids.
-    * Rebuild at nlist=65k costs ~59 s driver-side (tools/CoarseProfile,
-    * SURVEY §21.8) — paid per loading driver — so save() persists the
+    * Rebuild at nlist=65k costs ~59 s driver-side (measured over 65,536
+    * centroids, SURVEY §21.8) — paid per loading driver — so save() persists the
     * adjacency and load() restores it here when the build-input key
     * matches (the graph is a pure function of those inputs, making the
     * persisted copy a cache with a trivial invariant). */

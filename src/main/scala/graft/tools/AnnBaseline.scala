@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.vec
@@ -32,18 +32,7 @@ object AnnBaseline {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // TypedImperativeAggregates (top-k heaps, sketches) fall back to
-      // SORT-based aggregation past 128 distinct keys by default — at the
-      // 100x rung that sorted 1.6e9 candidate rows to disk (70 GB spill).
-      // 2M heap objects per partition is still only ~200 MB.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2097152")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val emb = Tables(spark, sfDir, "embeddings")

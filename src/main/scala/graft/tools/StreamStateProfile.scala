@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -27,7 +26,7 @@ import graft.streaming.Streaming
  */
 object StreamStateProfile {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = graft.GraftSession.cpus
     val keys = sys.env.getOrElse("SPARK_GRAFT_SS_KEYS", "10000000").toLong
     val rps = sys.env.getOrElse("SPARK_GRAFT_SS_ROWS_PER_SEC", "2000000").toLong
     val secs = sys.env.getOrElse("SPARK_GRAFT_SS_SECONDS", "60").toInt
@@ -37,12 +36,9 @@ object StreamStateProfile {
     // cores — more partitions = fewer keys per RocksDB instance at the
     // same total state, the "per-executor key width" lever the 1e8
     // working-set attribution named
-    val partitions = sys.env.getOrElse("SPARK_GRAFT_SS_PARTITIONS", cpus)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val partitions = sys.env.getOrElse("SPARK_GRAFT_SS_PARTITIONS", cpus.toString)
+    val builder = graft.GraftSession.builder(cpus)
       .config("spark.sql.shuffle.partitions", partitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // RocksDB state store: the disk-backed provider for key counts the
     // executor heap can't hold (ships with Spark 4, no extra deps).
     // HDFSBacked (default) keeps every key's state in the JVM heap —

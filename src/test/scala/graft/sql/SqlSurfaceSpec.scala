@@ -245,9 +245,7 @@ class SqlSurfaceSpec extends SparkSpec {
     org.apache.spark.sql.SparkSession.clearActiveSession()
     org.apache.spark.sql.SparkSession.clearDefaultSession()
     try {
-      val s2 = org.apache.spark.sql.SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
+      val s2 = graft.GraftSession.builder(4)
         .withExtensions(new GraftExtensions().apply(_))
         .getOrCreate()
       assert(s2 ne base)

@@ -40,6 +40,14 @@ bench = json.load(open(bench_path))
 floors = json.load(open(floor_path))
 q = floors["queries"]
 
+# A run where any query threw is incomplete: the failed queries carry no
+# time, so the run cannot speak for them. Refuse unconditionally.
+if bench.get("failed_count", 0) > 0:
+    print(f"bench artifact has failed_count={bench['failed_count']} "
+          f"({', '.join(sorted(bench.get('failed', {})))}): refusing to fold floors",
+          file=sys.stderr)
+    sys.exit(1)
+
 # Cohort guard (round 13, VERDICT #5): a run whose floored cohort sits
 # >1.25x over the committed floors was taken on a hot/contended box —
 # folding from it can only add inflated floors for NEW queries and
