@@ -12,8 +12,8 @@ import graft.text.TextFunctions
  *
  *  - exact:     one hash shuffle on the text (group-by), keep min id
  *  - minhash:   shingle -> 128-lane MinHash -> LSH band buckets ->
- *               candidate pairs from bucket self-join (shuffles fixed
- *               width signatures, never documents)
+ *               candidate pairs from one bucket aggregate (shuffles
+ *               fixed-width bucket keys and ids, never documents)
  *  - simhash:   64-bit fingerprint, 4x16-bit block keys, candidates
  *               verified by hamming distance (block trick: any pair
  *               within hamming<=3 of 64 bits shares at least one of 4
@@ -53,45 +53,30 @@ object Dedup {
     exact(batch, idCol, textCol).join(corpusHashes, Seq("text_hash"), "left_anti")
   }
 
-  /** (id, sig array<bigint>) MinHash signatures over word shingles */
+  /** (id, sig array<bigint>) MinHash signatures over word shingles:
+    * `minhash(shingles(tokens(text), k))` as one kernel per document
+    * ([[graft.functions.MinHashShingles]]), so each document is
+    * tokenized once and no shingle string is built */
   def minhashSignatures(
       docs: DataFrame, idCol: String, textCol: String,
       numHashes: Int, shingleSize: Int, seed: Long): DataFrame =
     graft.search.Knn.widen(docs) // shingling+hashing must not run on one narrow scan partition
-      .select(col(idCol).as("id"), TextFunctions.tokens(col(textCol)).as("_toks"))
-      .select(
-        col("id"),
-        hashes.minhash(
-          TextFunctions.shingles(col("_toks"), shingleSize), numHashes, seed).as("sig"))
+      .select(col(idCol).as("id"),
+        hashes.minhashShingles(TextFunctions.tokens(col(textCol)), shingleSize, numHashes, seed)
+          .as("sig"))
 
-  /**
-   * LSH candidate pairs (a_id < b_id, distinct) from banding the
-   * MinHash signature: `bands` groups of `numHashes/bands` lanes, each
-   * group folded to one bucket key; docs sharing any bucket pair up.
-   */
-  /** (id, band, bucket) band-bucket registrations, stub docs dropped:
-    * shingle-less docs (< shingleSize tokens) all share MinHash's
-    * empty-input sentinel signature — without this filter every stub
-    * doc lands in the same bucket of every band and pairs up
-    * quadratically as meaningless candidates. */
-  private def bucketedSignatures(
-      docs: DataFrame, idCol: String, textCol: String,
-      numHashes: Int, bands: Int, shingleSize: Int, seed: Long): DataFrame = {
-    val rows = numHashes / bands
-    require(rows * bands == numHashes, "bands must divide numHashes")
-    bucketsFromSignatures(
-      minhashSignatures(docs, idCol, textCol, numHashes, shingleSize, seed), bands, rows)
-  }
-
-  /** band-bucket registrations from an ALREADY-COMPUTED (id, sig) frame
-    * — lets a caller that also needs the signatures themselves (e.g.
-    * dedup_minhash_eval's lane-agreement estimate) compute the
-    * tokenize+shingle+minhash scan ONCE instead of once per consumer */
-  private[graft] def bucketsFromSignatures(
+  /** (id, band, bucket) band-bucket registrations from an (id, sig)
+    * frame. Stub docs (< shingleSize tokens) register nothing: they all
+    * share MinHash's empty-input sentinel signature, for which
+    * [[graft.functions.BandBuckets]] yields no bands — otherwise every
+    * stub would land in the same bucket of every band and pair up
+    * quadratically as meaningless candidates. The sentinel rule lives in
+    * the kernel, not in a filter: Spark pushes a filter on `sig` below
+    * the signature projection, which then runs twice per document. */
+  private def bucketsFromSignatures(
       sig: DataFrame, bands: Int, rows: Int): DataFrame =
-    sig
-      .where(col("sig")(0) =!= Long.MaxValue)
-      .select(col("id"), posexplode(bandBuckets(col("sig"), bands, rows)).as(Seq("band", "bucket")))
+    sig.select(col("id"),
+      posexplode(hashes.bandBuckets(col("sig"), bands, rows)).as(Seq("band", "bucket")))
 
   /** hot-bucket cap: a degenerate bucket (boilerplate that hashes a large
     * fraction of the corpus together) would make the bucket join quadratic
@@ -129,31 +114,30 @@ object Dedup {
       numHashes, bands, maxBucketSize)
 
   /** [[minhashCandidates]] from a precomputed (id, sig) frame — same
-    * banding, capping and pairing, zero additional corpus scans */
+    * banding, capping and pairing, zero additional corpus scans.
+    *
+    * LSH candidate pairs (a_id < b_id, distinct): `bands` groups of
+    * `numHashes/bands` lanes, each folded to one bucket key; docs
+    * sharing any bucket pair up. One aggregate per (band, bucket)
+    * counts every registration (the hot-bucket cap: over
+    * `maxBucketSize` registrations the bucket yields no pairs, so a
+    * boilerplate bucket cannot go quadratic while true near-dup groups
+    * still pair up in their other bands) and collects the ids; the
+    * pairs come from exploding each kept id list against itself. */
   def candidatesFromSignatures(
       sig: DataFrame, numHashes: Int = 128, bands: Int = 32,
       maxBucketSize: Int = 1000): DataFrame = {
     val rows = numHashes / bands
     require(rows * bands == numHashes, "bands must divide numHashes")
-    val capped = capBuckets(bucketsFromSignatures(sig, bands, rows), maxBucketSize)
-    val a = capped.as("a")
-    val b = capped.as("b")
-    a.join(b,
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("a_id"), col("b.id").as("b_id"))
+    bucketsFromSignatures(sig, bands, rows)
+      .groupBy("band", "bucket")
+      .agg(count(lit(1)).as("n"), collect_list(col("id")).as("ids"))
+      .where(col("n") <= maxBucketSize && size(col("ids")) >= 2)
+      .select(explode(col("ids")).as("a_id"), col("ids"))
+      .select(col("a_id"), explode(col("ids")).as("b_id"))
+      .where(col("a_id") < col("b_id"))
       .distinct()
   }
-
-  /** fold each band's slice of the signature into one bucket key
-    * (codegen'd; rotate-xor mix — ANSI-safe, no overflowing multiply) */
-  private[graft] def bandBuckets(sig: Column, bands: Int, rows: Int): Column =
-    transform(
-      sequence(lit(0), lit(bands - 1)),
-      b => aggregate(
-        slice(sig, b * rows + 1, lit(rows)),
-        lit(0x9e3779b97f4a7c15L),
-        (acc, x) => shiftleft(acc, 7).bitwiseOR(shiftrightunsigned(acc, 57)).bitwiseXOR(x)))
 
   /**
    * Incremental NEAR-dup screening — the fuzzy complement of
@@ -197,18 +181,15 @@ object Dedup {
             graft.functions.hashes.minhashFromHashes(col(shOut), numHashes, seed).as("sig"))
           .repartition(col(idOut)))
     // stub docs (< shingleSize tokens) all share the empty-signature
-    // sentinel — drop them from banding or every stub pairs with every
-    // other in all bands
-    def buckets(prof: DataFrame, idOut: String, shOut: String): DataFrame =
-      prof.where(size(col(shOut)) > 0)
-        .select(col(idOut).as("id"),
-          posexplode(bandBuckets(col("sig"), bands, rows)).as(Seq("band", "bucket")))
+    // sentinel, which BandBuckets leaves unbanded
+    def buckets(prof: DataFrame, idOut: String): DataFrame =
+      bucketsFromSignatures(prof.select(col(idOut).as("id"), col("sig")), bands, rows)
     val cProf = profile(corpus, "corpus_id", "sb")
     val bProf = profile(batch, "batch_id", "sa")
     // cap on the CORPUS side (the big one): a boilerplate bucket would
     // otherwise pair every batch doc against a large corpus fraction
-    val corpusCapped = capBuckets(buckets(cProf, "corpus_id", "sb"), maxBucketSize)
-    val cand = buckets(bProf, "batch_id", "sa").as("q")
+    val corpusCapped = capBuckets(buckets(cProf, "corpus_id"), maxBucketSize)
+    val cand = buckets(bProf, "batch_id").as("q")
       .join(corpusCapped.as("c"),
         col("q.band") === col("c.band") && col("q.bucket") === col("c.bucket"))
       .select(col("q.id").as("batch_id"), col("c.id").as("corpus_id"))

@@ -2,10 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -15,12 +18,21 @@ import org.apache.spark.unsafe.types.UTF8String
  * partitions and runs (no java hashCode, no Random).
  */
 object Hash64 {
-  /** FNV-1a over UTF-8 bytes */
-  def fnv1a(bytes: Array[Byte]): Long = {
-    var h = 0xcbf29ce484222325L
+  /** FNV-1a offset basis: the hash of no bytes */
+  final val FnvBasis = 0xcbf29ce484222325L
+  private final val FnvPrime = 0x100000001b3L
+  private final val Golden = 0x9e3779b97f4a7c15L
+
+  /** FNV-1a state `h` continued over the string's UTF-8 bytes, read in
+    * place at the string's base offset (no byte-array copy) */
+  def fnv1a(h: Long, s: UTF8String): Long = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    var acc = h
     var i = 0
-    while (i < bytes.length) { h ^= (bytes(i) & 0xffL); h *= 0x100000001b3L; i += 1 }
-    h
+    while (i < n) { acc = (acc ^ (Platform.getByte(base, off + i) & 0xffL)) * FnvPrime; i += 1 }
+    acc
   }
 
   /** splitmix64 finalizer — good avalanche for deriving hash families */
@@ -29,6 +41,78 @@ object Hash64 {
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
     z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
     z ^ (z >>> 31)
+  }
+
+  /** lane j of the MinHash family: sig(j) = min(sig(j), mix(base ^ (seed + GOLDEN*j))) */
+  def foldLanes(sig: Array[Long], base: Long, seed: Long): Unit = {
+    var j = 0
+    while (j < sig.length) {
+      val h = mix(base ^ (seed + Golden * j))
+      if (h < sig(j)) sig(j) = h
+      j += 1
+    }
+  }
+
+  /**
+   * `minhash(shingles(toks, k))` in one pass: each k-token window is
+   * hashed in place as the bytes the nested
+   * `concat_ws(" ", concat_ws(" ", t0, t1), t2)...` chain would build —
+   * null tokens skipped, the first two joined by a space only when both
+   * are present, every later present token preceded by one — and
+   * folded into all lanes. No gram string is built and no distinct is
+   * taken: a repeated gram cannot change a min. Below k tokens (or a
+   * null array) every lane keeps the Long.MaxValue sentinel; with
+   * k = 1 a null token is a null gram, which minhash skips.
+   */
+  def minhashShingles(toks: ArrayData, k: Int, numHashes: Int, seed: Long): ArrayData = {
+    val sig = Array.fill(numHashes)(Long.MaxValue)
+    val n = if (toks == null) 0 else toks.numElements()
+    if (n >= k) {
+      val ts = Array.tabulate(n)(toks.getUTF8String)
+      var i = 0
+      while (i + k <= n) {
+        if (k > 1 || ts(i) != null) {
+          var h = FnvBasis
+          var j = 0
+          while (j < k) {
+            val t = ts(i + j)
+            if (t != null) {
+              if (j >= 2 || (j == 1 && ts(i) != null)) h = (h ^ ' '.toLong) * FnvPrime
+              h = fnv1a(h, t)
+            }
+            j += 1
+          }
+          foldLanes(sig, h, seed)
+        }
+        i += 1
+      }
+    }
+    UnsafeArrayData.fromPrimitiveArray(sig)
+  }
+
+  /**
+   * LSH band keys of a MinHash signature: band b folds lanes
+   * [b*rows, (b+1)*rows) with acc = rotl(acc, 7) ^ lane from the golden
+   * constant (rotate-xor — no overflowing multiply); lanes past the end
+   * of a short signature leave acc as it is. The sentinel signature of
+   * a shingle-less document (lane 0 = Long.MaxValue) gets no bands:
+   * every stub document shares it, so banding it would pair all stubs.
+   */
+  def bandBuckets(sig: ArrayData, bands: Int, rows: Int): ArrayData = {
+    val n = sig.numElements()
+    if (n == 0 || sig.getLong(0) == Long.MaxValue)
+      return UnsafeArrayData.fromPrimitiveArray(new Array[Long](0))
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var acc = Golden
+      var i = b * rows
+      val end = math.min(n, i + rows)
+      while (i < end) { acc = java.lang.Long.rotateLeft(acc, 7) ^ sig.getLong(i); i += 1 }
+      out(b) = acc
+      b += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 }
 
@@ -57,19 +141,76 @@ case class MinHashSignature(child: Expression, numHashes: Int, seed: Long)
     val n = arr.numElements()
     while (i < n) {
       val s = arr.getUTF8String(i)
-      if (s != null) {
-        val base = Hash64.fnv1a(s.getBytes)
-        var j = 0
-        while (j < numHashes) {
-          val h = Hash64.mix(base ^ (seed + 0x9e3779b97f4a7c15L * j))
-          if (h < sig(j)) sig(j) = h
-          j += 1
-        }
-      }
+      if (s != null) Hash64.foldLanes(sig, Hash64.fnv1a(Hash64.FnvBasis, s), seed)
       i += 1
     }
-    new GenericArrayData(sig)
+    UnsafeArrayData.fromPrimitiveArray(sig)
   }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/**
+ * MinHash signature of a document's word k-shingles straight from its
+ * token array: `minhash_signature(shingles(toks, k), numHashes, seed)`
+ * lane for lane, without building the shingle strings (see
+ * [[Hash64.minhashShingles]]). Never null: a null or short token array
+ * gives the all-Long.MaxValue sentinel. One static call in the
+ * generated code, so the projection stays in whole-stage codegen.
+ */
+case class MinHashShingles(child: Expression, k: Int, numHashes: Int, seed: Long)
+    extends UnaryExpression {
+  require(k >= 1, s"shingle size must be >= 1, got $k")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "minhash_shingles"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"minhash_shingles needs array<string>, got ${t.catalogString}")
+  }
+
+  override def eval(input: InternalRow): Any =
+    Hash64.minhashShingles(child.eval(input).asInstanceOf[ArrayData], k, numHashes, seed)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |ArrayData ${ev.value} = graft.functions.Hash64.minhashShingles(
+      |  ${c.isNull} ? null : ${c.value}, $k, $numHashes, ${seed}L);
+      |""".stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/**
+ * MinHash signature (array<bigint>, no null lanes) -> array<bigint> of
+ * `bands` LSH bucket keys (see [[Hash64.bandBuckets]]); empty for the
+ * shingle-less sentinel signature, null for a null signature.
+ */
+case class BandBuckets(child: Expression, bands: Int, rows: Int) extends UnaryExpression {
+  require(bands >= 1 && rows >= 1, s"bands and rows must be >= 1, got $bands and $rows")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "band_buckets"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"band_buckets needs array<bigint> without nulls, got ${t.catalogString}")
+  }
+
+  override protected def nullSafeEval(input: Any): Any =
+    Hash64.bandBuckets(input.asInstanceOf[ArrayData], bands, rows)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, s => s"graft.functions.Hash64.bandBuckets($s, $bands, $rows)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -102,18 +243,10 @@ case class MinHashFromHashes(child: Expression, numHashes: Int, seed: Long)
     var i = 0
     val n = arr.numElements()
     while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val base = arr.getLong(i)
-        var j = 0
-        while (j < numHashes) {
-          val h = Hash64.mix(base ^ (seed + 0x9e3779b97f4a7c15L * j))
-          if (h < sig(j)) sig(j) = h
-          j += 1
-        }
-      }
+      if (!arr.isNullAt(i)) Hash64.foldLanes(sig, arr.getLong(i), seed)
       i += 1
     }
-    new GenericArrayData(sig)
+    UnsafeArrayData.fromPrimitiveArray(sig)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -145,7 +278,7 @@ case class SimHash64(child: Expression, seed: Long)
     while (i < n) {
       val s = arr.getUTF8String(i)
       if (s != null) {
-        val h = Hash64.mix(Hash64.fnv1a(s.getBytes) ^ seed)
+        val h = Hash64.mix(Hash64.fnv1a(Hash64.FnvBasis, s) ^ seed)
         var b = 0
         while (b < 64) {
           if (((h >>> b) & 1L) == 1L) tally(b) += 1 else tally(b) -= 1
@@ -177,7 +310,7 @@ case class Fingerprint64(child: Expression)
   }
 
   override protected def nullSafeEval(input: Any): Any =
-    Hash64.fnv1a(input.asInstanceOf[UTF8String].getBytes)
+    Hash64.fnv1a(Hash64.FnvBasis, input.asInstanceOf[UTF8String])
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -589,6 +722,10 @@ object hashes {
     col(MinHashSignature(ex(shingles), numHashes, seed))
   def minhashFromHashes(shingleHashes: Column, numHashes: Int = 128, seed: Long = 42L): Column =
     col(MinHashFromHashes(ex(shingleHashes), numHashes, seed))
+  def minhashShingles(tokens: Column, k: Int, numHashes: Int = 128, seed: Long = 42L): Column =
+    col(MinHashShingles(ex(tokens), k, numHashes, seed))
+  def bandBuckets(sig: Column, bands: Int, rows: Int): Column =
+    col(BandBuckets(ex(sig), bands, rows))
   def bloomHitCount(hashArray: Column, bloom: org.apache.spark.util.sketch.BloomFilter): Column = {
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)

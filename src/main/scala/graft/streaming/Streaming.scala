@@ -314,8 +314,8 @@ object Streaming {
   /**
    * Streaming NEAR-dup screen at ingest — the LSH complement of
    * curationGate's exact fingerprint dedup, sharing the batch MinHash
-   * family lane-for-lane (`hashes.minhash` + `Dedup.bandBuckets`, the
-   * same fold `Dedup.minhashCandidates` buckets with). Stateless
+   * family lane-for-lane (`hashes.minhashShingles` + `hashes.bandBuckets`,
+   * the kernels `Dedup.minhashCandidates` buckets with). Stateless
    * scan-stage work computes the 128-lane signature and explodes it
    * into band buckets; state lives PER (band, bucket) as a bounded
    * FIFO of (id, signature) — `maxBucketSize` entries, oldest evicted —
@@ -336,20 +336,18 @@ object Streaming {
       seed: Long = 42L, minOverlap: Int = 72,
       maxBucketSize: Int = 64): Dataset[NearDupOut] = {
     import docs.sparkSession.implicits._
+    import graft.functions.hashes
     import graft.text.TextFunctions
     val rows = numHashes / bands
     require(rows * bands == numHashes, "bands must divide numHashes")
     docs
       .select(col("doc_id").cast("long").as("doc_id"), col("ts"),
-        graft.functions.hashes.minhash(
-          TextFunctions.shingles(TextFunctions.tokens(col("text")), shingleSize),
-          numHashes, seed).as("sig"))
-      // shingle-less stubs share the empty-input sentinel signature and
-      // would flood one bucket per band (same guard as the batch path)
-      .where(col("sig")(0) =!= Long.MaxValue)
+        hashes.minhashShingles(TextFunctions.tokens(col("text")), shingleSize, numHashes, seed)
+          .as("sig"))
+      // shingle-less stubs share the empty-input sentinel signature,
+      // which gets no band buckets (same rule as the batch path)
       .select(col("doc_id"), col("ts"), col("sig"),
-        posexplode(graft.dedup.Dedup.bandBuckets(col("sig"), bands, rows))
-          .as(Seq("band", "bucket")))
+        posexplode(hashes.bandBuckets(col("sig"), bands, rows)).as(Seq("band", "bucket")))
       .select(col("band"), col("bucket"), col("doc_id"), col("ts"), col("sig"))
       .as[(Int, Long, Long, Timestamp, Seq[Long])]
       .groupByKey { case (band, bucket, _, _, _) => (band, bucket) }

@@ -5,10 +5,16 @@ import org.apache.spark.sql.functions._
 
 /**
  * Text-analysis operators for LLM training-data pipelines: tokenizing,
- * quality features, shingling, language heuristics. Everything is
- * built from codegen'd `org.apache.spark.sql.functions` (no UDFs), so
- * the whole feature computation stays in one WholeStageCodegen span
- * over the document scan — a single pass at 100 TB.
+ * quality features, shingling, language heuristics, built from
+ * `org.apache.spark.sql.functions` and native kernels (no UDFs).
+ * Spark's higher-order functions (`zip_with`, `filter`, `transform`,
+ * `aggregate`) are `CodegenFallback` in Spark 4.1: each lambda call is
+ * interpreted, and a projection holding one falls out of
+ * WholeStageCodegen. The hot paths (quality score, MinHash signatures,
+ * shingle hashes, repetition signals) therefore run as native kernels
+ * that stay in the codegen span; the HOF chains that remain
+ * ([[shinglesAll]], [[stopwordRatio]], [[meanTokenLen]], [[langId]])
+ * serve the analysis queries and the oracle-facing feature columns.
  */
 object TextFunctions {
 
@@ -148,25 +154,18 @@ object TextFunctions {
    * Composite quality score in [0,1] — rewards mid-length docs with
    * diverse tokens, light punctuation, and a natural stopword rate
    * (the C4/Gopher-style heuristic family, arithmetic-only so the
-   * DuckDB oracle reproduces it bit-for-bit).
+   * DuckDB oracle reproduces it bit-for-bit):
+   * `least(size(t)/64, 1)/4 + uniqueRatio(t)/4 +
+   * least(4 stopwordRatio(t), 1)/4 + (1 - least(4 punctRatio(text), 1))/4`.
    */
   def qualityScore(text: Column): Column = qualityScoreT(text, tokens(text))
 
-  /** [[qualityScore]] over a pre-bound token column. The score reads
-   * the token array ~6 times (length, distinct, stopword filter); when
-   * `t` is the raw split expression those are 6 regex splits per row —
-   * hot callers bind `tokens(text)` to a column and pass the attribute
-   * (measured 4x on the corpus-wide curation gates at the 100x rung).
-   */
+  /** [[qualityScore]] over a given token expression, as one native
+    * kernel ([[QualityScore]]) that evaluates `t` once per row and
+    * derives every component from that one array. */
   def qualityScoreT(text: Column, t: Column): Column = {
-    val lenScore = least(size(t).cast("double") / 64.0, lit(1.0))
-    val uniq = uniqueRatio(t)
-    val stop = stopwordRatio(t)
-    val punct = punctRatio(text)
-    // clamp each component, equal weights
-    (lenScore * 0.25 + uniq * 0.25 +
-      least(stop * 4.0, lit(1.0)) * 0.25 +
-      (lit(1.0) - least(punct * 4.0, lit(1.0))) * 0.25)
+    import org.apache.spark.sql.GraftBridge
+    GraftBridge.column(new QualityScore(GraftBridge.expression(text), GraftBridge.expression(t)))
   }
 
   /**

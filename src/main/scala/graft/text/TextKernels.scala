@@ -1,9 +1,12 @@
 package graft.text
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -116,6 +119,75 @@ object TextKernels {
     dup.toDouble / m.toDouble
   }
 
+  private val stopwords: Array[UTF8String] =
+    TextFunctions.stopwords.map(UTF8String.fromString).toArray
+
+  /** ASCII bytes of [[TextFunctions.punctRatio]]'s character class */
+  private val punctByte: Array[Boolean] = {
+    val t = new Array[Boolean](128)
+    ".,;:!?'\"()[]{}-".foreach(c => t(c) = true)
+    t
+  }
+
+  /** `least(x, 1.0)` as Spark evaluates it: 1.0 only when strictly smaller */
+  private def atMostOne(x: Double): Double = if (1.0 < x) 1.0 else x
+
+  /**
+   * [[TextFunctions.qualityScore]]'s arithmetic from one evaluation of
+   * the token array, with the SQL chain's doubles in its order:
+   *  - size: a null array has size -1 under legacy sizing, else null —
+   *    and `least` skips the null, so the length term is then 1.0;
+   *  - unique ratio counts a null token as one distinct value;
+   *  - a null token is no stopword (`filter` drops it);
+   *  - punctuation counts the class `[.,;:!?'"()\[\]{}-]` (ASCII,
+   *    so a byte scan) over `length(text)` characters; null text
+   *    scores 0 punctuation.
+   */
+  def qualityScore(text: UTF8String, toks: ArrayData, legacySizeOfNull: Boolean): Double = {
+    var lenScore = 1.0
+    var uniq = 0.0
+    var stop = 0.0
+    if (toks != null || legacySizeOfNull) {
+      val n = if (toks == null) -1 else toks.numElements()
+      lenScore = atMostOne(n.toDouble / 64.0)
+      if (n > 0) {
+        val distinct = new java.util.HashSet[UTF8String](2 * n)
+        var stops = 0
+        var i = 0
+        while (i < n) {
+          val t = toks.getUTF8String(i)
+          distinct.add(t)
+          if (t != null) {
+            var j = 0
+            while (j < stopwords.length && !t.equals(stopwords(j))) j += 1
+            if (j < stopwords.length) stops += 1
+          }
+          i += 1
+        }
+        uniq = distinct.size.toDouble / n.toDouble
+        stop = stops.toDouble / n.toDouble
+      }
+    }
+    var punct = 0.0
+    if (text != null) {
+      val chars = text.numChars()
+      if (chars > 0) {
+        val base = text.getBaseObject
+        val off = text.getBaseOffset
+        var p = 0
+        var i = 0
+        while (i < text.numBytes) {
+          val b = org.apache.spark.unsafe.Platform.getByte(base, off + i)
+          if (b >= 0 && punctByte(b)) p += 1
+          i += 1
+        }
+        punct = p.toDouble / chars.toDouble
+      }
+    }
+    lenScore * 0.25 + uniq * 0.25 + atMostOne(stop * 4.0) * 0.25 +
+      (1.0 - atMostOne(punct * 4.0)) * 0.25
+  }
+
   private def cmpTok(a: UTF8String, b: UTF8String): Int =
     if (a eq null) { if (b eq null) 0 else -1 }
     else if (b eq null) 1
@@ -197,4 +269,48 @@ case class TopShingleRatio(child: Expression, n: Int) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/**
+ * (text string, tokens array<string>) -> DOUBLE quality score, never
+ * null: [[TextKernels.qualityScore]] over one evaluation of each input.
+ * `legacySizeOfNull` is read from the session like Spark's `Size`.
+ */
+case class QualityScore(text: Expression, toks: Expression, legacySizeOfNull: Boolean)
+    extends BinaryExpression {
+
+  def this(text: Expression, toks: Expression) =
+    this(text, toks, SQLConf.get.legacySizeOfNull)
+
+  override def left: Expression = text
+  override def right: Expression = toks
+
+  override def checkInputDataTypes(): TypeCheckResult = (text.dataType, toks.dataType) match {
+    case (StringType, ArrayType(StringType, _)) => TypeCheckResult.TypeCheckSuccess
+    case (a, b) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires (string, array<string>), got (${a.catalogString}, ${b.catalogString})")
+  }
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+  override def prettyName: String = "quality_score"
+
+  override def eval(input: InternalRow): Any = TextKernels.qualityScore(
+    text.eval(input).asInstanceOf[UTF8String], toks.eval(input).asInstanceOf[ArrayData],
+    legacySizeOfNull)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = text.genCode(ctx)
+    val k = toks.genCode(ctx)
+    ev.copy(code = code"""
+      |${t.code}
+      |${k.code}
+      |double ${ev.value} = graft.text.TextKernels.qualityScore(
+      |  ${t.isNull} ? null : ${t.value}, ${k.isNull} ? null : ${k.value}, $legacySizeOfNull);
+      |""".stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(text = newLeft, toks = newRight)
 }

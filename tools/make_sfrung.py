@@ -11,9 +11,10 @@ arguments.
 Replication keys shift by copy*1e8 so per-entity structure replicates
 (each copy is a disjoint population): documents.doc_id,
 embeddings.vec_id, events.{event_id,user_id}, orders.{o_orderkey,
-o_custkey}, lineitem.l_orderkey. Timestamps/dates are untouched, so
-watermark/session structure per user is exactly the sf0.1 shape.
-Dimension tables copy verbatim.
+o_custkey}, lineitem.l_orderkey, customer.c_custkey. Timestamps/dates
+are untouched, so watermark/session structure per user is exactly the
+sf0.1 shape. The other dimension tables copy verbatim. The script exits
+non-zero if any order of the rung has no customer.
 
 Usage: python3 tools/make_sfrung.py [sf_dir] [out_dir] [factor]
 """
@@ -32,6 +33,7 @@ shifted = {
     "events": ["event_id", "user_id"],
     "orders": ["o_orderkey", "o_custkey"],
     "lineitem": ["l_orderkey"],
+    "customer": ["c_custkey"],
 }
 for t, keys in shifted.items():
     repl = ", ".join(f"{k} + c.c * 100000000 AS {k}" for k in keys)
@@ -39,8 +41,13 @@ for t, keys in shifted.items():
       COPY (SELECT * EXCLUDE (c) REPLACE ({repl})
             FROM '{sf}/{t}.parquet' {cj})
       TO '{out}/{t}.parquet' (FORMAT PARQUET)""")
-for t in ["customer", "nation", "part", "region", "supplier"]:
+for t in ["nation", "part", "region", "supplier"]:
     con.sql(f"COPY (SELECT * FROM '{sf}/{t}.parquet') TO '{out}/{t}.parquet' (FORMAT PARQUET)")
-for t in list(shifted) + ["customer", "part", "supplier"]:
+for t in list(shifted) + ["part", "supplier"]:
     n = con.sql(f"SELECT count(*) FROM '{out}/{t}.parquet'").fetchone()[0]
     print(t, n)
+orphans = con.sql(f"""
+  SELECT count(*) FROM '{out}/orders.parquet' o
+  ANTI JOIN '{out}/customer.parquet' c ON o.o_custkey = c.c_custkey""").fetchone()[0]
+if orphans:
+    sys.exit(f"{orphans} orders have no customer")
