@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{hashes, vec, VectorMath}
@@ -1948,37 +1948,41 @@ object IndexCatalog {
       .cache()
   }
 
-  /** largest query batch the catalog serving path will collect: the
-    * same contract the SQL route enforces (FaissSql) — fail loudly
-    * instead of OOMing the driver on an unbounded query set.
-    * Overridable per-session for tests / constrained drivers. */
+  /** largest query batch a serving path will collect to the driver —
+    * fail loudly instead of OOMing the driver on an unbounded query
+    * set. Overridable per-session for tests / constrained drivers. */
   private[graft] val MaxQueryBatchDefault = 1 << 20
   private[graft] val MaxQueryBatchConf = "spark.graft.index.maxQueryBatch"
 
-  /** bounded FAISS-batch query collect (null rows skipped) — shared by
-    * every index kind's search path. The limit+check makes the bound a
-    * hard contract on the PROGRAMMATIC path too, not just the SQL one:
-    * an oversized batch throws with a pointer at the unbounded-join
-    * operator instead of collecting to death. */
-  private def collectQueryBatch(queries: DataFrame): Array[(Long, Array[Float])] = {
+  /** the one bounded query-batch collect behind every serving path
+    * (catalog search, `Knn`'s local and partition-heap kernels, SQL
+    * `faiss_search`): at most `maxQueryBatch` rows reach the driver,
+    * and one more throws with a pointer at the unbounded-join operator
+    * instead of collecting to death. `what` names the caller's batch
+    * in the error ("knn query batch", ...). */
+  private[graft] def collectBounded(batch: DataFrame, what: String): Array[Row] = {
     // clamped so the +1 below can't overflow to a negative limit when
-    // the conf is set to Int.MaxValue (same guard as Knn's local serve)
-    val maxBatch = math.min(maxQueryBatch(queries.sparkSession), Int.MaxValue - 1)
-    // null rows are dropped BEFORE the limit so they never count toward
-    // the cap — the bound is on rows actually collected
-    val rows = queries
-      .where(col("qid").isNotNull && col("qvec").isNotNull)
-      .select(col("qid").cast("long"), vec.vector(col("qvec")))
-      .limit(maxBatch + 1)
-      .collect()
+    // the conf is set to Int.MaxValue
+    val maxBatch = math.min(maxQueryBatch(batch.sparkSession), Int.MaxValue - 1)
+    val rows = batch.limit(maxBatch + 1).collect()
     if (rows.length > maxBatch)
       throw new IllegalStateException(
-        s"index search query batch exceeds $maxBatch rows ($MaxQueryBatchConf); the " +
-          "catalog serving path collects the query batch to the driver (FAISS-parity " +
-          "bounded-batch contract) — use graft.search.AnnJoin.ivfJoin / ivfRadiusJoin " +
-          "for unbounded query sets")
-    rows.map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+        s"$what exceeds $maxBatch rows ($MaxQueryBatchConf); this serving path collects " +
+          "its query batch to the driver (FAISS-parity bounded-batch contract) — use " +
+          "graft.search.AnnJoin.ivfJoin / ivfRadiusJoin for unbounded query sets")
+    rows
   }
+
+  /** catalog search's (qid, vec) batch — shared by every index kind.
+    * Null rows are dropped BEFORE the limit so they never count toward
+    * the cap: the bound is on rows actually collected. */
+  private def collectQueryBatch(queries: DataFrame): Array[(Long, Array[Float])] =
+    collectBounded(
+      queries
+        .where(col("qid").isNotNull && col("qvec").isNotNull)
+        .select(col("qid").cast("long"), vec.vector(col("qvec"))),
+      "index search query batch")
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
 
   /** Storage level for BUILT index layouts (the corpus-scale caches).
     * Default MEMORY_AND_DISK (deserialized — fastest scans). When
@@ -1999,14 +2003,12 @@ object IndexCatalog {
   }
 
   /** parse the query-batch cap, naming the config key on a bad value
-    * instead of surfacing a bare NumberFormatException. Shared with the
-    * programmatic `Knn` flat path (same contract, same error shape). */
+    * instead of surfacing a bare NumberFormatException. 0 is valid (it
+    * rejects every non-empty batch); negative values are not. */
   private[graft] def maxQueryBatch(spark: SparkSession): Int =
     spark.conf.getOption(MaxQueryBatchConf).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$MaxQueryBatchConf must be an integer, got '$v'")
-      }
+      v.toIntOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"$MaxQueryBatchConf must be a non-negative integer, got '$v'"))
     }.getOrElse(MaxQueryBatchDefault)
 
   /**
@@ -2032,22 +2034,8 @@ object IndexCatalog {
       m: Int)
       extends BuiltIndex {
 
-    def search(queries: DataFrame, k: Int, params: Map[String, String]): DataFrame = {
-      val spark = data.sparkSession
-      import spark.implicits._
-      val efSearch = positiveIntParam(params, "efSearch", math.max(2 * k, 64))
-      val metricId = VectorMath.metricId(meta.metric)
-      val qArr = collectQueryBatch(queries)
-      val qB = spark.sparkContext.broadcast(qArr)
-      val perShard = graphs.flatMap { g =>
-        qB.value.iterator.flatMap { case (qid, qv) =>
-          Nsw.search(g, qv, k, efSearch, metricId).iterator
-            .map { case (d, label) => (qid, label, d) }
-        }
-      }.toDF("qid", "label", "_dist")
-      Knn.rankResults(perShard, k, ascending = VectorMath.smallerIsCloser(metricId),
-        padToK = params.get("pad").exists(_.toBoolean))
-    }
+    def search(queries: DataFrame, k: Int, params: Map[String, String]): DataFrame =
+      searchShards(queries, k, params, None)
 
     /**
      * Selector inside the graph search (FAISS applies its IDSelector
@@ -2073,30 +2061,41 @@ object IndexCatalog {
       }
       if (!narrow || restricted.rdd.getNumPartitions != graphs.getNumPartitions)
         super.searchRestricted(queries, k, params, restrict)
-      else {
-        val spark = data.sparkSession
-        import spark.implicits._
-        val efSearch = positiveIntParam(params, "efSearch", math.max(2 * k, 64))
-        val metricId = VectorMath.metricId(meta.metric)
-        val qArr = collectQueryBatch(queries)
-        val qB = spark.sparkContext.broadcast(qArr)
-        val allowedRdd = restricted.select("label").rdd.mapPartitions({ it =>
-          val s = new java.util.HashSet[Long]()
-          it.foreach(r => s.add(r.getLong(0)))
-          Iterator.single(s)
-        }, preservesPartitioning = true)
-        val perShard = graphs.zipPartitions(allowedRdd) { (git, ait) =>
-          val allowed = if (ait.hasNext) ait.next() else new java.util.HashSet[Long]()
-          git.flatMap { g =>
-            qB.value.iterator.flatMap { case (qid, qv) =>
-              Nsw.searchSel(g, qv, k, efSearch, metricId, allowed.contains).iterator
-                .map { case (d, label) => (qid, label, d) }
-            }
+      else searchShards(queries, k, params, Some(restricted))
+    }
+
+    /** the request path: collect + broadcast the query batch, search
+      * every shard graph (each under its own shard's allowed-label set
+      * when a shard-aligned `restricted` is given), merge per-shard
+      * top-k globally */
+    private def searchShards(queries: DataFrame, k: Int, params: Map[String, String],
+        restricted: Option[DataFrame]): DataFrame = {
+      val spark = data.sparkSession
+      import spark.implicits._
+      val efSearch = positiveIntParam(params, "efSearch", math.max(2 * k, 64))
+      val metricId = VectorMath.metricId(meta.metric)
+      val qB = spark.sparkContext.broadcast(collectQueryBatch(queries))
+      val searchShard: (Nsw.Graph, Long => Boolean) => Iterator[(Long, Long, Double)] =
+        (g, allowed) => qB.value.iterator.flatMap { case (qid, qv) =>
+          Nsw.search(g, qv, k, efSearch, metricId, allowed).iterator
+            .map { case (d, label) => (qid, label, d) }
+        }
+      val perShard = restricted match {
+        case None => graphs.flatMap(searchShard(_, null))
+        case Some(rs) =>
+          val allowedRdd = rs.select("label").rdd.mapPartitions({ it =>
+            val s = new java.util.HashSet[Long]()
+            it.foreach(r => s.add(r.getLong(0)))
+            Iterator.single(s)
+          }, preservesPartitioning = true)
+          graphs.zipPartitions(allowedRdd) { (git, ait) =>
+            val allowed = if (ait.hasNext) ait.next() else new java.util.HashSet[Long]()
+            git.flatMap(searchShard(_, allowed.contains))
           }
-        }.toDF("qid", "label", "_dist")
-        Knn.rankResults(perShard, k, ascending = VectorMath.smallerIsCloser(metricId),
-          padToK = params.get("pad").exists(_.toBoolean))
       }
+      Knn.rankResults(perShard.toDF("qid", "label", "_dist"), k,
+        ascending = VectorMath.smallerIsCloser(metricId),
+        padToK = params.get("pad").exists(_.toBoolean))
     }
 
     /** driver snapshot of the per-shard graphs for injected replay

@@ -109,11 +109,21 @@ object Nsw {
    * (dist, idx) best-first. `labelOf` breaks distance ties (matching
    * exact search's deterministic (dist, label) ordering) so shard
    * results merge consistently.
+   *
+   * With a node selector (`allowed` non-null — FAISS
+   * `SearchParametersHNSW::sel`) the beam still TRAVERSES the full
+   * graph (skipping disallowed nodes would sever connectivity), and a
+   * second bounded queue keeps the best `width` ALLOWED visited nodes;
+   * that queue is the result. Every visited allowed node is a
+   * candidate, not only beam survivors, so a selective filter degrades
+   * recall no faster than FAISS's own selector path. Without a
+   * selector (plain search, graph build) the loop does no selector work.
    */
   private def searchLayer(
       vecs: Array[Array[Float]], adj: Int => scala.collection.Seq[Int],
       labelOf: Int => Long, nNodes: Int,
-      start: Int, q: Array[Float], k: Int, ef: Int, metricId: Int): Array[(Double, Int)] = {
+      start: Int, q: Array[Float], k: Int, ef: Int, metricId: Int,
+      allowed: Int => Boolean = null): Array[(Double, Int)] = {
     if (nNodes == 0) return Array.empty
     val visited = new java.util.BitSet(nNodes)
     // candidates: min-heap by distance; results: bounded max-heap on (dist, label)
@@ -121,9 +131,15 @@ object Nsw {
     val resOrd: Ordering[(Double, Int)] =
       Ordering.by { case (d, idx) => (d, labelOf(idx)) }
     val res = mutable.PriorityQueue.empty[(Double, Int)](resOrd)
-    val d0 = key(metricId, q, vecs(start))
-    cand.enqueue((d0, start)); res.enqueue((d0, start)); visited.set(start)
+    val sel = if (allowed == null) null else mutable.PriorityQueue.empty[(Double, Int)](resOrd)
     val width = math.max(ef, k)
+    @inline def visit(d: Double, idx: Int): Unit =
+      if (sel != null && allowed(idx)) {
+        sel.enqueue((d, idx))
+        if (sel.size > width) sel.dequeue()
+      }
+    val d0 = key(metricId, q, vecs(start))
+    cand.enqueue((d0, start)); res.enqueue((d0, start)); visited.set(start); visit(d0, start)
     while (cand.nonEmpty) {
       val (d, node) = cand.dequeue()
       if (d > res.head._1 && res.size >= width) {
@@ -136,6 +152,7 @@ object Nsw {
           if (!visited.get(nb)) {
             visited.set(nb)
             val dn = key(metricId, q, vecs(nb))
+            visit(dn, nb)
             if (res.size < width || resOrd.lt((dn, nb), res.head)) {
               cand.enqueue((dn, nb))
               res.enqueue((dn, nb))
@@ -146,7 +163,7 @@ object Nsw {
         }
       }
     }
-    res.dequeueAll.reverse.take(k).toArray
+    (if (sel == null) res else sel).dequeueAll.reverse.take(k).toArray
   }
 
   /** incremental insert-based construction, one layer stack per node.
@@ -247,98 +264,41 @@ object Nsw {
 
   /** top-k labels for a query: greedy descent to layer 0, then beam.
     * Returns (RAW metric distance, label) — the ordering key negates
-    * larger-is-better metrics internally. */
+    * larger-is-better metrics internally. A non-null `allowed` is the
+    * label selector applied inside the layer-0 beam (see searchLayer);
+    * a collapsed node is a candidate when ANY of its labels passes, and
+    * disallowed labels are dropped at expansion. */
   def search(g: Graph, q: Array[Float], k: Int, efSearch: Int,
-      metricId: Int = graft.functions.VectorMath.L2SQ): Array[(Double, Long)] = {
+      metricId: Int = graft.functions.VectorMath.L2SQ,
+      allowed: Long => Boolean = null): Array[(Double, Long)] = {
     if (g.labels.isEmpty) return Array.empty
     var ep = g.entry
     var l = g.maxLevel
     while (l > 0) { ep = greedyClosest(g.vecs, g.adj, l, ep, q, metricId); l -= 1 }
-    val nodes = searchLayer(
-      g.vecs, i => scala.collection.immutable.ArraySeq.unsafeWrapArray(g.adj(i)(0)),
-      g.labels(_), g.labels.length, ep, q, k, math.max(efSearch, k), metricId)
-    expand(g, q, nodes, k, metricId)
-  }
-
-  /** top-k NODES → top-k (dist, label) pairs, re-inflating collapsed
-    * duplicate labels. k nodes provably suffice: every node ranked
-    * before a top-k label's node contributes at least one candidate
-    * that sorts earlier, so the label's node is within the first k. */
-  private def expand(g: Graph, q: Array[Float], nodes: Array[(Double, Int)], k: Int,
-      metricId: Int): Array[(Double, Long)] = {
-    val out = mutable.ArrayBuffer.empty[(Double, Double, Long)] // (key, raw, label)
-    nodes.foreach { case (kd, idx) =>
-      val rd = rawDist(metricId, q, g.vecs(idx))
-      g.dups(idx).foreach(l => out += ((kd, rd, l)))
-    }
-    out.sortBy { case (kd, _, l) => (kd, l) }.take(k)
-      .map { case (_, rd, l) => (rd, l) }.toArray
-  }
-
-  /**
-   * Selector-inside-graph search (FAISS `SearchParametersHNSW::sel`):
-   * the beam TRAVERSES the full graph — deleting disallowed nodes
-   * would sever shard connectivity — but only allowed labels are
-   * collected into the result set. Every visited allowed node is a
-   * candidate result (not only beam survivors), so a selective filter
-   * degrades recall no faster than FAISS's own selector path.
-   */
-  def searchSel(g: Graph, q: Array[Float], k: Int, efSearch: Int,
-      metricId: Int, allowedLabel: Long => Boolean): Array[(Double, Long)] = {
-    if (g.labels.isEmpty) return Array.empty
-    var ep = g.entry
-    var l = g.maxLevel
-    while (l > 0) { ep = greedyClosest(g.vecs, g.adj, l, ep, q, metricId); l -= 1 }
-    val vecs = g.vecs
-    val adj = g.adj
-    val nNodes = g.labels.length
-    val visited = new java.util.BitSet(nNodes)
-    val cand = mutable.PriorityQueue.empty[(Double, Int)](Ordering.by(-_._1))
-    val beamOrd: Ordering[(Double, Int)] =
-      Ordering.by { case (d, idx) => (d, g.labels(idx)) }
-    val beam = mutable.PriorityQueue.empty[(Double, Int)](beamOrd)
-    val sel = mutable.PriorityQueue.empty[(Double, Int)](beamOrd)
-    val width = math.max(efSearch, k)
-    // a collapsed node is a candidate when ANY of its labels passes the
-    // selector; disallowed labels are filtered at the final expansion
-    @inline def visit(idx: Int, d: Double): Unit = {
+    val allowedNode: Int => Boolean = if (allowed == null) null else { idx =>
       val ls = g.dups(idx)
       var i = 0
       var any = false
-      while (i < ls.length && !any) { any = allowedLabel(ls(i)); i += 1 }
-      if (any) {
-        sel.enqueue((d, idx))
-        if (sel.size > width) sel.dequeue()
-      }
+      while (i < ls.length && !any) { any = allowed(ls(i)); i += 1 }
+      any
     }
-    val d0 = key(metricId, q, vecs(ep))
-    cand.enqueue((d0, ep)); beam.enqueue((d0, ep)); visited.set(ep); visit(ep, d0)
-    while (cand.nonEmpty) {
-      val (d, node) = cand.dequeue()
-      if (d > beam.head._1 && beam.size >= width) cand.clear()
-      else {
-        val neighbors = adj(node)(0)
-        var i = 0
-        while (i < neighbors.length) {
-          val nb = neighbors(i)
-          if (!visited.get(nb)) {
-            visited.set(nb)
-            val dn = key(metricId, q, vecs(nb))
-            visit(nb, dn)
-            if (beam.size < width || beamOrd.lt((dn, nb), beam.head)) {
-              cand.enqueue((dn, nb))
-              beam.enqueue((dn, nb))
-              if (beam.size > width) beam.dequeue()
-            }
-          }
-          i += 1
-        }
-      }
-    }
+    val nodes = searchLayer(
+      g.vecs, i => scala.collection.immutable.ArraySeq.unsafeWrapArray(g.adj(i)(0)),
+      g.labels(_), g.labels.length, ep, q, k, math.max(efSearch, k), metricId, allowedNode)
+    expand(g, q, nodes, k, metricId, allowed)
+  }
+
+  /** top-k NODES → top-k (dist, label) pairs, re-inflating collapsed
+    * duplicate labels (only the `allowed` ones, when a selector is
+    * given). k nodes provably suffice: every node ranked before a top-k
+    * label's node contributes at least one candidate that sorts
+    * earlier, so the label's node is within the first k. */
+  private def expand(g: Graph, q: Array[Float], nodes: Array[(Double, Int)], k: Int,
+      metricId: Int, allowed: Long => Boolean): Array[(Double, Long)] = {
     val out = mutable.ArrayBuffer.empty[(Double, Double, Long)] // (key, raw, label)
-    sel.dequeueAll.reverse.take(k).foreach { case (kd, idx) =>
-      val rd = rawDist(metricId, q, vecs(idx))
-      g.dups(idx).foreach(l => if (allowedLabel(l)) out += ((kd, rd, l)))
+    nodes.foreach { case (kd, idx) =>
+      val rd = rawDist(metricId, q, g.vecs(idx))
+      g.dups(idx).foreach(l => if (allowed == null || allowed(l)) out += ((kd, rd, l)))
     }
     out.sortBy { case (kd, _, l) => (kd, l) }.take(k)
       .map { case (_, rd, l) => (rd, l) }.toArray

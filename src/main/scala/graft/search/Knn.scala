@@ -217,16 +217,8 @@ object Knn {
       }
     }
     val (labels, vecs) = corpus
-    val maxBatch =
-      math.min(graft.index.IndexCatalog.maxQueryBatch(spark), Int.MaxValue - 1)
-    val qRows = cleanQueries
-      .select(col(qidCol).cast("long"), col(qvecCol))
-      .limit(maxBatch + 1)
-      .collect()
-    if (qRows.length > maxBatch)
-      throw new IllegalStateException(
-        s"knn query batch exceeds $maxBatch rows (${graft.index.IndexCatalog.MaxQueryBatchConf}); " +
-          "local serve collects the query side — use the distributed plan for unbounded batches")
+    val qRows = graft.index.IndexCatalog.collectBounded(
+      cleanQueries.select(col(qidCol).cast("long"), col(qvecCol)), "knn query batch")
     val out = Seq.newBuilder[(Long, Int, Long, Double)]
     val padDist = if (asc) Double.MaxValue else Double.MinValue
     qRows.foreach { r =>
@@ -385,23 +377,14 @@ object Knn {
     import spark.implicits._
     val mid = VectorMath.metricId(metric)
     val asc = VectorMath.smallerIsCloser(mid)
-    // the query side is collected to the driver — same LOUD bound as
-    // IndexCatalog's serving path (spark.graft.index.maxQueryBatch),
-    // so an unbounded left side fails with a pointer at the
-    // distributed operator instead of silently OOMing the driver
-    val maxBatch = graft.index.IndexCatalog.maxQueryBatch(spark)
-    val rows = queries
-      .where(col("qid").isNotNull && col("qvec").isNotNull) // null rows match searchFlat's skip
-      .select(col("qid").cast("long"), col("qvec"))
-      .limit(maxBatch + 1)
-      .collect()
-    if (rows.length > maxBatch)
-      throw new IllegalStateException(
-        s"knn query batch exceeds $maxBatch rows (${graft.index.IndexCatalog.MaxQueryBatchConf}); " +
-          "searchFlatFast/knnJoin collect the query side to the driver — use " +
-          "graft.search.AnnJoin.ivfJoin / ivfRadiusJoin for unbounded query sets")
-    val qArr: Array[(Long, Array[Float])] =
-      rows.map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    // the query side is collected to the driver under the serving
+    // paths' one loud bound (spark.graft.index.maxQueryBatch)
+    val qArr: Array[(Long, Array[Float])] = graft.index.IndexCatalog.collectBounded(
+      queries
+        .where(col("qid").isNotNull && col("qvec").isNotNull) // null rows match searchFlat's skip
+        .select(col("qid").cast("long"), col("qvec")),
+      "knn query batch")
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
     val qB = spark.sparkContext.broadcast(qArr)
     // InternalRow scan, not .rdd: the external-Row conversion decodes
     // every vector into boxed Seq[Float] ONCE PER CORPUS ROW — at the

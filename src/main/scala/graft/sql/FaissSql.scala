@@ -190,20 +190,14 @@ case class FaissSearchRewrite(spark: SparkSession, postAnalysis: Boolean = true)
     val rcol = s"__graft_res_$i"
     val df = GraftBridge.ofRows(spark, child)
     val qvecCol = GraftBridge.column(call.qvec)
-    // the query batch is bounded by contract (every index kind
-    // broadcasts or collects it — FAISS-parity serving path), so assign
-    // qids on the driver and plan from a LocalRelation: one distinct
-    // job here instead of a 3-exchange window chain evaluated once per
-    // use of the batch
-    val maxBatch = 1 << 20 // ~1M distinct query vectors; fail loudly, don't OOM the driver
-    val qRows = df
-      .select(graft.functions.vec.vector(qvecCol).as("qvec"))
-      .where(col("qvec").isNotNull).distinct().limit(maxBatch + 1).collect()
-    if (qRows.length > maxBatch)
-      throw new IllegalStateException(
-        s"faiss_search query batch exceeds $maxBatch distinct vectors; per-row SQL search " +
-          "is the bounded-batch serving path — use graft.search.AnnJoin.ivfJoin for " +
-          "unbounded query sets")
+    // the query batch is bounded by contract (spark.graft.index.maxQueryBatch,
+    // like every serving path), so assign qids on the driver and plan
+    // from a LocalRelation: one distinct job here instead of a
+    // 3-exchange window chain evaluated once per use of the batch
+    val qRows = IndexCatalog.collectBounded(
+      df.select(graft.functions.vec.vector(qvecCol).as("qvec"))
+        .where(col("qvec").isNotNull).distinct(),
+      "faiss_search query batch")
     val qSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("qid", org.apache.spark.sql.types.LongType,
         nullable = false),

@@ -1,6 +1,8 @@
 package graft.sql
 
 import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /**
  * Share one computation across several consumers of the same DataFrame
@@ -28,7 +30,9 @@ import org.apache.spark.sql.{DataFrame, GraftBridge}
  * Caveats:
  *  - call it on a plan whose LAST operator is (or contains) the
  *    exchange to share (e.g. `.repartition(key)`); a narrow tail after
- *    the last shuffle re-runs per consumer (cheap by construction).
+ *    the last shuffle re-runs per consumer (cheap by construction). A
+ *    plan with no shuffle exchange at all has nothing to share — every
+ *    consumer would silently recompute it — so it is rejected.
  *  - the RDD is created fresh inside the calling query, per invocation:
  *    nothing persists across runs (same contract as the eager
  *    localCheckpoint precedent in dedup_minhash_eval).
@@ -39,6 +43,15 @@ object PlanPin {
   private val pinSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   def shareExchange(df: DataFrame): DataFrame = {
+    // read before toRdd: the adaptive plan's initial shape carries every
+    // planned exchange, even one a runtime rewrite later elides
+    val shuffles = new AdaptiveSparkPlanHelper {}.find(df.queryExecution.executedPlan) {
+      case _: ShuffleExchangeLike => true
+      case _ => false
+    }
+    require(shuffles.isDefined,
+      "PlanPin.shareExchange needs a plan with a shuffle exchange to share (e.g. end it " +
+        "with .repartition(key)); this plan has none, so each consumer would recompute it")
     val rdd = df.queryExecution.toRdd
     // plan evidence for the judged rounds: consumers show only a `Scan
     // ExistingRDD` leaf, so -Dgraft.planpin.dumpdir=<dir> writes each

@@ -1128,6 +1128,29 @@ class IndexCatalogSpec extends SparkSpec {
     assert(gotF === want)
   }
 
+  test("HNSW: an always-true selector equals the plain search row for row (one shard body)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(71L)
+    // multi-shard corpus with replicated vectors (collapsed graph nodes)
+    val pts = Array.tabulate(400)(i => Array.fill(8)(rnd.nextFloat() * 4f))
+    val data = (0 until 600).map(i => (i.toLong, pts(i % 400))).toDF("label", "vec").repartition(3)
+    val queries = (0 until 12).map(i => (i.toLong, Array.fill(8)(rnd.nextFloat() * 4f)))
+      .toDF("qid", "qvec")
+    IndexCatalog.create("t_hnsw_one", 8, "IDMap,HNSW32", "l2sq", Map("efConstruction" -> "40"))
+    IndexCatalog.add(data, "t_hnsw_one")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
+    for (params <- Seq(Map.empty[String, String], Map("efSearch" -> "8"), Map("pad" -> "true"))) {
+      val filtered = IndexCatalog.searchFilter("t_hnsw_one", 10, queries, lit(true), params)
+      assert(!filtered.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"),
+        "lit(true) is narrow: it must take the graph path, not the flat fallback")
+      val plain = rows(IndexCatalog.search("t_hnsw_one", 10, queries, params))
+      assert(plain.length === 120)
+      assert(rows(filtered) === plain, s"params $params")
+    }
+    IndexCatalog.destroy("t_hnsw_one")
+  }
+
   test("HNSW filtered search composes the selector INSIDE the graph traversal") {
     IndexCatalog.create("t_hnsw_sel", 2, "IDMap,HNSW16", "l2sq", Map("efConstruction" -> "128"))
     IndexCatalog.add(grid.coalesce(1), "t_hnsw_sel")

@@ -74,8 +74,10 @@ class NswSpec extends AnyFunSuite {
       base.map { case (l, v) => (c * 100L + l, v) }).toArray
     val g = Nsw.build(pts, m = 8, efConstruction = 64)
     val L2SQ = graft.functions.VectorMath.L2SQ
-    val res = Nsw.searchSel(g, Array.fill(4)(5.0f), 6, 64, L2SQ, _ % 2 == 0)
-    assert(res.forall(_._2 % 2 == 0), "odd label leaked from a collapsed node")
+    // each node carries labels c * 100 + l for c in 0..9: the selector
+    // passes half of every node's labels, so only a per-label filter holds
+    val res = Nsw.search(g, Array.fill(4)(5.0f), 6, 64, L2SQ, _ / 100 % 2 == 0)
+    assert(res.forall(_._2 / 100 % 2 == 0), "disallowed label leaked from a collapsed node")
     assert(res.length === 6)
   }
 
@@ -106,7 +108,7 @@ class NswSpec extends AnyFunSuite {
     var hits = 0; var total = 0
     for (_ <- 0 until 20) {
       val q = Array.fill(8)(rnd.nextFloat() * 10f)
-      val res = Nsw.searchSel(g, q, 10, 128, L2SQ, _ % 2 == 0)
+      val res = Nsw.search(g, q, 10, 128, L2SQ, _ % 2 == 0)
       assert(res.forall(_._2 % 2 == 0), "odd label leaked through the selector")
       assert(res.length === 10, "half the corpus is allowed; k must fill")
       // distances ascend (best first)
@@ -125,7 +127,7 @@ class NswSpec extends AnyFunSuite {
     // the sole allowed node is FAR from the query — only a traversal
     // that keeps full connectivity while collecting every visited
     // allowed node can still surface it at high ef
-    val res = Nsw.searchSel(g, Array(0f, 0f, 0f, 0f), 3, 500, L2SQ, _ == 499L)
+    val res = Nsw.search(g, Array(0f, 0f, 0f, 0f), 3, 500, L2SQ, _ == 499L)
     assert(res.map(_._2).toSeq === Seq(499L))
   }
 
@@ -135,7 +137,207 @@ class NswSpec extends AnyFunSuite {
     val L2SQ = graft.functions.VectorMath.L2SQ
     val q = Array.fill(8)(3.3f)
     val plain = Nsw.search(g, q, 10, 96, L2SQ).toSeq
-    val sel = Nsw.searchSel(g, q, 10, 96, L2SQ, _ => true).toSeq
+    val sel = Nsw.search(g, q, 10, 96, L2SQ, _ => true).toSeq
     assert(sel === plain)
+  }
+
+  test("merged beam matches the separate plain and selector beams it replaced") {
+    val VM = graft.functions.VectorMath
+    val rnd = new scala.util.Random(53L)
+    val base = randomPoints(40, 6, seed = 61L)
+    val graphs = Seq(
+      "random" -> randomPoints(600, 6, seed = 59L),
+      // 40 distinct vectors x 5 labels each, plus 100 unique points
+      "collapsed" -> ((0 until 5).flatMap(c => base.map { case (l, v) => (c * 1000L + l, v) }) ++
+        randomPoints(100, 6, seed = 67L).map { case (l, v) => (50000L + l, v) }).toArray,
+      "single" -> Array((42L, Array.fill(6)(1f))),
+      "empty" -> Array.empty[(Long, Array[Float])])
+    val selectors: Seq[(String, Long => Boolean)] = Seq(
+      "all" -> (_ => true), "even" -> (_ % 2 == 0), "singleton" -> (_ == 17L),
+      // passes only non-minimum labels of a collapsed node
+      "later copies" -> (_ / 1000 % 2 == 1), "none" -> (_ => false))
+    var compared = 0
+    for (metric <- Seq(VM.L2SQ, VM.IP, VM.COSINE); (gName, pts) <- graphs) {
+      val g = Nsw.build(pts, m = 8, efConstruction = 48, metricId = metric)
+      if (gName == "collapsed") assert(g.labels.length === 140)
+      val queries = Array.fill(12)(Array.fill(6)(rnd.nextFloat() * 10f - 2f))
+      for (q <- queries; k <- Seq(1, 5, 12); ef <- Seq(1, 24, 80)) {
+        val ctx = s"metric=$metric graph=$gName k=$k ef=$ef"
+        assert(Nsw.search(g, q, k, ef, metric).toSeq ===
+          ReferenceBeams.search(g, q, k, ef, metric).toSeq, ctx)
+        for ((sName, sel) <- selectors) {
+          assert(Nsw.search(g, q, k, ef, metric, sel).toSeq ===
+            ReferenceBeams.searchSel(g, q, k, ef, metric, sel).toSeq, s"$ctx selector=$sName")
+          compared += 1
+        }
+      }
+    }
+    assert(compared === 3 * 4 * 12 * 3 * 3 * 5)
+  }
+}
+
+/** The HNSW beams as they stood before the selector moved into
+  * `Nsw.searchLayer`: a plain layer-0 beam and a separate selector beam
+  * that also queues every visited allowed node. Kept verbatim (greedy
+  * descent and expansion included) as the reference the merged beam
+  * must reproduce result for result. */
+private object ReferenceBeams {
+  import scala.collection.mutable
+  import graft.functions.VectorMath
+  import Nsw.Graph
+
+  private def rawDist(metricId: Int, a: Array[Float], b: Array[Float]): Double = {
+    val VM = VectorMath
+    def l2sq(a: Array[Float], b: Array[Float]) = VM.distArr(VM.L2SQ, a, b, 0.0)
+    def ip(a: Array[Float], b: Array[Float]) = VM.distArr(VM.IP, a, b, 0.0)
+    metricId match {
+      case VM.L2SQ => l2sq(a, b)
+      case VM.L2 => math.sqrt(l2sq(a, b))
+      case VM.IP => ip(a, b)
+      case VM.COSINE =>
+        val num = ip(a, b)
+        val den = math.sqrt(ip(a, a)) * math.sqrt(ip(b, b))
+        if (den == 0.0) 1.0 else 1.0 - num / den
+    }
+  }
+
+  private def key(metricId: Int, a: Array[Float], b: Array[Float]): Double = {
+    val d = rawDist(metricId, a, b)
+    if (VectorMath.smallerIsCloser(metricId)) d else -d
+  }
+
+  private def greedyClosest(
+      vecs: Array[Array[Float]], adj: Array[Array[Array[Int]]],
+      layer: Int, start: Int, q: Array[Float], metricId: Int): Int = {
+    var cur = start
+    var curD = key(metricId, q, vecs(cur))
+    var improved = true
+    while (improved) {
+      improved = false
+      val nbs = adj(cur)(layer)
+      var i = 0
+      while (i < nbs.length) {
+        val nb = nbs(i)
+        val d = key(metricId, q, vecs(nb))
+        if (d < curD) { curD = d; cur = nb; improved = true }
+        i += 1
+      }
+    }
+    cur
+  }
+
+  private def searchLayer(
+      vecs: Array[Array[Float]], adj: Int => scala.collection.Seq[Int],
+      labelOf: Int => Long, nNodes: Int,
+      start: Int, q: Array[Float], k: Int, ef: Int, metricId: Int): Array[(Double, Int)] = {
+    if (nNodes == 0) return Array.empty
+    val visited = new java.util.BitSet(nNodes)
+    val cand = mutable.PriorityQueue.empty[(Double, Int)](Ordering.by(-_._1))
+    val resOrd: Ordering[(Double, Int)] =
+      Ordering.by { case (d, idx) => (d, labelOf(idx)) }
+    val res = mutable.PriorityQueue.empty[(Double, Int)](resOrd)
+    val d0 = key(metricId, q, vecs(start))
+    cand.enqueue((d0, start)); res.enqueue((d0, start)); visited.set(start)
+    val width = math.max(ef, k)
+    while (cand.nonEmpty) {
+      val (d, node) = cand.dequeue()
+      if (d > res.head._1 && res.size >= width) {
+        cand.clear()
+      } else {
+        val neighbors = adj(node)
+        var i = 0
+        while (i < neighbors.length) {
+          val nb = neighbors(i)
+          if (!visited.get(nb)) {
+            visited.set(nb)
+            val dn = key(metricId, q, vecs(nb))
+            if (res.size < width || resOrd.lt((dn, nb), res.head)) {
+              cand.enqueue((dn, nb))
+              res.enqueue((dn, nb))
+              if (res.size > width) res.dequeue()
+            }
+          }
+          i += 1
+        }
+      }
+    }
+    res.dequeueAll.reverse.take(k).toArray
+  }
+
+  def search(g: Graph, q: Array[Float], k: Int, efSearch: Int,
+      metricId: Int): Array[(Double, Long)] = {
+    if (g.labels.isEmpty) return Array.empty
+    var ep = g.entry
+    var l = g.maxLevel
+    while (l > 0) { ep = greedyClosest(g.vecs, g.adj, l, ep, q, metricId); l -= 1 }
+    val nodes = searchLayer(
+      g.vecs, i => scala.collection.immutable.ArraySeq.unsafeWrapArray(g.adj(i)(0)),
+      g.labels(_), g.labels.length, ep, q, k, math.max(efSearch, k), metricId)
+    val out = mutable.ArrayBuffer.empty[(Double, Double, Long)]
+    nodes.foreach { case (kd, idx) =>
+      val rd = rawDist(metricId, q, g.vecs(idx))
+      g.dups(idx).foreach(l => out += ((kd, rd, l)))
+    }
+    out.sortBy { case (kd, _, l) => (kd, l) }.take(k)
+      .map { case (_, rd, l) => (rd, l) }.toArray
+  }
+
+  def searchSel(g: Graph, q: Array[Float], k: Int, efSearch: Int,
+      metricId: Int, allowedLabel: Long => Boolean): Array[(Double, Long)] = {
+    if (g.labels.isEmpty) return Array.empty
+    var ep = g.entry
+    var l = g.maxLevel
+    while (l > 0) { ep = greedyClosest(g.vecs, g.adj, l, ep, q, metricId); l -= 1 }
+    val vecs = g.vecs
+    val adj = g.adj
+    val nNodes = g.labels.length
+    val visited = new java.util.BitSet(nNodes)
+    val cand = mutable.PriorityQueue.empty[(Double, Int)](Ordering.by(-_._1))
+    val beamOrd: Ordering[(Double, Int)] =
+      Ordering.by { case (d, idx) => (d, g.labels(idx)) }
+    val beam = mutable.PriorityQueue.empty[(Double, Int)](beamOrd)
+    val sel = mutable.PriorityQueue.empty[(Double, Int)](beamOrd)
+    val width = math.max(efSearch, k)
+    def visit(idx: Int, d: Double): Unit = {
+      val ls = g.dups(idx)
+      var i = 0
+      var any = false
+      while (i < ls.length && !any) { any = allowedLabel(ls(i)); i += 1 }
+      if (any) {
+        sel.enqueue((d, idx))
+        if (sel.size > width) sel.dequeue()
+      }
+    }
+    val d0 = key(metricId, q, vecs(ep))
+    cand.enqueue((d0, ep)); beam.enqueue((d0, ep)); visited.set(ep); visit(ep, d0)
+    while (cand.nonEmpty) {
+      val (d, node) = cand.dequeue()
+      if (d > beam.head._1 && beam.size >= width) cand.clear()
+      else {
+        val neighbors = adj(node)(0)
+        var i = 0
+        while (i < neighbors.length) {
+          val nb = neighbors(i)
+          if (!visited.get(nb)) {
+            visited.set(nb)
+            val dn = key(metricId, q, vecs(nb))
+            visit(nb, dn)
+            if (beam.size < width || beamOrd.lt((dn, nb), beam.head)) {
+              cand.enqueue((dn, nb))
+              beam.enqueue((dn, nb))
+              if (beam.size > width) beam.dequeue()
+            }
+          }
+          i += 1
+        }
+      }
+    }
+    val out = mutable.ArrayBuffer.empty[(Double, Double, Long)]
+    sel.dequeueAll.reverse.take(k).foreach { case (kd, idx) =>
+      val rd = rawDist(metricId, q, vecs(idx))
+      g.dups(idx).foreach(l => if (allowedLabel(l)) out += ((kd, rd, l)))
+    }
+    out.sortBy { case (kd, _, l) => (kd, l) }.take(k)
+      .map { case (_, rd, l) => (rd, l) }.toArray
   }
 }

@@ -262,6 +262,24 @@ class KnnSpec extends SparkSpec {
     assert(salted === unsalted)
   }
 
+  test("maxQueryBatch edge values: Int.MaxValue still serves, a negative value names the key") {
+    import spark.implicits._
+    val pts = (0 until 20).map(i => (i.toLong, Array(i.toFloat, 0f))).toDF("label", "vec")
+    val qs = pts.select(col("label").as("qid"), col("vec").as("qvec"))
+    val conf = graft.index.IndexCatalog.MaxQueryBatchConf
+    try {
+      // +1 on the cap must not overflow into a negative limit
+      spark.conf.set(conf, Int.MaxValue.toString)
+      assert(Knn.knnJoin(qs, pts, 3, "l2sq").count() === 60)
+      spark.conf.set(conf, "-1")
+      val e = intercept[IllegalArgumentException](Knn.knnJoin(qs, pts, 3, "l2sq").collect())
+      assert(e.getMessage.contains(conf), e.getMessage)
+      // 0 stays valid: it rejects every non-empty batch
+      spark.conf.set(conf, "0")
+      intercept[IllegalStateException](Knn.knnJoin(qs, pts, 3, "l2sq").collect())
+    } finally spark.conf.unset(conf)
+  }
+
   test("knnJoin/searchFlatFast: oversized query side fails loudly, pointing at AnnJoin") {
     import spark.implicits._
     val pts = (0 until 20).map(i => (i.toLong, Array(i.toFloat, 0f))).toDF("label", "vec")

@@ -172,6 +172,28 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(rows(3L).isEmpty, "null query vector must yield an empty result list")
   }
 
+  test("SQL faiss_search honours spark.graft.index.maxQueryBatch (distinct vectors)") {
+    ready
+    import spark.implicits._
+    fresh("sqlidx_cap")
+    spark.sql("SELECT faiss_create('sqlidx_cap', 4, 'IDMap,Flat')").collect()
+    spark.sql("SELECT faiss_add('sql_corpus', 'sqlidx_cap')").collect()
+    // 4 rows, 3 distinct query vectors
+    Seq((1L, Array(3f, 0f, 0f, 0f)), (2L, Array(3f, 0f, 0f, 0f)),
+      (3L, Array(7f, 0f, 0f, 0f)), (4L, Array(11f, 0f, 0f, 0f)))
+      .toDF("qid", "qv").createOrReplaceTempView("sql_q_cap")
+    val q = "SELECT qid, faiss_search('sqlidx_cap', 2, qv) AS rs FROM sql_q_cap"
+    spark.conf.set(IndexCatalog.MaxQueryBatchConf, "2")
+    try {
+      val e = intercept[IllegalStateException](spark.sql(q).collect())
+      assert(e.getMessage.contains("faiss_search query batch exceeds"), e.getMessage)
+      assert(e.getMessage.contains(IndexCatalog.MaxQueryBatchConf), e.getMessage)
+      // the cap counts distinct vectors, not rows
+      spark.conf.set(IndexCatalog.MaxQueryBatchConf, "3")
+      assert(spark.sql(q).collect().length === 4)
+    } finally spark.conf.unset(IndexCatalog.MaxQueryBatchConf)
+  }
+
   test("create_params + named metric_type argument (reference faiss6.test)") {
     ready
     fresh("sqlidx6")

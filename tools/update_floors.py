@@ -9,11 +9,10 @@ already have floors (the robust estimator for Spark-overhead drift —
 round 11 measured the pure-JVM pair loop at reference speed while 30+
 untouched queries ran uniformly 2.2x their floors), falling back to
 the pair-loop env_factor when no floored cohort exists:
-  - existing query: floor = min(old_floor, RAW t) — a raw time below
-    the floor is provably achievable, so lowering by it is always
-    sound; normalized lowering could undercut a query's true quiet
-    cost when the cohort mixes drift populations (overhead-bound vs
-    compute-bound) and arm false regressions
+  - existing query: floor = min(old_floor, t / norm) — floors are in
+    quiet-box units, so a raw time must be normalized before it is
+    compared with or stored as one (a raw time from a box faster than
+    the floors' would otherwise undercut the floor by the box factor)
   - new query (no floor yet): floor = t / norm (best available
     quiet-box estimate)
 
@@ -101,9 +100,9 @@ else:
             v = round(t / norm, 3)
             q[name] = v
             added.append((name, v))
-        elif round(t, 3) < q[name]:
-            lowered.append((name, q[name], round(t, 3)))
-            q[name] = round(t, 3)
+        elif round(t / norm, 3) < q[name]:
+            lowered.append((name, q[name], round(t / norm, 3)))
+            q[name] = round(t / norm, 3)
 if rnd:
     floors["round"] = rnd
 floors["norm_of_last_update"] = round(norm, 4)
