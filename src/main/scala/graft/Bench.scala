@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /**
  * Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR,
  * emitting one JSON line. A warmup pass (tiny query + tiny KMeans)
@@ -83,8 +85,14 @@ object Bench {
       val w = "/root/testdata/sf0.001"
       if (new java.io.File(w).isDirectory) w else sfDir
     }
-    selected.foreach { case (_, fn) =>
-      try timedAction(fn(spark, warmDir)) catch { case _: Throwable => () }
+    selected.foreach { case (name, fn) =>
+      try timedAction(fn(spark, warmDir))
+      catch {
+        // a warm-up failure is reported, not fatal: the timed pass runs
+        // the query again and records it under "failed"
+        case NonFatal(e) =>
+          System.err.println(s"[bench] warmup $name failed: ${e.getClass.getName}: ${e.getMessage}")
+      }
     }
 
     // environment calibration (VERDICT r10 "what's wrong" #1): floors

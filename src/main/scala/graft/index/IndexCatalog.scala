@@ -39,9 +39,10 @@ object IndexCatalog {
     * from the engine default */
   val DefaultSeed = 42L
 
-  /** params("seed") with the catalog default */
+  /** params("seed") with the catalog default; a non-long names the key */
   def seedOf(params: Map[String, String]): Long =
-    params.get("seed").map(_.toLong).getOrElse(DefaultSeed)
+    params.get("seed").map(v => v.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"param 'seed' must be a long integer, got '$v'"))).getOrElse(DefaultSeed)
 
   case class IndexMeta(
       name: String,
@@ -177,10 +178,11 @@ object IndexCatalog {
     val cachedBatches = scala.collection.mutable.ListBuffer.empty[DataFrame]
   }
 
+  /** every search takes its entry point's [[queryBatch]] */
   sealed trait BuiltIndex {
     def data: DataFrame
     def meta: IndexMeta
-    def search(queries: DataFrame, k: Int, params: Map[String, String]): DataFrame
+    def search(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String]): DataFrame
 
     /** (label, vec) view of the indexed rows for exact flat scans —
       * the built layout itself for raw-vector indexes; coded indexes
@@ -199,11 +201,10 @@ object IndexCatalog {
      * not survive row removal).
      */
     def searchRestricted(
-        queries: DataFrame, k: Int, params: Map[String, String],
+        batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
         restrict: DataFrame => DataFrame): DataFrame =
-      Knn.searchFlat(
-        restrict(flatData).select(col("label"), col("vec")), queries, k, meta.metric,
-        padToK = params.get("pad").exists(_.toBoolean))
+      Knn.searchFlatBatch(
+        restrict(flatData).select(col("label"), col("vec")), batch, k, meta.metric, padOf(params))
 
     /**
      * Range search (FAISS `range_search`): ALL neighbors within
@@ -215,14 +216,13 @@ object IndexCatalog {
      * this to scan only probed lists.
      */
     def searchRadius(
-        queries: DataFrame, radius: Double, params: Map[String, String],
+        batch: Array[(Long, Array[Float])], radius: Double, params: Map[String, String],
         restrict: DataFrame => DataFrame = identity): DataFrame = {
       val d = vec.dist(meta.metric, col("vec"), col("qvec"))
-      val cleanQ = queries.where(col("qid").isNotNull && col("qvec").isNotNull)
       val cmp =
         if (VectorMath.smallerIsCloser(VectorMath.metricId(meta.metric))) d < lit(radius)
         else d > lit(radius)
-      Knn.widen(restrict(flatData)).crossJoin(broadcast(cleanQ))
+      Knn.widen(restrict(flatData)).crossJoin(broadcast(Knn.queryFrame(data.sparkSession, batch)))
         .where(cmp)
         .select(col("qid"), col("label"), d.as("distance"))
     }
@@ -237,6 +237,7 @@ object IndexCatalog {
       metric: String = "l2sq", params: Map[String, String] = Map.empty): Unit = {
     val mid = VectorMath.metricId(metric) // unknown metric errors at create, like the reference (faiss6.test)
     val meta = IndexMeta(name, dim, factory, metric, normalizeParams(params))
+    checkParams(meta.params)
     val e = new Entry(meta)
     // metric/kind compatibility errors at create, not deep inside a
     // later search: graph traversal supports L2/IP/cosine only (FAISS
@@ -419,12 +420,6 @@ object IndexCatalog {
     e
   }
 
-  /**
-   * Add vectors. One column -> auto ids (dense, insertion order across
-   * batches, like FAISS without IDMap); two columns -> (id, vec).
-   * Invalidates any built state (FAISS retrains on add unless manually
-   * trained; we rebuild lazily).
-   */
   /** FAISS asserts d == index->d on ADD as well as search; mirror it
     * with the same codegen'd per-row guard (fires on first
     * materialization — this is a lazy engine — with a clear message
@@ -437,6 +432,12 @@ object IndexCatalog {
         lit(s"vector dimension mismatch on add: index '$name' has dim $dim")).isNull,
       v)
 
+  /**
+   * Add vectors. One column -> auto ids (dense, insertion order across
+   * batches, like FAISS without IDMap); two columns -> (id, vec).
+   * Invalidates any built state (FAISS retrains on add unless manually
+   * trained; we rebuild lazily), except where [[appendRows]] extends it.
+   */
   def add(df: DataFrame, name: String): Unit = {
     val e = entry(name)
     e.synchronized {
@@ -476,22 +477,26 @@ object IndexCatalog {
           col(df.columns(0)).cast("long").as("label"),
           guardAddDim(vec.vector(col(df.columns(1))), e.meta.dim, e.meta.name).as("vec"))
     }
-    e.pending = Some(e.pending.map(_.unionByName(normalized)).getOrElse(normalized))
-    // a built top-level IVF with pinned centroids extends INCREMENTALLY:
-    // only the new batch is assigned (O(batch) per micro-batch — the
-    // real-time ingest path). Coded indexes (PQ/SQ, flat or graph
-    // coarse) extend the same way: codebooks/bounds/centroids are
-    // pinned in the Entry by the first build, so encoding + assigning
-    // just the batch is identical to a rebuild. Other kinds (graphs,
-    // LSH buckets) rebuild lazily.
+    appendRows(e, normalized)
+    }
+  }
+
+  /** the step `add` and `merge` share, under the entry's lock: union the
+    * rows into pending, then extend or drop the built index. A built
+    * top-level IVF with pinned centroids extends INCREMENTALLY: only the
+    * new rows are assigned (O(batch) per micro-batch — the real-time
+    * ingest path). Coded indexes (PQ/SQ, flat or graph coarse) extend
+    * the same way: codebooks/bounds/centroids are pinned in the Entry by
+    * the first build, so encoding + assigning just the rows is identical
+    * to a rebuild. Other kinds (graphs, LSH buckets) rebuild lazily. */
+  private def appendRows(e: Entry, rows: DataFrame): Unit = {
+    e.pending = Some(e.pending.map(_.unionByName(rows)).getOrElse(rows))
     e.built = e.built match {
-      case Some(ivf: IvfBuilt) if ivf.centroids.nonEmpty =>
-        Some(ivf.appended(normalized))
-      case Some(c: CodedBuilt) => Some(c.appended(normalized, e.pending.get))
+      case Some(ivf: IvfBuilt) if ivf.centroids.nonEmpty => Some(ivf.appended(rows))
+      case Some(c: CodedBuilt) => Some(c.appended(rows, e.pending.get))
       case other =>
         other.foreach(_.close())
         None
-    }
     }
   }
 
@@ -598,9 +603,9 @@ object IndexCatalog {
    * shard-then-merge build path at scale — N workers each add their
    * slice to a private index, then the shards fold into one serving
    * index without ever re-reading the corpus. `dst` keeps its own
-   * trained state; a built IVF with pinned centroids extends
-   * INCREMENTALLY (only src's rows are assigned — O(src), never a
-   * corpus rebuild), any other built kind rebuilds lazily.
+   * trained state; a built IVF or coded index with pinned trained state
+   * extends INCREMENTALLY (only src's rows are assigned — O(src), never
+   * a corpus rebuild), any other built kind rebuilds lazily.
    *
    * `addId` shifts src's labels on the way over (FAISS's add_id):
    * pass dst's current size when folding auto-id shards so labels stay
@@ -642,14 +647,7 @@ object IndexCatalog {
         val shifted =
           if (addId == 0L) rows
           else rows.select((col("label") + lit(addId)).as("label"), col("vec"))
-        dst.pending = Some(dst.pending.map(_.unionByName(shifted)).getOrElse(shifted))
-        dst.built = dst.built match {
-          case Some(ivf: IvfBuilt) if ivf.centroids.nonEmpty =>
-            Some(ivf.appended(shifted))
-          case other =>
-            other.foreach(_.close())
-            None
-        }
+        appendRows(dst, shifted)
         // keep auto-id numbering collision-free after the fold: the next
         // add must start past every merged label (one bounded scalar agg
         // over the moved rows — catalog metadata, not a query path)
@@ -680,7 +678,7 @@ object IndexCatalog {
         val n = if (nlist > 0) nlist else math.max(4, math.sqrt(sample.count().toDouble).toInt)
         val vcol = sample.columns.last
         val cents = KMeansTrainer.train(sample.select(vec.vector(col(vcol)).as("vec")), n,
-          seed, e.meta.params.get("maxIter").map(_.toInt).getOrElse(10))
+          seed, positiveIntParam(e.meta.params, "maxIter", 10))
         // an empty sample trains nothing — leave untrained so build()
         // auto-trains from the real data (Some(empty) would block it)
         e.trained = if (cents.isEmpty) None else Some(cents)
@@ -748,12 +746,12 @@ object IndexCatalog {
       case IvfKind(nlist) =>
         val n0 = if (nlist > 0) nlist else math.max(4, math.sqrt(pts.length.toDouble).toInt)
         e.trained = Some(Pq.localKMeans(pts, math.min(n0, math.max(1, pts.length)), seed,
-          e.meta.params.get("maxIter").map(_.toInt).getOrElse(10)))
+          positiveIntParam(e.meta.params, "maxIter", 10)))
       case IvfHnswKind(nlist, _) =>
         trainPointsKind(e, IvfKind(nlist), pts, seed) // same centroids; graph derives at build
       case ImiKind(nbits) =>
         e.imiBooks = Some(Imi.train(pts, 1 << nbits, seed,
-          e.meta.params.get("maxIter").map(_.toInt).getOrElse(10)))
+          positiveIntParam(e.meta.params, "maxIter", 10)))
       case CodedKind(spec, nlist, _) =>
         // codec before coarse k-means: the reverse order measured ~20%
         // slower cold-JVM IVF-PQ builds
@@ -802,7 +800,7 @@ object IndexCatalog {
   /** beam width for graph-coarse assignment/probing (shared by IvfBuilt
     * and the coded layouts) */
   private def coarseEfOf(meta: IndexMeta): Int =
-    meta.params.get("coarseEfSearch").map(_.toInt).getOrElse(64)
+    positiveIntParam(meta.params, "coarseEfSearch", 64)
 
   /** driver-built HNSW over the (bounded) centroid table — deterministic
     * in (centroids, m, efConstruction) via Nsw's label-hash levels, so
@@ -814,7 +812,7 @@ object IndexCatalog {
     * persisted copy a cache with a trivial invariant). */
   private def coarseGraph(
       e: Entry, centroids: Array[Array[Float]], m: Int, metricId: Int): Nsw.Graph = {
-    val efc = e.meta.params.get("coarseEfConstruction").map(_.toInt).getOrElse(64)
+    val efc = positiveIntParam(e.meta.params, "coarseEfConstruction", 64)
     val met = coarseMetricId(metricId)
     val key = coarseGraphKey(centroids, m, efc, met)
     e.loadedCoarseGraph match {
@@ -925,11 +923,6 @@ object IndexCatalog {
         new PcaBuilt(buildKind(e, inner, rotated, metricId), mean, comps)
     }
 
-  /**
-   * faiss_search twin: top-k per query row.
-   * @param queries (qid bigint, qvec array<float>)
-   * @return (qid, rank, label, distance)
-   */
   /** the reference accepts recursive prefixed params ('ivf.efSearch',
     * cf. README faiss_create_params); our indexes are single-level, so
     * prefixes collapse onto the plain key. Plain keys win over prefixed
@@ -944,34 +937,36 @@ object IndexCatalog {
     collapsed.toMap ++ plain
   }
 
-  /** FAISS errors when a query's dimensionality differs from the
-    * index's (d == index->d assertion); mirror that with a codegen'd
-    * per-row guard instead of silently computing garbage distances.
-    * Null query rows stay allowed (they're skipped downstream). */
-  private def guardDim(queries: DataFrame, dim: Int, name: String): DataFrame = {
-    val qid = col(queries.columns(0))
-    val qv = vec.vector(col(queries.columns(1)))
-    queries.select(
-      qid.as("qid"),
-      when(
-        assert_true(qv.isNull || size(qv) === dim,
-          lit(s"query vector dimension mismatch: index '$name' has dim $dim")).isNull,
-        qv).as("qvec"))
-  }
-
   /** searches PLANNED since JVM start (not rows scanned) — lets specs
     * assert a SQL rewrite composed exactly one search (a duplicated
     * subtree can hide its second search in rewrite-time execution,
     * invisible to final-plan inspection) */
   val searchesPlanned = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** an entry point's one query collect, checked against index `name`'s dim */
+  private def batchOf(name: String, queries: DataFrame): Array[(Long, Array[Float])] =
+    queryBatch(queries, "index search query batch", Some(entry(name).meta))
+
+  /** create-time params under the caller's (normalized) ones */
+  private def searchParams(name: String, params: Map[String, String]): Map[String, String] =
+    entry(name).meta.params ++ normalizeParams(params)
+
+  /**
+   * faiss_search twin: top-k per query row.
+   * @param queries (qid bigint, qvec array<float>)
+   * @return (qid, rank, label, distance)
+   */
   def search(
       name: String, k: Int, queries: DataFrame,
-      params: Map[String, String] = Map.empty): DataFrame = {
+      params: Map[String, String] = Map.empty): DataFrame =
+    searchBatch(name, k, batchOf(name, queries), params)
+
+  /** [[search]] over an already-collected batch (SQL `faiss_search`) */
+  private[graft] def searchBatch(
+      name: String, k: Int, batch: Array[(Long, Array[Float])],
+      params: Map[String, String]): DataFrame = {
     searchesPlanned.incrementAndGet()
-    val e = entry(name)
-    build(name).search(guardDim(queries, e.meta.dim, name), k,
-      e.meta.params ++ normalizeParams(params))
+    build(name).search(batch, k, searchParams(name, params))
   }
 
   /**
@@ -984,11 +979,13 @@ object IndexCatalog {
    */
   def searchRadius(
       name: String, radius: Double, queries: DataFrame,
-      params: Map[String, String] = Map.empty): DataFrame = {
-    val e = entry(name)
-    build(name).searchRadius(guardDim(queries, e.meta.dim, name), radius,
-      e.meta.params ++ normalizeParams(params))
-  }
+      params: Map[String, String] = Map.empty): DataFrame =
+    searchRadiusBatch(name, radius, batchOf(name, queries), params)
+
+  private[graft] def searchRadiusBatch(
+      name: String, radius: Double, batch: Array[(Long, Array[Float])],
+      params: Map[String, String]): DataFrame =
+    build(name).searchRadius(batch, radius, searchParams(name, params))
 
   /**
    * faiss_search result-shape twin: one row per query carrying
@@ -1027,10 +1024,8 @@ object IndexCatalog {
   def searchFilter(
       name: String, k: Int, queries: DataFrame, filter: Column,
       params: Map[String, String] = Map.empty): DataFrame = {
-    val e = entry(name)
-    build(name).searchRestricted(
-      guardDim(queries, e.meta.dim, name), k,
-      e.meta.params ++ normalizeParams(params), _.where(filter))
+    val batch = batchOf(name, queries)
+    build(name).searchRestricted(batch, k, searchParams(name, params), _.where(filter))
   }
 
   /**
@@ -1042,12 +1037,14 @@ object IndexCatalog {
    */
   def searchFilterSet(
       name: String, k: Int, queries: DataFrame, ids: DataFrame,
-      params: Map[String, String] = Map.empty): DataFrame = {
-    val e = entry(name)
+      params: Map[String, String] = Map.empty): DataFrame =
+    searchFilterSetBatch(name, k, batchOf(name, queries), ids, params)
+
+  private[graft] def searchFilterSetBatch(
+      name: String, k: Int, batch: Array[(Long, Array[Float])], ids: DataFrame,
+      params: Map[String, String]): DataFrame = {
     val idSet = ids.select(col(ids.columns.head).cast("long").as("label"))
-    build(name).searchRestricted(
-      guardDim(queries, e.meta.dim, name), k,
-      e.meta.params ++ normalizeParams(params),
+    build(name).searchRestricted(batch, k, searchParams(name, params),
       _.join(idSet, Seq("label"), "left_semi"))
   }
 
@@ -1071,27 +1068,32 @@ object IndexCatalog {
   def searchFilterAdaptive(
       name: String, k: Int, queries: DataFrame, filter: Column,
       params: Map[String, String] = Map.empty): DataFrame = {
+    val batch = batchOf(name, queries)
     val e = entry(name)
     val b = build(name)
-    val merged = e.meta.params ++ normalizeParams(params)
-    val cutoff = merged.get("adaptiveCutoff").map(_.toDouble).getOrElse(0.1)
+    val merged = searchParams(name, params)
+    val cutoff = adaptiveCutoffOf(merged)
+    val pad = padOf(merged)
     val total = math.max(b.flatData.count(), 1L)
     val matching = b.flatData.where(filter).count()
-    val q = guardDim(queries, e.meta.dim, name)
     if (matching <= math.max(1L, (cutoff * total).toLong)) {
-      Knn.searchFlat(b.flatData.where(filter), q, k, e.meta.metric,
-          padToK = merged.get("pad").exists(_.toBoolean))
+      // the exact scan runs in the index's own space: a pretransform's
+      // rows are projected, so its queries are too
+      val scanBatch = b match {
+        case pca: PcaBuilt => pca.project(batch)
+        case _ => batch
+      }
+      Knn.searchFlatBatch(b.flatData.where(filter), scanBatch, k, e.meta.metric, pad)
         .withColumn("strategy", lit("prefilter_scan"))
     } else {
       val sel = matching.toDouble / total
       val kBoost = math.min(total, math.ceil(2.0 * k / sel).toLong).toInt
       val allowed = b.flatData.where(filter).select("label")
       val metricId = VectorMath.metricId(e.meta.metric)
-      val hits = b.search(q, kBoost, merged - "pad")
+      val hits = b.search(batch, kBoost, merged - "pad")
         .join(allowed, Seq("label"), "left_semi")
         .select(col("qid"), col("label"), col("distance").as("_dist"))
-      Knn.rankResults(hits, k, ascending = VectorMath.smallerIsCloser(metricId),
-          padToK = merged.get("pad").exists(_.toBoolean))
+      Knn.rankResults(hits, k, ascending = VectorMath.smallerIsCloser(metricId), padToK = pad)
         .withColumn("strategy", lit("postfilter_index"))
     }
   }
@@ -1278,7 +1280,7 @@ object IndexCatalog {
       case _ => None
     }
     coarseToSave.foreach { case (cents, cm, g) =>
-      val efc = e.meta.params.get("coarseEfConstruction").map(_.toInt).getOrElse(64)
+      val efc = positiveIntParam(e.meta.params, "coarseEfConstruction", 64)
       val met = coarseMetricId(VectorMath.metricId(e.meta.metric))
       val key = coarseGraphKey(cents, cm, efc, met)
       g.labels.indices.map { i =>
@@ -1425,27 +1427,25 @@ object IndexCatalog {
 
   // ---- index implementations ----
 
-  /** PCA pretransform wrapper: projects queries, delegates to the
-    * inner index (whose data/state live entirely in projected space) */
+  /** PCA pretransform wrapper: projects the query batch (`Pca.projectArr`,
+    * `PcaProject`'s arithmetic), delegates to the inner index (whose
+    * data/state live entirely in projected space) */
   final class PcaBuilt(
       val inner: BuiltIndex, mean: Array[Float], comps: Array[Array[Float]])
       extends BuiltIndex {
     def data: DataFrame = inner.data
     def meta: IndexMeta = inner.meta
 
-    private[index] def projectQueries(queries: DataFrame): DataFrame = {
-      val proj = GraftBridge.column(
-        PcaProject(GraftBridge.expression(vec.vector(col("qvec"))), mean, comps))
-      queries.select(col("qid"), proj.as("qvec"))
-    }
+    private[index] def project(batch: Array[(Long, Array[Float])]): Array[(Long, Array[Float])] =
+      batch.map { case (qid, v) => (qid, Pca.projectArr(v, mean, comps)) }
 
-    def search(queries: DataFrame, k: Int, params: Map[String, String]): DataFrame =
-      inner.search(projectQueries(queries), k, params)
+    def search(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String]): DataFrame =
+      inner.search(project(batch), k, params)
 
     override def searchRestricted(
-        queries: DataFrame, k: Int, params: Map[String, String],
+        batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
         restrict: DataFrame => DataFrame): DataFrame =
-      inner.searchRestricted(projectQueries(queries), k, params, restrict)
+      inner.searchRestricted(project(batch), k, params, restrict)
 
     // radius applies in the PROJECTED space. A full-rank orthonormal
     // transform (rotation / full PCA) is an isometry, so distances and
@@ -1454,23 +1454,22 @@ object IndexCatalog {
     // invented and the emitted distance would silently be the projected
     // value, so that case fails loudly instead of returning wrong rows
     override def searchRadius(
-        queries: DataFrame, radius: Double, params: Map[String, String],
+        batch: Array[(Long, Array[Float])], radius: Double, params: Map[String, String],
         restrict: DataFrame => DataFrame = identity): DataFrame = {
       if (comps.length < mean.length)
         throw new UnsupportedOperationException(
           s"range search through a truncated ${comps.length}-of-${mean.length}-dim " +
             "pretransform would return projected-space distances; use k-NN search " +
             "or a full-rank transform")
-      inner.searchRadius(projectQueries(queries), radius, params, restrict)
+      inner.searchRadius(project(batch), radius, params, restrict)
     }
 
     override def close(): Unit = inner.close()
   }
 
   final class FlatBuilt(val data: DataFrame, val meta: IndexMeta) extends BuiltIndex {
-    def search(queries: DataFrame, k: Int, params: Map[String, String]): DataFrame =
-      Knn.searchFlat(data, queries, k, meta.metric,
-        padToK = params.get("pad").exists(_.toBoolean))
+    def search(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String]): DataFrame =
+      Knn.searchFlatBatch(data, batch, k, meta.metric, padOf(params))
   }
 
   final class IvfBuilt(
@@ -1515,20 +1514,18 @@ object IndexCatalog {
         hasAppends = true, coarseGraph = coarseGraph, imiBooks = imiBooks)
     }
 
-    def search(queries: DataFrame, k: Int, params: Map[String, String]): DataFrame =
-      searchRestricted(queries, k, params, identity)
+    def search(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String]): DataFrame =
+      searchRestricted(batch, k, params, identity)
 
     /** IVF with the selector composed INSIDE the probe: the restriction
       * applies to the pruned-list scan, so a loose filter over a huge
       * corpus still reads only nprobe lists (vs the flat fallback that
       * scans the whole filtered corpus). Exact at nprobe = nlist. */
     override def searchRestricted(
-        queries: DataFrame, k: Int, params: Map[String, String],
-        restrict: DataFrame => DataFrame): DataFrame = {
-      val asc = VectorMath.smallerIsCloser(metricId)
-      val pad = params.get("pad").exists(_.toBoolean)
-      Knn.rankResults(probedCandidates(queries, params, restrict), k, asc, pad)
-    }
+        batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
+        restrict: DataFrame => DataFrame): DataFrame =
+      Knn.rankResults(probedCandidates(batch, params, restrict), k,
+        VectorMath.smallerIsCloser(metricId), padOf(params))
 
     /** probed-list radius search: same list pruning as k-NN, the
       * radius predicate replaces the top-k aggregate (so there is no
@@ -1536,9 +1533,9 @@ object IndexCatalog {
       * Exact at nprobe = nlist; below that, misses are confined to
       * unprobed lists exactly as in FAISS's range_search on IVF. */
     override def searchRadius(
-        queries: DataFrame, radius: Double, params: Map[String, String],
+        batch: Array[(Long, Array[Float])], radius: Double, params: Map[String, String],
         restrict: DataFrame => DataFrame = identity): DataFrame = {
-      val cands = probedCandidates(queries, params, restrict)
+      val cands = probedCandidates(batch, params, restrict)
       val cmp =
         if (VectorMath.smallerIsCloser(metricId)) col("_dist") < lit(radius)
         else col("_dist") > lit(radius)
@@ -1548,18 +1545,16 @@ object IndexCatalog {
     /** shared probe machinery: (qid, label, _dist) candidate rows from
       * the nprobe nearest lists per query */
     private def probedCandidates(
-        queries: DataFrame, params: Map[String, String],
+        batch: Array[(Long, Array[Float])], params: Map[String, String],
         restrict: DataFrame => DataFrame): DataFrame = {
-      // collect the (bounded, FAISS-batch-sized) queries ONCE and derive
-      // probes driver-side: a single evaluation feeds both the pruning
-      // filter and the join, with nothing left cached behind
+      // probes derive driver-side from the collected batch: one batch
+      // feeds both the pruning filter and the join
       val spark = data.sparkSession
       import spark.implicits._
-      val qRows = collectQueryBatch(queries)
       // probe with the SAME metric vectors were assigned with (an IP
       // index probed by L2 would look in lists its vectors never joined)
       val probeOne = coarseProbe(params, centroids, metricId, coarseGraph, coarseEfOf(meta), imiBooks)
-      val byQuery = qRows.toSeq.map { case (qid, qv) => (qid, qv, probeOne(qv)) }
+      val byQuery = batch.toSeq.map { case (qid, qv) => (qid, qv, probeOne(qv)) }
       val d = vec.dist(meta.metric, col("vec"), col("qvec"))
       def candidatesOf(group: Seq[(Long, Array[Float], Seq[Int])]): DataFrame = {
         val probes = group
@@ -1591,7 +1586,8 @@ object IndexCatalog {
       // degrades gracefully (total records = sum of sub-unions, never
       // less than the single union — pick L for the SLO, not for
       // throughput). Off by default.
-      val subCap = params.get("maxListsPerJob").map(_.toInt).filter(_ > 0)
+      val subCap = Option.when(params.contains("maxListsPerJob"))(
+        positiveIntParam(params, "maxListsPerJob", 0))
       subCap match {
         case Some(cap) if byQuery.flatMap(_._3).distinct.size > cap =>
           // sort by probed-list signature so overlapping sets pack
@@ -1677,16 +1673,39 @@ object IndexCatalog {
     }
   }
 
-  /** a search param that must be a positive integer (nprobe, refine,
-    * efSearch), or `default` when absent. FAISS rejects nprobe <= 0; a
-    * bare toInt would turn 0 into an empty result or an error naming
-    * another argument, and a non-integer into an error naming no key. */
+  /** a param that must be a positive integer (nprobe, refine, efSearch,
+    * maxIter, efConstruction, ...), or `default` when absent. FAISS
+    * rejects nprobe <= 0; a bare toInt would turn 0 into an empty result
+    * or an error naming another argument, and a non-integer into an
+    * error naming no key. */
   private def positiveIntParam(params: Map[String, String], key: String, default: => Int): Int =
     params.get(key) match {
       case None => default
       case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse(
-        throw new IllegalArgumentException(s"search param '$key' must be a positive integer, got '$v'"))
+        throw new IllegalArgumentException(s"param '$key' must be a positive integer, got '$v'"))
     }
+
+  /** params("pad"): pad every result list to exactly k (label -1) */
+  private def padOf(params: Map[String, String]): Boolean =
+    params.get("pad").exists(v => v.toBooleanOption.getOrElse(throw new IllegalArgumentException(
+      s"param 'pad' must be true or false, got '$v'")))
+
+  /** searchFilterAdaptive's pre-filter selectivity cutoff, in (0, 1] */
+  private def adaptiveCutoffOf(params: Map[String, String]): Double =
+    params.get("adaptiveCutoff").map { v =>
+      v.toDoubleOption.filter(c => c > 0 && c <= 1).getOrElse(throw new IllegalArgumentException(
+        s"param 'adaptiveCutoff' must be a number in (0, 1], got '$v'"))
+    }.getOrElse(0.1)
+
+  /** parse every known param once, so a bad value fails at create()
+    * naming its key instead of at the first build or search */
+  private def checkParams(params: Map[String, String]): Unit = {
+    Seq("maxIter", "coarseEfSearch", "coarseEfConstruction", "efConstruction", "bands",
+      "nprobe", "refine", "efSearch", "maxListsPerJob").foreach(positiveIntParam(params, _, 1))
+    seedOf(params)
+    padOf(params)
+    adaptiveCutoffOf(params)
+  }
 
   /**
    * Coded index (FAISS `[IVF<n>[_HNSW<m>],]PQ<m>|SQ8|SQ4|SQfp16|RQ<m>|LSQ<m>`):
@@ -1747,16 +1766,16 @@ object IndexCatalog {
       new CodedBuilt(data.repartition(col("list_id")).localCheckpoint(true),
         vecData.localCheckpoint(true), meta, codec, centroids, coarseGraph)
 
-    def search(queries: DataFrame, k: Int, params: Map[String, String]): DataFrame =
-      doSearch(queries, k, params, None)
+    def search(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String]): DataFrame =
+      doSearch(batch, k, params, None)
 
     /** code scoring + re-rank over the restricted rows only: the selector
       * joins the candidate source (probed lists or full coded scan),
       * keeping compression + pruning instead of a flat fallback scan. */
     override def searchRestricted(
-        queries: DataFrame, k: Int, params: Map[String, String],
+        batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
         restrict: DataFrame => DataFrame): DataFrame =
-      doSearch(queries, k, params, Some(restrict))
+      doSearch(batch, k, params, Some(restrict))
 
     /** probed lists (or the full coded scan) -> approximate per-code
       * distance -> bounded k x refine heap -> exact L2 re-rank on the
@@ -1774,11 +1793,10 @@ object IndexCatalog {
       * [[CodedScorer]], same heap), so the exhaustive exact gates hold
       * through either plan. */
     private def doSearch(
-        queries: DataFrame, k: Int, params: Map[String, String],
+        qArr: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
         restrict: Option[DataFrame => DataFrame]): DataFrame = {
       val spark = raw.sparkSession
       import spark.implicits._
-      val qArr = collectQueryBatch(queries)
       val scorer = codec.scorer(qArr)
       val kk = k * positiveIntParam(params, "refine", 4)
       // the union of probed lists across the query batch, a static IN
@@ -1828,13 +1846,12 @@ object IndexCatalog {
       // rows and broadcasts; the vector side is one pruned-column pass
       // of the (uncached) base plan — the 100 TB shape, where re-rank
       // vectors live in the base table, not the index.
-      val qdf = queries.select(col("qid").cast("long").as("qid"), vec.vector(col("qvec")).as("qvec"))
       Knn.rankResults(
         vecData
           .join(broadcast(cands), "label")
-          .join(broadcast(qdf), "qid")
+          .join(broadcast(Knn.queryFrame(spark, qArr)), "qid")
           .select(col("qid"), col("label"), vec.l2sq(col("vec"), col("qvec")).as("_dist")),
-        k, ascending = true, padToK = params.get("pad").exists(_.toBoolean))
+        k, ascending = true, padToK = padOf(params))
     }
 
     /** Apply a selector to the codes-only layout. The coded layout
@@ -1954,16 +1971,15 @@ object IndexCatalog {
   private[graft] val MaxQueryBatchDefault = 1 << 20
   private[graft] val MaxQueryBatchConf = "spark.graft.index.maxQueryBatch"
 
-  /** the one bounded query-batch collect behind every serving path
-    * (catalog search, `Knn`'s local and partition-heap kernels, SQL
-    * `faiss_search`): at most `maxQueryBatch` rows reach the driver,
-    * and one more throws with a pointer at the unbounded-join operator
-    * instead of collecting to death. `what` names the caller's batch
-    * in the error ("knn query batch", ...). */
+  /** the bounded collect behind [[queryBatch]]: at most
+    * `maxQueryBatch` rows reach the driver, and one more throws with a
+    * pointer at the unbounded-join operator instead of collecting to
+    * death. `what` names the caller's batch in the error. */
   private[graft] def collectBounded(batch: DataFrame, what: String): Array[Row] = {
     // clamped so the +1 below can't overflow to a negative limit when
     // the conf is set to Int.MaxValue
-    val maxBatch = math.min(maxQueryBatch(batch.sparkSession), Int.MaxValue - 1)
+    val maxBatch = math.min(
+      confLong(batch.sparkSession, MaxQueryBatchConf, MaxQueryBatchDefault), Int.MaxValue - 1L).toInt
     val rows = batch.limit(maxBatch + 1).collect()
     if (rows.length > maxBatch)
       throw new IllegalStateException(
@@ -1973,16 +1989,27 @@ object IndexCatalog {
     rows
   }
 
-  /** catalog search's (qid, vec) batch — shared by every index kind.
-    * Null rows are dropped BEFORE the limit so they never count toward
-    * the cap: the bound is on rows actually collected. */
-  private def collectQueryBatch(queries: DataFrame): Array[(Long, Array[Float])] =
-    collectBounded(
+  /** The one query-batch collect behind every serving path (catalog
+    * entry points, SQL `faiss_search`, `Knn`'s driver-side kernels):
+    * (qid, vector) pairs from `queries`' first two columns, null rows
+    * dropped BEFORE the cap so they never count toward it. With an
+    * index's `meta`, each dim is checked on the driver (FAISS's
+    * d == index->d assertion) before any search job is planned. */
+  private[graft] def queryBatch(
+      queries: DataFrame, what: String, meta: Option[IndexMeta] = None): Array[(Long, Array[Float])] = {
+    val batch = collectBounded(
       queries
-        .where(col("qid").isNotNull && col("qvec").isNotNull)
-        .select(col("qid").cast("long"), vec.vector(col("qvec"))),
-      "index search query batch")
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+        .select(col(queries.columns(0)).cast("long").as("qid"),
+          vec.vector(col(queries.columns(1))).as("qvec"))
+        .where(col("qid").isNotNull && col("qvec").isNotNull),
+      what).map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    meta.foreach { m =>
+      if (batch.exists(_._2.length != m.dim))
+        throw new IllegalArgumentException(
+          s"query vector dimension mismatch: index '${m.name}' has dim ${m.dim}")
+    }
+    batch
+  }
 
   /** Storage level for BUILT index layouts (the corpus-scale caches).
     * Default MEMORY_AND_DISK (deserialized — fastest scans). When
@@ -2002,14 +2029,15 @@ object IndexCatalog {
     df.persist(lvl)
   }
 
-  /** parse the query-batch cap, naming the config key on a bad value
-    * instead of surfacing a bare NumberFormatException. 0 is valid (it
-    * rejects every non-empty batch); negative values are not. */
-  private[graft] def maxQueryBatch(spark: SparkSession): Int =
-    spark.conf.getOption(MaxQueryBatchConf).map { v =>
-      v.toIntOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
-        s"$MaxQueryBatchConf must be a non-negative integer, got '$v'"))
-    }.getOrElse(MaxQueryBatchDefault)
+  /** a non-negative integer conf, naming the key on a bad value instead
+    * of surfacing a bare NumberFormatException (the query-batch cap and
+    * `Knn`'s thresholds). 0 is valid: for the cap it rejects every
+    * non-empty batch. */
+  private[graft] def confLong(spark: SparkSession, key: String, default: Long): Long =
+    spark.conf.getOption(key).map { v =>
+      v.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"$key must be a non-negative integer, got '$v'"))
+    }.getOrElse(default)
 
   /**
    * Sharded HNSW: each partition builds an independent NSW graph over
@@ -2034,8 +2062,8 @@ object IndexCatalog {
       m: Int)
       extends BuiltIndex {
 
-    def search(queries: DataFrame, k: Int, params: Map[String, String]): DataFrame =
-      searchShards(queries, k, params, None)
+    def search(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String]): DataFrame =
+      searchShards(batch, k, params, None)
 
     /**
      * Selector inside the graph search (FAISS applies its IDSelector
@@ -2050,7 +2078,7 @@ object IndexCatalog {
      * approximate when the selector already bounds the scan).
      */
     override def searchRestricted(
-        queries: DataFrame, k: Int, params: Map[String, String],
+        batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
         restrict: DataFrame => DataFrame): DataFrame = {
       val restricted = restrict(data.select(col("label"), col("vec")))
       import org.apache.spark.sql.catalyst.plans.logical._
@@ -2060,21 +2088,21 @@ object IndexCatalog {
         case _ => false
       }
       if (!narrow || restricted.rdd.getNumPartitions != graphs.getNumPartitions)
-        super.searchRestricted(queries, k, params, restrict)
-      else searchShards(queries, k, params, Some(restricted))
+        super.searchRestricted(batch, k, params, restrict)
+      else searchShards(batch, k, params, Some(restricted))
     }
 
-    /** the request path: collect + broadcast the query batch, search
-      * every shard graph (each under its own shard's allowed-label set
-      * when a shard-aligned `restricted` is given), merge per-shard
-      * top-k globally */
-    private def searchShards(queries: DataFrame, k: Int, params: Map[String, String],
+    /** the request path: broadcast the query batch, search every shard
+      * graph (each under its own shard's allowed-label set when a
+      * shard-aligned `restricted` is given), merge per-shard top-k
+      * globally */
+    private def searchShards(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
         restricted: Option[DataFrame]): DataFrame = {
       val spark = data.sparkSession
       import spark.implicits._
       val efSearch = positiveIntParam(params, "efSearch", math.max(2 * k, 64))
       val metricId = VectorMath.metricId(meta.metric)
-      val qB = spark.sparkContext.broadcast(collectQueryBatch(queries))
+      val qB = spark.sparkContext.broadcast(batch)
       val searchShard: (Nsw.Graph, Long => Boolean) => Iterator[(Long, Long, Double)] =
         (g, allowed) => qB.value.iterator.flatMap { case (qid, qv) =>
           Nsw.search(g, qv, k, efSearch, metricId, allowed).iterator
@@ -2094,8 +2122,7 @@ object IndexCatalog {
           }
       }
       Knn.rankResults(perShard.toDF("qid", "label", "_dist"), k,
-        ascending = VectorMath.smallerIsCloser(metricId),
-        padToK = params.get("pad").exists(_.toBoolean))
+        ascending = VectorMath.smallerIsCloser(metricId), padToK = padOf(params))
     }
 
     /** driver snapshot of the per-shard graphs for injected replay
@@ -2119,7 +2146,7 @@ object IndexCatalog {
 
   object HnswBuilt {
     def build(data: DataFrame, meta: IndexMeta, m: Int): HnswBuilt = {
-      val efC = meta.params.get("efConstruction").map(_.toInt).getOrElse(math.max(64, 2 * m))
+      val efC = positiveIntParam(meta.params, "efConstruction", math.max(64, 2 * m))
       val metricId = VectorMath.metricId(meta.metric)
       val spark = data.sparkSession
       // one graph per shard: widen narrow inputs so graph build and search
@@ -2143,17 +2170,17 @@ object IndexCatalog {
       val meta: IndexMeta, bands: Int, bitsPerBand: Int, seed: Long)
       extends BuiltIndex {
 
-    def search(queries: DataFrame, k: Int, params: Map[String, String]): DataFrame =
-      searchRestricted(queries, k, params, identity)
+    def search(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String]): DataFrame =
+      searchRestricted(batch, k, params, identity)
 
     /** bucket probing over the restricted rows (the banded layout keeps
       * `label`, so predicates/semi-joins apply before the bucket join;
       * also fixes duplicate top-k labels the flat fallback would emit
       * from the per-band row duplication) */
     override def searchRestricted(
-        queries: DataFrame, k: Int, params: Map[String, String],
+        batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
         restrict: DataFrame => DataFrame): DataFrame = {
-      val qb = queries.select(col("qid"), col("qvec"),
+      val qb = Knn.queryFrame(data.sparkSession, batch).select(col("qid"), col("qvec"),
         explode(hashes.hyperplaneBuckets(col("qvec"), bands, bitsPerBand, seed)).as("bucket"))
       val d = vec.dist(meta.metric, col("vec"), col("qvec"))
       val asc = VectorMath.smallerIsCloser(VectorMath.metricId(meta.metric))
@@ -2163,7 +2190,7 @@ object IndexCatalog {
           // distance in codegen, then dedup on (qid,label) before ranking
           .select(col("qid"), col("label"), d.as("_dist"))
           .dropDuplicates("qid", "label"),
-        k, asc, params.get("pad").exists(_.toBoolean))
+        k, asc, padOf(params))
     }
   }
 
@@ -2172,7 +2199,7 @@ object IndexCatalog {
       * replay oracles, same single-definition rule as [[DefaultSeed]] */
     val DefaultBands = 16
     def build(data: DataFrame, meta: IndexMeta, bitsPerBand: Int): LshBuilt = {
-      val bands = meta.params.get("bands").map(_.toInt).getOrElse(DefaultBands)
+      val bands = positiveIntParam(meta.params, "bands", DefaultBands)
       val seed = IndexCatalog.seedOf(meta.params)
       // widen before hashing: bucket computation is the map stage of the
       // bucket shuffle and must not run on a single narrow partition

@@ -854,7 +854,8 @@ object IndexQueries {
     // (partition-local-heap path; equality with the declarative path is
     // spec- and oracle-gated via knn_join)
     "knn_flat_big" -> { (s, dir) =>
-      graft.search.Knn.searchFlatFast(bigData(s, dir), bigQueries(s, dir), 5, "l2sq")
+      graft.search.Knn.searchFlatFast(
+          bigData(s, dir), graft.search.Knn.collectBatch(bigQueries(s, dir)), 5, "l2sq")
         .select(col("qid"), col("rank"), col("label"))
     },
     // IVF probes 4/64 lists: same answer quality target, ~6% of the scan.

@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{vec, VectorMath}
@@ -28,7 +28,8 @@ object Knn {
     * the fast kernel collects the query batch (loud maxQueryBatch
     * cap). 0 disables; set to 1 to force (specs). Default 1 GiB: below
     * that the row join's overhead is bounded and declarative planning
-    * (pushdown, AQE) is worth keeping. */
+    * (pushdown, AQE) is worth keeping. Like every Knn conf, a
+    * non-integer or negative value throws naming the key. */
   private[graft] val FastFlatThresholdConf = "spark.graft.knn.fastFlatThresholdBytes"
 
   /** Corpus-size ceiling (bytes, from optimizer plan stats) BELOW which
@@ -53,17 +54,9 @@ object Knn {
   // which does NOT override equals, so WeakHashMap's equals/hashCode
   // lookup degenerates to reference identity (a structurally-equal but
   // distinct DataFrame re-collects; no deep plan hashing per lookup)
-  // and the entry lives exactly as long as the serving DataFrame does.
-  // The value carries the (labelCol, vecCol) the corpus was extracted
-  // with: a second call on the same DataFrame with different columns
-  // re-collects instead of silently serving the first call's columns.
-  // keyed by QueryExecution, then by (labelCol, vecCol) INSIDE the
-  // value: one slot per column pair, so alternating extractions over
-  // the same DataFrame both stay resident (a single overwritten slot
-  // re-collected on every call — a silent cliff on the serving path)
+  // and the entry lives exactly as long as the serving DataFrame does
   private val localCorpora = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[
-      AnyRef, Map[(String, String), (Array[Long], Array[Array[Float]])]]())
+    new java.util.WeakHashMap[AnyRef, (Array[Long], Array[Array[Float]])]())
 
   /** widen CPU-bound narrow scans to the session parallelism (no-op on
     * real multi-split inputs) — shared by the search paths and the
@@ -104,69 +97,83 @@ object Knn {
       queries: DataFrame,
       k: Int,
       metric: String,
-      labelCol: String = "label",
-      vecCol: String = "vec",
-      qidCol: String = "qid",
-      qvecCol: String = "qvec",
       excludeSelf: Boolean = false,
-      padToK: Boolean = false): DataFrame = {
-    val mid = VectorMath.metricId(metric)
-    val asc = VectorMath.smallerIsCloser(mid)
-    // null query rows carry no meaningful identity or vector; both search
-    // paths drop them (keeps fast/declarative outputs identical)
-    val cleanQueries = queries.where(col(qidCol).isNotNull && col(qvecCol).isNotNull)
+      padToK: Boolean = false): DataFrame =
+    // null query rows carry no meaningful identity or vector; every
+    // path drops them (keeps fast/local/declarative outputs identical)
+    flatPlan(data, queries.where(col("qid").isNotNull && col("qvec").isNotNull),
+      collectBatch(queries), k, metric, excludeSelf, padToK)
+
+  /** [[searchFlat]] over an already-collected query batch: the catalog's
+    * Flat paths, whose declarative plan reads the batch's local view */
+  private[graft] def searchFlatBatch(
+      data: DataFrame, batch: Array[(Long, Array[Float])], k: Int, metric: String,
+      padToK: Boolean): DataFrame =
+    flatPlan(data, queryFrame(data.sparkSession, batch), batch, k, metric,
+      excludeSelf = false, padToK)
+
+  /** a (qid, qvec) DataFrame's batch, under the serving paths' one
+    * bounded collect — for the kernels that read the batch on the driver */
+  private[graft] def collectBatch(queries: DataFrame): Array[(Long, Array[Float])] =
+    graft.index.IndexCatalog.queryBatch(
+      queries.select(col("qid"), col("qvec")), "knn query batch")
+
+  /** the local (LocalRelation) (qid, qvec) view of a collected batch, for
+    * the plans that join the batch instead of reading its arrays */
+  private[graft] def queryFrame(
+      spark: org.apache.spark.sql.SparkSession, batch: Array[(Long, Array[Float])]): DataFrame = {
+    import spark.implicits._
+    batch.toSeq.toDF("qid", "qvec")
+  }
+
+  /** the flat plan router: driver-local serve, the partition-heap kernel
+    * or the declarative broadcast join, by the corpus's plan stats. The
+    * batch is read only by the first two (at most once). */
+  private def flatPlan(
+      data: DataFrame, cleanQueries: DataFrame, batch: => Array[(Long, Array[Float])],
+      k: Int, metric: String, excludeSelf: Boolean, padToK: Boolean): DataFrame = {
+    val asc = VectorMath.smallerIsCloser(VectorMath.metricId(metric))
     val spark = data.sparkSession
-    val packThresh = spark.conf.getOption(Knn.FastFlatThresholdConf)
-      .map(_.toLong).getOrElse(1L << 30)
+    val packThresh = graft.index.IndexCatalog.confLong(spark, FastFlatThresholdConf, 1L << 30)
+    val localThresh = graft.index.IndexCatalog.confLong(spark, LocalServeThresholdConf, 0L)
     val sizeEst = data.queryExecution.optimizedPlan.stats.sizeInBytes
     // plans with no stats (e.g. LogicalRDD from createDataFrame(rdd))
     // report spark.sql.defaultSizeInBytes = Long.MaxValue — treat that
     // as UNKNOWN, not huge, or tiny RDD-backed corpora would route to
     // the eager fast path and its maxQueryBatch driver-collect cap
     val sizeKnown = sizeEst != BigInt(spark.sessionState.conf.defaultSizeInBytes)
-    val localThresh = spark.conf.getOption(LocalServeThresholdConf)
-      .map(_.toLong).getOrElse(0L)
-    val localServed: Option[DataFrame] =
+    lazy val qArr = batch
+    val localServed =
       if (localThresh > 0 && sizeKnown && sizeEst <= localThresh)
-        searchFlatLocal(data, cleanQueries, k, metric,
-          labelCol, vecCol, qidCol, qvecCol, excludeSelf, padToK)
+        searchFlatLocal(data, qArr, k, metric, excludeSelf, padToK)
       else None
-    localServed match {
-      case Some(local) =>
-        return if (qidCol == "qid") local else local.withColumnRenamed("qid", qidCol)
-      case None => ()
+    localServed.getOrElse {
+      if (packThresh > 0 && sizeKnown && sizeEst >= packThresh) {
+        // big-corpus path: delegate to the partition-local-heap kernel.
+        // Measured at the 1000x rung (1e10 pairs, knn_flat_big): the
+        // row-per-pair broadcast join pays ~0.46 us/output-row of join
+        // plumbing (145 s) plus as much again in the per-pair aggregate
+        // (412 s total); a chunk-packed ListTopKScan variant was tried
+        // and REJECTED by measurement — materializing array<struct>
+        // chunk rows re-serializes the whole corpus through UnsafeRow
+        // writers at the RDD-scan boundary (215 s for the pack pass
+        // alone; a Dataset-encoder pack was 368 s). The per-partition
+        // heap kernel touches each corpus row once with zero
+        // materialization beyond partitions x Q x k heap entries.
+        // Same distance kernels, same TopKHeap order -> bit-identical
+        // (parity spec + the long-standing fast==declarative spec).
+        searchFlatFast(data, qArr, k, metric, excludeSelf = excludeSelf, padToK = padToK)
+      } else {
+        val d = vec.dist(metric, col("vec"), col("qvec"))
+        val joined = widen(data).crossJoin(broadcast(cleanQueries))
+        val filtered = if (excludeSelf) joined.where(col("label") =!= col("qid")) else joined
+        // distance materializes in a codegen'd projection (fused loop inside
+        // WholeStageCodegen); the aggregate then only reads plain columns
+        rankResults(
+          filtered.select(col("qid"), col("label"), d.as("_dist")),
+          k, asc, padToK)
+      }
     }
-    val shaped = if (packThresh > 0 && sizeKnown && sizeEst >= packThresh) {
-      // big-corpus path: delegate to the partition-local-heap kernel.
-      // Measured at the 1000x rung (1e10 pairs, knn_flat_big): the
-      // row-per-pair broadcast join pays ~0.46 us/output-row of join
-      // plumbing (145 s) plus as much again in the per-pair aggregate
-      // (412 s total); a chunk-packed ListTopKScan variant was tried
-      // and REJECTED by measurement — materializing array<struct>
-      // chunk rows re-serializes the whole corpus through UnsafeRow
-      // writers at the RDD-scan boundary (215 s for the pack pass
-      // alone; a Dataset-encoder pack was 368 s). The per-partition
-      // heap kernel touches each corpus row once with zero
-      // materialization beyond partitions x Q x k heap entries.
-      // Same distance kernels, same TopKHeap order -> bit-identical
-      // (parity spec + the long-standing fast==declarative spec).
-      // NOTE this path collects the query batch (loud maxQueryBatch
-      // cap) when the plan executes.
-      searchFlatFast(
-        data.select(col(labelCol).as("label"), col(vecCol).as("vec")),
-        cleanQueries.select(col(qidCol).as("qid"), col(qvecCol).as("qvec")),
-        k, metric, excludeSelf = excludeSelf, padToK = padToK)
-    } else {
-      val d = vec.dist(metric, col(vecCol), col(qvecCol))
-      val joined = widen(data).crossJoin(broadcast(cleanQueries))
-      val filtered = if (excludeSelf) joined.where(col(labelCol) =!= col(qidCol)) else joined
-      // distance materializes in a codegen'd projection (fused loop inside
-      // WholeStageCodegen); the aggregate then only reads plain columns
-      rankResults(
-        filtered.select(col(qidCol).as("qid"), col(labelCol).as("label"), d.as("_dist")),
-        k, asc, padToK)
-    }
-    if (qidCol == "qid") shaped else shaped.withColumnRenamed("qid", qidCol)
   }
 
   /**
@@ -178,24 +185,21 @@ object Knn {
    * here was wrong, and driver memory is a hard boundary.
    */
   private def searchFlatLocal(
-      data: DataFrame, cleanQueries: DataFrame, k: Int, metric: String,
-      labelCol: String, vecCol: String, qidCol: String, qvecCol: String,
+      data: DataFrame, qArr: Array[(Long, Array[Float])], k: Int, metric: String,
       excludeSelf: Boolean, padToK: Boolean): Option[DataFrame] = {
     val spark = data.sparkSession
     import spark.implicits._
     val mid = VectorMath.metricId(metric)
     val asc = VectorMath.smallerIsCloser(mid)
     val key = data.queryExecution
-    val cols = (labelCol, vecCol)
-    val cached = localCorpora.get(key)
-    var corpus = if (cached == null) null else cached.getOrElse(cols, null)
+    var corpus = localCorpora.get(key)
     if (corpus == null) {
-      val cap = math.min(
-        spark.conf.getOption(LocalServeMaxRowsConf).map(_.toInt).getOrElse(1 << 20),
-        Int.MaxValue - 1) // clamp so the +1 below can't overflow to a negative limit
+      val maxRows = graft.index.IndexCatalog.confLong(spark, LocalServeMaxRowsConf, 1L << 20)
+      // clamp so the +1 below can't overflow to a negative limit
+      val cap = math.min(maxRows, Int.MaxValue - 1L).toInt
       val rows = data
-        .where(col(labelCol).isNotNull && col(vecCol).isNotNull) // fast path skips null rows
-        .select(col(labelCol).cast("long"), vec.vector(col(vecCol)))
+        .where(col("label").isNotNull && col("vec").isNotNull) // fast path skips null rows
+        .select(col("label").cast("long"), vec.vector(col("vec")))
         .limit(cap + 1)
         .collect()
       if (rows.length > cap) {
@@ -205,25 +209,12 @@ object Knn {
         return None
       }
       corpus = (rows.map(_.getLong(0)), rows.map(_.getSeq[Float](1).toArray))
-      // merge under the map's monitor (ADVICE r13): the get-then-put
-      // compound would let two threads collecting DIFFERENT column
-      // pairs of one QueryExecution lose an entry (base read before
-      // the other's put) — the collect stays outside the lock, only
-      // the read-modify-write is atomic
-      localCorpora.synchronized {
-        val base = Option(localCorpora.get(key))
-          .getOrElse(Map.empty[(String, String), (Array[Long], Array[Array[Float]])])
-        localCorpora.put(key, base + (cols -> corpus))
-      }
+      localCorpora.put(key, corpus)
     }
     val (labels, vecs) = corpus
-    val qRows = graft.index.IndexCatalog.collectBounded(
-      cleanQueries.select(col(qidCol).cast("long"), col(qvecCol)), "knn query batch")
     val out = Seq.newBuilder[(Long, Int, Long, Double)]
     val padDist = if (asc) Double.MaxValue else Double.MinValue
-    qRows.foreach { r =>
-      val qid = r.getLong(0)
-      val qv = r.getSeq[Float](1).toArray
+    qArr.foreach { case (qid, qv) =>
       val h = new graft.functions.TopKHeap(k, asc)
       var i = 0
       while (i < labels.length) {
@@ -259,22 +250,6 @@ object Knn {
         col("nn.label").as("label"),
         col("nn.distance").as("distance")): _*)
   }
-
-  /**
-   * `faiss_search_filter` twin: only rows satisfying `predicate`
-   * participate. Spark-first improvement over the reference's O(n)
-   * post-hoc bitmap (faiss_extension.cpp:940-947, the
-   * __faiss_create_mask rewrite): the predicate
-   * is a Catalyst filter *before* the scan output, so it is pushed
-   * down to parquet and pruned rows are never read.
-   */
-  def searchFlatFiltered(
-      data: DataFrame,
-      predicate: Column,
-      queries: DataFrame,
-      k: Int,
-      metric: String): DataFrame =
-    searchFlat(data.where(predicate), queries, k, metric)
 
   /**
    * Matryoshka (prefix-dimension) two-stage search: coarse
@@ -328,7 +303,7 @@ object Knn {
    */
   def knnJoin(left: DataFrame, right: DataFrame, k: Int, metric: String,
       excludeSelf: Boolean = true): DataFrame =
-    searchFlatFast(right, left, k, metric, excludeSelf = excludeSelf)
+    searchFlatFast(right, collectBatch(left), k, metric, excludeSelf = excludeSelf)
 
   /**
    * Grouped (multi-tenant) exact k-NN join: every left row gets its
@@ -365,10 +340,12 @@ object Knn {
    * arrays inside mapPartitions instead of materializing QxN join rows
    * through an aggregate (~10x less per-pair overhead). Shuffle volume
    * is identical: partitions x Q x k heap entries into the final merge.
+   * `qArr` is a collected query batch ([[collectBatch]] for a (qid,
+   * qvec) DataFrame); it is broadcast to every partition.
    */
   def searchFlatFast(
       data: DataFrame,
-      queries: DataFrame,
+      qArr: Array[(Long, Array[Float])],
       k: Int,
       metric: String,
       excludeSelf: Boolean = false,
@@ -377,14 +354,6 @@ object Knn {
     import spark.implicits._
     val mid = VectorMath.metricId(metric)
     val asc = VectorMath.smallerIsCloser(mid)
-    // the query side is collected to the driver under the serving
-    // paths' one loud bound (spark.graft.index.maxQueryBatch)
-    val qArr: Array[(Long, Array[Float])] = graft.index.IndexCatalog.collectBounded(
-      queries
-        .where(col("qid").isNotNull && col("qvec").isNotNull) // null rows match searchFlat's skip
-        .select(col("qid").cast("long"), col("qvec")),
-      "knn query batch")
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
     val qB = spark.sparkContext.broadcast(qArr)
     // InternalRow scan, not .rdd: the external-Row conversion decodes
     // every vector into boxed Seq[Float] ONCE PER CORPUS ROW — at the

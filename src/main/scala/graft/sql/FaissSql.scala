@@ -190,23 +190,16 @@ case class FaissSearchRewrite(spark: SparkSession, postAnalysis: Boolean = true)
     val rcol = s"__graft_res_$i"
     val df = GraftBridge.ofRows(spark, child)
     val qvecCol = GraftBridge.column(call.qvec)
-    // the query batch is bounded by contract (spark.graft.index.maxQueryBatch,
-    // like every serving path), so assign qids on the driver and plan
-    // from a LocalRelation: one distinct job here instead of a
-    // 3-exchange window chain evaluated once per use of the batch
-    val qRows = IndexCatalog.collectBounded(
-      df.select(graft.functions.vec.vector(qvecCol).as("qvec"))
-        .where(col("qvec").isNotNull).distinct(),
-      "faiss_search query batch")
-    val qSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("qid", org.apache.spark.sql.types.LongType,
-        nullable = false),
-      org.apache.spark.sql.types.StructField("qvec",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))))
-    val qdf = spark.createDataFrame(
-      java.util.Arrays.asList(qRows.zipWithIndex.map { case (r, qi) =>
-        org.apache.spark.sql.Row(qi.toLong, r.get(0))
-      }: _*), qSchema)
+    // the distinct query vectors are this call's one query batch:
+    // collected (capped by spark.graft.index.maxQueryBatch, dim-checked)
+    // once, numbered on the driver, searched, and joined back through the
+    // batch's local view — one distinct job instead of a 3-exchange
+    // window chain evaluated once per use of the batch
+    val batch = IndexCatalog.queryBatch(
+      df.select(lit(0L).as("qid"), graft.functions.vec.vector(qvecCol).as("qvec")).distinct(),
+      "faiss_search query batch", Some(IndexCatalog.meta(call.indexName)))
+      .zipWithIndex.map { case ((_, v), qi) => (qi.toLong, v) }
+    val qdf = graft.search.Knn.queryFrame(spark, batch)
     // the reference pads every result list to exactly k (label = -1 for
     // missing, README:243) — mirror that by default, overridable via
     // an explicit map('pad','false') parameter (k-NN only; range
@@ -214,16 +207,16 @@ case class FaissSearchRewrite(spark: SparkSession, postAnalysis: Boolean = true)
     val params = Map("pad" -> "true") ++ call.params
     val flat = (call.radius, call.restrict) match {
       case (Some(r), None) =>
-        IndexCatalog.searchRadius(call.indexName, r, qdf, call.params)
+        IndexCatalog.searchRadiusBatch(call.indexName, r, batch, call.params)
       case (Some(_), Some(_)) =>
         throw new UnsupportedOperationException(
           "faiss_range_search does not take a filter; compose WHERE over the result")
       case (None, None) =>
-        IndexCatalog.search(call.indexName, call.k, qdf, params)
+        IndexCatalog.searchBatch(call.indexName, call.k, batch, params)
       case (None, Some((filterSql, idSelector, tableName))) =>
         val ids = spark.table(tableName).where(expr(filterSql))
           .select(expr(idSelector).cast("long").as("label"))
-        IndexCatalog.searchFilterSet(call.indexName, call.k, qdf, ids, params)
+        IndexCatalog.searchFilterSetBatch(call.indexName, call.k, batch, ids, params)
     }
     val empty = array().cast(call.dataType)
     val resultStruct =

@@ -85,7 +85,8 @@ object AnnBaseline {
     for ((corpusName, corpus) <- corpora if corpusFilter.forall(_.contains(corpusName))) {
       val n = corpus.count()
       // exact truth for recall, computed once per corpus
-      val truth = graft.search.Knn.searchFlatFast(corpus, queries, K, "l2sq")
+      val truth = graft.search.Knn.searchFlatFast(
+          corpus, graft.search.Knn.collectBatch(queries), K, "l2sq")
         .select(col("qid"), col("label")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
 
@@ -119,7 +120,7 @@ object AnnBaseline {
       }
 
       run("flat_scan", () =>
-        graft.search.Knn.searchFlatFast(corpus, queries, K, "l2sq"))
+        graft.search.Knn.searchFlatFast(corpus, graft.search.Knn.collectBatch(queries), K, "l2sq"))
 
       // driver-local serving tier: the in-process shape the reference
       // gets from FAISS — one driver copy of a SMALL corpus, then

@@ -166,6 +166,24 @@ class IncrementalSpec extends SparkSpec {
     assert(e.getMessage.contains("no vectors"))
   }
 
+  test("merge into a built coded index extends it in place, equal to a rebuild from the pinned state") {
+    IndexCatalog.create("t_mrg_pq", 2, "IDMap,IVF4,PQ2", "l2sq", Map("nprobe" -> "4"))
+    IndexCatalog.create("t_mrg_pq_src", 2, "IDMap,IVF4,PQ2", "l2sq")
+    IndexCatalog.add(vecs(0 until 128), "t_mrg_pq")
+    IndexCatalog.add(vecs(128 until 256), "t_mrg_pq_src")
+    IndexCatalog.search("t_mrg_pq", 4, qs).count() // builds: trains and pins codebooks + centroids
+    IndexCatalog.merge("t_mrg_pq", "t_mrg_pq_src")
+    assert(IndexCatalog.isBuilt("t_mrg_pq"), "merge into a built coded index must append incrementally")
+    // the reference trains on the first batch only, exactly what the
+    // merged index saw at its build, then builds once over the union
+    IndexCatalog.create("t_mrg_pq_ref", 2, "IDMap,IVF4,PQ2", "l2sq", Map("nprobe" -> "4"))
+    IndexCatalog.manualTrain(vecs(0 until 128).select(col("vec")), "t_mrg_pq_ref")
+    IndexCatalog.add(vecs(0 until 256), "t_mrg_pq_ref")
+    def rows(name: String) = IndexCatalog.search(name, 4, qs).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq.sorted
+    assert(rows("t_mrg_pq") === rows("t_mrg_pq_ref"))
+  }
+
   test("merge addId shifts labels and keeps auto-id numbering collision-free") {
     import spark.implicits._
     IndexCatalog.create("t_mrg_auto_d", 2, "IVF2,Flat", "l2sq", Map("nprobe" -> "2"))

@@ -1028,6 +1028,88 @@ class IndexCatalogSpec extends SparkSpec {
       Option(ex.getCause).exists(_.getMessage.contains("dimension mismatch")))
   }
 
+  test("query dimension mismatch on Flat and LSH throws at the search call, before any Spark job") {
+    import spark.implicits._
+    val badQs = Seq((0L, Array(1.0f, 2.0f, 3.0f))).toDF("qid", "qvec")
+    var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
+    }
+    for ((nm, fac) <- Seq(("t_dim_flat", "IDMap,Flat"), ("t_dim_lsh", "IDMap,LSH8"))) {
+      IndexCatalog.create(nm, 2, fac)
+      IndexCatalog.add(grid, nm)
+      IndexCatalog.search(nm, 2, qs).collect() // builds
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        jobs = 0
+        // no action on the result: the call itself must throw
+        val ex = intercept[IllegalArgumentException](IndexCatalog.search(nm, 2, badQs))
+        assert(ex.getMessage.contains(s"query vector dimension mismatch: index '$nm' has dim 2"),
+          ex.getMessage)
+        intercept[IllegalArgumentException](IndexCatalog.searchFilter(nm, 2, badQs, lit(true)))
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        assert(jobs === 0, s"$nm: a search job ran before the dimension check")
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("adaptive pre-filter through a pretransform scans with projected queries") {
+    // PCA2 over 2-d data is a full-rank rotation: distances are preserved,
+    // so the exact pre-filter scan must find the raw-space neighbours
+    IndexCatalog.create("t_adapt_pca", 2, "IDMap,PCA2,IVF4,Flat", "l2sq", Map("nprobe" -> "4"))
+    IndexCatalog.add(grid, "t_adapt_pca")
+    import spark.implicits._
+    val q = Seq((0L, Array(3.3f, 0.8f))).toDF("qid", "qvec") // no near-ties in its top 4
+    val pred = col("label") < 20
+    val res = IndexCatalog.searchFilterAdaptive("t_adapt_pca", 4, q, pred)
+    assert(res.select("strategy").distinct().collect().map(_.getString(0)).toSeq === Seq("prefilter_scan"))
+    assert(labelsOf(res) === Map(0L -> Seq(19L, 3L, 4L, 18L)))
+  }
+
+  test("LSH search honours spark.graft.index.maxQueryBatch") {
+    IndexCatalog.create("t_lsh_cap", 2, "IDMap,LSH8")
+    IndexCatalog.add(grid, "t_lsh_cap")
+    spark.conf.set(IndexCatalog.MaxQueryBatchConf, "1")
+    try {
+      val e = intercept[IllegalStateException](IndexCatalog.search("t_lsh_cap", 2, qs).collect())
+      assert(e.getMessage.contains(IndexCatalog.MaxQueryBatchConf), e.getMessage)
+      spark.conf.set(IndexCatalog.MaxQueryBatchConf, "2")
+      assert(IndexCatalog.search("t_lsh_cap", 2, qs).count() > 0)
+    } finally spark.conf.unset(IndexCatalog.MaxQueryBatchConf)
+  }
+
+  test("index params are parsed at create, each bad value naming its key") {
+    val positive = Seq("maxIter", "coarseEfSearch", "coarseEfConstruction", "efConstruction",
+      "bands", "nprobe", "refine", "efSearch", "maxListsPerJob")
+    val cases = positive.map(_ -> Seq("0", "-1", "x")) ++ Seq(
+      "seed" -> Seq("x"), // any long is a seed
+      "adaptiveCutoff" -> Seq("0", "-1", "x", "1.5"),
+      "pad" -> Seq("0", "-1", "x"))
+    for ((key, bads) <- cases; bad <- bads) {
+      val e = intercept[IllegalArgumentException](
+        IndexCatalog.create("t_param_bad", 2, "IDMap,IVF4,Flat", "l2sq", Map(key -> bad)))
+      assert(e.getMessage.contains(s"'$key'") && e.getMessage.contains(s"'$bad'"),
+        s"$key=$bad: ${e.getMessage}")
+      assert(!IndexCatalog.exists("t_param_bad"))
+    }
+    // valid edge values still create
+    for ((key, ok) <- Seq("seed" -> "-1", "seed" -> "0", "adaptiveCutoff" -> "1",
+        "pad" -> "false", "maxListsPerJob" -> "1")) {
+      IndexCatalog.create("t_param_ok", 2, "IDMap,IVF4,Flat", "l2sq", Map(key -> ok))
+      IndexCatalog.destroy("t_param_ok")
+    }
+    // search-time params are checked by the same parsers
+    IndexCatalog.create("t_param_s", 2, "IDMap,IVF4,Flat", "l2sq")
+    IndexCatalog.add(grid, "t_param_s")
+    val e = intercept[IllegalArgumentException](
+      IndexCatalog.search("t_param_s", 2, qs, Map("pad" -> "yes")))
+    assert(e.getMessage.contains("'pad'"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      IndexCatalog.searchFilterAdaptive("t_param_s", 2, qs, lit(true), Map("adaptiveCutoff" -> "0")))
+    assert(e2.getMessage.contains("'adaptiveCutoff'"), e2.getMessage)
+  }
+
   test("move_gpu is explicitly unsupported") {
     IndexCatalog.create("t_gpu", 2, "Flat")
     intercept[UnsupportedOperationException](IndexCatalog.moveGpu("t_gpu", 0))

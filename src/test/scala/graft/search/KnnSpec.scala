@@ -72,31 +72,6 @@ class KnnSpec extends SparkSpec {
     } finally spark.conf.unset(Knn.LocalServeThresholdConf)
   }
 
-  test("driver-local serve re-collects when the same DataFrame is searched with different label/vec columns") {
-    import spark.implicits._
-    // one DataFrame, TWO (label, vec) column pairs: the cached corpus is
-    // keyed per QueryExecution, so the second call must not silently
-    // serve the first call's extraction (the r11 ADVICE hazard)
-    val dual = Seq(
-      (1L, Array(0f, 0f), 101L, Array(9f, 9f)),
-      (2L, Array(5f, 5f), 102L, Array(1f, 1f)))
-      .toDF("la", "va", "lb", "vb")
-    val queries = Seq((0L, Array(0f, 0f))).toDF("qid", "qvec")
-    spark.conf.set(Knn.LocalServeThresholdConf, Long.MaxValue.toString)
-    try {
-      val a = Knn.searchFlat(dual, queries, 1, "l2sq", labelCol = "la", vecCol = "va")
-        .collect().head
-      assert(a.getLong(2) === 1L) // va's (0,0) is the 0-distance hit
-      val b = Knn.searchFlat(dual, queries, 1, "l2sq", labelCol = "lb", vecCol = "vb")
-        .collect().head
-      assert(b.getLong(2) === 102L) // vb's (1,1), not a stale va corpus
-      // and back: the re-collect didn't poison the first extraction
-      val a2 = Knn.searchFlat(dual, queries, 1, "l2sq", labelCol = "la", vecCol = "va")
-        .collect().head
-      assert(a2.getLong(2) === 1L)
-    } finally spark.conf.unset(Knn.LocalServeThresholdConf)
-  }
-
   test("driver-local serve: over-cap corpus falls back to the distributed plan; oversized batch fails loudly") {
     import spark.implicits._
     val queries = Seq((0L, Array(0.2f, 0.0f))).toDF("qid", "qvec")
@@ -115,6 +90,27 @@ class KnnSpec extends SparkSpec {
       spark.conf.unset(Knn.LocalServeThresholdConf)
       spark.conf.unset(Knn.LocalServeMaxRowsConf)
       spark.conf.unset(graft.index.IndexCatalog.MaxQueryBatchConf)
+    }
+  }
+
+  test("Knn confs: a non-integer or negative value throws naming the key") {
+    import spark.implicits._
+    val queries = Seq((0L, Array(0.2f, 0.0f))).toDF("qid", "qvec")
+    for (key <- Seq(Knn.FastFlatThresholdConf, Knn.LocalServeThresholdConf, Knn.LocalServeMaxRowsConf);
+         bad <- Seq("x", "-5")) {
+      // the row cap is read only on the local-serve path
+      if (key == Knn.LocalServeMaxRowsConf)
+        spark.conf.set(Knn.LocalServeThresholdConf, Long.MaxValue.toString)
+      spark.conf.set(key, bad)
+      try {
+        // a fresh DataFrame: a corpus already held for `data` would skip the cap
+        val corpus = data.select(col("label"), col("vec"))
+        val e = intercept[IllegalArgumentException](Knn.searchFlat(corpus, queries, 3, "l2sq").collect())
+        assert(e.getMessage.contains(key), s"$key=$bad: ${e.getMessage}")
+      } finally {
+        spark.conf.unset(key)
+        spark.conf.unset(Knn.LocalServeThresholdConf)
+      }
     }
   }
 
@@ -194,7 +190,7 @@ class KnnSpec extends SparkSpec {
   test("filtered search only sees rows passing the predicate") {
     import spark.implicits._
     val queries = Seq((0L, Array(0.0f, 0.0f))).toDF("qid", "qvec")
-    val res = Knn.searchFlatFiltered(data, col("label") % 2 === 1, queries, 2, "l2sq")
+    val res = Knn.searchFlat(data.where(col("label") % 2 === 1), queries, 2, "l2sq")
       .orderBy("rank").collect()
     assert(res.map(_.getLong(2)).toSeq === Seq(1L, 11L))
   }
@@ -202,7 +198,7 @@ class KnnSpec extends SparkSpec {
   test("k larger than candidate set returns all candidates") {
     import spark.implicits._
     val queries = Seq((7L, Array(0.0f, 0.0f))).toDF("qid", "qvec")
-    val res = Knn.searchFlatFiltered(data, col("label") < 2, queries, 10, "l2sq").collect()
+    val res = Knn.searchFlat(data.where(col("label") < 2), queries, 10, "l2sq").collect()
     assert(res.length === 2)
   }
 
@@ -212,7 +208,7 @@ class KnnSpec extends SparkSpec {
     for (metric <- Seq("l2sq", "ip", "cosine", "l1")) {
       val slow = Knn.searchFlat(data.repartition(3), queries, 4, metric)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sortBy(x => (x._1, x._2))
-      val fast = Knn.searchFlatFast(data.repartition(3), queries, 4, metric)
+      val fast = Knn.searchFlatFast(data.repartition(3), Knn.collectBatch(queries), 4, metric)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sortBy(x => (x._1, x._2))
       assert(fast.toSeq === slow.toSeq, metric)
     }

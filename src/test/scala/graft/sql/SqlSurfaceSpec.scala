@@ -194,6 +194,30 @@ class SqlSurfaceSpec extends SparkSpec {
     } finally spark.conf.unset(IndexCatalog.MaxQueryBatchConf)
   }
 
+  test("one SQL faiss_search plan collects its query batch once") {
+    ready
+    fresh("sqlidx_once")
+    spark.sql("SELECT faiss_create('sqlidx_once', 4, 'IDMap,HNSW8')").collect()
+    spark.sql("SELECT faiss_add('sql_corpus', 'sqlidx_once')").collect()
+    val q = "SELECT qid, faiss_search('sqlidx_once', 2, qv) AS rs FROM sql_queries"
+    spark.sql(q).collect() // builds the index outside the count
+    var collects = 0
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(
+          funcName: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (funcName == "collect") collects += 1
+      override def onFailure(
+          funcName: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      spark.sql(q).queryExecution.executedPlan // planning runs the rewrite, and its collects
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      assert(collects === 1)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("create_params + named metric_type argument (reference faiss6.test)") {
     ready
     fresh("sqlidx6")
