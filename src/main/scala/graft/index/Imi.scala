@@ -1,13 +1,5 @@
 package graft.index
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
-
-import graft.functions.TopKHeap
-
 /**
  * Inverted multi-index coarse quantizer — the FAISS `IMI2x<n>` factory
  * family (Babenko & Lempitsky 2012, "The Inverted Multi-Index"; the
@@ -46,9 +38,9 @@ object Imi {
   }
 
   /** concatenated product centroids in cell-id order (i·K + j) — the
-    * K² virtual coarse table, materialized for the shared IVF layout
-    * (save format, stats, retrain, merge). Bounded by the create-time
-    * cap on n (IMI2x8 → 65 536 cells ≈ the IVF65536 table). */
+    * K² virtual coarse table, materialized for the shared IVF save
+    * layout. Bounded by the create-time cap on n (IMI2x8 → 65 536
+    * cells ≈ the IVF65536 table). */
   def productCentroids(books: Array[Array[Array[Float]]]): Array[Array[Float]] = {
     val Array(b1, b2) = books
     val k2 = b2.length
@@ -155,40 +147,5 @@ object Imi {
       push(r1, r2 + 1)
     }
     out.take(filled).toSeq
-  }
-}
-
-/** assignment expression: array<float> vector -> [cell id] (single-
-  * element array, the NearestCentroids nprobe=1 contract — empty on
-  * all-NaN input). Product argmin: 2·K half scans, not K² full ones. */
-case class ImiNearestCells(child: Expression, books: Array[Array[Array[Float]]])
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "imi_nearest_cells"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"imi_nearest_cells needs array<float>, got ${t.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    ImiNearestCells.nearest(input.asInstanceOf[ArrayData], books)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bks = ctx.addReferenceObj("books", books, "float[][][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.index.ImiNearestCells.nearest($c, $bks);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object ImiNearestCells {
-  /** static entry shared by interpreted eval and generated code */
-  def nearest(v: ArrayData, books: Array[Array[Array[Float]]]): ArrayData = {
-    val cell = Imi.assignCell(v.toFloatArray(), books)
-    if (cell < 0) new GenericArrayData(Array.emptyIntArray)
-    else new GenericArrayData(Array(cell))
   }
 }

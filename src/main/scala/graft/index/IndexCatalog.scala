@@ -25,11 +25,17 @@ import graft.search.Knn
  *    materializes (trains + assigns + caches) on first search/save —
  *    mirroring FAISS's "add retrains unless manually trained" contract
  *    without re-clustering per micro-batch. Exception: adding to an
- *    ALREADY-BUILT top-level IVF extends the built structure
- *    incrementally (only the batch is assigned, centroids pinned —
- *    the real-time ingest path); compact() folds appended batches
+ *    ALREADY-BUILT top-level IVF or coded index extends the built
+ *    structure incrementally (only the batch is assigned, trained state
+ *    pinned — the real-time ingest path); compact() folds appended batches
+ *  - an entry holds at most one trained coarse quantizer, a [[Coarse]]
+ *    (flat argmin, HNSW graph over the centroids, or IMI half books):
+ *    IVF / IVF_HNSW / IMI build one [[IvfBuilt]] over it, coded indexes
+ *    with nlist > 1 assign and probe through it, and it persists itself
  *  - save = parquet (partitioned by IVF list for partition pruning) +
- *    a one-row meta DataFrame; load restores lazily
+ *    the trained state + a one-row meta DataFrame; load restores lazily
+ *  - the query DataFrame's columns are read by position ([[colAt]]),
+ *    so any column names work
  */
 object IndexCatalog {
 
@@ -74,7 +80,7 @@ object IndexCatalog {
     * centroids → nlist = 2^(2n) cells at assignment cost 2·2^n·(d/2);
     * the OTHER standard route to huge nlist besides IVF<n>_HNSW<m>.
     * List layout, probing, save/load all reuse the IVF machinery
-    * (IvfBuilt with the product-books fast path; Imi.scala). */
+    * (IvfBuilt over an [[ImiCoarse]]; Imi.scala). */
   case class ImiKind(nbits: Int) extends Kind
   case class HnswKind(m: Int) extends Kind
   /** pre-transform wrapper, e.g. "PCA16,IVF64,Flat" */
@@ -163,17 +169,12 @@ object IndexCatalog {
     val idMap: Boolean = hasIdMap(meta.factory)
     var destroyed: Boolean = false // guarded by this Entry's monitor
     var pending: Option[DataFrame] = None // (label bigint, vec array<float>)
-    var trained: Option[Array[Array[Float]]] = None // IVF centroids from manual_train
-    // coded kinds: (trained codec, coarse centroids when nlist > 1)
-    var trainedCodec: Option[(Codec, Option[Array[Array[Float]]])] = None
-    var imiBooks: Option[Array[Array[Array[Float]]]] = None // IMI's two half-space codebooks
+    // the trained coarse quantizer: IVF / IVF_HNSW / IMI, or a coded
+    // index's when nlist > 1 (under a pretransform: in projected space)
+    var coarse: Option[Coarse] = None
+    var codec: Option[Codec] = None // a coded index's trained fine quantizer
     var trainedPca: Option[(Array[Float], Array[Array[Float]])] = None
     var built: Option[BuiltIndex] = None
-    // (key, graph) restored by load() from a persisted coarse-graph
-    // layout; consumed by coarseGraph() when the key (a hash of the
-    // exact build inputs: centroid bits, m, efConstruction, metric)
-    // matches — any mismatch falls back to a deterministic rebuild
-    var loadedCoarseGraph: Option[(Long, Nsw.Graph)] = None
     var nextAutoId: Long = 0L
     val cachedBatches = scala.collection.mutable.ListBuffer.empty[DataFrame]
   }
@@ -304,7 +305,7 @@ object IndexCatalog {
         throw new UnsupportedOperationException(
           s"remove requires an IDMap index ('${e.meta.factory}' would renumber " +
             "survivors, FAISS remove_ids semantics); create with 'IDMap,...'")
-      val idSet = ids.select(col(ids.columns.head).cast("long").as("label")).distinct()
+      val idSet = ids.select(colAt(ids, 0).cast("long").as("label")).distinct()
       e.pending match {
         case None => 0L
         case Some(p) =>
@@ -356,17 +357,24 @@ object IndexCatalog {
     * state into its DuckDB oracle and replay assignment + probing
     * verbatim, turning a partial-probe rows-only gate into an exact
     * one (VERDICT r11 #1). */
-  def trainedCentroidsOf(name: String): Option[Array[Array[Float]]] =
-    entry(name).trained.map(_.map(_.clone()))
+  def trainedCentroidsOf(name: String): Option[Array[Array[Float]]] = {
+    val e = entry(name)
+    unwrapped(e.kind) match {
+      case IvfKind(_) | IvfHnswKind(_, _) => e.coarse.map(_.centroids.map(_.clone()))
+      case _ => None
+    }
+  }
 
   /** trained scalar-quantizer state — (vmin, vdiff, coarse centroids):
     * the FAISS analog of reading `sq.trained` off an IndexScalarQuantizer.
     * Same injection purpose as [[trainedCentroidsOf]]. */
   def trainedSqOf(name: String)
-      : Option[(Array[Float], Array[Float], Option[Array[Array[Float]]])] =
-    entry(name).trainedCodec.flatMap { case (codec, cs) =>
-      codec.trainedBounds.map { case (mn, df) => (mn.clone(), df.clone(), cs.map(_.map(_.clone()))) }
+      : Option[(Array[Float], Array[Float], Option[Array[Array[Float]]])] = {
+    val e = entry(name)
+    e.codec.flatMap(_.trainedBounds).map { case (mn, df) =>
+      (mn.clone(), df.clone(), e.coarse.map(_.centroids.map(_.clone())))
     }
+  }
 
   /** trained product/additive-quantizer state — (codebooks, coarse
     * centroids): the FAISS analog of reading `pq.centroids` off an
@@ -376,9 +384,10 @@ object IndexCatalog {
   def trainedPqOf(name: String)
       : Option[(Array[Array[Array[Float]]], Option[Array[Array[Float]]])] = {
     val e = entry(name)
-    e.imiBooks.map(b => (b, Option.empty[Array[Array[Float]]]))
-      .orElse(e.trainedCodec.flatMap { case (codec, cs) => codec.trainedBooks.map((_, cs)) })
-      .map { case (books, cs) => (books.map(_.map(_.clone())), cs.map(_.map(_.clone()))) }
+    (e.coarse match {
+      case Some(ImiCoarse(books)) => Some((books, None))
+      case c => e.codec.flatMap(_.trainedBooks).map((_, c.map(_.centroids)))
+    }).map { case (books, cs) => (books.map(_.map(_.clone())), cs.map(_.map(_.clone()))) }
   }
 
   /** the BUILT per-shard HNSW graphs (labels, levels, adjacency, entry,
@@ -447,7 +456,6 @@ object IndexCatalog {
         // dense sequential auto-ids across batches (FAISS semantics):
         // zipWithIndex is the only collision-free distributed numbering —
         // monotonically_increasing_id spans would overlap between batches
-        val vcol = df.columns(0)
         val start = e.nextAutoId
         val spark = df.sparkSession
         // cache the INPUT before zipWithIndex: zipWithIndex runs its
@@ -456,7 +464,7 @@ object IndexCatalog {
         // evaluations could disagree (shifted/duplicate ids) unless both
         // read the same materialized data
         val vecDf = df.select(
-          guardAddDim(vec.vector(col(vcol)), e.meta.dim, e.meta.name).as("vec")).cache()
+          guardAddDim(vec.vector(colAt(df, 0)), e.meta.dim, e.meta.name).as("vec")).cache()
         val schema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("label", org.apache.spark.sql.types.LongType, nullable = false),
           vecDf.schema.fields(0).copy(name = "vec")))
@@ -474,8 +482,8 @@ object IndexCatalog {
             "Unable to add data: this index does not support adding with IDs. " +
               "Prefix the factory string with IDMap when creating the index.")
         df.select(
-          col(df.columns(0)).cast("long").as("label"),
-          guardAddDim(vec.vector(col(df.columns(1))), e.meta.dim, e.meta.name).as("vec"))
+          colAt(df, 0).cast("long").as("label"),
+          guardAddDim(vec.vector(colAt(df, 1)), e.meta.dim, e.meta.name).as("vec"))
     }
     appendRows(e, normalized)
     }
@@ -492,7 +500,7 @@ object IndexCatalog {
   private def appendRows(e: Entry, rows: DataFrame): Unit = {
     e.pending = Some(e.pending.map(_.unionByName(rows)).getOrElse(rows))
     e.built = e.built match {
-      case Some(ivf: IvfBuilt) if ivf.centroids.nonEmpty => Some(ivf.appended(rows))
+      case Some(ivf: IvfBuilt) if ivf.coarse.nlist > 0 => Some(ivf.appended(rows))
       case Some(c: CodedBuilt) => Some(c.appended(rows, e.pending.get))
       case other =>
         other.foreach(_.close())
@@ -534,11 +542,12 @@ object IndexCatalog {
       case _: IvfBuilt | _: CodedBuilt => b.data.where(col("list_id") >= 0)
       case other => other.data.select(lit(0).as("list_id"), col("label"))
     }).groupBy(col("list_id")).agg(count(lit(1)).as("sz"))
-    val nlist = b match {
-      case ivf: IvfBuilt => math.max(ivf.centroids.length, 1)
-      case c: CodedBuilt => c.centroids.map(_.length).getOrElse(1)
-      case _ => 1
+    val coarse = b match {
+      case ivf: IvfBuilt => Some(ivf.coarse)
+      case c: CodedBuilt => c.coarse
+      case _ => None
     }
+    val nlist = coarse.fold(1)(c => math.max(c.nlist, 1))
     // square in DOUBLE: long*long overflows past ~3e9 rows — exactly the
     // corpus size this diagnostic is for
     listSizes.agg(
@@ -575,9 +584,7 @@ object IndexCatalog {
           // zipWithIndex auto-id batches, destabilizing ids. Same
           // durability tradeoff the ingest path already accepts.
           val rows = ivf.data.repartition(col("list_id")).localCheckpoint(true)
-          Some((new IvfBuilt(
-            rows, ivf.meta, ivf.centroids, VectorMath.metricId(e.meta.metric),
-            coarseGraph = ivf.coarseGraph, imiBooks = ivf.imiBooks), rows))
+          Some((new IvfBuilt(rows, ivf.meta, ivf.coarse), rows))
         case Some(c: CodedBuilt) if c.hasAppends =>
           val f = c.compacted()
           Some((f, f.raw))
@@ -670,18 +677,14 @@ object IndexCatalog {
     val seed = IndexCatalog.seedOf(e.meta.params)
     e.kind match {
       case IvfKind(_) | IvfHnswKind(_, _) =>
-        val nlist = e.kind match {
-          case IvfKind(n) => n
-          case IvfHnswKind(n, _) => n
-          case _ => 0
-        }
+        val nlist = ivfNlist(e.kind)
         val n = if (nlist > 0) nlist else math.max(4, math.sqrt(sample.count().toDouble).toInt)
-        val vcol = sample.columns.last
-        val cents = KMeansTrainer.train(sample.select(vec.vector(col(vcol)).as("vec")), n,
+        val cents = KMeansTrainer.train(
+          sample.select(vec.vector(colAt(sample, sample.columns.length - 1)).as("vec")), n,
           seed, positiveIntParam(e.meta.params, "maxIter", 10))
         // an empty sample trains nothing — leave untrained so build()
         // auto-trains from the real data (Some(empty) would block it)
-        e.trained = if (cents.isEmpty) None else Some(cents)
+        e.coarse = Option.when(cents.nonEmpty)(coarseFor(e, e.kind, cents))
       case k @ (CodedKind(_, _, _) | ImiKind(_)) =>
         trainPointsKind(e, k, samplePoints(sample), seed)
       case PcaKind(outDim, inner) =>
@@ -726,15 +729,20 @@ object IndexCatalog {
         case other => throw new UnsupportedOperationException(
           s"manualTrainCentroids applies to IVF kinds, got $other")
       }
-      e.trained = if (cents.isEmpty) None else Some(cents.map(_.clone()))
+      e.coarse = Option.when(cents.nonEmpty)(coarseFor(e, e.kind, cents.map(_.clone())))
       e.built.foreach(_.close())
       e.built = None
     }
   }
 
+  private def ivfNlist(kind: Kind): Int = kind match {
+    case IvfKind(n) => n
+    case IvfHnswKind(n, _) => n
+    case _ => 0
+  }
+
   private def samplePoints(sample: DataFrame): Array[Array[Float]] = {
-    val vcol = sample.columns.last
-    sample.select(vec.vector(col(vcol)).as("vec")).limit(50000)
+    sample.select(vec.vector(colAt(sample, sample.columns.length - 1)).as("vec")).limit(50000)
       .collect().map(_.getSeq[Float](0).toArray)
   }
 
@@ -743,23 +751,21 @@ object IndexCatalog {
     * leaves the kind untrained — build() auto-trains from real data. */
   private def trainPointsKind(e: Entry, kind: Kind, pts: Array[Array[Float]], seed: Long): Unit =
     if (pts.isEmpty) () else kind match {
-      case IvfKind(nlist) =>
+      case IvfKind(_) | IvfHnswKind(_, _) =>
+        val nlist = ivfNlist(kind)
         val n0 = if (nlist > 0) nlist else math.max(4, math.sqrt(pts.length.toDouble).toInt)
-        e.trained = Some(Pq.localKMeans(pts, math.min(n0, math.max(1, pts.length)), seed,
-          positiveIntParam(e.meta.params, "maxIter", 10)))
-      case IvfHnswKind(nlist, _) =>
-        trainPointsKind(e, IvfKind(nlist), pts, seed) // same centroids; graph derives at build
+        e.coarse = Some(coarseFor(e, kind, Pq.localKMeans(pts, math.min(n0, math.max(1, pts.length)),
+          seed, positiveIntParam(e.meta.params, "maxIter", 10))))
       case ImiKind(nbits) =>
-        e.imiBooks = Some(Imi.train(pts, 1 << nbits, seed,
-          positiveIntParam(e.meta.params, "maxIter", 10)))
+        e.coarse = Some(ImiCoarse(Imi.train(pts, 1 << nbits, seed,
+          positiveIntParam(e.meta.params, "maxIter", 10))))
       case CodedKind(spec, nlist, _) =>
         // codec before coarse k-means: the reverse order measured ~20%
         // slower cold-JVM IVF-PQ builds
         val codec = spec.train(pts, seed)
-        val cents =
-          if (nlist > 1) Some(Pq.localKMeans(pts, math.min(nlist, pts.length), seed + 999, 10))
-          else None
-        e.trainedCodec = Some((codec, cents))
+        e.coarse = Option.when(nlist > 1)(
+          coarseFor(e, kind, Pq.localKMeans(pts, math.min(nlist, pts.length), seed + 999, 10)))
+        e.codec = Some(codec)
       case PcaKind(_, _) | OpqKind(_, _) =>
         throw new IllegalArgumentException("nested pretransforms are not supported")
       case _ => // Flat/LSH/HNSW need no training
@@ -776,8 +782,7 @@ object IndexCatalog {
       e.built.getOrElse {
         val data = e.pending.getOrElse(
           throw new IllegalStateException(s"index '$name' has no vectors; call add first"))
-        val metricId = VectorMath.metricId(e.meta.metric)
-        val built: BuiltIndex = buildKind(e, e.kind, data, metricId)
+        val built: BuiltIndex = buildKind(e, e.kind, data)
         e.built = Some(built)
         built
       }
@@ -797,96 +802,57 @@ object IndexCatalog {
   private[graft] def coarseMetricId(metricId: Int): Int =
     if (metricId == VectorMath.IP) VectorMath.IP else VectorMath.L2SQ
 
-  /** beam width for graph-coarse assignment/probing (shared by IvfBuilt
-    * and the coded layouts) */
-  private def coarseEfOf(meta: IndexMeta): Int =
-    positiveIntParam(meta.params, "coarseEfSearch", 64)
-
-  /** driver-built HNSW over the (bounded) centroid table — deterministic
-    * in (centroids, m, efConstruction) via Nsw's label-hash levels, so
-    * save/load CAN rebuild the identical graph from the saved centroids.
-    * Rebuild at nlist=65k costs ~59 s driver-side (measured over 65,536
-    * centroids, SURVEY §21.8) — paid per loading driver — so save() persists the
-    * adjacency and load() restores it here when the build-input key
-    * matches (the graph is a pure function of those inputs, making the
-    * persisted copy a cache with a trivial invariant). */
-  private def coarseGraph(
-      e: Entry, centroids: Array[Array[Float]], m: Int, metricId: Int): Nsw.Graph = {
-    val efc = positiveIntParam(e.meta.params, "coarseEfConstruction", 64)
-    val met = coarseMetricId(metricId)
-    val key = coarseGraphKey(centroids, m, efc, met)
-    e.loadedCoarseGraph match {
-      case Some((k, g)) if k == key => g
-      case _ =>
-        Nsw.build(centroids.zipWithIndex.map { case (c, i) => (i.toLong, c) }, m, efc, met)
+  /**
+   * The coarse quantizer `kind` trains over `centroids`: flat argmin
+   * under the index metric for IVF, under L2 for a coded index (the
+   * FAISS PQ convention); an HNSW graph over the centroids for
+   * IVF<n>_HNSW<m> (coded: only when there is more than one centroid),
+   * walked by [[coarseMetricId]] with beam `coarseEfSearch`. `saved`
+   * hands back a graph a save persisted under a given build-input key
+   * ([[Coarse.graph]]); without one the graph is built here.
+   */
+  private def coarseFor(
+      e: Entry, kind: Kind, centroids: Array[Array[Float]],
+      saved: Long => Option[Nsw.Graph] = _ => None): Coarse = {
+    val metricId = VectorMath.metricId(e.meta.metric)
+    def graph(m: Int) = Coarse.graph(centroids, m,
+      positiveIntParam(e.meta.params, "coarseEfConstruction", 64),
+      positiveIntParam(e.meta.params, "coarseEfSearch", 64), coarseMetricId(metricId), saved)
+    kind match {
+      case IvfHnswKind(_, m) => graph(m)
+      case CodedKind(_, _, m) if m > 0 && centroids.length > 1 => graph(m)
+      case CodedKind(_, _, _) => FlatCoarse(centroids, VectorMath.L2SQ)
+      case _ => FlatCoarse(centroids, metricId)
     }
   }
 
-  /** hash of the exact coarse-graph build inputs (raw centroid float
-    * bits + m + efConstruction + coarse metric): Nsw.build is
-    * deterministic in these, so key equality ⇒ the persisted graph is
-    * bit-identical to what a rebuild would produce */
-  private def coarseGraphKey(
-      centroids: Array[Array[Float]], m: Int, efc: Int, coarseMet: Int): Long = {
-    var h = 1125899906842597L
-    h = h * 31 + m; h = h * 31 + efc; h = h * 31 + coarseMet
-    var ci = 0
-    while (ci < centroids.length) {
-      val c = centroids(ci)
-      var i = 0
-      while (i < c.length) { h = h * 31 + java.lang.Float.floatToRawIntBits(c(i)); i += 1 }
-      h = h * 31 + c.length
-      ci += 1
-    }
-    h
-  }
-
-  private def buildKind(e: Entry, kind: Kind, data: DataFrame, metricId: Int): BuiltIndex =
+  private def buildKind(e: Entry, kind: Kind, data: DataFrame): BuiltIndex =
     kind match {
       case FlatKind => new FlatBuilt(cachedLayout(Knn.widen(data)), e.meta) // widen once, before the cache
       case LshKind(bits) => LshBuilt.build(data, e.meta, bits)
-      case k @ CodedKind(_, _, cm) =>
+      case k @ CodedKind(_, _, _) =>
         // auto-train through the Entry (mirrors the IVF path) so save()
         // persists the trained state and load() never retrains from a
         // partition-order-dependent sample
-        if (e.trainedCodec.isEmpty) trainPointsKind(e, k, boundedSample(data), seed(e))
-        val (trained, cents) = e.trainedCodec.getOrElse(
+        if (e.codec.isEmpty) trainPointsKind(e, k, boundedSample(data), seed(e))
+        val codec = e.codec.getOrElse(
           throw new IllegalArgumentException("cannot train a coded index's quantizer on an empty index"))
-        val codec = trained.forBuild(data.sparkSession.sparkContext, e.meta.name)
-        // graph coarse (IVF<n>_HNSW<m>,<codec>): a deterministic function
-        // of the trained coarse centroids, exactly as for IVF_HNSW,Flat
-        val g = if (cm > 0) cents.filter(_.length > 1)
-          .map(cs => coarseGraph(e, cs, cm, metricId)) else None
-        new CodedBuilt(cachedLayout(codedLayout(data, codec, cents, g, coarseEfOf(e.meta))),
-          data, e.meta, codec, cents, g)
+          .forBuild(data.sparkSession.sparkContext, e.meta.name)
+        new CodedBuilt(cachedLayout(codedLayout(data, codec, e.coarse)), data, e.meta, codec, e.coarse)
       case HnswKind(m) => HnswBuilt.build(data, e.meta, m)
-      case IvfKind(nlist) =>
-        val centroids = e.trained.getOrElse {
-          // auto-train like FAISS: a bounded sample is plenty for a
-          // coarse quantizer; don't run Lloyd's over the full corpus.
-          // `data` is already in the index's working space (projected
-          // when nested under a PCA pretransform), so train directly.
-          trainPointsKind(e, IvfKind(nlist), boundedSample(data), seed(e))
+      case k @ (IvfKind(_) | IvfHnswKind(_, _) | ImiKind(_)) =>
+        // auto-train like FAISS: a bounded sample is plenty for a coarse
+        // quantizer; don't run Lloyd's over the full corpus. `data` is
+        // already in the index's working space (projected when nested
+        // under a PCA pretransform), so train directly.
+        if (e.coarse.isEmpty) trainPointsKind(e, k, boundedSample(data), seed(e))
+        IvfBuilt.build(data, e.meta, e.coarse.getOrElse(k match {
+          case ImiKind(_) =>
+            throw new IllegalStateException("cannot train an IMI quantizer on an empty index")
           // empty data -> zero centroids -> searches return empty,
           // matching the pre-refactor KMeansTrainer behavior
-          e.trained.getOrElse(Array.empty)
-        }
-        IvfBuilt.build(data, e.meta, centroids, metricId)
-      case IvfHnswKind(nlist, m) =>
-        val centroids = e.trained.getOrElse {
-          trainPointsKind(e, IvfHnswKind(nlist, m), boundedSample(data), seed(e))
-          e.trained.getOrElse(Array.empty)
-        }
-        IvfBuilt.build(data, e.meta, centroids, metricId,
-          Some(coarseGraph(e, centroids, m, metricId)))
-      case k @ ImiKind(_) =>
-        if (e.imiBooks.isEmpty) trainPointsKind(e, k, boundedSample(data), seed(e))
-        val books = e.imiBooks.getOrElse(
-          throw new IllegalStateException("cannot train an IMI quantizer on an empty index"))
-        // the product table is the IVF-compatible coarse view (save
-        // layout, stats, merge); assignment and probing use the books
-        IvfBuilt.build(data, e.meta, Imi.productCentroids(books), metricId,
-          imiBooks = Some(books))
+          case _ => coarseFor(e, k, Array.empty)
+        }))
       case PcaKind(outDim, inner) =>
         val (mean, comps) = e.trainedPca.getOrElse {
           val pts = boundedSample(data)
@@ -902,7 +868,7 @@ object IndexCatalog {
         val proj = GraftBridge.column(
           PcaProject(GraftBridge.expression(col("vec")), mean, comps))
         val projected = data.select(col("label"), proj.as("vec"))
-        new PcaBuilt(buildKind(e, inner, projected, metricId), mean, comps)
+        new PcaBuilt(buildKind(e, inner, projected), mean, comps)
       case OpqKind(m, inner) =>
         val (mean, comps) = e.trainedPca.getOrElse {
           val pts = boundedSample(data)
@@ -920,7 +886,7 @@ object IndexCatalog {
         val proj = GraftBridge.column(
           PcaProject(GraftBridge.expression(col("vec")), mean, comps))
         val rotated = data.select(col("label"), proj.as("vec"))
-        new PcaBuilt(buildKind(e, inner, rotated, metricId), mean, comps)
+        new PcaBuilt(buildKind(e, inner, rotated), mean, comps)
     }
 
   /** the reference accepts recursive prefixed params ('ivf.efSearch',
@@ -1004,7 +970,7 @@ object IndexCatalog {
     // with zero candidates (empty index, empty probed lists, aggressive
     // filter) must yield an empty list, not vanish from the group-by
     val qids = queries
-      .select(col(queries.columns(0)).cast("long").as("qid"))
+      .select(colAt(queries, 0).cast("long").as("qid"))
       .where(col("qid").isNotNull).distinct()
     qids.join(grouped, Seq("qid"), "left")
       .select(col("qid"),
@@ -1043,7 +1009,7 @@ object IndexCatalog {
   private[graft] def searchFilterSetBatch(
       name: String, k: Int, batch: Array[(Long, Array[Float])], ids: DataFrame,
       params: Map[String, String]): DataFrame = {
-    val idSet = ids.select(col(ids.columns.head).cast("long").as("label"))
+    val idSet = ids.select(colAt(ids, 0).cast("long").as("label"))
     build(name).searchRestricted(batch, k, searchParams(name, params),
       _.join(idSet, Seq("label"), "left_semi"))
   }
@@ -1111,7 +1077,7 @@ object IndexCatalog {
    */
   def reconstruct(name: String, ids: DataFrame): DataFrame = {
     val b = build(name)
-    val idSet = ids.select(col(ids.columns.head).cast("long").as("label"))
+    val idSet = ids.select(colAt(ids, 0).cast("long").as("label"))
     val rows = b.data.join(broadcast(idSet), Seq("label"), "left_semi")
     b match {
       case c: CodedBuilt =>
@@ -1240,7 +1206,6 @@ object IndexCatalog {
     b match {
       case ivf: IvfBuilt =>
         ivf.data.write.mode("overwrite").option("compression", "zstd").partitionBy("list_id").parquet(s"$path/data")
-        writeCentroids(spark, ivf.centroids, s"$path/centroids")
       case lsh: LshBuilt =>
         // undo the per-band row duplication; distinct on (label, vec)
         // keeps genuinely different vectors that share a label
@@ -1260,52 +1225,20 @@ object IndexCatalog {
         other.data.select(col("label"), col("vec"))
           .write.mode("overwrite").option("compression", "zstd").parquet(s"$path/data")
     }
+    // the coarse quantizer a top-level index was built with (an empty IVF
+    // keeps its zero-centroid table), or a pretransform's projected-space one
+    val coarse = b match {
+      case ivf: IvfBuilt => Some(ivf.coarse)
+      case c: CodedBuilt => c.coarse
+      case _ => e.coarse
+    }
+    coarse.foreach(_.save(spark, path, coarseDirOf(e.kind), withGraph = unwrapped(e.kind) == e.kind))
+    e.codec.foreach(_.persist(spark, path))
     import spark.implicits._
-    // persist the coarse HNSW graph (round 11, VERDICT #4): rebuilt-on-
-    // load cost ~59 s driver-side at nlist=65k, per loading driver. The
-    // graph is persisted WITH the hash of its build inputs; load
-    // restores it only on key match, else rebuilds — so a hand-edited
-    // centroids layout can never pair with a stale adjacency.
-    val coarseToSave: Option[(Array[Array[Float]], Int, Nsw.Graph)] = b match {
-      case ivf: IvfBuilt =>
-        (e.kind, ivf.coarseGraph) match {
-          case (IvfHnswKind(_, m), Some(g)) => Some((ivf.centroids, m, g))
-          case _ => None
-        }
-      case c: CodedBuilt =>
-        (e.kind, c.coarseGraph, c.centroids) match {
-          case (CodedKind(_, _, cm), Some(g), Some(cs)) if cm > 0 => Some((cs, cm, g))
-          case _ => None
-        }
-      case _ => None
-    }
-    coarseToSave.foreach { case (cents, cm, g) =>
-      val efc = positiveIntParam(e.meta.params, "coarseEfConstruction", 64)
-      val met = coarseMetricId(VectorMath.metricId(e.meta.metric))
-      val key = coarseGraphKey(cents, cm, efc, met)
-      g.labels.indices.map { i =>
-        (i, g.labels(i), g.vecs(i).toSeq, g.levels(i),
-          g.adj(i).map(_.toSeq).toSeq, g.dups(i).toSeq)
-      }.toDF("node_id", "label", "vec", "level", "adj", "dups")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse_graph")
-      Seq((key, g.entry, g.maxLevel)).toDF("key", "entry", "max_level")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse_graph_meta")
-    }
-    (unwrapped(e.kind), e.trainedCodec) match {
-      case (CodedKind(spec, _, _), Some((codec, coarse))) =>
-        codec.persist(spark, path)
-        coarse.foreach(writeCentroids(spark, _, s"$path/${spec.coarseDir}"))
-      case _ =>
-    }
-    e.imiBooks.foreach(Codec.writeBooks(spark, _, s"$path/pq_codebooks")) // IMI shares PQ's book layout
-    // persist the PCA transform and, when the built wrapper hides an
-    // inner IVF, its projected-space centroids (the IvfBuilt save case
-    // only fires for a top-level IVF)
     e.trainedPca.foreach { case (mean, comps) =>
       (Seq((-1, mean.toSeq)) ++ comps.zipWithIndex.map { case (c, j) => (j, c.toSeq) })
         .toDF("row_idx", "vals")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/pca")
-      e.trained.foreach(writeCentroids(spark, _, s"$path/pca_ivf_centroids"))
     }
     // URL-encode keys/values: a raw ';' or '=' inside a param value
     // would corrupt (or crash) the k=v;k=v parse on load
@@ -1324,22 +1257,17 @@ object IndexCatalog {
     hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
   }
 
-  /** a centroid table (centroid_id, centroid) — the IVF, PCA-inner-IVF
-    * and coded-coarse layouts */
-  private def writeCentroids(
-      spark: SparkSession, cents: Array[Array[Float]], path: String): Unit = {
-    import spark.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("centroid_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(path)
+  /** where a save keeps an index's coarse centroid table: `centroids`
+    * for a top-level IVF / IVF_HNSW / IMI (the IMI product table),
+    * `pca_ivf_centroids` for one under a pretransform, the codec
+    * family's `pq_coarse` / `sq_coarse` for a coded index; None for an
+    * IMI under a pretransform, which persists its half books only */
+  private def coarseDirOf(kind: Kind): Option[String] = (kind, unwrapped(kind)) match {
+    case (_, CodedKind(spec, _, _)) => Some(spec.coarseDir)
+    case (IvfKind(_) | IvfHnswKind(_, _) | ImiKind(_), _) => Some("centroids")
+    case (_, ImiKind(_)) => None
+    case _ => Some("pca_ivf_centroids")
   }
-
-  private def readCentroids(spark: SparkSession, path: String): Array[Array[Float]] =
-    spark.read.parquet(path).collect().sortBy(_.getInt(0)).map(_.getSeq[Float](1).toArray)
-
-  private def readCentroidsIfExists(
-      spark: SparkSession, path: String): Option[Array[Array[Float]]] =
-    Option.when(pathExists(spark, path))(readCentroids(spark, path))
 
   def load(name: String, savePath: String, spark: SparkSession): Unit = {
     val base = new org.apache.hadoop.fs.Path(savePath)
@@ -1354,65 +1282,41 @@ object IndexCatalog {
       .map { kv => val Array(k, v) = kv.split("=", 2); unesc(k) -> unesc(v) }.toMap
     create(name, m.getInt(1), m.getString(2), m.getString(3), params)
     val e = entry(name)
-    // restore the persisted coarse graph (key-validated in coarseGraph;
-    // absent/mismatching layouts rebuild deterministically)
-    if (pathExists(spark, s"$path/coarse_graph_meta")) {
-      val gm = spark.read.parquet(s"$path/coarse_graph_meta").collect()(0)
-      val rows = spark.read.parquet(s"$path/coarse_graph").collect().sortBy(_.getInt(0))
-      val g = Nsw.Graph(
-        labels = rows.map(_.getLong(1)),
-        vecs = rows.map(_.getSeq[Float](2).toArray),
-        levels = rows.map(_.getInt(3)),
-        adj = rows.map(_.getSeq[scala.collection.Seq[Int]](4).map(_.toArray).toArray),
-        entry = gm.getInt(1),
-        maxLevel = gm.getInt(2),
-        dups = rows.map(_.getSeq[Long](5).toArray))
-      e.loadedCoarseGraph = Some((gm.getLong(0), g))
+    // the saved coarse quantizer: IMI's half books, else the centroid
+    // table (a graph coarse takes back its persisted adjacency when the
+    // build-input key matches, and rebuilds it otherwise)
+    val inner = unwrapped(e.kind)
+    e.coarse = inner match {
+      case ImiKind(_) => CodecSpec.restoreBooks(spark, path).map(ImiCoarse(_))
+      case IvfKind(_) | IvfHnswKind(_, _) | CodedKind(_, _, _) =>
+        coarseDirOf(e.kind).map(d => s"$path/$d").filter(pathExists(spark, _)).map(d =>
+          coarseFor(e, inner, Coarse.readCentroids(spark, d), Coarse.savedGraph(spark, path)))
+      case _ => None
+    }
+    inner match {
+      case CodedKind(spec, _, _) => e.codec = spec.restore(spark, path)
+      case _ =>
     }
     e.kind match {
       case IvfKind(_) | IvfHnswKind(_, _) | ImiKind(_) =>
         val data = spark.read.parquet(s"$path/data")
         e.pending = Some(data.select(col("label"), col("vec")))
-        val cents = readCentroids(spark, s"$path/centroids")
-        e.trained = Some(cents)
-        // the coarse graph is a deterministic function of the saved
-        // centroids (label-hash levels, no RNG) — restored from the
-        // persisted layout via loadedCoarseGraph when the key matches,
-        // rebuilt otherwise
-        val graph = e.kind match {
-          case IvfHnswKind(_, m) =>
-            Some(coarseGraph(e, cents, m, VectorMath.metricId(e.meta.metric)))
-          case _ => None
-        }
-        // IMI: restore the half books (pq_codebooks parquet) so
-        // assignment/probing keep the 2·K product path
-        if (e.kind.isInstanceOf[ImiKind])
-          e.imiBooks = Some(Codec.readBooks(spark, s"$path/pq_codebooks"))
         // rebuild from the partitioned layout without re-assigning.
         // NOT cached: the scan must stay file-backed so the static
         // probed-list filter prunes partitions on disk (a cache would
         // materialize every list on first search)
         e.built = Some(new IvfBuilt(
-          data.select(col("list_id"), col("label"), col("vec")),
-          e.meta, cents, VectorMath.metricId(e.meta.metric), coarseGraph = graph,
-          imiBooks = e.imiBooks))
+          data.select(col("list_id"), col("label"), col("vec")), e.meta,
+          e.coarse.getOrElse(throw new IllegalStateException(
+            s"the index saved at '$path' holds no coarse quantizer"))))
       case _ =>
         e.pending = Some(spark.read.parquet(s"$path/data").select(col("label"), col("vec")))
-        unwrapped(e.kind) match {
-          case CodedKind(spec, _, _) =>
-            e.trainedCodec = spec.restore(spark, path)
-              .map((_, readCentroidsIfExists(spark, s"$path/${spec.coarseDir}")))
-          case ImiKind(_) => // a pretransform-wrapped IMI keeps its half books
-            e.imiBooks = CodecSpec.restoreBooks(spark, path)
-          case _ =>
-        }
         if (pathExists(spark, s"$path/pca")) {
           val rows = spark.read.parquet(s"$path/pca").collect().sortBy(_.getInt(0))
           val mean = rows.find(_.getInt(0) == -1).get.getSeq[Float](1).toArray
           val comps = rows.filter(_.getInt(0) >= 0).sortBy(_.getInt(0))
             .map(_.getSeq[Float](1).toArray)
           e.trainedPca = Some((mean, comps))
-          e.trained = readCentroidsIfExists(spark, s"$path/pca_ivf_centroids")
         }
     }
     // restore the auto-id watermark persisted at save() time (the FAISS
@@ -1472,21 +1376,17 @@ object IndexCatalog {
       Knn.searchFlatBatch(data, batch, k, meta.metric, padOf(params))
   }
 
+  /** IVF, IVF_HNSW and IMI: raw vectors in the inverted lists of one
+    * [[Coarse]] quantizer */
   final class IvfBuilt(
       val data: DataFrame, // (list_id int, label bigint, vec array<float>)
       val meta: IndexMeta,
-      val centroids: Array[Array[Float]],
-      metricId: Int,
+      val coarse: Coarse,
       cachedParts: Seq[DataFrame] = Nil, // union components to release on close
-      private[index] val hasAppends: Boolean = false,
-      // IVF<n>_HNSW<m>: graph coarse quantizer over the centroids;
-      // None = flat argmin assignment/probing (plain IVF)
-      private[index] val coarseGraph: Option[Nsw.Graph] = None,
-      // IMI2x<n>: the two half-space codebooks whose product IS
-      // `centroids` — assignment/probing run on the books (2·K half
-      // scans / multi-sequence) instead of the K² product table
-      private[index] val imiBooks: Option[Array[Array[Array[Float]]]] = None)
+      private[index] val hasAppends: Boolean = false)
       extends BuiltIndex {
+
+    private val metricId = VectorMath.metricId(meta.metric)
 
     override def close(): Unit = { data.unpersist(); cachedParts.foreach(_.unpersist()) }
 
@@ -1504,14 +1404,9 @@ object IndexCatalog {
      * folds everything into one co-partitioned cache.
      */
     private[index] def appended(newRows: DataFrame): IvfBuilt = {
-      val assign = IvfBuilt.assignCol(centroids, coarseGraph, metricId, coarseEfOf(meta), imiBooks)
-      val assignedNew = newRows
-        .select(
-          when(size(assign) > 0, element_at(assign, 1)).otherwise(lit(-1)).as("list_id"),
-          col("label"), col("vec"))
-      new IvfBuilt(data.unionByName(assignedNew), meta, centroids, metricId,
-        if (cachedParts.isEmpty) Seq(data) else cachedParts,
-        hasAppends = true, coarseGraph = coarseGraph, imiBooks = imiBooks)
+      val assignedNew = newRows.select(coarse.assign(col("vec")).as("list_id"), col("label"), col("vec"))
+      new IvfBuilt(data.unionByName(assignedNew), meta, coarse,
+        if (cachedParts.isEmpty) Seq(data) else cachedParts, hasAppends = true)
     }
 
     def search(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String]): DataFrame =
@@ -1551,9 +1446,9 @@ object IndexCatalog {
       // feeds both the pruning filter and the join
       val spark = data.sparkSession
       import spark.implicits._
-      // probe with the SAME metric vectors were assigned with (an IP
+      // probe with the SAME quantizer vectors were assigned with (an IP
       // index probed by L2 would look in lists its vectors never joined)
-      val probeOne = coarseProbe(params, centroids, metricId, coarseGraph, coarseEfOf(meta), imiBooks)
+      val probeOne = probeOf(coarse, params)
       val byQuery = batch.toSeq.map { case (qid, qv) => (qid, qv, probeOne(qv)) }
       val d = vec.dist(meta.metric, col("vec"), col("qvec"))
       def candidatesOf(group: Seq[(Long, Array[Float], Seq[Int])]): DataFrame = {
@@ -1568,7 +1463,7 @@ object IndexCatalog {
         // inverted lists
         val union = group.flatMap(_._3).distinct
         val pruned =
-          if (union.size < centroids.length) data.where(col("list_id").isInCollection(union))
+          if (union.size < coarse.nlist) data.where(col("list_id").isInCollection(union))
           else data
         restrict(pruned).join(broadcast(probes), "list_id")
           .select(col("qid"), col("label"), d.as("_dist"))
@@ -1610,68 +1505,21 @@ object IndexCatalog {
   }
 
   object IvfBuilt {
-
-    /** shared assignment column: flat argmin, (for IVF_HNSW) the graph
-      * walk, or (for IMI) the product argmin over the two half books —
-      * all return an int array of nearest list ids */
-    private[index] def assignCol(
-        centroids: Array[Array[Float]], graph: Option[Nsw.Graph],
-        metricId: Int, coarseEf: Int,
-        imiBooks: Option[Array[Array[Array[Float]]]] = None): Column = (graph, imiBooks) match {
-      case (Some(g), _) => GraftBridge.column(HnswNearestCentroids(
-        GraftBridge.expression(col("vec")), g, 1, coarseEf, coarseMetricId(metricId)))
-      case (None, Some(books)) => GraftBridge.column(
-        ImiNearestCells(GraftBridge.expression(col("vec")), books))
-      case (None, None) => GraftBridge.column(
-        NearestCentroids(GraftBridge.expression(col("vec")), centroids, 1, metricId))
-    }
-
-    def build(
-        data: DataFrame, meta: IndexMeta,
-        centroids: Array[Array[Float]], metricId: Int,
-        coarseGraph: Option[Nsw.Graph] = None,
-        imiBooks: Option[Array[Array[Array[Float]]]] = None): IvfBuilt = {
-      val assign = assignCol(centroids, coarseGraph, metricId, coarseEfOf(meta), imiBooks)
+    def build(data: DataFrame, meta: IndexMeta, coarse: Coarse): IvfBuilt = {
       // all-NaN vectors probe nothing -> park them in list -1 (never
-      // probed), instead of failing the build on element_at(empty, 1).
-      // Widen first: assignment is the map stage of the list_id shuffle,
-      // and on a narrow (single-file) input it would run on one core.
+      // probed). Widen first: assignment is the map stage of the list_id
+      // shuffle, and on a narrow (single-file) input it would run on one core.
       val assigned = Knn.widen(data)
-        .select(
-          when(size(assign) > 0, element_at(assign, 1)).otherwise(lit(-1)).as("list_id"),
-          col("label"), col("vec"))
+        .select(coarse.assign(col("vec")).as("list_id"), col("label"), col("vec"))
         .repartition(col("list_id"))
-      new IvfBuilt(cachedLayout(assigned), meta, centroids, metricId,
-        coarseGraph = coarseGraph, imiBooks = imiBooks)
+      new IvfBuilt(cachedLayout(assigned), meta, coarse)
     }
   }
 
-  /** the coarse lists one query probes: the centroid-graph walk
-    * (IVF<n>_HNSW<m>), the IMI multi-sequence over the half books, or
-    * the flat argmin. Graph coarse returns every list outright at
-    * exhaustive probe: a disconnected graph could otherwise silently
-    * skip a list and break the nprobe = nlist exactness contract the
-    * _exh gates pin. The IMI multi-sequence enumerates cells in exact
-    * ascending d1+d2 order, so it is exact at nprobe = nlist anyway; the
-    * same shortcut just skips the enumeration. Shared by IVF and coded
-    * indexes (coded indexes assign and probe by L2SQ, the FAISS PQ
-    * convention). */
-  private def coarseProbe(
-      params: Map[String, String], centroids: Array[Array[Float]], metricId: Int,
-      graph: Option[Nsw.Graph], ef: Int,
-      imiBooks: Option[Array[Array[Array[Float]]]] = None): Array[Float] => Seq[Int] = {
-    val nprobe = positiveIntParam(params, "nprobe", math.max(1, centroids.length / 8))
-    (graph, imiBooks) match {
-      case (Some(g), _) if nprobe < centroids.length =>
-        qv => Nsw.search(g, qv, nprobe, math.max(ef, nprobe), coarseMetricId(metricId))
-          .map(_._2.toInt).toSeq
-      case (None, Some(books)) if nprobe < centroids.length =>
-        qv => Imi.probeCells(qv, books, nprobe)
-      case (Some(_), _) | (None, Some(_)) => _ => centroids.indices
-      case (None, None) =>
-        qv => NearestCentroids.nearestIds(qv, centroids, nprobe, metricId)
-    }
-  }
+  /** the lists one query probes at the search's nprobe (default nlist / 8),
+    * shared by IVF and coded indexes */
+  private def probeOf(coarse: Coarse, params: Map[String, String]): Array[Float] => Seq[Int] =
+    coarse.probe(positiveIntParam(params, "nprobe", math.max(1, coarse.nlist / 8)))
 
   /** a param that must be a positive integer (nprobe, refine, efSearch,
     * maxIter, efConstruction, ...), or `default` when absent. FAISS
@@ -1722,8 +1570,7 @@ object IndexCatalog {
       private[index] val raw: DataFrame, // the base (label, vec) plan, NOT cached here
       val meta: IndexMeta,
       private[index] val codec: Codec,
-      private[index] val centroids: Option[Array[Array[Float]]],
-      private[index] val coarseGraph: Option[Nsw.Graph] = None, // IVF<n>_HNSW<m> coarse
+      private[index] val coarse: Option[Coarse], // None: one list, no coarse quantizer (nlist = 1)
       cachedParts: Seq[DataFrame] = Nil, // union components to release on close
       private[index] val hasAppends: Boolean = false)
       extends BuiltIndex {
@@ -1751,10 +1598,9 @@ object IndexCatalog {
       * rows only, so it is dropped here and lazily rebuilt over the union
       * on next search. */
     private[index] def appended(newRows: DataFrame, newRaw: DataFrame): CodedBuilt = {
-      val newCoded = codedLayout(newRows, codec, centroids, coarseGraph, coarseEfOf(meta),
-        repartitionLists = false)
+      val newCoded = codedLayout(newRows, codec, coarse, repartitionLists = false)
       dropPacked()
-      new CodedBuilt(data.unionByName(newCoded), newRaw, meta, codec, centroids, coarseGraph,
+      new CodedBuilt(data.unionByName(newCoded), newRaw, meta, codec, coarse,
         if (cachedParts.isEmpty) Seq(data) else cachedParts, hasAppends = true)
     }
 
@@ -1764,7 +1610,7 @@ object IndexCatalog {
       * drops its per-add union tree */
     private[index] def compacted(): CodedBuilt =
       new CodedBuilt(data.repartition(col("list_id")).localCheckpoint(true),
-        vecData.localCheckpoint(true), meta, codec, centroids, coarseGraph)
+        vecData.localCheckpoint(true), meta, codec, coarse)
 
     def search(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String]): DataFrame =
       doSearch(batch, k, params, None)
@@ -1802,8 +1648,8 @@ object IndexCatalog {
       // the union of probed lists across the query batch, a static IN
       // filter on the coded scan (guaranteed partition pruning on a
       // list-partitioned saved layout, same as IvfBuilt's probe path)
-      val probePairs = centroids.map { cents =>
-        val probeOne = coarseProbe(params, cents, VectorMath.L2SQ, coarseGraph, coarseEfOf(meta))
+      val probePairs = coarse.map { c =>
+        val probeOne = probeOf(c, params)
         qArr.toSeq.flatMap { case (qid, qv) => probeOne(qv).map(l => (qid, l)) }
       }
       val cands = restrict match {
@@ -1821,12 +1667,12 @@ object IndexCatalog {
             .select(col("qid"), explode(col("nn.label")).as("label"))
         case Some(r) =>
           val base = restrictCoded(r)
-          val candSource = (probePairs, centroids) match {
-            case (Some(pairs), Some(cents)) =>
+          val candSource = (probePairs, coarse) match {
+            case (Some(pairs), Some(c)) =>
               val probes = pairs.toDF("qid", "list_id")
               val lists = pairs.map(_._2).distinct
               val pruned =
-                if (lists.size < cents.length) base.where(col("list_id").isInCollection(lists))
+                if (lists.size < c.nlist) base.where(col("list_id").isInCollection(lists))
                 else base
               pruned.join(broadcast(probes), "list_id")
             case _ =>
@@ -1878,8 +1724,7 @@ object IndexCatalog {
     * assignment with NaN rows parked in never-probed list -1 ->
     * repartition by list. */
   private def codedLayout(
-      data: DataFrame, codec: Codec, cents: Option[Array[Array[Float]]],
-      coarseGraph: Option[Nsw.Graph], coarseEf: Int,
+      data: DataFrame, codec: Codec, coarse: Option[Coarse],
       repartitionLists: Boolean = true): DataFrame = {
     // codes ONLY — no raw vectors. The re-rank stage joins the base
     // table by label instead (CodedBuilt.doSearch), so the cached layout
@@ -1889,14 +1734,9 @@ object IndexCatalog {
     // several indexes coexist in one session
     val encode = GraftBridge.column(CodecEncode(GraftBridge.expression(col("vec")), codec))
     val wide = Knn.widen(data)
-    cents match {
-      case Some(cs) =>
-        // flat argmin, or (IVF_HNSW,<codec>) the graph walk — the same
-        // shared assignment column IVF uses, L2 per FAISS PQ convention
-        val assign = IvfBuilt.assignCol(cs, coarseGraph, VectorMath.L2SQ, coarseEf)
-        val assigned = wide.select(
-            when(size(assign) > 0, element_at(assign, 1)).otherwise(lit(-1)).as("list_id"),
-            col("label"), encode.as("code"))
+    coarse match {
+      case Some(c) =>
+        val assigned = wide.select(c.assign(col("vec")).as("list_id"), col("label"), encode.as("code"))
         // append micro-batches skip the list shuffle (IvfBuilt.appended
         // parity): the batch is small and uncached, a per-search
         // repartition would only add an exchange
@@ -1989,6 +1829,12 @@ object IndexCatalog {
     rows
   }
 
+  /** `df`'s column at position `i`, quoted so that a name holding a dot
+    * or a backtick (`q.id`, a SQL-generated `vec.vector(...)`) resolves
+    * as itself rather than as a nested field */
+  private[graft] def colAt(df: DataFrame, i: Int): Column =
+    col("`" + df.columns(i).replace("`", "``") + "`")
+
   /** The one query-batch collect behind every serving path (catalog
     * entry points, SQL `faiss_search`, `Knn`'s driver-side kernels):
     * (qid, vector) pairs from `queries`' first two columns, null rows
@@ -1999,8 +1845,7 @@ object IndexCatalog {
       queries: DataFrame, what: String, meta: Option[IndexMeta] = None): Array[(Long, Array[Float])] = {
     val batch = collectBounded(
       queries
-        .select(col(queries.columns(0)).cast("long").as("qid"),
-          vec.vector(col(queries.columns(1))).as("qvec"))
+        .select(colAt(queries, 0).cast("long").as("qid"), vec.vector(colAt(queries, 1)).as("qvec"))
         .where(col("qid").isNotNull && col("qvec").isNotNull),
       what).map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
     meta.foreach { m =>
@@ -2018,14 +1863,19 @@ object IndexCatalog {
     * 1000x rung three ~30 GB deserialized layouts in one session
     * overwhelmed spill space and killed the JVM (SURVEY §21.9); the
     * serialized level is the deployment knob for that shape. Accepts
-    * any StorageLevel name (MEMORY_ONLY, DISK_ONLY, ...). Read at
-    * build time; rebuild to change. */
+    * any StorageLevel name (MEMORY_ONLY, DISK_ONLY, ...); any other
+    * value throws naming the key. Read at build time; rebuild to change. */
   private[graft] val CacheLevelConf = "spark.graft.index.cacheStorageLevel"
 
   private[index] def cachedLayout(df: DataFrame): DataFrame = {
-    val lvl = df.sparkSession.conf.getOption(CacheLevelConf)
-      .map(org.apache.spark.storage.StorageLevel.fromString)
-      .getOrElse(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val lvl = df.sparkSession.conf.getOption(CacheLevelConf).map { v =>
+      try org.apache.spark.storage.StorageLevel.fromString(v)
+      catch {
+        case ex: IllegalArgumentException => throw new IllegalArgumentException(
+          s"$CacheLevelConf must name a storage level (MEMORY_AND_DISK, MEMORY_AND_DISK_SER, ...), got '$v'",
+          ex)
+      }
+    }.getOrElse(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     df.persist(lvl)
   }
 

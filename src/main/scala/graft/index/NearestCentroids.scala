@@ -1,54 +1,20 @@
 package graft.index
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 
 import graft.functions.{TopKHeap, VectorMath}
 
 /**
- * argmin-n over a (small) centroid table: returns the `nprobe` nearest
- * centroid ids for an array<float> vector. The centroid matrix rides
- * along with the serialized plan to every executor (codegen references
- * it via addReferenceObj) — the Spark-native analog of FAISS's in-RAM
- * coarse quantizer (IVF probing, cf. duckdb-faiss-ext README
- * index_factory "IVFn,Flat").
+ * argmin-n over a (small) centroid table: the `nprobe` nearest centroid
+ * ids of a vector — the kernels of [[FlatCoarse]], the Spark-native
+ * analog of FAISS's in-RAM flat coarse quantizer (IVF probing, cf.
+ * duckdb-faiss-ext README index_factory "IVFn,Flat"). The centroid
+ * matrix rides along with the serialized plan to every executor inside
+ * [[CoarseAssign]].
  */
-case class NearestCentroids(
-    child: Expression,
-    centroids: Array[Array[Float]],
-    nprobe: Int,
-    metric: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "nearest_centroids"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"nearest_centroids needs array<float>, got ${t.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    NearestCentroids.nearest(input.asInstanceOf[ArrayData], centroids, nprobe, metric)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = ctx.addReferenceObj("centroids", centroids, "float[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.index.NearestCentroids.nearest($c, $cents, $nprobe, $metric);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object NearestCentroids {
 
-  /** static entry shared by interpreted eval and generated code (named
-    * to avoid clashing with Expression.eval, which would suppress the
-    * static forwarder and break Janino compilation) */
+  /** the executor-side kernel (an array<float> row value) */
   def nearest(v: ArrayData, centroids: Array[Array[Float]], nprobe: Int, metric: Int): ArrayData = {
     // materialize ONCE per row: ArrayData.getFloat is a virtual call
     // (boxed on GenericArrayData), and the centroid loop reads the

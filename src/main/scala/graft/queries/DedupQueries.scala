@@ -309,9 +309,8 @@ object DedupQueries {
     // accumulation, ties to lowest cid) and the cosine threshold
     // compares quantized values on both sides.
     "dedup_semantic" -> { (s, dir) =>
-      import org.apache.spark.sql.GraftBridge
       import graft.functions.{vec, VectorMath}
-      import graft.index.NearestCentroids
+      import graft.index.FlatCoarse
       val e = embs(s, dir)
       // bounded collect: 8 seed rows (the IVF-centroid-training shape)
       val cents: Array[Array[Float]] = e.where(col("vec_id") < 8)
@@ -321,9 +320,8 @@ object DedupQueries {
       val assigned = e.select(
         col("vec_id"),
         vec.vector(col("embedding")).as("v"),
-        element_at(GraftBridge.column(NearestCentroids(
-          GraftBridge.expression(vec.vector(col("embedding"))),
-          cents, 1, VectorMath.L2SQ)), 1).cast("long").as("cluster_id"))
+        element_at(FlatCoarse(cents, VectorMath.L2SQ).nearestCol(vec.vector(col("embedding")), 1), 1)
+          .cast("long").as("cluster_id"))
       val a = assigned
         .select(col("cluster_id"), col("vec_id").as("a_id"), col("v").as("va"))
       val b = assigned.select(col("cluster_id").as("cb"),

@@ -469,7 +469,7 @@ object TextQueries {
     },
     // apply-side of the tokenizer: the merge table learned by text_bpe
     // rides the plan as a native kernel (BpeEncodeTokens — the
-    // NearestCentroids pattern for text) and every document becomes its
+    // CoarseAssign pattern for text) and every document becomes its
     // subword stream in a shuffle-free scan-stage projection. Rows-only
     // (the iterative merge replay is not SQL); internal consistency
     // (losslessness, merge-table parity) is spec-pinned.

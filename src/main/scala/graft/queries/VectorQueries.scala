@@ -102,12 +102,11 @@ object VectorQueries {
 
   /** seed-centroid assignment shared by embed_cluster / embed_outliers:
     * 8 seed rows collect (bounded — the IVF-centroid-training shape),
-    * every vector argmins over them via the codegen'd NearestCentroids
+    * every vector argmins over them via the codegen'd flat coarse
     * kernel (a shuffle-free scan projection), seed vectors ride back on
     * a broadcast join. Returns (vec_id, cluster_id, v, cvec). */
   private def seedAssigned(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    import graft.index.NearestCentroids
+    import graft.index.FlatCoarse
     import graft.functions.VectorMath
     val e = Tables(s, dir, "embeddings")
     val cents: Array[Array[Float]] = e.where(col("vec_id") < 8)
@@ -117,9 +116,8 @@ object VectorQueries {
     val assigned = e.select(
       col("vec_id"),
       vec.vector(col("embedding")).as("v"),
-      element_at(GraftBridge.column(NearestCentroids(
-        GraftBridge.expression(vec.vector(col("embedding"))),
-        cents, 1, VectorMath.L2SQ)), 1).cast("long").as("cluster_id"))
+      element_at(FlatCoarse(cents, VectorMath.L2SQ).nearestCol(vec.vector(col("embedding")), 1), 1)
+        .cast("long").as("cluster_id"))
     val seedVecs = e.where(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), vec.vector(col("embedding")).as("cvec"))
     assigned.join(broadcast(seedVecs), col("cluster_id") === col("cid"))

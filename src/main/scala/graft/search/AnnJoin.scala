@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{vec, VectorMath}
-import graft.index.{KMeansTrainer, NearestCentroids}
+import graft.index.{Coarse, FlatCoarse, IndexCatalog, KMeansTrainer, NearestCentroids}
 
 /**
  * Distributed approximate k-NN JOIN: every left row finds its top-k
@@ -54,7 +54,8 @@ object AnnJoin {
     * (b) switches to the packed [[ListTopKScan]] kernel (probe-count
     * join cardinality instead of pair-count). Conf-overridable so
     * specs can force the large-fan-out path on small data and assert
-    * it is bit-equal to the planner-chosen path. */
+    * it is bit-equal to the planner-chosen path. A non-negative integer
+    * (default 32,000,000); any other value throws naming the key. */
   private[graft] val PinPairsThresholdConf = "spark.graft.annjoin.pinPairsThreshold"
 
   /**
@@ -236,7 +237,6 @@ object AnnJoin {
       if (nlist > 0) nlist
       else math.max(16L, math.min(65536L, (totalRows + AutoListRows - 1) / AutoListRows)).toInt
     var centroids = KMeansTrainer.trainLocal(samplePts, nlistTarget, seed, maxIter = 10)
-    val debug = spark.conf.getOption("spark.graft.annjoin.debug").contains("true")
 
     // TWO-LEVEL refinement of oversized lists (auto mode only, nlist
     // pinned by the caller = pinned geometry, e.g. exhaustive gates):
@@ -280,8 +280,6 @@ object AnnJoin {
         }
         val big = est.indices.filter(i => est(i) > refineCap).toSet
         anySplit = big.nonEmpty
-        if (debug) System.err.println(s"[annjoin] recluster round=$round nlist=${centroids.length} " +
-          s"oversized=${big.size} maxEst=${if (est.nonEmpty) est.max.toLong else 0}")
         if (anySplit) {
           val members = Array.fill(centroids.length)(
             scala.collection.mutable.ArrayBuffer.empty[Array[Float]])
@@ -304,38 +302,25 @@ object AnnJoin {
       }
     }
     val nlistEff = centroids.length
-    if (debug) System.err.println(s"[annjoin] totalRows=$totalRows nlistTarget=$nlistTarget nlistEff=$nlistEff")
 
     // past a few thousand centroids, flat argmin assignment is itself a
     // scan per vector — walk an HNSW graph over the centroid table
-    // instead (the same IVF<n>_HNSW<m> machinery IndexCatalog uses;
-    // never at exhaustive probe, where all lists must be returned)
-    val coarseMet = graft.index.IndexCatalog.coarseMetricId(metricId)
-    val coarseGraph: Option[graft.index.Nsw.Graph] =
-      if (centroids.length >= GraphCoarseThreshold && math.max(1, nprobe) < centroids.length)
-        Some(graft.index.Nsw.build(
-          centroids.zipWithIndex.map { case (c, i) => (i.toLong, c) },
-          m = 16, efConstruction = 64, metricId = coarseMet))
-      else None
-    def nearestExpr(c: org.apache.spark.sql.Column, n: Int) = coarseGraph match {
-      case Some(g) => GraftBridge.column(graft.index.HnswNearestCentroids(
-        GraftBridge.expression(vec.vector(c)), g, n, math.max(64, n), coarseMet))
-      case None => GraftBridge.column(NearestCentroids(
-        GraftBridge.expression(vec.vector(c)), centroids, n, metricId))
-    }
+    // instead (the same IVF<n>_HNSW<m> coarse IndexCatalog uses; never
+    // at exhaustive probe, where all lists must be returned)
+    val coarse: Coarse =
+      if (nlistEff >= GraphCoarseThreshold && math.max(1, nprobe) < nlistEff)
+        Coarse.graph(centroids, m = 16, efConstruction = 64, ef = 64,
+          IndexCatalog.coarseMetricId(metricId))
+      else FlatCoarse(centroids, metricId)
 
-    // get() not when(size>0, element_at): references the assignment
-    // expression ONCE (the when-form evaluates the argmin twice unless
-    // subexpression elimination catches it) and is null-on-empty under
-    // ANSI semantics; only an all-NaN vector assigns to no list
-    val assignOne = nearestExpr(col("vec"), 1)
+    // only an all-NaN vector assigns to no list (-1)
     val rightListed = Knn.widen(right).select(
-      coalesce(get(assignOne, lit(0)), lit(-1)).as("list_id"),
+      coarse.assign(vec.vector(col("vec"))).as("list_id"),
       col("label"), vec.vector(col("vec")).as("vec"))
 
-    val probeLists = nearestExpr(col("qvec"), math.max(1, nprobe))
     val leftProbed = Knn.widen(left).select(
-      col("qid"), vec.vector(col("qvec")).as("qvec"), explode(probeLists).as("list_id"))
+      col("qid"), vec.vector(col("qvec")).as("qvec"),
+      explode(coarse.nearestCol(vec.vector(col("qvec")), math.max(1, nprobe))).as("list_id"))
 
     // AQE sizes reduce partitions by map-output BYTES, which is blind
     // to join FAN-OUT: ~1M 270-byte listed rows can explode into 1e9
@@ -350,8 +335,7 @@ object AnnJoin {
     // co-partitioning (no extra exchange) and every task scans ~equal
     // candidate volume. Below the threshold the planner stays free to
     // broadcast, which is the right plan at gate scale.
-    val pinThreshold = spark.conf
-      .getOption(AnnJoin.PinPairsThresholdConf).map(_.toDouble).getOrElse(3.2e7)
+    val pinThreshold = IndexCatalog.confLong(spark, PinPairsThresholdConf, 32000000L).toDouble
     // probe count = LEFT rows, not right: the old self-join assumption
     // (right totalRows as the probe count) over-estimated pairs by
     // orders of magnitude for an asymmetric join with a small query
@@ -368,9 +352,8 @@ object AnnJoin {
     // at most and the planner's broadcast of the tiny listed side is
     // the right plan, so pinning (a full repartition of both sides)
     // would only burn a shuffle — skip both the pin and its probe job.
-    val (estPairs, pinParallelism) =
-      if (perProbePairs < 1.0) (0.0, false)
-      else {
+    val pinParallelism =
+      perProbePairs >= 1.0 && {
         val leftCap: Long =
           math.max(1L, math.min(1L << 40, math.ceil(pinThreshold / perProbePairs).toLong))
         // limit the RAW left plan, not a widened one: widen() repartitions,
@@ -379,8 +362,7 @@ object AnnJoin {
         // short-circuits after leftCap rows of the first input split(s).
         val leftObserved = left.limit(
           math.min(leftCap, Int.MaxValue.toLong - 1).toInt).count()
-        val est = leftObserved.toDouble * perProbePairs
-        (est, leftObserved >= leftCap || est >= pinThreshold)
+        leftObserved >= leftCap || leftObserved.toDouble * perProbePairs >= pinThreshold
       }
     val np = spark.sessionState.conf.numShufflePartitions
 
@@ -392,15 +374,7 @@ object AnnJoin {
     // left side proxied by the right sample — exact for self-joins, the
     // dominant shape; an asymmetric left only shifts WHERE the probes
     // land, and the row-cap term still bounds the build side).
-    val probeIdsOf: Array[Float] => Seq[Int] = {
-      val nq = math.max(1, math.min(nprobe, centroids.length))
-      coarseGraph match {
-        case Some(g) =>
-          p => graft.index.Nsw.search(g, p, nq, math.max(64, nq), coarseMet).map(_._2.toInt).toSeq
-        case None =>
-          p => NearestCentroids.nearestIds(p, centroids, nq, metricId)
-      }
-    }
+    val probeIdsOf = coarse.probe(math.max(1, nprobe))
     val maxListRowsEff = if (maxListRows > 0) maxListRows else 4L * AutoListRows
     val splitRows: Seq[(Int, Int)] =
       if (maxListRowsEff == Long.MaxValue || samplePts.isEmpty) Seq.empty
@@ -440,10 +414,6 @@ object AnnJoin {
           (i, math.min(64L, math.max(rowsSplit, pairSplit)).toInt)
         }.filter(_._2 > 1)
       }
-    if (debug) {
-      System.err.println(s"[annjoin] estPairs=$estPairs pin=$pinParallelism " +
-        s"splitLists=${splitRows.size} sumSplits=${splitRows.map(_._2).sum}")
-    }
     // replay hook (the IndexCatalog.trainedCentroidsOf analog for the
     // catalog-less join path): the quantizer this join just trained,
     // handed to the caller so a correctness gate can inject it into its

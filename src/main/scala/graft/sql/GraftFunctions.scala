@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, NamedArgu
 import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, FloatType, IntegerType, LongType, MapType, StringType}
 
 import graft.functions._
-import graft.index.{IndexCatalog, NearestCentroids}
+import graft.index.IndexCatalog
 
 /**
  * SQL surface: every graft expression as a `vec_*` / hash function, so

@@ -220,7 +220,7 @@ object Bpe {
 /**
  * Apply-side of the BPE tokenizer as a native Expression: the learned
  * merge table rides the serialized plan to every executor (the same
- * pattern as NearestCentroids' centroid matrix) and each row's token
+ * pattern as CoarseAssign's coarse quantizer) and each row's token
  * array is rewritten to its subword stream in one compiled call —
  * tokenizing 100 TB is a scan-stage projection, no shuffle, no UDF.
  */

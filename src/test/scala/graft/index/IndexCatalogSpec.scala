@@ -397,6 +397,44 @@ class IndexCatalogSpec extends SparkSpec {
       assert(labelsOf(IndexCatalog.search("t_lvl", 4, qs))
         === labelsOf(Knn.searchFlat(grid, qs, 4, "l2sq")))
     } finally spark.conf.unset("spark.graft.index.cacheStorageLevel")
+    // a name that is no storage level throws naming the key
+    spark.conf.set("spark.graft.index.cacheStorageLevel", "x")
+    try {
+      IndexCatalog.create("t_lvl_bad", 2, "IDMap,IVF4,Flat", "l2sq", Map("nprobe" -> "4"))
+      IndexCatalog.add(grid, "t_lvl_bad")
+      val e = intercept[IllegalArgumentException](IndexCatalog.build("t_lvl_bad"))
+      assert(e.getMessage.contains("spark.graft.index.cacheStorageLevel"), e.getMessage)
+    } finally spark.conf.unset("spark.graft.index.cacheStorageLevel")
+  }
+
+  test("dotted and backticked column names resolve by position in add, search, searchNested, searchFilterSet") {
+    val oddGrid = grid.toDF("l.abel", "v`ec")
+    val oddQs = qs.toDF("q.id", "q.v`ec")
+    val oddIds = grid.where(col("label") % 2 === 0).select(col("label").as("i.d"))
+    val ids = grid.where(col("label") % 2 === 0).select("label")
+    IndexCatalog.create("t_names", 2, "IDMap,IVF4,Flat", "l2sq", Map("nprobe" -> "2"))
+    IndexCatalog.add(grid, "t_names")
+    IndexCatalog.create("t_names_odd", 2, "IDMap,IVF4,Flat", "l2sq", Map("nprobe" -> "2"))
+    IndexCatalog.add(oddGrid, "t_names_odd")
+    // one column: auto ids
+    IndexCatalog.create("t_names_auto", 2, "Flat")
+    IndexCatalog.add(grid.select("vec"), "t_names_auto")
+    IndexCatalog.create("t_names_auto_odd", 2, "Flat")
+    IndexCatalog.add(oddGrid.select(col("`v``ec`").as("v.ec")), "t_names_auto_odd")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq.map {
+      case a: scala.collection.Seq[_] => a.toList
+      case v => v
+    }).sortBy(_.toString).toSeq
+    val want = rows(IndexCatalog.search("t_names", 4, qs))
+    assert(rows(IndexCatalog.search("t_names_odd", 4, oddQs)) === want)
+    assert(rows(IndexCatalog.search("t_names_auto_odd", 4, oddQs))
+      === rows(IndexCatalog.search("t_names_auto", 4, qs)))
+    assert(rows(IndexCatalog.searchNested("t_names_odd", 4, oddQs))
+      === rows(IndexCatalog.searchNested("t_names", 4, qs)))
+    assert(rows(IndexCatalog.searchFilterSet("t_names_odd", 4, oddQs, oddIds))
+      === rows(IndexCatalog.searchFilterSet("t_names", 4, qs, ids)))
+    assert(rows(IndexCatalog.reconstruct("t_names_odd", oddIds))
+      === rows(IndexCatalog.reconstruct("t_names", ids)))
   }
 
   test("RQ residual quantizer: exhaustive refine exact, IVF-RQ prunes, save/load + append + reconstruct") {

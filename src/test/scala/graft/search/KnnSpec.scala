@@ -96,7 +96,8 @@ class KnnSpec extends SparkSpec {
   test("Knn confs: a non-integer or negative value throws naming the key") {
     import spark.implicits._
     val queries = Seq((0L, Array(0.2f, 0.0f))).toDF("qid", "qvec")
-    for (key <- Seq(Knn.FastFlatThresholdConf, Knn.LocalServeThresholdConf, Knn.LocalServeMaxRowsConf);
+    for (key <- Seq(Knn.FastFlatThresholdConf, Knn.LocalServeThresholdConf, Knn.LocalServeMaxRowsConf,
+           AnnJoin.PinPairsThresholdConf);
          bad <- Seq("x", "-5")) {
       // the row cap is read only on the local-serve path
       if (key == Knn.LocalServeMaxRowsConf)
@@ -105,7 +106,10 @@ class KnnSpec extends SparkSpec {
       try {
         // a fresh DataFrame: a corpus already held for `data` would skip the cap
         val corpus = data.select(col("label"), col("vec"))
-        val e = intercept[IllegalArgumentException](Knn.searchFlat(corpus, queries, 3, "l2sq").collect())
+        val e = intercept[IllegalArgumentException](
+          if (key == AnnJoin.PinPairsThresholdConf)
+            AnnJoin.ivfJoin(queries, corpus, k = 3, nlist = 2, nprobe = 1).collect()
+          else Knn.searchFlat(corpus, queries, 3, "l2sq").collect())
         assert(e.getMessage.contains(key), s"$key=$bad: ${e.getMessage}")
       } finally {
         spark.conf.unset(key)
