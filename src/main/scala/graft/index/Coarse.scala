@@ -114,8 +114,9 @@ final case class GraphCoarse(
  * Inverted multi-index (FAISS `IMI2x<n>`): two half-space codebooks
  * whose product is the coarse space ([[Imi]]). Assignment is the
  * product argmin over 2·K half scans, probing the multi-sequence
- * enumeration; the K² product table is only the IVF-compatible view
- * (save layout), built on the driver when first asked for.
+ * enumeration; the K² product table is only the IVF-compatible view,
+ * built on the driver when first asked for and never saved (load
+ * rebuilds the quantizer from the books).
  */
 final case class ImiCoarse(books: Array[Array[Array[Float]]]) extends Coarse {
   @transient lazy val centroids: Array[Array[Float]] = Imi.productCentroids(books)

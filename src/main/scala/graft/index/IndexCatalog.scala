@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{hashes, vec, VectorMath}
+import graft.functions.{hashes, vec, TopKHeap, VectorMath}
 import graft.search.Knn
 
 /**
@@ -918,7 +918,10 @@ object IndexCatalog {
     entry(name).meta.params ++ normalizeParams(params)
 
   /**
-   * faiss_search twin: top-k per query row.
+   * faiss_search twin: top-k per query row. The query batch is
+   * collected and dim-checked at the call. On HNSW the search job runs
+   * at the call too (its errors surface here) and the result is a local
+   * frame; other kinds return the search plan, run when acted on.
    * @param queries (qid bigint, qvec array<float>)
    * @return (qid, rank, label, distance)
    */
@@ -1026,10 +1029,10 @@ object IndexCatalog {
    *  - WIDE predicate: POST-filter — index search with k boosted by
    *    2/selectivity, hits filtered, top k kept. The index does the
    *    pruning work; the over-fetch compensates for non-matching hits.
-   * The strategy pick costs two column-pruned counts over the (cached)
-   * built layout — the statistics a 100 TB catalog would serve from
-   * table metadata instead of a scan. Output carries the chosen
-   * strategy so callers/specs can observe the switch.
+   * The strategy pick costs one column-pruned aggregate (both counts)
+   * over the (cached) built layout — the statistics a 100 TB catalog
+   * would serve from table metadata instead of a scan. Output carries
+   * the chosen strategy so callers/specs can observe the switch.
    */
   def searchFilterAdaptive(
       name: String, k: Int, queries: DataFrame, filter: Column,
@@ -1040,8 +1043,9 @@ object IndexCatalog {
     val merged = searchParams(name, params)
     val cutoff = adaptiveCutoffOf(merged)
     val pad = padOf(merged)
-    val total = math.max(b.flatData.count(), 1L)
-    val matching = b.flatData.where(filter).count()
+    val counts = b.flatData.agg(count(lit(1)), count(when(filter, 1))).head()
+    val total = math.max(counts.getLong(0), 1L)
+    val matching = counts.getLong(1)
     if (matching <= math.max(1L, (cutoff * total).toLong)) {
       // the exact scan runs in the index's own space: a pretransform's
       // rows are projected, so its queries are too
@@ -1258,14 +1262,15 @@ object IndexCatalog {
   }
 
   /** where a save keeps an index's coarse centroid table: `centroids`
-    * for a top-level IVF / IVF_HNSW / IMI (the IMI product table),
-    * `pca_ivf_centroids` for one under a pretransform, the codec
-    * family's `pq_coarse` / `sq_coarse` for a coded index; None for an
-    * IMI under a pretransform, which persists its half books only */
+    * for a top-level IVF / IVF_HNSW, `pca_ivf_centroids` for one under a
+    * pretransform, the codec family's `pq_coarse` / `sq_coarse` for a
+    * coded index; None for an IMI at any level, which persists its half
+    * books only (load rebuilds the quantizer from them, never from the
+    * K² product table) */
   private def coarseDirOf(kind: Kind): Option[String] = (kind, unwrapped(kind)) match {
     case (_, CodedKind(spec, _, _)) => Some(spec.coarseDir)
-    case (IvfKind(_) | IvfHnswKind(_, _) | ImiKind(_), _) => Some("centroids")
     case (_, ImiKind(_)) => None
+    case (IvfKind(_) | IvfHnswKind(_, _), _) => Some("centroids")
     case _ => Some("pca_ivf_centroids")
   }
 
@@ -1892,11 +1897,16 @@ object IndexCatalog {
   /**
    * Sharded HNSW: each partition builds an independent NSW graph over
    * its vectors (RDD of graphs, cached as live objects); a search runs
-   * every shard graph in parallel and merges per-shard top-k globally.
-   * Graph search is O(ef log n) per shard instead of a full scan —
-   * the architecture real distributed vector stores use, since graph
-   * edges can't span executors. efConstruction/efSearch match the
-   * reference's parameter names.
+   * every shard graph in parallel in ONE job, and the driver merges the
+   * per-shard top-k. Graph search is O(ef log n) per shard instead of
+   * a full scan — the architecture real distributed vector stores use,
+   * since graph edges can't span executors. efConstruction/efSearch
+   * match the reference's parameter names.
+   *
+   * `search` and a narrow `searchRestricted` run that job when they are
+   * called, like the reference's in-process faiss_search, and return a
+   * local result frame: a failing search (an executor lost, a bad
+   * parameter) surfaces at the call, not at a later action.
    *
    * Save/load divergence from FAISS (by design): save persists the
    * canonical (label, vec) rows, and load REBUILDS shard graphs from
@@ -1919,8 +1929,9 @@ object IndexCatalog {
      * Selector inside the graph search (FAISS applies its IDSelector
      * within HNSW traversal, faiss_extension.cpp:940-1000). A NARROW
      * restriction (a Catalyst filter — searchFilter's predicate) keeps
-     * the cached shard partitioning, so each shard's allowed-label set
-     * rides zipPartitions to its own graph: no shuffle, no broadcast,
+     * the cached shard partitioning, so each shard's allowed labels
+     * (the restricted label scan, planned once, as an InternalRow RDD)
+     * ride zipPartitions to its own graph: no shuffle, no broadcast,
      * traversal keeps full connectivity and only allowed labels surface.
      * A shuffling restriction (searchFilterSet's LEFT SEMI id join)
      * breaks shard alignment — that path stays the EXACT flat scan of
@@ -1930,49 +1941,58 @@ object IndexCatalog {
     override def searchRestricted(
         batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
         restrict: DataFrame => DataFrame): DataFrame = {
-      val restricted = restrict(data.select(col("label"), col("vec")))
+      val labels = restrict(data.select(col("label"), col("vec"))).select(col("label"))
       import org.apache.spark.sql.catalyst.plans.logical._
-      val narrow = !restricted.queryExecution.optimizedPlan.exists {
+      val narrow = !labels.queryExecution.optimizedPlan.exists {
         case _: Aggregate | _: Join | _: Window | _: RepartitionOperation | _: Deduplicate => true
         case s: Sort => s.global
         case _ => false
       }
-      if (!narrow || restricted.rdd.getNumPartitions != graphs.getNumPartitions)
+      lazy val labelRows = labels.queryExecution.toRdd
+      if (!narrow || labelRows.getNumPartitions != graphs.getNumPartitions)
         super.searchRestricted(batch, k, params, restrict)
-      else searchShards(batch, k, params, Some(restricted))
+      else searchShards(batch, k, params, Some(labelRows))
     }
 
-    /** the request path: broadcast the query batch, search every shard
-      * graph (each under its own shard's allowed-label set when a
-      * shard-aligned `restricted` is given), merge per-shard top-k
-      * globally */
+    /** the request path: one job searches every shard graph for the
+      * whole batch (each under its own shard's allowed labels when
+      * shard-aligned `allowedLabels` rows are given) and returns each
+      * shard's per-query candidates; the driver merges them into one
+      * heap per query, in [[graft.functions.TopKHeap]]'s (distance,
+      * label) order, the order `vec.topk` merges in */
     private def searchShards(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
-        restricted: Option[DataFrame]): DataFrame = {
-      val spark = data.sparkSession
-      import spark.implicits._
+        allowedLabels: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]
+    ): DataFrame = {
+      require(k > 0, "k must be positive")
       val efSearch = positiveIntParam(params, "efSearch", math.max(2 * k, 64))
       val metricId = VectorMath.metricId(meta.metric)
-      val qB = spark.sparkContext.broadcast(batch)
-      val searchShard: (Nsw.Graph, Long => Boolean) => Iterator[(Long, Long, Double)] =
-        (g, allowed) => qB.value.iterator.flatMap { case (qid, qv) =>
-          Nsw.search(g, qv, k, efSearch, metricId, allowed).iterator
-            .map { case (d, label) => (qid, label, d) }
+      val qvs = batch.map(_._2)
+      // a shard's candidates, flat: per query its count, then the pairs
+      val searchShard: (Nsw.Graph, Long => Boolean) => (Array[Int], Array[Double], Array[Long]) =
+        (g, allowed) => {
+          val per = qvs.map(Nsw.search(g, _, k, efSearch, metricId, allowed))
+          (per.map(_.length), per.flatMap(_.map(_._1)), per.flatMap(_.map(_._2)))
         }
-      val perShard = restricted match {
-        case None => graphs.flatMap(searchShard(_, null))
-        case Some(rs) =>
-          val allowedRdd = rs.select("label").rdd.mapPartitions({ it =>
-            val s = new java.util.HashSet[Long]()
-            it.foreach(r => s.add(r.getLong(0)))
-            Iterator.single(s)
-          }, preservesPartitioning = true)
-          graphs.zipPartitions(allowedRdd) { (git, ait) =>
-            val allowed = if (ait.hasNext) ait.next() else new java.util.HashSet[Long]()
-            git.flatMap(searchShard(_, allowed.contains))
+      val perShard = allowedLabels match {
+        case None => graphs.map(searchShard(_, null))
+        case Some(rows) =>
+          graphs.zipPartitions(rows) { (git, rit) =>
+            val allowed = new java.util.HashSet[Long]()
+            rit.foreach(r => allowed.add(r.getLong(0)))
+            git.map(searchShard(_, allowed.contains))
           }
       }
-      Knn.rankResults(perShard.toDF("qid", "label", "_dist"), k,
-        ascending = VectorMath.smallerIsCloser(metricId), padToK = padOf(params))
+      val heaps = Array.fill(batch.length)(new TopKHeap(k, VectorMath.smallerIsCloser(metricId)))
+      val offered = new Array[Boolean](batch.length)
+      val shards = data.sparkSession.sparkContext.runJob(perShard,
+        (it: Iterator[(Array[Int], Array[Double], Array[Long])]) => it.toArray)
+      shards.iterator.flatten.foreach { case (counts, dists, labels) =>
+        var i = 0
+        for (qi <- counts.indices; _ <- 0 until counts(qi)) {
+          heaps(qi).insert(dists(i), labels(i)); offered(qi) = true; i += 1
+        }
+      }
+      Knn.localResults(data.sparkSession, batch.map(_._1), heaps, offered, padOf(params))
     }
 
     /** driver snapshot of the per-shard graphs for injected replay

@@ -1,9 +1,13 @@
 package graft.search
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.functions.{vec, VectorMath}
+import graft.functions.{vec, TopKHeap, VectorMath}
 
 /**
  * Distributed brute-force k-NN: the Spark-native twin of the
@@ -188,7 +192,6 @@ object Knn {
       data: DataFrame, qArr: Array[(Long, Array[Float])], k: Int, metric: String,
       excludeSelf: Boolean, padToK: Boolean): Option[DataFrame] = {
     val spark = data.sparkSession
-    import spark.implicits._
     val mid = VectorMath.metricId(metric)
     val asc = VectorMath.smallerIsCloser(mid)
     val key = data.queryExecution
@@ -212,24 +215,51 @@ object Knn {
       localCorpora.put(key, corpus)
     }
     val (labels, vecs) = corpus
-    val out = Seq.newBuilder[(Long, Int, Long, Double)]
-    val padDist = if (asc) Double.MaxValue else Double.MinValue
-    qArr.foreach { case (qid, qv) =>
-      val h = new graft.functions.TopKHeap(k, asc)
+    val heaps = qArr.map(_ => new TopKHeap(k, asc))
+    val offered = new Array[Boolean](qArr.length)
+    qArr.indices.foreach { qi =>
+      val (qid, qv) = qArr(qi)
       var i = 0
       while (i < labels.length) {
-        if (!(excludeSelf && labels(i) == qid))
-          h.insert(VectorMath.distArr(mid, vecs(i), qv, 3.0), labels(i))
+        if (!(excludeSelf && labels(i) == qid)) {
+          heaps(qi).insert(VectorMath.distArr(mid, vecs(i), qv, 3.0), labels(i))
+          offered(qi) = true
+        }
         i += 1
       }
-      val sorted = h.sorted
-      var rank = 0
-      while (rank < sorted.length) {
-        out += ((qid, rank, sorted(rank)._2, sorted(rank)._1)); rank += 1
-      }
-      while (padToK && rank < k) { out += ((qid, rank, -1L, padDist)); rank += 1 }
     }
-    Some(out.result().toDF("qid", "rank", "label", "distance"))
+    Some(localResults(spark, qArr.map(_._1), heaps, offered, padToK))
+  }
+
+  /** [[rankResults]]' output schema: (qid, rank, label, distance), none nullable */
+  private val resultSchema = StructType(Seq(
+    StructField("qid", LongType, nullable = false), StructField("rank", IntegerType, nullable = false),
+    StructField("label", LongType, nullable = false), StructField("distance", DoubleType, nullable = false)))
+
+  /**
+   * The result frame of top-k heaps filled in driver memory (driver-local
+   * Flat serve, HNSW's shard merge): [[rankResults]]' rows and schema
+   * as a `LocalRelation`, so nothing is planned or run for it. As
+   * there, a query that was `offered` no candidate row emits no row,
+   * and `padToK` fills the list of one that was (even when the heap
+   * dropped them all, at NaN distances) to k with label -1 and the
+   * worst distance.
+   */
+  private[graft] def localResults(
+      spark: SparkSession, qids: Array[Long], heaps: Array[TopKHeap], offered: Array[Boolean],
+      padToK: Boolean): DataFrame = {
+    val rows = Seq.newBuilder[InternalRow]
+    qids.indices.foreach { qi =>
+      val h = heaps(qi)
+      val sorted = h.sorted
+      val padDist = if (h.ascending) Double.MaxValue else Double.MinValue
+      val n = if (padToK && offered(qi)) h.k else sorted.length
+      (0 until n).foreach { rank =>
+        rows += (if (rank < sorted.length) InternalRow(qids(qi), rank, sorted(rank)._2, sorted(rank)._1)
+          else InternalRow(qids(qi), rank, -1L, padDist))
+      }
+    }
+    GraftBridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(resultSchema), rows.result()))
   }
 
   /**
@@ -363,7 +393,7 @@ object Knn {
       .select(col("label").cast("long").as("label"), vec.vector(col("vec")).as("vec"))
     val perPartitionRdd = scan.queryExecution.toRdd.mapPartitions { it =>
       val qs = qB.value
-      val heaps = Array.fill(qs.length)(new graft.functions.TopKHeap(k, asc))
+      val heaps = Array.fill(qs.length)(new TopKHeap(k, asc))
       it.foreach { row =>
         if (!row.isNullAt(0) && !row.isNullAt(1)) {
           val label = row.getLong(0)

@@ -2,7 +2,9 @@ package graft.sql
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, Generator, NamedExpression, Unevaluable}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,10 +17,16 @@ import graft.index.IndexCatalog
  * `SELECT id, UNNEST(FAISS_SEARCH('name', 10, data)) FROM queries`):
  * the call parses as this unevaluable placeholder, and
  * [[FaissSearchRewrite]] rewrites the enclosing operator into the
- * relational search plan (broadcast query batch -> pruned index scan ->
+ * index's search over the distinct query vectors (for most kinds a
+ * relational plan: broadcast query batch -> pruned index scan ->
  * partial top-k), joined back to the input rows on query-vector
  * equality. The reference executes one serial FAISS call per chunk;
- * here the SAME SQL text becomes a distributed Catalyst plan.
+ * here the SAME SQL text becomes a distributed Catalyst plan. What is
+ * already in driver memory stays there: a LocalRelation query table is
+ * deduplicated on the driver (no distinct job), and a local result (an
+ * HNSW search, merged on the driver) becomes the per-vector lists on
+ * the driver (no aggregate, no join against the batch), so such a
+ * request runs only its search job while it is planned.
  *
  * Result type matches the reference shape: LIST<STRUCT(rank, label,
  * distance)> per input row (README:243), distances as DOUBLE.
@@ -193,13 +201,18 @@ case class FaissSearchRewrite(spark: SparkSession, postAnalysis: Boolean = true)
     // the distinct query vectors are this call's one query batch:
     // collected (capped by spark.graft.index.maxQueryBatch, dim-checked)
     // once, numbered on the driver, searched, and joined back through the
-    // batch's local view — one distinct job instead of a 3-exchange
-    // window chain evaluated once per use of the batch
+    // batch's local view. Vectors already in driver memory (a query
+    // table that optimizes to a LocalRelation) are deduplicated there,
+    // with no distinct job
+    val qvecs = df.select(lit(0L).as("qid"), graft.functions.vec.vector(qvecCol).as("qvec"))
     val batch = IndexCatalog.queryBatch(
-      df.select(lit(0L).as("qid"), graft.functions.vec.vector(qvecCol).as("qvec")).distinct(),
+      qvecs.queryExecution.optimizedPlan match {
+        case r: LocalRelation =>
+          GraftBridge.ofRows(spark, r.copy(data = FaissSearchRewrite.distinctVectors(r.data)))
+        case _ => qvecs.distinct()
+      },
       "faiss_search query batch", Some(IndexCatalog.meta(call.indexName)))
       .zipWithIndex.map { case ((_, v), qi) => (qi.toLong, v) }
-    val qdf = graft.search.Knn.queryFrame(spark, batch)
     // the reference pads every result list to exactly k (label = -1 for
     // missing, README:243) — mirror that by default, overridable via
     // an explicit map('pad','false') parameter (k-NN only; range
@@ -218,20 +231,28 @@ case class FaissSearchRewrite(spark: SparkSession, postAnalysis: Boolean = true)
           .select(expr(idSelector).cast("long").as("label"))
         IndexCatalog.searchFilterSetBatch(call.indexName, call.k, batch, ids, params)
     }
-    val empty = array().cast(call.dataType)
-    val resultStruct =
-      if (call.radius.isDefined)
-        // sorted best-first by (distance, label) — distance leads the
-        // struct so sort_array's lexicographic order is the metric order
-        struct(col("distance").cast("double").as("distance"), col("label"))
-      else struct(col("rank"), col("label"), col("distance").cast("double").as("distance"))
-    val nested = flat.groupBy("qid")
-      .agg(sort_array(collect_list(resultStruct)).as("r"))
-    // both joins broadcast their bounded side — the query batch and its
-    // k-row result lists; only the index scan inside `flat` touches data
-    val keyed = qdf.join(broadcast(nested), Seq("qid"), "left")
-      .select(col("qvec").as(vcol),
-        coalesce(col("r").cast(call.dataType), empty).as(rcol))
+    val keyed = flat.queryExecution.logical match {
+      // results already in driver memory (a k-NN search served on the
+      // driver): each vector's list is built here, with no aggregate
+      // and no join against the batch
+      case r: LocalRelation if call.radius.isEmpty =>
+        FaissSearchRewrite.localLists(spark, batch, r.data, vcol, rcol, call.dataType)
+      case _ =>
+        val empty = array().cast(call.dataType)
+        val resultStruct =
+          if (call.radius.isDefined)
+            // sorted best-first by (distance, label) — distance leads the
+            // struct so sort_array's lexicographic order is the metric order
+            struct(col("distance").cast("double").as("distance"), col("label"))
+          else struct(col("rank"), col("label"), col("distance").cast("double").as("distance"))
+        val nested = flat.groupBy("qid")
+          .agg(sort_array(collect_list(resultStruct)).as("r"))
+        // both joins broadcast their bounded side — the query batch and its
+        // k-row result lists; only the index scan inside `flat` touches data
+        graft.search.Knn.queryFrame(spark, batch).join(broadcast(nested), Seq("qid"), "left")
+          .select(col("qvec").as(vcol),
+            coalesce(col("r").cast(call.dataType), empty).as(rcol))
+    }
     val joined = df.join(keyed,
       graft.functions.vec.vector(qvecCol) <=> keyed(vcol), "left")
     // broadcast the result side via an explicit JoinHint on the node (a
@@ -262,5 +283,49 @@ case class FaissSearchRewrite(spark: SparkSession, postAnalysis: Boolean = true)
       org.apache.spark.sql.catalyst.expressions.Literal.create(
         Seq.empty[Any], call.dataType)))
     (jplan, rep)
+  }
+}
+
+object FaissSearchRewrite {
+
+  /** the distinct rows of a (0, vector) LocalRelation, grouped the way
+    * Spark's `distinct` groups them: -0.0 counts as 0.0 and every NaN
+    * as one value (each kept vector normalized, as the distinct
+    * aggregate emits it); null vectors, which the query batch drops
+    * anyway, are dropped here */
+  private[sql] def distinctVectors(rows: Seq[InternalRow]): Seq[InternalRow] = {
+    val seen = scala.collection.mutable.HashSet.empty[Seq[Long]]
+    rows.filterNot(_.isNullAt(1)).flatMap { r =>
+      val a = r.getArray(1)
+      val v = Array.tabulate[Any](a.numElements()) { i =>
+        if (a.isNullAt(i)) null
+        else { val x = a.getFloat(i); if (x.isNaN) Float.NaN else if (x == 0f) 0f else x }
+      }
+      // a null element is a value of its own, apart from every float's bits
+      val key = v.toSeq.map {
+        case x: Float => java.lang.Float.floatToIntBits(x).toLong
+        case _ => Long.MinValue
+      }
+      if (seen.add(key)) Some(InternalRow(0L, new GenericArrayData(v))) else None
+    }
+  }
+
+  /** the (vector, result list) rows of a batch whose k-NN results are
+    * the local (qid, rank, label, distance) `rows`: each list in rank
+    * order, empty for a query with no result row */
+  private[sql] def localLists(
+      spark: SparkSession, batch: Array[(Long, Array[Float])], rows: Seq[InternalRow],
+      vcol: String, rcol: String, dataType: DataType): DataFrame = {
+    val lists = rows.groupBy(_.getLong(0)).map { case (qid, rs) =>
+      qid -> rs.sortBy(_.getInt(1)).map(r => InternalRow(r.getInt(1), r.getLong(2), r.getDouble(3)))
+    }
+    val out = batch.toSeq.map { case (qid, v) =>
+      InternalRow(new GenericArrayData(v.map(x => x: Any)),
+        new GenericArrayData(lists.getOrElse(qid, Nil).toArray[Any]))
+    }
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    GraftBridge.ofRows(spark, LocalRelation(Seq(
+      AttributeReference(vcol, ArrayType(FloatType, containsNull = false))(),
+      AttributeReference(rcol, dataType, nullable = false)()), out))
   }
 }

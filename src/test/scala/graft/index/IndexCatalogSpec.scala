@@ -192,6 +192,18 @@ class IndexCatalogSpec extends SparkSpec {
     assert(labelsOf(IndexCatalog.search("t_ivfh_l", 4, qs)) === before)
   }
 
+  test("a top-level IMI save holds its half books and no product centroid table") {
+    val dir = Files.createTempDirectory("graft_imi_nc_save").toString
+    IndexCatalog.create("t_imi_nc_s", 2, "IDMap,IMI2x2", "l2sq", Map("nprobe" -> "4"))
+    IndexCatalog.add(grid, "t_imi_nc_s")
+    IndexCatalog.save("t_imi_nc_s", dir) // the round trip is the IMI2x save/load test's
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val v1 = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .map(_.getPath.getName).find(_.startsWith("v1-")).get
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$v1/pq_codebooks")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$v1/centroids")))
+  }
+
   test("coarse graph persists on save; loaded-graph search equals rebuilt-graph search; key mismatch rebuilds") {
     val dir = Files.createTempDirectory("graft_cgpersist").toString
     IndexCatalog.create("t_cg_s", 2, "IDMap,IVF8_HNSW4,Flat", "l2sq", Map("nprobe" -> "3"))
@@ -1277,11 +1289,12 @@ class IndexCatalogSpec extends SparkSpec {
     val pred = col("label") % 2 === 0
     val filtered = IndexCatalog.searchFilter(
       "t_hnsw_sel", 4, qs, pred, Map("efSearch" -> "512"))
-    // the narrow-predicate path searches the shard GRAPHS (an RDD of
-    // per-shard results — SerializeFromObject), not a flat scan of the
-    // restricted rows (BroadcastNestedLoopJoin + codegen distance)
+    // the narrow-predicate path searches the shard GRAPHS (one job whose
+    // per-shard results the driver merges into a LocalTableScan), not a
+    // flat scan of the restricted rows (BroadcastNestedLoopJoin + codegen
+    // distance)
     val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("SerializeFromObject") && !plan.contains("BroadcastNestedLoopJoin"),
+    assert(plan.contains("LocalTableScan") && !plan.contains("BroadcastNestedLoopJoin"),
       "selector should ride the graph search, not the flat fallback:\n" + plan.take(1500))
     val got = labelsOf(filtered)
     val want = labelsOf(Knn.searchFlat(grid.where(pred), qs, 4, "l2sq"))
