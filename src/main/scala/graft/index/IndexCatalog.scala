@@ -921,7 +921,9 @@ object IndexCatalog {
    * faiss_search twin: top-k per query row. The query batch is
    * collected and dim-checked at the call. On HNSW the search job runs
    * at the call too (its errors surface here) and the result is a local
-   * frame; other kinds return the search plan, run when acted on.
+   * frame, unless the batch's shard candidates pass
+   * [[localMergeBound]]; other kinds, and such a batch, return the
+   * search plan, run when acted on.
    * @param queries (qid bigint, qvec array<float>)
    * @return (qid, rank, label, distance)
    */
@@ -1816,6 +1818,17 @@ object IndexCatalog {
   private[graft] val MaxQueryBatchDefault = 1 << 20
   private[graft] val MaxQueryBatchConf = "spark.graft.index.maxQueryBatch"
 
+  /** most shard candidates (queries × k × shards) an HNSW request sends
+    * to the driver to merge there: 2^20, or fewer when
+    * `spark.driver.maxResultSize` (0: unlimited) leaves less than 128
+    * bytes a candidate (a task result holds each as a boxed
+    * (entry, distance, label) triple). Past it the shards' top-k are
+    * ranked in a distributed aggregate. */
+  private[graft] def localMergeBound(spark: SparkSession): Long = {
+    val maxResult = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if (maxResult <= 0) 1L << 20 else math.min(1L << 20, maxResult / 128)
+  }
+
   /** the bounded collect behind [[queryBatch]]: at most
     * `maxQueryBatch` rows reach the driver, and one more throws with a
     * pointer at the unbounded-join operator instead of collecting to
@@ -1906,7 +1919,11 @@ object IndexCatalog {
    * `search` and a narrow `searchRestricted` run that job when they are
    * called, like the reference's in-process faiss_search, and return a
    * local result frame: a failing search (an executor lost, a bad
-   * parameter) surfaces at the call, not at a later action.
+   * parameter) surfaces at the call, not at a later action. A batch
+   * whose shard candidates (queries × k × shards) pass
+   * [[localMergeBound]] is too big to send to the driver: it returns
+   * the distributed plan that ranks them with [[Knn.rankResults]]
+   * instead, run when acted on.
    *
    * Save/load divergence from FAISS (by design): save persists the
    * canonical (label, vec) rows, and load REBUILDS shard graphs from
@@ -1954,45 +1971,55 @@ object IndexCatalog {
       else searchShards(batch, k, params, Some(labelRows))
     }
 
-    /** the request path: one job searches every shard graph for the
-      * whole batch (each under its own shard's allowed labels when
-      * shard-aligned `allowedLabels` rows are given) and returns each
-      * shard's per-query candidates; the driver merges them into one
-      * heap per query, in [[graft.functions.TopKHeap]]'s (distance,
-      * label) order, the order `vec.topk` merges in */
+    /** the request path: every shard graph is searched for the whole
+      * batch (each under its own shard's allowed labels when
+      * shard-aligned `allowedLabels` rows are given). Up to
+      * [[localMergeBound]] candidates, one job returns each shard's
+      * candidates and the driver merges them into one heap per distinct
+      * qid, in [[graft.functions.TopKHeap]]'s (distance, label) order,
+      * the order `vec.topk` merges in; past it they are ranked by the
+      * distributed [[Knn.rankResults]] aggregate. Both routes key a
+      * query's top-k by qid, so batch entries sharing a qid share one
+      * list. */
     private def searchShards(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
         allowedLabels: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]
     ): DataFrame = {
       require(k > 0, "k must be positive")
+      val spark = data.sparkSession
       val efSearch = positiveIntParam(params, "efSearch", math.max(2 * k, 64))
       val metricId = VectorMath.metricId(meta.metric)
+      val asc = VectorMath.smallerIsCloser(metricId)
       val qvs = batch.map(_._2)
-      // a shard's candidates, flat: per query its count, then the pairs
-      val searchShard: (Nsw.Graph, Long => Boolean) => (Array[Int], Array[Double], Array[Long]) =
-        (g, allowed) => {
-          val per = qvs.map(Nsw.search(g, _, k, efSearch, metricId, allowed))
-          (per.map(_.length), per.flatMap(_.map(_._1)), per.flatMap(_.map(_._2)))
+      // (batch entry, distance, label) of every candidate one shard yields
+      val searchShard: (Nsw.Graph, Long => Boolean) => Iterator[(Int, Double, Long)] =
+        (g, allowed) => qvs.indices.iterator.flatMap { qi =>
+          Nsw.search(g, qvs(qi), k, efSearch, metricId, allowed).iterator.map { case (d, l) => (qi, d, l) }
         }
       val perShard = allowedLabels match {
-        case None => graphs.map(searchShard(_, null))
+        case None => graphs.flatMap(searchShard(_, null))
         case Some(rows) =>
           graphs.zipPartitions(rows) { (git, rit) =>
             val allowed = new java.util.HashSet[Long]()
             rit.foreach(r => allowed.add(r.getLong(0)))
-            git.map(searchShard(_, allowed.contains))
+            git.flatMap(searchShard(_, allowed.contains))
           }
       }
-      val heaps = Array.fill(batch.length)(new TopKHeap(k, VectorMath.smallerIsCloser(metricId)))
-      val offered = new Array[Boolean](batch.length)
-      val shards = data.sparkSession.sparkContext.runJob(perShard,
-        (it: Iterator[(Array[Int], Array[Double], Array[Long])]) => it.toArray)
-      shards.iterator.flatten.foreach { case (counts, dists, labels) =>
-        var i = 0
-        for (qi <- counts.indices; _ <- 0 until counts(qi)) {
-          heaps(qi).insert(dists(i), labels(i)); offered(qi) = true; i += 1
-        }
+      if (batch.length.toLong * k * graphs.getNumPartitions > localMergeBound(spark)) {
+        import spark.implicits._
+        val qids = batch.map(_._1)
+        Knn.rankResults(perShard.map { case (qi, d, l) => (qids(qi), l, d) }.toDF("qid", "label", "_dist"),
+          k, ascending = asc, padToK = padOf(params))
+      } else {
+        val qids = batch.map(_._1).distinct
+        val slotOf = { val slot = qids.zipWithIndex.toMap; batch.map(e => slot(e._1)) }
+        val heaps = Array.fill(qids.length)(new TopKHeap(k, asc))
+        val offered = new Array[Boolean](qids.length)
+        val shards = spark.sparkContext.runJob(perShard, (it: Iterator[(Int, Double, Long)]) => it.toArray)
+        shards.foreach(_.foreach { case (qi, d, l) =>
+          heaps(slotOf(qi)).insert(d, l); offered(slotOf(qi)) = true
+        })
+        Knn.localResults(spark, qids, heaps, offered, padOf(params))
       }
-      Knn.localResults(data.sparkSession, batch.map(_._1), heaps, offered, padOf(params))
     }
 
     /** driver snapshot of the per-shard graphs for injected replay

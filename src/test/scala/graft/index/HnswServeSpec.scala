@@ -30,14 +30,16 @@ class HnswServeSpec extends SparkSpec {
   private def queries: DataFrame = {
     import spark.implicits._
     val rnd = new java.util.Random(3)
-    ((0 until 3).map(i => (i.toLong, Array.fill(Dim)(rnd.nextFloat() * 8f - 4f))) :+
-      (3L, Array.fill(Dim)(0.5f).updated(2, Float.NaN))).toDF("qid", "qvec")
+    ((0 until 3).map(i => (i.toLong, Array.fill(Dim)(rnd.nextFloat() * 8f - 4f))) ++ Seq(
+      (3L, Array.fill(Dim)(0.5f).updated(2, Float.NaN)),
+      // qid 1 again, with another vector: both entries feed qid 1's one list
+      (1L, Array.fill(Dim)(-1.5f)))).toDF("qid", "qvec")
   }
 
   private def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
   test("driver merge equals the distributed top-k route: metrics, pad, k past a shard, " +
-    "an empty shard, one label on two shards, a NaN query, narrow filters") {
+    "an empty shard, one label on two shards, a NaN query, a repeated qid, narrow filters") {
     import spark.implicits._
     val rnd = new java.util.Random(29)
     val corpora = Seq(
@@ -78,6 +80,7 @@ class HnswServeSpec extends SparkSpec {
         assert(rowsOf(got) === wantRows, ctx)
         // the NaN query's candidates all sit at NaN distances: pad rows at most
         assert(wantRows.filter(_.startsWith("[3,")).forall(_.contains(",-1,")), ctx)
+        assert(wantRows.count(_.startsWith("[1,")) <= k, ctx)
         compared += 1
       }
       graphs.unpersist()
@@ -120,7 +123,42 @@ class HnswServeSpec extends SparkSpec {
     qs.createOrReplaceTempView("hs_jobs_q")
     val sql = spark.sql(s"SELECT qid, faiss_search('$name', 5, qvec) AS rs FROM hs_jobs_q")
     assert(counted(sql.queryExecution.executedPlan)._1 === 1, "SQL faiss_search planning")
-    assert(sql.collect().length === 4)
+    assert(sql.collect().length === 5)
+  }
+
+  test("a batch past the driver-merge bound ranks the shards' top-k in the distributed " +
+    "aggregate, row for row as the reference route") {
+    import spark.implicits._
+    val name = "hs_big"
+    IndexCatalog.create(name, Dim, "IDMap,HNSW8", "l2sq", Map("efConstruction" -> "32"))
+    IndexCatalog.add(points(new java.util.Random(13), 64).toDF("label", "vec").repartition(4), name)
+    val b = IndexCatalog.build(name).asInstanceOf[IndexCatalog.HnswBuilt]
+    val k = 64
+    val shards = b.data.rdd.getNumPartitions
+    // one entry more than the bound allows, the last one repeating qid 0
+    val n = (IndexCatalog.localMergeBound(spark) / (k * shards)).toInt
+    val rnd = new java.util.Random(17)
+    val qs = ((0 until n).map(i => (i.toLong, Array.fill(Dim)(rnd.nextFloat() * 8f - 4f))) :+
+      (0L, Array.fill(Dim)(1f))).toDF("qid", "qvec")
+    val batch = IndexCatalog.queryBatch(qs, "spec batch")
+    assert(batch.length.toLong * k * shards > IndexCatalog.localMergeBound(spark))
+    val graphs = ReferenceShardRoute.graphs(b.data, 8, 32, VectorMath.metricId("l2sq"))
+    for ((pad, filter) <- Seq((false, None), (true, None), (true, Some(col("label") % 3 =!= 1)))) {
+      val params = Map("efSearch" -> "16", "pad" -> pad.toString)
+      val got = filter match {
+        case None => IndexCatalog.search(name, k, qs, params)
+        case Some(f) => IndexCatalog.searchFilter(name, k, qs, f, params)
+      }
+      val ctx = s"pad=$pad filter=${filter.isDefined}"
+      assert(!got.queryExecution.executedPlan.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec],
+        ctx)
+      val want = ReferenceShardRoute.search(spark, graphs, batch, k, 16, VectorMath.metricId("l2sq"), pad,
+        filter.map(f => b.data.select(col("label"), col("vec")).where(f)))
+      assert(got.schema === want.schema, ctx)
+      assert(rowsOf(got) === rowsOf(want), ctx)
+    }
+    graphs.unpersist()
+    IndexCatalog.destroy(name)
   }
 }
 
