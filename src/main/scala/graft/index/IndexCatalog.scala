@@ -903,10 +903,10 @@ object IndexCatalog {
     collapsed.toMap ++ plain
   }
 
-  /** searches PLANNED since JVM start (not rows scanned) — lets specs
-    * assert a SQL rewrite composed exactly one search (a duplicated
-    * subtree can hide its second search in rewrite-time execution,
-    * invisible to final-plan inspection) */
+  /** k-NN batch searches started since JVM start (calls, not rows
+    * scanned) — lets specs assert that executing one SQL `faiss_search`
+    * statement searched exactly once (a call duplicated by an optimizer
+    * rule would add a second search node, and a second search) */
   val searchesPlanned = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** an entry point's one query collect, checked against index `name`'s dim */
@@ -1834,18 +1834,30 @@ object IndexCatalog {
     * pointer at the unbounded-join operator instead of collecting to
     * death. `what` names the caller's batch in the error. */
   private[graft] def collectBounded(batch: DataFrame, what: String): Array[Row] = {
-    // clamped so the +1 below can't overflow to a negative limit when
-    // the conf is set to Int.MaxValue
-    val maxBatch = math.min(
-      confLong(batch.sparkSession, MaxQueryBatchConf, MaxQueryBatchDefault), Int.MaxValue - 1L).toInt
+    val maxBatch = maxQueryBatch(batch.sparkSession)
     val rows = batch.limit(maxBatch + 1).collect()
-    if (rows.length > maxBatch)
+    checkBatchSize(rows.length, maxBatch, what)
+    rows
+  }
+
+  /** `maxQueryBatch`, clamped so that the +1 of a bounded collect can't
+    * overflow to a negative limit when the conf is set to Int.MaxValue */
+  private def maxQueryBatch(spark: SparkSession): Int =
+    math.min(confLong(spark, MaxQueryBatchConf, MaxQueryBatchDefault), Int.MaxValue - 1L).toInt
+
+  private def checkBatchSize(n: Int, maxBatch: Int, what: String): Unit =
+    if (n > maxBatch)
       throw new IllegalStateException(
         s"$what exceeds $maxBatch rows ($MaxQueryBatchConf); this serving path collects " +
           "its query batch to the driver (FAISS-parity bounded-batch contract) — use " +
           "graft.search.AnnJoin.ivfJoin / ivfRadiusJoin for unbounded query sets")
-    rows
-  }
+
+  private def checkDims(batch: Array[(Long, Array[Float])], meta: Option[IndexMeta]): Unit =
+    meta.foreach { m =>
+      if (batch.exists(_._2.length != m.dim))
+        throw new IllegalArgumentException(
+          s"query vector dimension mismatch: index '${m.name}' has dim ${m.dim}")
+    }
 
   /** `df`'s column at position `i`, quoted so that a name holding a dot
     * or a backtick (`q.id`, a SQL-generated `vec.vector(...)`) resolves
@@ -1866,11 +1878,19 @@ object IndexCatalog {
         .select(colAt(queries, 0).cast("long").as("qid"), vec.vector(colAt(queries, 1)).as("qvec"))
         .where(col("qid").isNotNull && col("qvec").isNotNull),
       what).map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-    meta.foreach { m =>
-      if (batch.exists(_._2.length != m.dim))
-        throw new IllegalArgumentException(
-          s"query vector dimension mismatch: index '${m.name}' has dim ${m.dim}")
-    }
+    checkDims(batch, meta)
+    batch
+  }
+
+  /** [[queryBatch]] over vectors already in driver memory (SQL
+    * `faiss_search` over a local query table): the same cap, counted in
+    * `vectors`, and the same dim check; each vector's qid is its position */
+  private[graft] def localQueryBatch(
+      spark: SparkSession, vectors: Seq[Array[Float]], what: String,
+      meta: Option[IndexMeta]): Array[(Long, Array[Float])] = {
+    checkBatchSize(vectors.length, maxQueryBatch(spark), what)
+    val batch = vectors.iterator.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toArray
+    checkDims(batch, meta)
     batch
   }
 

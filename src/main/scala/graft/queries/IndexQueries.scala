@@ -62,17 +62,37 @@ object IndexQueries {
     * job back-fills executors freed by the current tier's tail, and the
     * driver-side k-means of different tiers overlap. Results are
     * unchanged: per-tier training inputs and seeds are exactly the
-    * sequential ones, and the output union keeps `items` order. */
+    * sequential ones, and the output union keeps `items` order.
+    * The first tier to fail fails the sweep at once (whatever tier it
+    * is), and a sweep whose tiers are not all done within
+    * [[TierSweepTimeout]] of its start throws a TimeoutException; either
+    * way the tiers still running are interrupted. */
   private def inParallel[A, B](items: Seq[A], maxThreads: Int = 3)(f: A => B): Seq[B] = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(maxThreads, items.size)))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    val done = new java.util.concurrent.ExecutorCompletionService[(Int, B)](pool)
     try {
-      val futs = items.map(a => scala.concurrent.Future(f(a)))
-      futs.map(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
-    } finally pool.shutdown()
+      items.zipWithIndex.foreach { case (a, i) => done.submit(() => (i, f(a))) }
+      val deadline = System.nanoTime() + TierSweepTimeout.toNanos
+      val out = new Array[Any](items.size)
+      items.indices.foreach { _ =>
+        val next = done.poll(deadline - System.nanoTime(), java.util.concurrent.TimeUnit.NANOSECONDS)
+        if (next == null)
+          throw new java.util.concurrent.TimeoutException(
+            s"index tier sweep not done within $TierSweepTimeout")
+        val (i, b) =
+          try next.get()
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        out(i) = b
+      }
+      out.toSeq.asInstanceOf[Seq[B]]
+    } finally pool.shutdownNow()
   }
+
+  /** the bound on one [[inParallel]] sweep: an hour, far past any tier
+    * sweep of the gate scales (seconds to minutes), so it only ends a
+    * sweep that hangs */
+  private val TierSweepTimeout = scala.concurrent.duration.Duration(1, "hour")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // full lifecycle with an exhaustive IVF probe (nprobe = nlist):

@@ -10,7 +10,8 @@ import graft.sql.GraftFunctions
  * The reference's SQL scripts ported statement-for-statement: lifecycle
  * through `SELECT faiss_*` calls and per-row `faiss_search[_filter]` in
  * a SELECT list (reference README:71, test/sql/faiss*.test), rewritten
- * by [[graft.sql.FaissSearchRewrite]] into the distributed search plan.
+ * by [[graft.sql.FaissSearchRewrite]] into a search node that the
+ * index's search answers when the query executes.
  * Flat index + exhaustive scan -> both gate queries are EXACT and share
  * the brute-force oracles with the API-path twins.
  */

@@ -215,20 +215,25 @@ object Knn {
       localCorpora.put(key, corpus)
     }
     val (labels, vecs) = corpus
-    val heaps = qArr.map(_ => new TopKHeap(k, asc))
-    val offered = new Array[Boolean](qArr.length)
+    // one heap per distinct qid, as rankResults groups by qid: a qid
+    // repeated with another vector gets one merged top-k
+    val qids = qArr.map(_._1).distinct
+    val slotOf = { val slot = qids.zipWithIndex.toMap; qArr.map(e => slot(e._1)) }
+    val heaps = Array.fill(qids.length)(new TopKHeap(k, asc))
+    val offered = new Array[Boolean](qids.length)
     qArr.indices.foreach { qi =>
       val (qid, qv) = qArr(qi)
+      val slot = slotOf(qi)
       var i = 0
       while (i < labels.length) {
         if (!(excludeSelf && labels(i) == qid)) {
-          heaps(qi).insert(VectorMath.distArr(mid, vecs(i), qv, 3.0), labels(i))
-          offered(qi) = true
+          heaps(slot).insert(VectorMath.distArr(mid, vecs(i), qv, 3.0), labels(i))
+          offered(slot) = true
         }
         i += 1
       }
     }
-    Some(localResults(spark, qArr.map(_._1), heaps, offered, padToK))
+    Some(localResults(spark, qids, heaps, offered, padToK))
   }
 
   /** [[rankResults]]' output schema: (qid, rank, label, distance), none nullable */

@@ -1,13 +1,17 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, Generator, NamedExpression, Unevaluable}
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, AttributeSet, BindReferences, Cast, Expression, Generator, JoinedRow, Literal, NamedExpression, PredicateHelper, UnsafeProjection, Unevaluable}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LocalRelation, LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
+import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan, SparkStrategy, SQLExecution, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types._
 
 import graft.index.IndexCatalog
@@ -15,18 +19,15 @@ import graft.index.IndexCatalog
 /**
  * Per-row `faiss_search` SQL parity (reference README:71
  * `SELECT id, UNNEST(FAISS_SEARCH('name', 10, data)) FROM queries`):
- * the call parses as this unevaluable placeholder, and
- * [[FaissSearchRewrite]] rewrites the enclosing operator into the
- * index's search over the distinct query vectors (for most kinds a
- * relational plan: broadcast query batch -> pruned index scan ->
- * partial top-k), joined back to the input rows on query-vector
- * equality. The reference executes one serial FAISS call per chunk;
- * here the SAME SQL text becomes a distributed Catalyst plan. What is
- * already in driver memory stays there: a LocalRelation query table is
- * deduplicated on the driver (no distinct job), and a local result (an
- * HNSW search, merged on the driver) becomes the per-vector lists on
- * the driver (no aggregate, no join against the batch), so such a
- * request runs only its search job while it is planned.
+ * the call parses as the unevaluable placeholder [[FaissSearchCall]],
+ * [[FaissSearchRewrite]] turns each call into a [[FaissSearch]] logical
+ * node over the rows it reads, and [[FaissSearchStrategy]] plans that
+ * node into a [[FaissSearchExec]]. The search runs when the plan is
+ * executed: analysis, optimization, planning and `EXPLAIN` run no job.
+ * The reference executes one serial FAISS call per chunk; here the
+ * exec searches the distinct query vectors as one batch through the
+ * index's own search (for most kinds a distributed plan) and hands each
+ * input row the list of its vector.
  *
  * Result type matches the reference shape: LIST<STRUCT(rank, label,
  * distance)> per input row (README:243), distances as DOUBLE.
@@ -65,21 +66,37 @@ object FaissSearchCall {
 }
 
 /**
- * Rewrites [[FaissSearchCall]] placeholders into executable plans.
+ * The rows of `child`, each with `result`: the list [[FaissSearchCall]]
+ * `call` gives its query vector (empty for a null vector or a vector
+ * with no result). The call's own qvec refers to `child`'s output.
+ */
+case class FaissSearch(call: FaissSearchCall, result: Attribute, child: LogicalPlan)
+  extends UnaryNode {
+  override def output: Seq[Attribute] = child.output :+ result
+  override def producedAttributes: AttributeSet = AttributeSet(result)
+  override protected def withNewChildInternal(newChild: LogicalPlan): LogicalPlan =
+    copy(child = newChild)
+}
+
+/**
+ * Rewrites [[FaissSearchCall]] placeholders into [[FaissSearch]] nodes.
  * Registered two ways (mirroring GraftFunctions):
  *  - `spark.sql.extensions=graft.sql.GraftExtensions` -> resolution rule
  *  - `GraftFunctions.registerAll(spark)` -> experimental optimizer rule
  *    (a live session's analyzer cannot be extended post-hoc)
+ * Either way the rule only builds nodes; [[FaissSearchExec]] searches
+ * at execution.
  *
- * The join-back key is the query VECTOR itself, not a synthetic row id:
+ * A call in a SELECT list, a generator or a WHERE clause is replaced by
+ * the result attribute of a node placed under that operator. The node
+ * keys its rows by the query VECTOR itself, not a synthetic row id:
  * duplicate vectors share one search (FAISS would return identical
  * results anyway) and no id has to survive a recomputed nondeterministic
  * scan. Null vectors get an empty result list, zero-candidate queries
  * too — faiss_search returns a list value for every input row.
  */
-case class FaissSearchRewrite(spark: SparkSession, postAnalysis: Boolean = true)
-  extends Rule[LogicalPlan]
-  with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
+case class FaissSearchRewrite(postAnalysis: Boolean = true)
+  extends Rule[LogicalPlan] with PredicateHelper {
 
   private def hasCall(es: Seq[Expression]): Boolean =
     es.exists(_.exists(_.isInstanceOf[FaissSearchCall]))
@@ -88,12 +105,13 @@ case class FaissSearchRewrite(spark: SparkSession, postAnalysis: Boolean = true)
     * conjuncts over a call that is ALSO computed elsewhere in the plan
     * are vacuous — the surface pads every result list to exactly k like
     * the reference (README:243), so such guards can only come from
-    * InferFiltersFromGenerate (the post-hoc path runs after the main
-    * optimizer). Left in place they would each rewrite into a complete
-    * SECOND search of the corpus. A guard over a call that appears
-    * nowhere else, or whose padding the user disabled, is kept and
-    * rewritten like any filter (it genuinely drops empty-list rows —
-    * e.g. null query vectors). */
+    * InferFiltersFromGenerate, whose guard over a generator's input
+    * attribute is pushed down into the call on the post-hoc path (it
+    * runs after the main optimizer). Left in place they would each
+    * become a complete SECOND search of the corpus. A guard over a call
+    * that appears nowhere else, or whose padding the user disabled, is
+    * kept and rewritten like any filter (it genuinely drops empty-list
+    * rows — e.g. null query vectors). */
   private def isVacuousCallGuard(e: Expression, alsoComputed: FaissSearchCall => Boolean): Boolean = {
     import org.apache.spark.sql.catalyst.expressions.{GetArrayStructFields, GreaterThan, IsNotNull, LessThan, Size}
     def padded(c: FaissSearchCall): Boolean =
@@ -129,8 +147,7 @@ case class FaissSearchRewrite(spark: SparkSession, postAnalysis: Boolean = true)
         val conj = splitConjunctivePredicates(f.condition)
         val kept = conj.filterNot(isVacuousCallGuard(_, computed.contains))
         if (kept.length == conj.length) f
-        else kept.reduceOption(org.apache.spark.sql.catalyst.expressions.And)
-          .map(Filter(_, f.child)).getOrElse(f.child)
+        else kept.reduceOption(And).map(Filter(_, f.child)).getOrElse(f.child)
     }
     val rewritten = cleaned.transformUp {
       case p: Project if p.resolved && hasCall(p.projectList) =>
@@ -142,9 +159,8 @@ case class FaissSearchRewrite(spark: SparkSession, postAnalysis: Boolean = true)
         val (child, subst) = rewriteCalls(g.child, Seq(g.generator))
         g.copy(generator = subst(g.generator).asInstanceOf[Generator],
           unrequiredChildIndex = Nil, child = child)
-      // optimizer rules can copy the call into a Filter (e.g.
-      // InferFiltersFromGenerate + pushdown on the post-hoc path);
-      // restore the original schema above the result join
+      // a WHERE over the call (or a guard an optimizer rule copied there
+      // that is not vacuous); the Project restores the Filter's schema
       case f: Filter if f.resolved && hasCall(Seq(f.condition)) =>
         val (child, subst) = rewriteCalls(f.child, Seq(f.condition))
         Project(f.output, Filter(subst(f.condition), child))
@@ -157,11 +173,9 @@ case class FaissSearchRewrite(spark: SparkSession, postAnalysis: Boolean = true)
       // resolution the batch is a fixpoint and the call may simply not
       // be matchable YET, so only log there; unresolved leftovers then
       // surface through the injected check rule.
-      if (plan.exists(n => hasCall(n.expressions))) {
-        val msg = "faiss_search is supported in SELECT lists, generators (explode), " +
-          "and WHERE clauses over a resolved FROM — not in aggregate/join/window positions"
-        if (postAnalysis) throw new UnsupportedOperationException(msg)
-        else logError(s"$msg:\n${plan.treeString}")
+      if (FaissSearchRewrite.hasUnplannedCall(plan)) {
+        if (postAnalysis) throw new UnsupportedOperationException(FaissSearchRewrite.UnsupportedPosition)
+        else logError(s"${FaissSearchRewrite.UnsupportedPosition}:\n${plan.treeString}")
       }
       plan
     }
@@ -175,44 +189,164 @@ case class FaissSearchRewrite(spark: SparkSession, postAnalysis: Boolean = true)
     } else rewritten
   }
 
-  /** Join `child` with the results of every distinct call in `exprs`;
-    * returns the joined plan and a substitution over expressions. */
+  /** `child` under one [[FaissSearch]] node per distinct call in
+    * `exprs`; returns it and the substitution of each call by its
+    * node's result attribute. */
   private def rewriteCalls(
       child0: LogicalPlan, exprs: Seq[Expression]): (LogicalPlan, Expression => Expression) = {
     val calls = exprs.flatMap(_.collect { case c: FaissSearchCall => c }).distinct
     var child = child0
     val replacements = calls.zipWithIndex.map { case (call, i) =>
-      val (joined, rep) = joinResults(child, call, i)
-      child = joined
-      (call: Expression) -> rep
+      val result = AttributeReference(s"__graft_res_$i", call.dataType, nullable = false)()
+      child = FaissSearch(call, result, child)
+      (call: Expression) -> (result: Expression)
     }.toMap
     (child, e => e.transformUp { case c: FaissSearchCall => replacements(c) })
   }
+}
 
-  /** Left-join `child` with the search results for `call`, keyed by the
-    * query vector; returns the joined plan and the replacement
-    * expression (an attribute coalesced to an empty list). */
-  private def joinResults(
-      child: LogicalPlan, call: FaissSearchCall, i: Int): (LogicalPlan, Expression) = {
-    val vcol = s"__graft_qvec_$i"
-    val rcol = s"__graft_res_$i"
-    val df = GraftBridge.ofRows(spark, child)
-    val qvecCol = GraftBridge.column(call.qvec)
-    // the distinct query vectors are this call's one query batch:
-    // collected (capped by spark.graft.index.maxQueryBatch, dim-checked)
-    // once, numbered on the driver, searched, and joined back through the
-    // batch's local view. Vectors already in driver memory (a query
-    // table that optimizes to a LocalRelation) are deduplicated there,
-    // with no distinct job
-    val qvecs = df.select(lit(0L).as("qid"), graft.functions.vec.vector(qvecCol).as("qvec"))
+object FaissSearchRewrite {
+  private[sql] val UnsupportedPosition =
+    "faiss_search is supported in SELECT lists, generators (explode), and WHERE clauses " +
+      "over a resolved FROM — not in aggregate/join/window positions"
+
+  /** a call still in place of an expression: every call but a
+    * [[FaissSearch]] node's own, which the node answers */
+  private[sql] def hasUnplannedCall(plan: LogicalPlan): Boolean = plan.exists {
+    case _: FaissSearch => false
+    case n => n.expressions.exists(_.exists(_.isInstanceOf[FaissSearchCall]))
+  }
+}
+
+/** Plans [[FaissSearch]]. A deterministic Project straight over the
+  * node is planned into the same exec, so a request's collect is the
+  * exec's own (one job on a local query table over HNSW: the search). */
+object FaissSearchStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case Project(list, s: FaissSearch) if list.forall(_.deterministic) =>
+      FaissSearchExec(s.call, s.result, list, planLater(s.child)) :: Nil
+    case s: FaissSearch => FaissSearchExec(s.call, s.result, s.output, planLater(s.child)) :: Nil
+    case _ => Nil
+  }
+}
+
+/**
+ * Executes [[FaissSearch]], then `projectList` over its rows:
+ *  1. the child's distinct non-null query vectors (cast to
+ *     array<float>; -0.0 is 0.0 and every NaN one value, as Spark's
+ *     `distinct` groups them) are the batch, under the cap and dim
+ *     check of [[IndexCatalog.queryBatch]], counted in distinct vectors.
+ *     A local child (a [[LocalTableScanExec]], or another call's exec
+ *     over one) is read on the driver; any other child goes through
+ *     `.distinct()`;
+ *  2. the batch is searched once through the index's batch search;
+ *  3. the result's bounded per-vector lists (at most `maxQueryBatch` ×
+ *     k rows for k-NN) are collected to the driver, each sorted as
+ *     `sort_array` sorts it;
+ *  4. each child row gets the list of its vector, or an empty list. A
+ *     local child is joined on the driver (its collect runs only the
+ *     search's jobs); any other child is mapped partition by partition
+ *     against a broadcast vector → list map.
+ * A row whose vector has a null element matches no searched vector (the
+ * search reads the element as 0.0), so its list is empty.
+ */
+case class FaissSearchExec(
+    call: FaissSearchCall, result: Attribute, projectList: Seq[NamedExpression], child: SparkPlan)
+  extends UnaryExecNode {
+
+  override def output: Seq[Attribute] = projectList.map(_.toAttribute)
+  override def producedAttributes: AttributeSet = AttributeSet(result)
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "queryRows" -> SQLMetrics.createMetric(sparkContext, "query rows"),
+    "distinctVectors" -> SQLMetrics.createMetric(sparkContext, "distinct query vectors"),
+    "resultRows" -> SQLMetrics.createMetric(sparkContext, "result rows"),
+    "searchTime" -> SQLMetrics.createTimingMetric(sparkContext, "search time"),
+    "driverJoins" -> SQLMetrics.createMetric(sparkContext, "driver joins"),
+    "broadcastJoins" -> SQLMetrics.createMetric(sparkContext, "broadcast map joins"))
+
+  /** the query vector as the search reads it */
+  private def queryVector: Expression =
+    Cast(call.qvec, ArrayType(FloatType), Option(conf.sessionLocalTimeZone))
+
+  /** the child's rows are in driver memory: a local table, or the
+    * driver-joined rows of another call's exec over one */
+  private def local: Boolean = child match {
+    case _: LocalTableScanExec => true
+    case e: FaissSearchExec => e.local
+    case _ => false
+  }
+
+  override def executeCollect(): Array[InternalRow] =
+    if (local) driverJoin() else super.executeCollect()
+
+  protected override def doExecute(): RDD[InternalRow] =
+    if (local) {
+      val rows = driverJoin()
+      sparkContext.parallelize(rows.toSeq, math.max(1, math.min(rows.length, sparkContext.defaultParallelism)))
+    } else broadcastJoin()
+
+  /** a local child's rows with their lists, joined on the driver */
+  private def driverJoin(): Array[InternalRow] = {
+    val rows = child.executeCollect()
+    val vec = BindReferences.bindReference(queryVector, child.output)
+    val vectors = rows.map { r =>
+      Option(vec.eval(r).asInstanceOf[ArrayData]).map(a => FaissSearchExec.vectorKey(a) -> a)
+    }
+    val distinct = scala.collection.mutable.LinkedHashMap.empty[ArraySeq[Long], Array[Float]]
+    vectors.foreach(_.foreach { case (key, a) => distinct.getOrElseUpdate(key, FaissSearchExec.searched(a)) })
+    val batch = IndexCatalog.localQueryBatch(session, distinct.values.toSeq, FaissSearchExec.BatchName,
+      Some(IndexCatalog.meta(call.indexName)))
+    val lists = search(batch)
+    val proj = UnsafeProjection.create(projectList, child.output :+ result)
+    val joined = new JoinedRow
+    val out = rows.indices.map { i =>
+      val list = vectors(i).flatMap(v => lists.get(v._1)).getOrElse(FaissSearchExec.Empty)
+      proj(joined(rows(i), InternalRow(list))).copy(): InternalRow
+    }.toArray
+    metrics("queryRows").add(rows.length)
+    metrics("driverJoins").add(1)
+    postDriverMetrics()
+    out
+  }
+
+  /** any other child: its distinct vectors through `.distinct()`, then
+    * its partitions mapped against the broadcast lists */
+  private def broadcastJoin(): RDD[InternalRow] = {
+    val in = child.output
+    val vec = queryVector
+    val vectors = child.execute().mapPartitions { it =>
+      val p = UnsafeProjection.create(Seq(Literal(0L), vec), in)
+      it.map(p)
+    }
+    val schema = StructType(Seq(StructField("qid", LongType), StructField("qvec", ArrayType(FloatType))))
     val batch = IndexCatalog.queryBatch(
-      qvecs.queryExecution.optimizedPlan match {
-        case r: LocalRelation =>
-          GraftBridge.ofRows(spark, r.copy(data = FaissSearchRewrite.distinctVectors(r.data)))
-        case _ => qvecs.distinct()
-      },
-      "faiss_search query batch", Some(IndexCatalog.meta(call.indexName)))
+      GraftBridge.internalCreateDataFrame(session, vectors, schema).distinct(),
+      FaissSearchExec.BatchName, Some(IndexCatalog.meta(call.indexName)))
       .zipWithIndex.map { case ((_, v), qi) => (qi.toLong, v) }
+    val lists = sparkContext.broadcast(search(batch))
+    metrics("broadcastJoins").add(1)
+    postDriverMetrics()
+    val out = projectList
+    val res = result
+    val queryRows = metrics("queryRows")
+    child.execute().mapPartitions { it =>
+      val v = BindReferences.bindReference(vec, in)
+      val proj = UnsafeProjection.create(out, in :+ res)
+      val joined = new JoinedRow
+      it.map { r =>
+        queryRows += 1
+        val a = v.eval(r).asInstanceOf[ArrayData]
+        val list = if (a == null) FaissSearchExec.Empty
+          else lists.value.getOrElse(FaissSearchExec.vectorKey(a), FaissSearchExec.Empty)
+        proj(joined(r, InternalRow(list)))
+      }
+    }
+  }
+
+  /** searches `batch` once; each searched vector's key -> its sorted list */
+  private def search(batch: Array[(Long, Array[Float])]): Map[ArraySeq[Long], ArrayData] = {
+    val start = System.nanoTime()
     // the reference pads every result list to exactly k (label = -1 for
     // missing, README:243) — mirror that by default, overridable via
     // an explicit map('pad','false') parameter (k-NN only; range
@@ -227,105 +361,56 @@ case class FaissSearchRewrite(spark: SparkSession, postAnalysis: Boolean = true)
       case (None, None) =>
         IndexCatalog.searchBatch(call.indexName, call.k, batch, params)
       case (None, Some((filterSql, idSelector, tableName))) =>
-        val ids = spark.table(tableName).where(expr(filterSql))
+        val ids = session.table(tableName).where(expr(filterSql))
           .select(expr(idSelector).cast("long").as("label"))
         IndexCatalog.searchFilterSetBatch(call.indexName, call.k, batch, ids, params)
     }
-    val keyed = flat.queryExecution.logical match {
-      // results already in driver memory (a k-NN search served on the
-      // driver): each vector's list is built here, with no aggregate
-      // and no join against the batch
-      case r: LocalRelation if call.radius.isEmpty =>
-        FaissSearchRewrite.localLists(spark, batch, r.data, vcol, rcol, call.dataType)
-      case _ =>
-        val empty = array().cast(call.dataType)
-        val resultStruct =
-          if (call.radius.isDefined)
-            // sorted best-first by (distance, label) — distance leads the
-            // struct so sort_array's lexicographic order is the metric order
-            struct(col("distance").cast("double").as("distance"), col("label"))
-          else struct(col("rank"), col("label"), col("distance").cast("double").as("distance"))
-        val nested = flat.groupBy("qid")
-          .agg(sort_array(collect_list(resultStruct)).as("r"))
-        // both joins broadcast their bounded side — the query batch and its
-        // k-row result lists; only the index scan inside `flat` touches data
-        graft.search.Knn.queryFrame(spark, batch).join(broadcast(nested), Seq("qid"), "left")
-          .select(col("qvec").as(vcol),
-            coalesce(col("r").cast(call.dataType), empty).as(rcol))
+    // (qid, rank, label, distance) or (qid, label, distance) rows: read
+    // in place when the search left them in driver memory (HNSW)
+    val (attrs, rows) = flat.queryExecution.logical match {
+      case r: LocalRelation => (r.output, r.data)
+      case _ => val (a, rs) = GraftBridge.collectInternal(flat); (a, rs.toSeq)
     }
-    val joined = df.join(keyed,
-      graft.functions.vec.vector(qvecCol) <=> keyed(vcol), "left")
-    // broadcast the result side via an explicit JoinHint on the node (a
-    // ResolvedHint from broadcast() would reach the planner unresolved
-    // when this runs as a late optimizer rule — only the subtree below
-    // gets re-optimized, where the inner broadcast() hint is handled)
-    import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, Join, JoinHint, BROADCAST}
-    val jplan0 = joined.queryExecution.analyzed match {
-      case j: Join => j.copy(hint = JoinHint(None, Some(HintInfo(Some(BROADCAST)))))
-      case other => other
+    def at(name: String): Expression = attrs.find(_.name == name).get
+    val fields = call.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+    val proj = UnsafeProjection.create(
+      Cast(at("qid"), LongType) +: fields.map(f => Cast(at(f.name), f.dataType): Expression), attrs)
+    val order = TypeUtils.getInterpretedOrdering(fields)
+    val lists = rows.map(r => proj(r).copy()).groupBy(_.getLong(0)).map { case (qid, rs) =>
+      val elems = rs.map(r => InternalRow.fromSeq(fields.indices.map(i => r.get(i + 1, fields(i).dataType))))
+      qid -> (new GenericArrayData(elems.sorted(order).toArray[Any]): ArrayData)
     }
-    // post-analysis registration: nothing optimizes this subtree after
-    // us (Deduplicate->Aggregate, hint elimination, pushdown all live in
-    // the main optimizer), so run it through the session optimizer now.
-    // Scoped to the subtree — the surrounding plan is already optimized.
-    // The optimizer preserves root output attributes, and re-entry into
-    // this rule terminates (no placeholder survives the rewrite).
-    val jplan =
-      if (!postAnalysis) jplan0
-      else spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .sessionState.optimizer.execute(jplan0)
-    val rattr: Attribute = jplan.output.filter(_.name == rcol).last
-    // concrete Catalyst nodes (Column sugar like coalesce() defers to an
-    // UnresolvedFunction in Spark 4, which would leave the plan unresolved
-    // here — no analyzer runs after this rewrite on the post-hoc path)
-    val rep = org.apache.spark.sql.catalyst.expressions.Coalesce(Seq(
-      rattr,
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Seq.empty[Any], call.dataType)))
-    (jplan, rep)
+    metrics("distinctVectors").add(batch.length)
+    metrics("resultRows").add(rows.length)
+    metrics("searchTime").add((System.nanoTime() - start) / 1000000)
+    batch.map { case (qid, v) =>
+      FaissSearchExec.vectorKey(ArrayData.toArrayData(v)) -> lists.getOrElse(qid, FaissSearchExec.Empty)
+    }.toMap
   }
+
+  private def postDriverMetrics(): Unit =
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics.values.toSeq)
+
+  override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan = copy(child = newChild)
 }
 
-object FaissSearchRewrite {
+object FaissSearchExec {
+  private val BatchName = "faiss_search query batch"
+  private val Empty: ArrayData = new GenericArrayData(Array.empty[Any])
 
-  /** the distinct rows of a (0, vector) LocalRelation, grouped the way
-    * Spark's `distinct` groups them: -0.0 counts as 0.0 and every NaN
-    * as one value (each kept vector normalized, as the distinct
-    * aggregate emits it); null vectors, which the query batch drops
-    * anyway, are dropped here */
-  private[sql] def distinctVectors(rows: Seq[InternalRow]): Seq[InternalRow] = {
-    val seen = scala.collection.mutable.HashSet.empty[Seq[Long]]
-    rows.filterNot(_.isNullAt(1)).flatMap { r =>
-      val a = r.getArray(1)
-      val v = Array.tabulate[Any](a.numElements()) { i =>
-        if (a.isNullAt(i)) null
-        else { val x = a.getFloat(i); if (x.isNaN) Float.NaN else if (x == 0f) 0f else x }
-      }
-      // a null element is a value of its own, apart from every float's bits
-      val key = v.toSeq.map {
-        case x: Float => java.lang.Float.floatToIntBits(x).toLong
-        case _ => Long.MinValue
-      }
-      if (seen.add(key)) Some(InternalRow(0L, new GenericArrayData(v))) else None
-    }
-  }
+  /** a query vector's equality key: -0.0 counts as 0.0, every NaN as
+    * one value, and a null element as a value of its own — the way
+    * Spark's `distinct` and join keys group vectors */
+  private[sql] def vectorKey(a: ArrayData): ArraySeq[Long] =
+    ArraySeq.unsafeWrapArray(Array.tabulate(a.numElements()) { i =>
+      if (a.isNullAt(i)) Long.MinValue
+      else { val x = a.getFloat(i); java.lang.Float.floatToIntBits(if (x == 0f) 0f else x).toLong }
+    })
 
-  /** the (vector, result list) rows of a batch whose k-NN results are
-    * the local (qid, rank, label, distance) `rows`: each list in rank
-    * order, empty for a query with no result row */
-  private[sql] def localLists(
-      spark: SparkSession, batch: Array[(Long, Array[Float])], rows: Seq[InternalRow],
-      vcol: String, rcol: String, dataType: DataType): DataFrame = {
-    val lists = rows.groupBy(_.getLong(0)).map { case (qid, rs) =>
-      qid -> rs.sortBy(_.getInt(1)).map(r => InternalRow(r.getInt(1), r.getLong(2), r.getDouble(3)))
-    }
-    val out = batch.toSeq.map { case (qid, v) =>
-      InternalRow(new GenericArrayData(v.map(x => x: Any)),
-        new GenericArrayData(lists.getOrElse(qid, Nil).toArray[Any]))
-    }
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    GraftBridge.ofRows(spark, LocalRelation(Seq(
-      AttributeReference(vcol, ArrayType(FloatType, containsNull = false))(),
-      AttributeReference(rcol, dataType, nullable = false)()), out))
+  /** the vector the search reads for `a`: normalized as [[vectorKey]]
+    * groups it, a null element read as 0.0 */
+  private def searched(a: ArrayData): Array[Float] = Array.tabulate(a.numElements()) { i =>
+    if (a.isNullAt(i)) 0f else { val x = a.getFloat(i); if (x.isNaN) Float.NaN else if (x == 0f) 0f else x }
   }
 }

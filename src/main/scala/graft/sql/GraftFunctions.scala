@@ -374,10 +374,13 @@ object GraftFunctions {
       case (name, b) => GraftBridge.registerTableFunction(spark, name, b)
     }
     // a live session's analyzer can't be extended post-hoc; the rewrite
-    // runs as an experimental optimizer rule instead (idempotent add)
+    // runs as an experimental optimizer rule instead, and the planner
+    // takes the strategy that plans its nodes (both added idempotently)
     val existing = spark.experimental.extraOptimizations
     if (!existing.exists(_.isInstanceOf[FaissSearchRewrite]))
-      spark.experimental.extraOptimizations = existing :+ FaissSearchRewrite(spark)
+      spark.experimental.extraOptimizations = existing :+ FaissSearchRewrite()
+    if (!spark.experimental.extraStrategies.contains(FaissSearchStrategy))
+      spark.experimental.extraStrategies = FaissSearchStrategy +: spark.experimental.extraStrategies
   }
 }
 
@@ -398,16 +401,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         b))
     }
     // on the extensions path the rewrite can run at resolution, so the
-    // produced search subtree flows through the full optimizer
-    ext.injectResolutionRule(s => FaissSearchRewrite(s, postAnalysis = false))
+    // search nodes it produces flow through the full optimizer
+    ext.injectResolutionRule(_ => FaissSearchRewrite(postAnalysis = false))
+    ext.injectPlannerStrategy(_ => FaissSearchStrategy)
     // any placeholder that survives analysis sits in an unsupported
     // position (aggregate list, join condition, window spec) — fail at
     // CheckAnalysis with a clear message, not deep in codegen
     ext.injectCheckRule(_ => plan => {
-      if (plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[FaissSearchCall]))))
-        throw new UnsupportedOperationException(
-          "faiss_search is supported in SELECT lists, generators (explode), and WHERE " +
-            "clauses over a resolved FROM — not in aggregate/join/window positions")
+      if (FaissSearchRewrite.hasUnplannedCall(plan))
+        throw new UnsupportedOperationException(FaissSearchRewrite.UnsupportedPosition)
     })
   }
 }

@@ -38,6 +38,16 @@ object GraftBridge {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
 
+  /** `df`'s rows as InternalRows, with the attributes they bind to, run
+    * as one SQL execution of its own (nested under the caller's, if any) */
+  def collectInternal(df: DataFrame): (Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
+      Array[org.apache.spark.sql.catalyst.InternalRow]) = {
+    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+    (qe.executedPlan.output,
+      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(
+        qe.executedPlan.executeCollect()))
+  }
+
   /** register a table-valued function (FROM-clause) on a live session */
   def registerTableFunction(
       spark: SparkSession,

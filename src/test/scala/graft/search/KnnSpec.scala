@@ -72,6 +72,25 @@ class KnnSpec extends SparkSpec {
     } finally spark.conf.unset(Knn.LocalServeThresholdConf)
   }
 
+  test("driver-local serve merges a repeated qid into one top-k, row for row as the distributed plan") {
+    import spark.implicits._
+    // qid 0 twice, with two different vectors
+    val queries = Seq(
+      (0L, Array(0.2f, 0.0f)), (7L, Array(9.6f, 4.4f)), (0L, Array(5.0f, 5.0f)))
+      .toDF("qid", "qvec")
+    def run(local: Boolean, exSelf: Boolean, pad: Boolean) = {
+      if (local) spark.conf.set(Knn.LocalServeThresholdConf, Long.MaxValue.toString)
+      try Knn.searchFlat(data, queries, 4, "l2sq", excludeSelf = exSelf, padToK = pad)
+        .collect().map(_.toString).sorted.toSeq
+      finally spark.conf.unset(Knn.LocalServeThresholdConf)
+    }
+    for (exSelf <- Seq(false, true); pad <- Seq(false, true)) {
+      val local = run(local = true, exSelf, pad)
+      assert(local === run(local = false, exSelf, pad), s"excludeSelf=$exSelf pad=$pad")
+      assert(local.count(_.startsWith("[0,")) === 4, s"excludeSelf=$exSelf pad=$pad")
+    }
+  }
+
   test("driver-local serve: over-cap corpus falls back to the distributed plan; oversized batch fails loudly") {
     import spark.implicits._
     val queries = Seq((0L, Array(0.2f, 0.0f))).toDF("qid", "qvec")

@@ -10,7 +10,7 @@ import graft.index.IndexCatalog
  * The reference's SQL scripts, ported statement-for-statement: lifecycle
  * via `SELECT faiss_*`, per-row `faiss_search` in a SELECT list
  * (reference README:71, test/sql/faiss*.test), rewritten by
- * [[FaissSearchRewrite]] into the distributed search plan.
+ * [[FaissSearchRewrite]] into a search node that runs at execution.
  */
 class SqlSurfaceSpec extends SparkSpec {
 
@@ -212,9 +212,18 @@ class SqlSurfaceSpec extends SparkSpec {
     org.apache.spark.ListenerBusDrain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
-      spark.sql(q).queryExecution.executedPlan // planning runs the rewrite, and its collects
+      val df = spark.sql(q)
+      val plan = df.queryExecution.executedPlan // planning collects nothing
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      assert(collects === 0)
+      // execution takes the batch once: the exec reads the local table's
+      // 4 distinct vectors a single time, and the only collect is the
+      // statement's own
+      df.collect()
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
       assert(collects === 1)
+      val exec = plan.collectFirst { case e: FaissSearchExec => e }.get
+      assert(exec.metrics("distinctVectors").value === 4L)
     } finally spark.listenerManager.unregister(listener)
   }
 
