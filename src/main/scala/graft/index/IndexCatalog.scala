@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{hashes, vec, TopKHeap, VectorMath}
+import graft.functions.{hashes, vec, VectorMath}
 import graft.search.Knn
 
 /**
@@ -919,9 +919,9 @@ object IndexCatalog {
 
   /**
    * faiss_search twin: top-k per query row. The query batch is
-   * collected and dim-checked at the call. On HNSW the search job runs
-   * at the call too (its errors surface here) and the result is a local
-   * frame, unless the batch's shard candidates pass
+   * collected and dim-checked at the call. On HNSW and Flat the search
+   * job runs at the call too (its errors surface here) and the result
+   * is a local frame, unless the batch's shard candidates pass
    * [[localMergeBound]]; other kinds, and such a batch, return the
    * search plan, run when acted on.
    * @param queries (qid bigint, qvec array<float>)
@@ -1818,8 +1818,9 @@ object IndexCatalog {
   private[graft] val MaxQueryBatchDefault = 1 << 20
   private[graft] val MaxQueryBatchConf = "spark.graft.index.maxQueryBatch"
 
-  /** most shard candidates (queries × k × shards) an HNSW request sends
-    * to the driver to merge there: 2^20, or fewer when
+  /** most shard candidates (queries × k × shards) a shard top-k request
+    * ([[Knn.shardTopK]]: HNSW's graph shards, the Flat kernel's
+    * partitions) sends to the driver to merge there: 2^20, or fewer when
     * `spark.driver.maxResultSize` (0: unlimited) leaves less than 128
     * bytes a candidate (a task result holds each as a boxed
     * (entry, distance, label) triple). Past it the shards' top-k are
@@ -1993,52 +1994,28 @@ object IndexCatalog {
 
     /** the request path: every shard graph is searched for the whole
       * batch (each under its own shard's allowed labels when
-      * shard-aligned `allowedLabels` rows are given). Up to
-      * [[localMergeBound]] candidates, one job returns each shard's
-      * candidates and the driver merges them into one heap per distinct
-      * qid, in [[graft.functions.TopKHeap]]'s (distance, label) order,
-      * the order `vec.topk` merges in; past it they are ranked by the
-      * distributed [[Knn.rankResults]] aggregate. Both routes key a
-      * query's top-k by qid, so batch entries sharing a qid share one
-      * list. */
+      * shard-aligned `allowedLabels` rows are given), and the shards'
+      * top-k are merged by [[Knn.shardTopK]] */
     private def searchShards(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
         allowedLabels: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]
     ): DataFrame = {
-      require(k > 0, "k must be positive")
-      val spark = data.sparkSession
       val efSearch = positiveIntParam(params, "efSearch", math.max(2 * k, 64))
       val metricId = VectorMath.metricId(meta.metric)
-      val asc = VectorMath.smallerIsCloser(metricId)
-      val qvs = batch.map(_._2)
-      // (batch entry, distance, label) of every candidate one shard yields
-      val searchShard: (Nsw.Graph, Long => Boolean) => Iterator[(Int, Double, Long)] =
-        (g, allowed) => qvs.indices.iterator.flatMap { qi =>
-          Nsw.search(g, qvs(qi), k, efSearch, metricId, allowed).iterator.map { case (d, l) => (qi, d, l) }
-        }
-      val perShard = allowedLabels match {
-        case None => graphs.flatMap(searchShard(_, null))
+      val shards = allowedLabels match {
+        case None => graphs.map(g => (g, null: Long => Boolean))
         case Some(rows) =>
           graphs.zipPartitions(rows) { (git, rit) =>
             val allowed = new java.util.HashSet[Long]()
             rit.foreach(r => allowed.add(r.getLong(0)))
-            git.flatMap(searchShard(_, allowed.contains))
+            git.map(g => (g, allowed.contains: Long => Boolean))
           }
       }
-      if (batch.length.toLong * k * graphs.getNumPartitions > localMergeBound(spark)) {
-        import spark.implicits._
-        val qids = batch.map(_._1)
-        Knn.rankResults(perShard.map { case (qi, d, l) => (qids(qi), l, d) }.toDF("qid", "label", "_dist"),
-          k, ascending = asc, padToK = padOf(params))
-      } else {
-        val qids = batch.map(_._1).distinct
-        val slotOf = { val slot = qids.zipWithIndex.toMap; batch.map(e => slot(e._1)) }
-        val heaps = Array.fill(qids.length)(new TopKHeap(k, asc))
-        val offered = new Array[Boolean](qids.length)
-        val shards = spark.sparkContext.runJob(perShard, (it: Iterator[(Int, Double, Long)]) => it.toArray)
-        shards.foreach(_.foreach { case (qi, d, l) =>
-          heaps(slotOf(qi)).insert(d, l); offered(slotOf(qi)) = true
-        })
-        Knn.localResults(spark, qids, heaps, offered, padOf(params))
+      Knn.shardTopK(data.sparkSession, shards, batch, k, VectorMath.smallerIsCloser(metricId), padOf(params)) {
+        (shard, qs) => shard.flatMap { case (g, allowed) =>
+          qs.indices.iterator.flatMap { qi =>
+            Nsw.search(g, qs(qi)._2, k, efSearch, metricId, allowed).iterator.map { case (d, l) => (qi, d, l) }
+          }
+        }
       }
     }
 

@@ -1,5 +1,6 @@
 package graft.search
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -14,38 +15,42 @@ import graft.functions.{vec, TopKHeap, VectorMath}
  * reference's `faiss_search` over a Flat index
  * (duckdb-faiss-ext README "faiss_search"; test/sql/faiss.test).
  *
- * Plan shape (the 100 TB story):
- *   parquet scan (pruned to id+vec, filters pushed down)
- *     -> BroadcastNestedLoopJoin against the (small) query set
- *     -> fused codegen distance expression
- *     -> partial top-k heap per partition   (shuffle: parts x Q x k rows)
- *     -> final top-k merge per query id
- * No driver-side collect; each data row is touched exactly once.
+ * A batch already on the driver (`knnJoin`, every catalog Flat path)
+ * takes the shard top-k route ([[shardTopK]]): one job runs the Flat
+ * kernel over each partition of the pruned scan and the driver merges
+ * the partitions' top-k, with no shuffle. [[searchFlat]] over a query
+ * DataFrame (and [[knnJoinGrouped]]) plans the row join instead:
+ *   scan -> BroadcastNestedLoopJoin against the query set
+ *     -> fused codegen distance -> partial top-k heap per partition
+ *     -> (shuffle: parts x Q x k rows) -> final top-k merge per qid
+ * Each data row is touched exactly once on either shape.
  */
 object Knn {
 
   /** Corpus-size threshold (bytes, from optimizer plan stats) above
-    * which [[searchFlat]] delegates to the partition-local-heap kernel
-    * ([[searchFlatFast]]) instead of the row-per-(row, query)
-    * broadcast join. Results are bit-identical (spec-pinned); this is
-    * purely a plan-cost switch, like the packed coded scan — but note
-    * the fast kernel collects the query batch (loud maxQueryBatch
+    * which [[searchFlat]] over a query DataFrame delegates to the shard
+    * top-k kernel ([[searchFlatFast]]) instead of the row-per-(row,
+    * query) broadcast join. Results are bit-identical (spec-pinned);
+    * this is purely a plan-cost switch, like the packed coded scan —
+    * but note the kernel collects the query batch (loud maxQueryBatch
     * cap). 0 disables; set to 1 to force (specs). Default 1 GiB: below
     * that the row join's overhead is bounded and declarative planning
-    * (pushdown, AQE) is worth keeping. Like every Knn conf, a
-    * non-integer or negative value throws naming the key. */
+    * (pushdown, AQE) is worth keeping. A batch already on the driver
+    * always takes the kernel. Like every Knn conf, a non-integer or
+    * negative value throws naming the key. */
   private[graft] val FastFlatThresholdConf = "spark.graft.knn.fastFlatThresholdBytes"
 
   /** Corpus-size ceiling (bytes, from optimizer plan stats) BELOW which
-    * [[searchFlat]] serves the whole batch DRIVER-LOCALLY: the corpus is
-    * materialized once per DataFrame instance (same contract as
-    * `.cache()` — a new DataFrame re-collects) and every subsequent
-    * batch is answered with the same TopKHeap + distArr kernels in
-    * driver memory, skipping Spark's ~0.2 s per-job plan/schedule/
-    * collect cost entirely. This is the serving shape the reference
-    * gets for free from an in-process FAISS index — at N = 2k the
-    * distributed scan pays 100x its compute in fixed job overhead.
-    * Results are bit-identical to the distributed plans (same kernels,
+    * [[searchFlat]] and the catalog's Flat paths serve the whole batch
+    * DRIVER-LOCALLY: the corpus is materialized once per DataFrame
+    * instance (same contract as `.cache()` — a new DataFrame
+    * re-collects) and every subsequent batch runs the Flat candidate
+    * function ([[flatCandidates]]) over that copy in-process, followed
+    * by the same merge as [[shardTopK]], skipping Spark's per-job
+    * plan/schedule/collect cost entirely. This is the serving shape the
+    * reference gets for free from an in-process FAISS index — at N = 2k
+    * the distributed scan pays 100x its compute in fixed job overhead.
+    * Results are bit-identical to the distributed plans (same function,
     * same deterministic (distance, label) heap order; parity-spec'd).
     * Default 0 = OFF: the distributed plan is the 100 TB default and
     * the gates exercise it; serving deployments with small/replica
@@ -54,13 +59,13 @@ object Knn {
   private[graft] val LocalServeThresholdConf = "spark.graft.knn.localServeThresholdBytes"
   private[graft] val LocalServeMaxRowsConf = "spark.graft.knn.localServeMaxRows"
 
-  // driver-resident corpora keyed by the DataFrame's QueryExecution —
-  // which does NOT override equals, so WeakHashMap's equals/hashCode
+  // driver-resident [[flatRows]] corpora keyed by the DataFrame's
+  // QueryExecution — which does NOT override equals, so WeakHashMap's
   // lookup degenerates to reference identity (a structurally-equal but
   // distinct DataFrame re-collects; no deep plan hashing per lookup)
   // and the entry lives exactly as long as the serving DataFrame does
   private val localCorpora = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[AnyRef, (Array[Long], Array[Array[Float]])]())
+    new java.util.WeakHashMap[AnyRef, Array[InternalRow]]())
 
   /** widen CPU-bound narrow scans to the session parallelism (no-op on
     * real multi-split inputs) — shared by the search paths and the
@@ -102,19 +107,44 @@ object Knn {
       k: Int,
       metric: String,
       excludeSelf: Boolean = false,
-      padToK: Boolean = false): DataFrame =
-    // null query rows carry no meaningful identity or vector; every
-    // path drops them (keeps fast/local/declarative outputs identical)
-    flatPlan(data, queries.where(col("qid").isNotNull && col("qvec").isNotNull),
-      collectBatch(queries), k, metric, excludeSelf, padToK)
+      padToK: Boolean = false): DataFrame = {
+    // the batch is collected only by the driver-side routes (at most once)
+    lazy val batch = collectBatch(queries)
+    searchFlatLocal(data, batch, k, metric, excludeSelf, padToK).getOrElse {
+      val packThresh = graft.index.IndexCatalog.confLong(data.sparkSession, FastFlatThresholdConf, 1L << 30)
+      if (packThresh > 0 && knownSize(data).exists(_ >= packThresh)) {
+        // big-corpus path. Measured at the 1000x rung (1e10 pairs,
+        // knn_flat_big): the row join pays ~0.46 us/output-row of join
+        // plumbing plus as much again in the per-pair aggregate (412 s);
+        // a chunk-packed ListTopKScan re-serialized the corpus (215 s for
+        // the pack alone) and was rejected. The kernel touches each row
+        // once; same kernels and heap order -> bit-identical (spec'd).
+        searchFlatFast(data, batch, k, metric, excludeSelf = excludeSelf, padToK = padToK)
+      } else {
+        // null query rows carry no meaningful identity or vector; every
+        // path drops them (keeps fast/local/declarative outputs identical)
+        val cleanQueries = queries.where(col("qid").isNotNull && col("qvec").isNotNull)
+        val d = vec.dist(metric, col("vec"), col("qvec"))
+        val joined = widen(data).crossJoin(broadcast(cleanQueries))
+        val filtered = if (excludeSelf) joined.where(col("label") =!= col("qid")) else joined
+        // distance materializes in a codegen'd projection (fused loop inside
+        // WholeStageCodegen); the aggregate then only reads plain columns
+        rankResults(
+          filtered.select(col("qid"), col("label"), d.as("_dist")),
+          k, VectorMath.smallerIsCloser(VectorMath.metricId(metric)), padToK)
+      }
+    }
+  }
 
-  /** [[searchFlat]] over an already-collected query batch: the catalog's
-    * Flat paths, whose declarative plan reads the batch's local view */
+  /** [[searchFlat]] over an already-collected query batch (the catalog's
+    * Flat paths): the driver-local serve when it is on and admits the
+    * corpus, else the shard top-k kernel — a batch already on the driver
+    * gains nothing from the row join */
   private[graft] def searchFlatBatch(
       data: DataFrame, batch: Array[(Long, Array[Float])], k: Int, metric: String,
       padToK: Boolean): DataFrame =
-    flatPlan(data, queryFrame(data.sparkSession, batch), batch, k, metric,
-      excludeSelf = false, padToK)
+    searchFlatLocal(data, batch, k, metric, excludeSelf = false, padToK)
+      .getOrElse(searchFlatFast(data, batch, k, metric, padToK = padToK))
 
   /** a (qid, qvec) DataFrame's batch, under the serving paths' one
     * bounded collect — for the kernels that read the batch on the driver */
@@ -130,110 +160,108 @@ object Knn {
     batch.toSeq.toDF("qid", "qvec")
   }
 
-  /** the flat plan router: driver-local serve, the partition-heap kernel
-    * or the declarative broadcast join, by the corpus's plan stats. The
-    * batch is read only by the first two (at most once). */
-  private def flatPlan(
-      data: DataFrame, cleanQueries: DataFrame, batch: => Array[(Long, Array[Float])],
-      k: Int, metric: String, excludeSelf: Boolean, padToK: Boolean): DataFrame = {
-    val asc = VectorMath.smallerIsCloser(VectorMath.metricId(metric))
-    val spark = data.sparkSession
-    val packThresh = graft.index.IndexCatalog.confLong(spark, FastFlatThresholdConf, 1L << 30)
-    val localThresh = graft.index.IndexCatalog.confLong(spark, LocalServeThresholdConf, 0L)
+  /** the corpus's plan-stats size; None for a plan with no stats (a
+    * LogicalRDD reports the defaultSizeInBytes sentinel): UNKNOWN, not
+    * huge, so tiny RDD-backed corpora keep the lazy row join */
+  private def knownSize(data: DataFrame): Option[BigInt] = {
     val sizeEst = data.queryExecution.optimizedPlan.stats.sizeInBytes
-    // plans with no stats (e.g. LogicalRDD from createDataFrame(rdd))
-    // report spark.sql.defaultSizeInBytes = Long.MaxValue — treat that
-    // as UNKNOWN, not huge, or tiny RDD-backed corpora would route to
-    // the eager fast path and its maxQueryBatch driver-collect cap
-    val sizeKnown = sizeEst != BigInt(spark.sessionState.conf.defaultSizeInBytes)
-    lazy val qArr = batch
-    val localServed =
-      if (localThresh > 0 && sizeKnown && sizeEst <= localThresh)
-        searchFlatLocal(data, qArr, k, metric, excludeSelf, padToK)
-      else None
-    localServed.getOrElse {
-      if (packThresh > 0 && sizeKnown && sizeEst >= packThresh) {
-        // big-corpus path: delegate to the partition-local-heap kernel.
-        // Measured at the 1000x rung (1e10 pairs, knn_flat_big): the
-        // row-per-pair broadcast join pays ~0.46 us/output-row of join
-        // plumbing (145 s) plus as much again in the per-pair aggregate
-        // (412 s total); a chunk-packed ListTopKScan variant was tried
-        // and REJECTED by measurement — materializing array<struct>
-        // chunk rows re-serializes the whole corpus through UnsafeRow
-        // writers at the RDD-scan boundary (215 s for the pack pass
-        // alone; a Dataset-encoder pack was 368 s). The per-partition
-        // heap kernel touches each corpus row once with zero
-        // materialization beyond partitions x Q x k heap entries.
-        // Same distance kernels, same TopKHeap order -> bit-identical
-        // (parity spec + the long-standing fast==declarative spec).
-        searchFlatFast(data, qArr, k, metric, excludeSelf = excludeSelf, padToK = padToK)
-      } else {
-        val d = vec.dist(metric, col("vec"), col("qvec"))
-        val joined = widen(data).crossJoin(broadcast(cleanQueries))
-        val filtered = if (excludeSelf) joined.where(col("label") =!= col("qid")) else joined
-        // distance materializes in a codegen'd projection (fused loop inside
-        // WholeStageCodegen); the aggregate then only reads plain columns
-        rankResults(
-          filtered.select(col("qid"), col("label"), d.as("_dist")),
-          k, asc, padToK)
-      }
-    }
+    Some(sizeEst).filter(_ != BigInt(data.sparkSession.sessionState.conf.defaultSizeInBytes))
   }
 
-  /**
-   * Driver-local flat serve (see [[LocalServeThresholdConf]]): answer
-   * the query batch from a one-time driver copy of a SMALL corpus with
-   * the exact kernels and heap order of the distributed plans. Returns
-   * None (caller falls through to the distributed plan, loudly) when
-   * the corpus exceeds the row cap — the stats estimate that routed us
-   * here was wrong, and driver memory is a hard boundary.
-   */
+  /** the Flat kernel's input rows: (label bigint, vec array<float>) */
+  private def flatRows(data: DataFrame): DataFrame =
+    data.select(col("label").cast("long").as("label"), vec.vector(col("vec")).as("vec"))
+
+  /** Driver-local flat serve (see [[LocalServeThresholdConf]]):
+    * [[flatCandidates]] run in-process over a one-time driver copy of a
+    * SMALL corpus, then the [[shardTopK]] merge. None (a distributed
+    * plan runs) when the serve is off or does not admit the corpus, and
+    * (loudly) past the row cap: driver memory is a hard boundary. */
   private def searchFlatLocal(
-      data: DataFrame, qArr: Array[(Long, Array[Float])], k: Int, metric: String,
+      data: DataFrame, batch: => Array[(Long, Array[Float])], k: Int, metric: String,
       excludeSelf: Boolean, padToK: Boolean): Option[DataFrame] = {
     val spark = data.sparkSession
-    val mid = VectorMath.metricId(metric)
-    val asc = VectorMath.smallerIsCloser(mid)
+    val localThresh = graft.index.IndexCatalog.confLong(spark, LocalServeThresholdConf, 0L)
+    if (localThresh == 0 || !knownSize(data).exists(_ <= localThresh)) return None
     val key = data.queryExecution
     var corpus = localCorpora.get(key)
     if (corpus == null) {
       val maxRows = graft.index.IndexCatalog.confLong(spark, LocalServeMaxRowsConf, 1L << 20)
       // clamp so the +1 below can't overflow to a negative limit
       val cap = math.min(maxRows, Int.MaxValue - 1L).toInt
-      val rows = data
-        .where(col("label").isNotNull && col("vec").isNotNull) // fast path skips null rows
-        .select(col("label").cast("long"), vec.vector(col("vec")))
-        .limit(cap + 1)
-        .collect()
-      if (rows.length > cap) {
+      corpus = GraftBridge.collectInternal(flatRows(
+          data.where(col("label").isNotNull && col("vec").isNotNull)) // null rows never count
+        .limit(cap + 1))._2
+      if (corpus.length > cap) {
         System.err.println(
           s"[graft] local-serve corpus exceeds $LocalServeMaxRowsConf=$cap rows; " +
             "falling back to the distributed plan")
         return None
       }
-      corpus = (rows.map(_.getLong(0)), rows.map(_.getSeq[Float](1).toArray))
       localCorpora.put(key, corpus)
     }
-    val (labels, vecs) = corpus
-    // one heap per distinct qid, as rankResults groups by qid: a qid
-    // repeated with another vector gets one merged top-k
-    val qids = qArr.map(_._1).distinct
-    val slotOf = { val slot = qids.zipWithIndex.toMap; qArr.map(e => slot(e._1)) }
-    val heaps = Array.fill(qids.length)(new TopKHeap(k, asc))
-    val offered = new Array[Boolean](qids.length)
-    qArr.indices.foreach { qi =>
-      val (qid, qv) = qArr(qi)
-      val slot = slotOf(qi)
-      var i = 0
-      while (i < labels.length) {
-        if (!(excludeSelf && labels(i) == qid)) {
-          heaps(slot).insert(VectorMath.distArr(mid, vecs(i), qv, 3.0), labels(i))
-          offered(slot) = true
+    val qs = batch
+    Some(mergeTopK(spark, qs, k, VectorMath.smallerIsCloser(VectorMath.metricId(metric)), padToK,
+      flatCandidates(metric, k, excludeSelf)(corpus.iterator, qs)))
+  }
+
+  /** The Flat kernel as a [[shardTopK]] candidate function over
+    * [[flatRows]]: one pass fills a top-k heap per batch entry, with the
+    * row join's distance kernels and (distance, label) order. An entry
+    * that scored rows but kept none (NaN distances, which the heap
+    * drops) yields one NaN candidate, as HNSW does, so that the merge
+    * pads it like the row join does. */
+  private[graft] def flatCandidates(metric: String, k: Int, excludeSelf: Boolean)
+      : (Iterator[InternalRow], Array[(Long, Array[Float])]) => Iterator[(Int, Double, Long)] = {
+    val mid = VectorMath.metricId(metric)
+    val asc = VectorMath.smallerIsCloser(mid)
+    (rows, qs) => {
+      val heaps = Array.fill(qs.length)(new TopKHeap(k, asc))
+      val offered = new Array[Boolean](qs.length)
+      rows.foreach { row =>
+        if (!row.isNullAt(0) && !row.isNullAt(1)) {
+          val label = row.getLong(0)
+          // UnsafeArrayData.toFloatArray is a single primitive copy
+          val v: Array[Float] = row.getArray(1).toFloatArray()
+          var qi = 0
+          while (qi < qs.length) {
+            val (qid, qv) = qs(qi)
+            if (!(excludeSelf && label == qid)) {
+              heaps(qi).insert(VectorMath.distArr(mid, v, qv, 3.0), label)
+              offered(qi) = true
+            }
+            qi += 1
+          }
         }
-        i += 1
+      }
+      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
+        if (h.size == 0 && offered(qi)) Iterator.single((qi, Double.NaN, -1L))
+        else h.sorted.iterator.map { case (d, l) => (qi, d, l) }
       }
     }
-    Some(localResults(spark, qids, heaps, offered, padToK))
+  }
+
+  /** The shard top-k route of HNSW's graph shards and the Flat kernel:
+    * `candidates` yields one shard's (batch entry, distance, label)
+    * candidates. Up to `IndexCatalog.localMergeBound` candidates
+    * (entries × k × shards) one job returns them and [[mergeTopK]]
+    * merges them on the driver; past it, the distributed [[rankResults]]
+    * ranks them when acted on. Both key a top-k by qid. */
+  private[graft] def shardTopK[S](
+      spark: SparkSession, shards: RDD[S], batch: Array[(Long, Array[Float])], k: Int,
+      ascending: Boolean, padToK: Boolean)(
+      candidates: (Iterator[S], Array[(Long, Array[Float])]) => Iterator[(Int, Double, Long)]): DataFrame = {
+    require(k > 0, "k must be positive")
+    val perShard = shards.mapPartitions(candidates(_, batch))
+    if (batch.length.toLong * k * shards.getNumPartitions > graft.index.IndexCatalog.localMergeBound(spark)) {
+      import spark.implicits._
+      val qids = batch.map(_._1)
+      rankResults(perShard.map { case (qi, d, l) => (qids(qi), l, d) }.toDF("qid", "label", "_dist"),
+        k, ascending, padToK)
+    } else {
+      val shardCands = spark.sparkContext.runJob(perShard, (it: Iterator[(Int, Double, Long)]) => it.toArray)
+      mergeTopK(spark, batch, k, ascending, padToK, shardCands.iterator.flatMap(_.iterator))
+    }
   }
 
   /** [[rankResults]]' output schema: (qid, rank, label, distance), none nullable */
@@ -241,27 +269,27 @@ object Knn {
     StructField("qid", LongType, nullable = false), StructField("rank", IntegerType, nullable = false),
     StructField("label", LongType, nullable = false), StructField("distance", DoubleType, nullable = false)))
 
-  /**
-   * The result frame of top-k heaps filled in driver memory (driver-local
-   * Flat serve, HNSW's shard merge): [[rankResults]]' rows and schema
-   * as a `LocalRelation`, so nothing is planned or run for it. As
-   * there, a query that was `offered` no candidate row emits no row,
-   * and `padToK` fills the list of one that was (even when the heap
-   * dropped them all, at NaN distances) to k with label -1 and the
-   * worst distance.
-   */
-  private[graft] def localResults(
-      spark: SparkSession, qids: Array[Long], heaps: Array[TopKHeap], offered: Array[Boolean],
-      padToK: Boolean): DataFrame = {
+  /** The driver merge: one [[TopKHeap]] per distinct qid, in `vec.topk`'s
+    * order, as [[rankResults]]' rows and schema in a `LocalRelation`. As
+    * there, a qid offered no candidate emits no row, and `padToK` fills
+    * one that was (even if every candidate was NaN) to k with label -1
+    * and the worst distance. */
+  private def mergeTopK(
+      spark: SparkSession, batch: Array[(Long, Array[Float])], k: Int, ascending: Boolean,
+      padToK: Boolean, cands: Iterator[(Int, Double, Long)]): DataFrame = {
+    val qids = batch.map(_._1).distinct
+    val slotOf = { val slot = qids.zipWithIndex.toMap; batch.map(e => slot(e._1)) }
+    val heaps = Array.fill(qids.length)(new TopKHeap(k, ascending))
+    val offered = new Array[Boolean](qids.length)
+    cands.foreach { case (qi, d, l) => heaps(slotOf(qi)).insert(d, l); offered(slotOf(qi)) = true }
+    val padDist = if (ascending) Double.MaxValue else Double.MinValue
     val rows = Seq.newBuilder[InternalRow]
-    qids.indices.foreach { qi =>
-      val h = heaps(qi)
-      val sorted = h.sorted
-      val padDist = if (h.ascending) Double.MaxValue else Double.MinValue
-      val n = if (padToK && offered(qi)) h.k else sorted.length
+    qids.indices.foreach { s =>
+      val sorted = heaps(s).sorted
+      val n = if (padToK && offered(s)) k else sorted.length
       (0 until n).foreach { rank =>
-        rows += (if (rank < sorted.length) InternalRow(qids(qi), rank, sorted(rank)._2, sorted(rank)._1)
-          else InternalRow(qids(qi), rank, -1L, padDist))
+        rows += (if (rank < sorted.length) InternalRow(qids(s), rank, sorted(rank)._2, sorted(rank)._1)
+          else InternalRow(qids(s), rank, -1L, padDist))
       }
     }
     GraftBridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(resultSchema), rows.result()))
@@ -369,14 +397,14 @@ object Knn {
   }
 
   /**
-   * Partition-local-heap exact search: same math, same heap, same
-   * (dist, label) tie-breaks as [[searchFlat]] — the knn_join oracle
-   * gates their equality — but the QxN pair loop runs over primitive
-   * arrays inside mapPartitions instead of materializing QxN join rows
-   * through an aggregate (~10x less per-pair overhead). Shuffle volume
-   * is identical: partitions x Q x k heap entries into the final merge.
-   * `qArr` is a collected query batch ([[collectBatch]] for a (qid,
-   * qvec) DataFrame); it is broadcast to every partition.
+   * Partition-local-heap exact search, the Flat case of [[shardTopK]]:
+   * same math, heap and (dist, label) tie-breaks as [[searchFlat]]'s row
+   * join (the knn_join oracle gates their equality), but the QxN pair
+   * loop runs over primitive arrays ([[flatCandidates]]) instead of QxN
+   * join rows through an aggregate (~10x less per-pair overhead). The
+   * scan reads InternalRows, not `.rdd`, whose Row conversion boxes every
+   * vector (minutes at 1e8 rows). `qArr` is a collected query batch
+   * ([[collectBatch]] for a (qid, qvec) DataFrame).
    */
   def searchFlatFast(
       data: DataFrame,
@@ -384,41 +412,8 @@ object Knn {
       k: Int,
       metric: String,
       excludeSelf: Boolean = false,
-      padToK: Boolean = false): DataFrame = {
-    val spark = data.sparkSession
-    import spark.implicits._
-    val mid = VectorMath.metricId(metric)
-    val asc = VectorMath.smallerIsCloser(mid)
-    val qB = spark.sparkContext.broadcast(qArr)
-    // InternalRow scan, not .rdd: the external-Row conversion decodes
-    // every vector into boxed Seq[Float] ONCE PER CORPUS ROW — at the
-    // 1000x rung (1e8 rows) that decode tax is minutes;
-    // UnsafeArrayData.toFloatArray is a single primitive copy.
-    val scan = widen(data)
-      .select(col("label").cast("long").as("label"), vec.vector(col("vec")).as("vec"))
-    val perPartitionRdd = scan.queryExecution.toRdd.mapPartitions { it =>
-      val qs = qB.value
-      val heaps = Array.fill(qs.length)(new TopKHeap(k, asc))
-      it.foreach { row =>
-        if (!row.isNullAt(0) && !row.isNullAt(1)) {
-          val label = row.getLong(0)
-          val v: Array[Float] = row.getArray(1).toFloatArray()
-          var qi = 0
-          while (qi < qs.length) {
-            val (qid, qv) = qs(qi)
-            if (!(excludeSelf && label == qid)) {
-              heaps(qi).insert(VectorMath.distArr(mid, v, qv, 3.0), label)
-            }
-            qi += 1
-          }
-        }
-      }
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        val qid = qs(qi)._1
-        h.sorted.iterator.map { case (d, l) => (qid, l, d) }
-      }
-    }
-    val perPartition = spark.createDataFrame(perPartitionRdd).toDF("qid", "label", "_dist")
-    rankResults(perPartition, k, asc, padToK)
-  }
+      padToK: Boolean = false): DataFrame =
+    shardTopK(data.sparkSession, flatRows(widen(data)).queryExecution.toRdd, qArr, k,
+      VectorMath.smallerIsCloser(VectorMath.metricId(metric)), padToK)(
+      flatCandidates(metric, k, excludeSelf))
 }

@@ -247,8 +247,9 @@ object FaissSearchStrategy extends SparkStrategy {
  *     local child is joined on the driver (its collect runs only the
  *     search's jobs); any other child is mapped partition by partition
  *     against a broadcast vector → list map.
- * A row whose vector has a null element matches no searched vector (the
- * search reads the element as 0.0), so its list is empty.
+ * A vector with a null element equals no vector the search could read,
+ * so it is left out of the batch (it counts toward neither the cap nor
+ * the distinct vectors) and its rows get an empty list, as null rows do.
  */
 case class FaissSearchExec(
     call: FaissSearchCall, result: Attribute, projectList: Seq[NamedExpression], child: SparkPlan)
@@ -291,7 +292,8 @@ case class FaissSearchExec(
     val rows = child.executeCollect()
     val vec = BindReferences.bindReference(queryVector, child.output)
     val vectors = rows.map { r =>
-      Option(vec.eval(r).asInstanceOf[ArrayData]).map(a => FaissSearchExec.vectorKey(a) -> a)
+      Some(vec.eval(r).asInstanceOf[ArrayData]).filter(FaissSearchExec.searchable)
+        .map(a => FaissSearchExec.vectorKey(a) -> a)
     }
     val distinct = scala.collection.mutable.LinkedHashMap.empty[ArraySeq[Long], Array[Float]]
     vectors.foreach(_.foreach { case (key, a) => distinct.getOrElseUpdate(key, FaissSearchExec.searched(a)) })
@@ -317,7 +319,7 @@ case class FaissSearchExec(
     val vec = queryVector
     val vectors = child.execute().mapPartitions { it =>
       val p = UnsafeProjection.create(Seq(Literal(0L), vec), in)
-      it.map(p)
+      it.map(p).filter(r => FaissSearchExec.searchable(r.getArray(1)))
     }
     val schema = StructType(Seq(StructField("qid", LongType), StructField("qvec", ArrayType(FloatType))))
     val batch = IndexCatalog.queryBatch(
@@ -337,7 +339,7 @@ case class FaissSearchExec(
       it.map { r =>
         queryRows += 1
         val a = v.eval(r).asInstanceOf[ArrayData]
-        val list = if (a == null) FaissSearchExec.Empty
+        val list = if (!FaissSearchExec.searchable(a)) FaissSearchExec.Empty
           else lists.value.getOrElse(FaissSearchExec.vectorKey(a), FaissSearchExec.Empty)
         proj(joined(r, InternalRow(list)))
       }
@@ -399,18 +401,19 @@ object FaissSearchExec {
   private val BatchName = "faiss_search query batch"
   private val Empty: ArrayData = new GenericArrayData(Array.empty[Any])
 
-  /** a query vector's equality key: -0.0 counts as 0.0, every NaN as
-    * one value, and a null element as a value of its own — the way
-    * Spark's `distinct` and join keys group vectors */
+  /** a vector the search can read: not null, with no null element */
+  private def searchable(a: ArrayData): Boolean = a != null && !(0 until a.numElements()).exists(a.isNullAt)
+
+  /** a [[searchable]] query vector's equality key: -0.0 counts as 0.0
+    * and every NaN as one value — the way Spark's `distinct` and join
+    * keys group vectors */
   private[sql] def vectorKey(a: ArrayData): ArraySeq[Long] =
     ArraySeq.unsafeWrapArray(Array.tabulate(a.numElements()) { i =>
-      if (a.isNullAt(i)) Long.MinValue
-      else { val x = a.getFloat(i); java.lang.Float.floatToIntBits(if (x == 0f) 0f else x).toLong }
+      val x = a.getFloat(i); java.lang.Float.floatToIntBits(if (x == 0f) 0f else x).toLong
     })
 
-  /** the vector the search reads for `a`: normalized as [[vectorKey]]
-    * groups it, a null element read as 0.0 */
+  /** the vector the search reads for `a`: normalized as [[vectorKey]] groups it */
   private def searched(a: ArrayData): Array[Float] = Array.tabulate(a.numElements()) { i =>
-    if (a.isNullAt(i)) 0f else { val x = a.getFloat(i); if (x.isNaN) Float.NaN else if (x == 0f) 0f else x }
+    val x = a.getFloat(i); if (x.isNaN) Float.NaN else if (x == 0f) 0f else x
   }
 }

@@ -225,6 +225,22 @@ class KnnSpec extends SparkSpec {
     assert(res.length === 2)
   }
 
+  test("a NaN query under pad: the kernel, the row join and the local serve each pad it to k") {
+    import spark.implicits._
+    val queries = Seq((0L, Array(0.2f, 0.0f)), (1L, Array(Float.NaN, 1.0f))).toDF("qid", "qvec")
+    val rowJoin = Knn.searchFlat(data.repartition(3), queries, 3, "l2sq", padToK = true)
+      .collect().map(_.toString).sorted.toSeq
+    val kernel = Knn.searchFlatFast(data.repartition(3), Knn.collectBatch(queries), 3, "l2sq", padToK = true)
+      .collect().map(_.toString).sorted.toSeq
+    spark.conf.set(Knn.LocalServeThresholdConf, Long.MaxValue.toString)
+    val local = try Knn.searchFlat(data, queries, 3, "l2sq", padToK = true).collect().map(_.toString).sorted.toSeq
+      finally spark.conf.unset(Knn.LocalServeThresholdConf)
+    assert(rowJoin.filter(_.startsWith("[1,")) ===
+      (0 until 3).map(r => s"[1,$r,-1,${Double.MaxValue}]"))
+    assert(kernel === rowJoin, "kernel")
+    assert(local === rowJoin, "local serve")
+  }
+
   test("partition-local fast path equals the declarative path exactly") {
     import spark.implicits._
     val queries = Seq((0L, Array(0.2f, 3.0f)), (1L, Array(7.7f, 7.7f))).toDF("qid", "qvec")
