@@ -2,9 +2,10 @@ package graft.index
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -13,13 +14,13 @@ import org.apache.spark.sql.types._
  * `SQ8|SQ4|SQfp16`, `RQ<m>x8` and `LSQ<m>x8` factory indexes that is
  * not the coarse quantizer. A [[CodecSpec]] is the parsed factory
  * token; training it yields a [[Codec]], the typed trained state. The
- * coded layout, coarse probing, packed scan, re-rank, append and
- * save/load plumbing is codec-independent ([[IndexCatalog.CodedBuilt]]).
+ * coded layout, coarse probing, re-rank, append and save/load plumbing
+ * is codec-independent ([[IndexCatalog.CodedBuilt]]).
  *
  * Every codec method delegates to the static kernels of Pq, Sq, Rq and
- * Lsq, and the row plan ([[CodedDistance]]) and the packed scan
- * ([[CodedTopKScan]]) score through the same [[CodedScorer]], so codes
- * and distances are bit-identical across plans.
+ * Lsq. A search scores codes through one [[CodedScorer]], the probed-list
+ * kernel's ([[graft.search.Knn.probedCandidates]]) view of a codec, so a
+ * filtered and an unfiltered search rank by the same distances.
  */
 sealed trait CodecSpec {
   def train(pts: Array[Array[Float]], seed: Long): Codec
@@ -229,23 +230,25 @@ final case class SqCodec(vmin: Array[Float], vdiff: Array[Float], variant: Sq.Va
 }
 
 /**
- * One query batch's code scoring: `forQuery` runs once per (code
- * source, query) — a LUT or query-vector lookup — and `score` once per
- * code, always after a `forQuery` on the same instance. The packed scan
- * calls it per code of a chunk's contiguous buffer, the row plan per
- * code row. Instances are deserialized per task, so the decode scratch
- * needs no locking.
+ * One query batch's code scoring, as the probed-list kernel reads it:
+ * a row's code (column 2) once per row, each batch entry's prepared
+ * state — its qid's LUT or query vector — once per task, and `distance`
+ * once per (code, entry), always after a `state` on the same instance.
+ * Instances are deserialized per task, so the decode scratch needs no
+ * locking.
  */
-final class CodedScorer(codec: Codec, prepared: Map[Long, Array[Float]]) extends Serializable {
+final class CodedScorer(codec: Codec, prepared: Map[Long, Array[Float]])
+    extends graft.search.Knn.ListScore[Array[Byte]] {
   // task-local scratch for the RQ/LSQ additive decode: avoids a
-  // dim-length allocation PER CANDIDATE in the scan loops
+  // dim-length allocation PER CANDIDATE in the scan loop
   @transient private var scratch: Array[Float] = _
-  def forQuery(qid: Long): Array[Float] = {
+  def payload(row: InternalRow): Array[Byte] = row.getBinary(2)
+  def state(entry: (Long, Array[Float])): Array[Float] = {
     if (scratch == null) scratch = new Array[Float](codec.scratchLen)
-    prepared(qid)
+    prepared(entry._1)
   }
-  def score(ctx: Array[Float], codes: Array[Byte], off: Int, width: Int): Double =
-    codec.distance(ctx, codes, off, width, scratch)
+  def distance(ctx: Array[Float], code: Array[Byte]): Double =
+    codec.distance(ctx, code, 0, code.length, scratch)
 }
 
 /** encode an array<float> vector to its codec code */
@@ -284,29 +287,4 @@ case class CodecDecode(child: Expression, codec: Codec)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** row-plan code distance: (code binary, qid bigint) -> approximate L2²
-  * against the plan-embedded query batch (bounded by the search contract,
-  * like a FAISS query batch) */
-case class CodedDistance(left: Expression, right: Expression, scorer: CodedScorer)
-    extends BinaryExpression
-    with CodegenFallback {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "coded_distance"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"coded_distance needs (binary, bigint), got (${l.catalogString}, ${r.catalogString})")
-    }
-
-  override protected def nullSafeEval(code: Any, qid: Any): Any = {
-    val c = code.asInstanceOf[Array[Byte]]
-    scorer.score(scorer.forQuery(qid.asInstanceOf[Long]), c, 0, c.length)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

@@ -204,8 +204,8 @@ object IndexCatalog {
     def searchRestricted(
         batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
         restrict: DataFrame => DataFrame): DataFrame =
-      Knn.searchFlatBatch(
-        restrict(flatData).select(col("label"), col("vec")), batch, k, meta.metric, padOf(params))
+      Knn.searchFlatFast(
+        restrict(flatData).select(col("label"), col("vec")), batch, k, meta.metric, padToK = padOf(params))
 
     /**
      * Range search (FAISS `range_search`): ALL neighbors within
@@ -919,11 +919,13 @@ object IndexCatalog {
 
   /**
    * faiss_search twin: top-k per query row. The query batch is
-   * collected and dim-checked at the call. On HNSW and Flat the search
-   * job runs at the call too (its errors surface here) and the result
-   * is a local frame, unless the batch's shard candidates pass
-   * [[localMergeBound]]; other kinds, and such a batch, return the
-   * search plan, run when acted on.
+   * collected and dim-checked at the call. On HNSW, Flat, IVF (IVF_HNSW,
+   * IMI) and coded indexes the search job runs at the call too (its
+   * errors surface here): HNSW, Flat and IVF return a local frame, and a
+   * coded index returns the exact re-rank of the candidates it found.
+   * A batch whose shard candidates pass [[localMergeBound]] returns the
+   * distributed ranking instead, and LSH returns its search plan; both
+   * run when acted on.
    * @param queries (qid bigint, qvec array<float>)
    * @return (qid, rank, label, distance)
    */
@@ -1055,7 +1057,7 @@ object IndexCatalog {
         case pca: PcaBuilt => pca.project(batch)
         case _ => batch
       }
-      Knn.searchFlatBatch(b.flatData.where(filter), scanBatch, k, e.meta.metric, pad)
+      Knn.searchFlatFast(b.flatData.where(filter), scanBatch, k, e.meta.metric, padToK = pad)
         .withColumn("strategy", lit("prefilter_scan"))
     } else {
       val sel = matching.toDouble / total
@@ -1378,9 +1380,15 @@ object IndexCatalog {
     override def close(): Unit = inner.close()
   }
 
+  /** Flat: the driver-local serve when it is on and admits the corpus
+    * (keyed by this cached layout, so it collects once), else the shard
+    * top-k kernel. Filtered searches take the kernel over the restricted
+    * scan ([[BuiltIndex.searchRestricted]]): a per-call restricted frame
+    * would collect a new driver copy on every call. */
   final class FlatBuilt(val data: DataFrame, val meta: IndexMeta) extends BuiltIndex {
     def search(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String]): DataFrame =
-      Knn.searchFlatBatch(data, batch, k, meta.metric, padOf(params))
+      Knn.searchFlatLocal(data, batch, k, meta.metric, excludeSelf = false, padOf(params))
+        .getOrElse(Knn.searchFlatFast(data, batch, k, meta.metric, padToK = padOf(params)))
   }
 
   /** IVF, IVF_HNSW and IMI: raw vectors in the inverted lists of one
@@ -1422,92 +1430,35 @@ object IndexCatalog {
     /** IVF with the selector composed INSIDE the probe: the restriction
       * applies to the pruned-list scan, so a loose filter over a huge
       * corpus still reads only nprobe lists (vs the flat fallback that
-      * scans the whole filtered corpus). Exact at nprobe = nlist. */
+      * scans the whole filtered corpus). The probed-list kernel scores
+      * each scanned row against the entries that probe its list, in the
+      * one job of [[Knn.shardTopK]]. Exact at nprobe = nlist. */
     override def searchRestricted(
         batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
-        restrict: DataFrame => DataFrame): DataFrame =
-      Knn.rankResults(probedCandidates(batch, params, restrict), k,
-        VectorMath.smallerIsCloser(metricId), padOf(params))
+        restrict: DataFrame => DataFrame): DataFrame = {
+      val (lists, rows) = probedScan(data, Some(coarse), batch, params, restrict, "vec")
+      val asc = VectorMath.smallerIsCloser(metricId)
+      Knn.shardTopK(data.sparkSession, rows, batch, k, asc, padOf(params))(
+        Knn.probedCandidates(lists, k, asc, Knn.vectorScore(meta.metric)))
+    }
 
-    /** probed-list radius search: same list pruning as k-NN, the
-      * radius predicate replaces the top-k aggregate (so there is no
-      * shuffle at all — hits flow straight out of the probed scan).
-      * Exact at nprobe = nlist; below that, misses are confined to
-      * unprobed lists exactly as in FAISS's range_search on IVF. */
+    /** probed-list radius search: the same probed scan as k-NN, keeping
+      * every pair inside the radius instead of a top k (no heap, no
+      * shuffle; the plan runs when acted on). Exact at nprobe = nlist;
+      * below that, misses are confined to unprobed lists exactly as in
+      * FAISS's range_search on IVF. */
     override def searchRadius(
         batch: Array[(Long, Array[Float])], radius: Double, params: Map[String, String],
         restrict: DataFrame => DataFrame = identity): DataFrame = {
-      val cands = probedCandidates(batch, params, restrict)
-      val cmp =
-        if (VectorMath.smallerIsCloser(metricId)) col("_dist") < lit(radius)
-        else col("_dist") > lit(radius)
-      cands.where(cmp).select(col("qid"), col("label"), col("_dist").as("distance"))
-    }
-
-    /** shared probe machinery: (qid, label, _dist) candidate rows from
-      * the nprobe nearest lists per query */
-    private def probedCandidates(
-        batch: Array[(Long, Array[Float])], params: Map[String, String],
-        restrict: DataFrame => DataFrame): DataFrame = {
-      // probes derive driver-side from the collected batch: one batch
-      // feeds both the pruning filter and the join
+      val (lists, rows) = probedScan(data, Some(coarse), batch, params, restrict, "vec")
+      val within: Double => Boolean =
+        if (VectorMath.smallerIsCloser(metricId)) _ < radius else _ > radius
+      val hits = Knn.probedHits(lists, within, Knn.vectorScore(meta.metric))
+      val qids = batch.map(_._1)
       val spark = data.sparkSession
       import spark.implicits._
-      // probe with the SAME quantizer vectors were assigned with (an IP
-      // index probed by L2 would look in lists its vectors never joined)
-      val probeOne = probeOf(coarse, params)
-      val byQuery = batch.toSeq.map { case (qid, qv) => (qid, qv, probeOne(qv)) }
-      val d = vec.dist(meta.metric, col("vec"), col("qvec"))
-      def candidatesOf(group: Seq[(Long, Array[Float], Seq[Int])]): DataFrame = {
-        val probes = group
-          .flatMap { case (qid, qv, ls) => ls.map(l => (qid, qv.toSeq, l)) }
-          .toDF("qid", "qvec", "list_id")
-          .select(col("qid"), vec.vector(col("qvec")).as("qvec"), col("list_id"))
-        // the union of the group's probed lists becomes a STATIC IN
-        // filter: on a list-partitioned parquet layout (saved indexes)
-        // this is guaranteed partition pruning — unprobed lists are
-        // never read, the on-disk analog of FAISS scanning only nprobe
-        // inverted lists
-        val union = group.flatMap(_._3).distinct
-        val pruned =
-          if (union.size < coarse.nlist) data.where(col("list_id").isInCollection(union))
-          else data
-        restrict(pruned).join(broadcast(probes), "list_id")
-          .select(col("qid"), col("label"), d.as("_dist"))
-      }
-      // List-locality sub-batching (VERDICT r13 #2): a WIDE batch's
-      // probed-list union approaches every list (coupon collector:
-      // E[frac] = 1-(1-nprobe/nlist)^batch), so the single-scan plan
-      // reads the whole layout — per BATCH, which is still IO-optimal
-      // in total (each needed list is read exactly once; any correct
-      // engine must read the union). What the one-job plan cannot do
-      // is bound the per-scan working set. maxListsPerJob=L packs
-      // signature-sorted queries greedily into sub-batches whose union
-      // stays <= L and gives each its own pruned scan: clustered query
-      // loads collapse to their hot lists per scan, and a uniform load
-      // degrades gracefully (total records = sum of sub-unions, never
-      // less than the single union — pick L for the SLO, not for
-      // throughput). Off by default.
-      val subCap = Option.when(params.contains("maxListsPerJob"))(
-        positiveIntParam(params, "maxListsPerJob", 0))
-      subCap match {
-        case Some(cap) if byQuery.flatMap(_._3).distinct.size > cap =>
-          // sort by probed-list signature so overlapping sets pack
-          // into the same sub-batch before the union cap fires
-          val sorted = byQuery.sortBy(_._3.sorted.mkString(","))
-          val groups = scala.collection.mutable.ArrayBuffer(
-            scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Float], Seq[Int])])
-          val curUnion = scala.collection.mutable.Set.empty[Int]
-          sorted.foreach { q =>
-            val grown = curUnion ++ q._3
-            if (grown.size > cap && curUnion.nonEmpty) {
-              groups += scala.collection.mutable.ArrayBuffer(q)
-              curUnion.clear(); curUnion ++= q._3
-            } else { groups.last += q; curUnion ++= q._3 }
-          }
-          groups.map(g => candidatesOf(g.toSeq)).reduce(_ unionByName _)
-        case _ => candidatesOf(byQuery)
-      }
+      rows.mapPartitions(hits(_, batch)).map { case (qi, d, l) => (qids(qi), l, d) }
+        .toDF("qid", "label", "distance")
     }
   }
 
@@ -1523,10 +1474,37 @@ object IndexCatalog {
     }
   }
 
-  /** the lists one query probes at the search's nprobe (default nlist / 8),
-    * shared by IVF and coded indexes */
-  private def probeOf(coarse: Coarse, params: Map[String, String]): Array[Float] => Seq[Int] =
-    coarse.probe(positiveIntParam(params, "nprobe", math.max(1, coarse.nlist / 8)))
+  /**
+   * The shard input and probe table of an IVF or coded search: the lists
+   * each batch entry probes at the search's nprobe (default nlist / 8;
+   * without a coarse quantizer every entry probes the one list 0), and
+   * the InternalRow scan of (list_id, label, `payload`) rows of
+   * `restrict(pruned)`. `pruned` is `layout` under a STATIC `list_id IN`
+   * filter of the probed lists' union: on a list-partitioned saved layout
+   * unprobed lists are never read (the on-disk analog of FAISS scanning
+   * only nprobe inverted lists), and a cached one skips their batches.
+   */
+  private def probedScan(
+      layout: DataFrame, coarse: Option[Coarse], batch: Array[(Long, Array[Float])],
+      params: Map[String, String], restrict: DataFrame => DataFrame, payload: String)
+      : (Array[Seq[Int]], org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
+    // probe with the SAME quantizer vectors were assigned with (an IP
+    // index probed by L2 would look in lists its vectors never joined)
+    val lists = coarse match {
+      case Some(c) =>
+        val probeOne = c.probe(positiveIntParam(params, "nprobe", math.max(1, c.nlist / 8)))
+        batch.map(e => probeOne(e._2))
+      case None => batch.map(_ => Seq(0))
+    }
+    val union = lists.flatten.distinct
+    val pruned =
+      if (coarse.exists(union.length < _.nlist)) layout.where(col("list_id").isInCollection(union))
+      else layout
+    val rows = restrict(pruned)
+      .select(col("list_id").cast("int"), col("label").cast("long"), col(payload))
+      .queryExecution.toRdd
+    (lists, rows)
+  }
 
   /** a param that must be a positive integer (nprobe, refine, efSearch,
     * maxIter, efConstruction, ...), or `default` when absent. FAISS
@@ -1556,7 +1534,7 @@ object IndexCatalog {
     * naming its key instead of at the first build or search */
   private def checkParams(params: Map[String, String]): Unit = {
     Seq("maxIter", "coarseEfSearch", "coarseEfConstruction", "efConstruction", "bands",
-      "nprobe", "refine", "efSearch", "maxListsPerJob").foreach(positiveIntParam(params, _, 1))
+      "nprobe", "refine", "efSearch").foreach(positiveIntParam(params, _, 1))
     seedOf(params)
     padOf(params)
     adaptiveCutoffOf(params)
@@ -1565,12 +1543,14 @@ object IndexCatalog {
   /**
    * Coded index (FAISS `[IVF<n>[_HNSW<m>],]PQ<m>|SQ8|SQ4|SQfp16|RQ<m>|LSQ<m>`):
    * vectors stored as fixed-width [[Codec]] codes in inverted lists
-   * (one list 0 without a coarse quantizer). Search scores codes against
-   * per-query state — ADC tables for PQ, decode-in-loop L2 for the
-   * scalar and additive codecs — keeps the top k x refine, then re-ranks
-   * those on the original vectors. L2 metric (FAISS convention). The
-   * re-rank vectors live in the base table and join back by label; the
-   * cached layout holds codes only.
+   * (one list 0 without a coarse quantizer). Search scans the probed
+   * lists' code rows with the probed-list kernel in one job at the call
+   * ([[Knn.shardTopK]]), scoring each code against per-query state — ADC
+   * tables for PQ, decode-in-loop L2 for the scalar and additive codecs —
+   * keeps the top k x refine per qid, then re-ranks those on the
+   * original vectors. L2 metric (FAISS convention). The re-rank vectors
+   * live in the base table and join back by label; the cached layout
+   * holds codes only.
    */
   final class CodedBuilt(
       val data: DataFrame, // (list_id int, label bigint, code binary) — codes only
@@ -1587,26 +1567,15 @@ object IndexCatalog {
       raw.select(col("label").cast("long").as("label"), vec.vector(col("vec")).as("vec"))
     override def flatData: DataFrame = vecData
 
-    @transient private var packedCache: DataFrame = _
-    private def packedItems: DataFrame = synchronized {
-      if (packedCache == null) packedCache = packCoded(data)
-      packedCache
-    }
-    private def dropPacked(): Unit =
-      synchronized { if (packedCache != null) { packedCache.unpersist(); packedCache = null } }
-
     /** Incremental append (same contract as IvfBuilt.appended): encode +
       * assign ONLY the new rows with the already-trained codec and
       * centroids (graph coarse included) and union with the cached coded
       * layout — O(batch) per micro-batch, identical to a rebuild because
       * encode/assign are pure functions of the pinned trained state.
       * `newRaw` is the full raw plan (old + batch) so exact re-rank sees
-      * appended vectors too. The packed chunk cache covers pre-append
-      * rows only, so it is dropped here and lazily rebuilt over the union
-      * on next search. */
+      * appended vectors too. */
     private[index] def appended(newRows: DataFrame, newRaw: DataFrame): CodedBuilt = {
       val newCoded = codedLayout(newRows, codec, coarse, repartitionLists = false)
-      dropPacked()
       new CodedBuilt(data.unionByName(newCoded), newRaw, meta, codec, coarse,
         if (cachedParts.isEmpty) Seq(data) else cachedParts, hasAppends = true)
     }
@@ -1620,79 +1589,24 @@ object IndexCatalog {
         vecData.localCheckpoint(true), meta, codec, coarse)
 
     def search(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String]): DataFrame =
-      doSearch(batch, k, params, None)
+      searchRestricted(batch, k, params, identity)
 
-    /** code scoring + re-rank over the restricted rows only: the selector
-      * joins the candidate source (probed lists or full coded scan),
-      * keeping compression + pruning instead of a flat fallback scan. */
+    /** probed lists (or the one list 0) of the restricted coded rows ->
+      * approximate per-code distance -> k x refine candidates per qid ->
+      * exact L2 re-rank on the original vectors. The candidates come from
+      * the probed-list kernel in the one job of [[Knn.shardTopK]], run at
+      * the call; the codes score through one [[CodedScorer]], so a
+      * selector keeps compression and pruning instead of a flat fallback
+      * scan. The re-rank is the plan returned, run when acted on. */
     override def searchRestricted(
-        batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
-        restrict: DataFrame => DataFrame): DataFrame =
-      doSearch(batch, k, params, Some(restrict))
-
-    /** probed lists (or the full coded scan) -> approximate per-code
-      * distance -> bounded k x refine heap -> exact L2 re-rank on the
-      * original vectors.
-      *
-      * Unrestricted searches scan PACKED chunk rows with
-      * [[CodedTopKScan]] instead of joining probed codes against the
-      * query batch: the row path pays join/aggregate overhead per
-      * (code, query) PAIR (~35 s of the 100x rung's 42 s IVF-PQ search at
-      * 100 queries x 2.5M probed codes), while the packed path's plan
-      * cardinality is chunk x query and the pair loop runs at memory
-      * speed. A row selector needs the row layout (chunks can't apply
-      * per-row predicates), so restricted searches take the row plan.
-      * Distances and (distance, label) tie-breaks are bit-identical (one
-      * [[CodedScorer]], same heap), so the exhaustive exact gates hold
-      * through either plan. */
-    private def doSearch(
         qArr: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
-        restrict: Option[DataFrame => DataFrame]): DataFrame = {
+        restrict: DataFrame => DataFrame): DataFrame = {
       val spark = raw.sparkSession
-      import spark.implicits._
-      val scorer = codec.scorer(qArr)
       val kk = k * positiveIntParam(params, "refine", 4)
-      // the union of probed lists across the query batch, a static IN
-      // filter on the coded scan (guaranteed partition pruning on a
-      // list-partitioned saved layout, same as IvfBuilt's probe path)
-      val probePairs = coarse.map { c =>
-        val probeOne = probeOf(c, params)
-        qArr.toSeq.flatMap { case (qid, qv) => probeOne(qv).map(l => (qid, l)) }
-      }
-      val cands = restrict match {
-        case None =>
-          // probes for the non-IVF case hit the single packed list 0
-          val probes = probePairs.map(_.toDF("qid", "list_id"))
-            .getOrElse(qArr.map(q => (q._1, 0)).toSeq.toDF("qid", "list_id"))
-          packedItems.join(broadcast(probes), "list_id")
-            .select(col("qid"), explode(GraftBridge.column(CodedTopKScan(
-              GraftBridge.expression(col("items")),
-              GraftBridge.expression(col("qid")), kk, scorer))).as("c"))
-            .select(col("qid"), col("c.label").as("label"), col("c.distance").as("_cd"))
-            .groupBy(col("qid"))
-            .agg(vec.topk(kk, col("_cd"), col("label"), ascending = true).as("nn"))
-            .select(col("qid"), explode(col("nn.label")).as("label"))
-        case Some(r) =>
-          val base = restrictCoded(r)
-          val candSource = (probePairs, coarse) match {
-            case (Some(pairs), Some(c)) =>
-              val probes = pairs.toDF("qid", "list_id")
-              val lists = pairs.map(_._2).distinct
-              val pruned =
-                if (lists.size < c.nlist) base.where(col("list_id").isInCollection(lists))
-                else base
-              pruned.join(broadcast(probes), "list_id")
-            case _ =>
-              base.crossJoin(broadcast(qArr.map(_._1).toSeq.toDF("qid")))
-          }
-          val codeDist = GraftBridge.column(CodedDistance(
-            GraftBridge.expression(col("code")), GraftBridge.expression(col("qid")), scorer))
-          candSource
-            .select(col("qid"), col("label"), codeDist.as("_code_dist"))
-            .groupBy(col("qid"))
-            .agg(vec.topk(kk, col("_code_dist"), col("label"), ascending = true).as("nn"))
-            .select(col("qid"), explode(col("nn.label")).as("label"))
-      }
+      val (lists, rows) = probedScan(data, coarse, qArr, params, restrictCoded(restrict), "code")
+      val cands = Knn.shardTopK(spark, rows, qArr, kk, ascending = true, padToK = false)(
+        Knn.probedCandidates(lists, kk, ascending = true, codec.scorer(qArr)))
+        .select(col("qid"), col("label"))
       // exact re-rank joins the BASE-TABLE vectors by label: the coded
       // layout caches codes only, so the raw `vec` never rides the list
       // shuffle or the cache. The candidate set is <= |q| x k x refine
@@ -1707,23 +1621,22 @@ object IndexCatalog {
         k, ascending = true, padToK = padOf(params))
     }
 
-    /** Apply a selector to the codes-only layout. The coded layout
+    /** A selector over the codes-only layout. The coded layout
       * carries (list_id, label, code); a predicate referencing `vec`
       * would fail analysis against it. Try the cheap label-side restrict
       * first; on an unresolved column, join the base-table vec back by
       * label, filter, and drop it — the extra join is paid only by
       * vec-referencing predicates. */
-    private def restrictCoded(restrict: DataFrame => DataFrame): DataFrame =
-      try restrict(data)
+    private def restrictCoded(restrict: DataFrame => DataFrame): DataFrame => DataFrame = coded =>
+      try restrict(coded)
       catch {
         case _: org.apache.spark.sql.AnalysisException =>
-          restrict(data.join(vecData, Seq("label"))).select(data.columns.map(col): _*)
+          restrict(coded.join(vecData, Seq("label"))).select(coded.columns.map(col): _*)
       }
 
     override def close(): Unit = {
       data.unpersist()
       cachedParts.foreach(_.unpersist())
-      dropPacked()
     }
   }
 
@@ -1734,7 +1647,7 @@ object IndexCatalog {
       data: DataFrame, codec: Codec, coarse: Option[Coarse],
       repartitionLists: Boolean = true): DataFrame = {
     // codes ONLY — no raw vectors. The re-rank stage joins the base
-    // table by label instead (CodedBuilt.doSearch), so the cached layout
+    // table by label instead (CodedBuilt.searchRestricted), so the cached layout
     // is m-byte codes (FAISS IVFPQ stores codes, not vectors): at the
     // 100x rung (10M-row bigData) this cut the per-index cache ~8x,
     // which was the difference between fitting and thrashing when
@@ -1753,65 +1666,6 @@ object IndexCatalog {
     }
   }
 
-  /** max codes per packed chunk row (bounds packed-row size; smaller
-    * corpora just emit fewer/smaller chunks) */
-  private val PackedChunkCodes = 65536
-
-  /** Pack a coded layout into (list_id, items array<struct<label,code>>)
-    * chunk rows, cached on the built index — every subsequent search
-    * scans chunks instead of joining code rows. NO shuffle and NO
-    * aggregation buffers: the coded layout is already partitioned by
-    * list_id, so each partition streams its rows into per-list primitive
-    * buffers and emits a packed row whenever one reaches the chunk
-    * bound (a collect_list groupBy held every (label, code) pair in
-    * boxed agg buffers simultaneously — an OOM at the 10M-vector rung).
-    * Chunk boundaries are partition-iteration-order dependent, which is
-    * fine: the per-chunk top-k merge is chunking-invariant (same global
-    * (distance, label) order regardless of how lists split). */
-  private def packCoded(coded: DataFrame): DataFrame = {
-    val spark = coded.sparkSession
-    import spark.implicits._
-    coded
-      .where(col("code").isNotNull) // row path skips null codes in nullSafeEval
-      .select(col("list_id"), col("label"), col("code"))
-      // lists are contiguous after the in-partition sort (spill-safe
-      // UnsafeExternalSorter), so the packer holds ONE open buffer at a
-      // time — peak heap is one chunk, not the partition
-      .sortWithinPartitions("list_id")
-      .as[(Int, Long, Array[Byte])]
-      .mapPartitions { it =>
-        new Iterator[(Int, Seq[(Long, Array[Byte])])] {
-          private val buf = new scala.collection.mutable.ArrayBuffer[(Long, Array[Byte])](256)
-          private var bufList = Int.MinValue
-          private var pending: (Int, Seq[(Long, Array[Byte])]) = _
-          private def fill(): Unit = {
-            while (pending == null && it.hasNext) {
-              val (list, label, code) = it.next()
-              if (list != bufList && buf.nonEmpty) {
-                pending = (bufList, buf.toSeq); buf.clear()
-              }
-              bufList = list
-              buf += ((label, code))
-              if (pending == null && buf.length >= PackedChunkCodes) {
-                pending = (bufList, buf.toSeq); buf.clear()
-              }
-            }
-            if (pending == null && buf.nonEmpty) {
-              pending = (bufList, buf.toSeq); buf.clear()
-            }
-          }
-          override def hasNext: Boolean = { fill(); pending != null }
-          override def next(): (Int, Seq[(Long, Array[Byte])]) = {
-            fill()
-            val r = pending; pending = null
-            r
-          }
-        }
-      }
-      .toDF("list_id", "items")
-      .cache()
-  }
-
   /** largest query batch a serving path will collect to the driver —
     * fail loudly instead of OOMing the driver on an unbounded query
     * set. Overridable per-session for tests / constrained drivers. */
@@ -1819,8 +1673,8 @@ object IndexCatalog {
   private[graft] val MaxQueryBatchConf = "spark.graft.index.maxQueryBatch"
 
   /** most shard candidates (queries × k × shards) a shard top-k request
-    * ([[Knn.shardTopK]]: HNSW's graph shards, the Flat kernel's
-    * partitions) sends to the driver to merge there: 2^20, or fewer when
+    * ([[Knn.shardTopK]]: HNSW's graph shards, the partitions of the Flat
+    * and probed-list kernels) sends to the driver to merge there: 2^20, or fewer when
     * `spark.driver.maxResultSize` (0: unlimited) leaves less than 128
     * bytes a candidate (a task result holds each as a boxed
     * (entry, distance, label) triple). Past it the shards' top-k are

@@ -15,11 +15,15 @@ import graft.functions.{vec, TopKHeap, VectorMath}
  * reference's `faiss_search` over a Flat index
  * (duckdb-faiss-ext README "faiss_search"; test/sql/faiss.test).
  *
- * A batch already on the driver (`knnJoin`, every catalog Flat path)
- * takes the shard top-k route ([[shardTopK]]): one job runs the Flat
- * kernel over each partition of the pruned scan and the driver merges
- * the partitions' top-k, with no shuffle. [[searchFlat]] over a query
- * DataFrame (and [[knnJoinGrouped]]) plans the row join instead:
+ * Every index search over a batch already on the driver ends in the
+ * shard top-k route ([[shardTopK]]): one job runs a per-shard candidate
+ * function and the driver merges the shards' top-k, with no shuffle.
+ * The candidate functions live here: the Flat kernel
+ * ([[flatCandidates]], for `knnJoin` and every catalog Flat path), the
+ * probed-list kernel of IVF and coded indexes ([[probedCandidates]],
+ * FAISS `search_preassigned`), and HNSW's graph walk (in the catalog).
+ * [[searchFlat]] over a query DataFrame (and [[knnJoinGrouped]]) plans
+ * the row join instead:
  *   scan -> BroadcastNestedLoopJoin against the query set
  *     -> fused codegen distance -> partial top-k heap per partition
  *     -> (shuffle: parts x Q x k rows) -> final top-k merge per qid
@@ -31,9 +35,9 @@ object Knn {
     * which [[searchFlat]] over a query DataFrame delegates to the shard
     * top-k kernel ([[searchFlatFast]]) instead of the row-per-(row,
     * query) broadcast join. Results are bit-identical (spec-pinned);
-    * this is purely a plan-cost switch, like the packed coded scan —
-    * but note the kernel collects the query batch (loud maxQueryBatch
-    * cap). 0 disables; set to 1 to force (specs). Default 1 GiB: below
+    * this is purely a plan-cost switch — but note the kernel collects
+    * the query batch (loud maxQueryBatch cap). 0 disables; set to 1 to
+    * force (specs). Default 1 GiB: below
     * that the row join's overhead is bounded and declarative planning
     * (pushdown, AQE) is worth keeping. A batch already on the driver
     * always takes the kernel. Like every Knn conf, a non-integer or
@@ -41,7 +45,7 @@ object Knn {
   private[graft] val FastFlatThresholdConf = "spark.graft.knn.fastFlatThresholdBytes"
 
   /** Corpus-size ceiling (bytes, from optimizer plan stats) BELOW which
-    * [[searchFlat]] and the catalog's Flat paths serve the whole batch
+    * [[searchFlat]] and a catalog Flat `search` serve the whole batch
     * DRIVER-LOCALLY: the corpus is materialized once per DataFrame
     * instance (same contract as `.cache()` — a new DataFrame
     * re-collects) and every subsequent batch runs the Flat candidate
@@ -64,7 +68,7 @@ object Knn {
   // lookup degenerates to reference identity (a structurally-equal but
   // distinct DataFrame re-collects; no deep plan hashing per lookup)
   // and the entry lives exactly as long as the serving DataFrame does
-  private val localCorpora = java.util.Collections.synchronizedMap(
+  private[graft] val localCorpora = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[AnyRef, Array[InternalRow]]())
 
   /** widen CPU-bound narrow scans to the session parallelism (no-op on
@@ -136,16 +140,6 @@ object Knn {
     }
   }
 
-  /** [[searchFlat]] over an already-collected query batch (the catalog's
-    * Flat paths): the driver-local serve when it is on and admits the
-    * corpus, else the shard top-k kernel — a batch already on the driver
-    * gains nothing from the row join */
-  private[graft] def searchFlatBatch(
-      data: DataFrame, batch: Array[(Long, Array[Float])], k: Int, metric: String,
-      padToK: Boolean): DataFrame =
-    searchFlatLocal(data, batch, k, metric, excludeSelf = false, padToK)
-      .getOrElse(searchFlatFast(data, batch, k, metric, padToK = padToK))
-
   /** a (qid, qvec) DataFrame's batch, under the serving paths' one
     * bounded collect — for the kernels that read the batch on the driver */
   private[graft] def collectBatch(queries: DataFrame): Array[(Long, Array[Float])] =
@@ -177,7 +171,7 @@ object Knn {
     * SMALL corpus, then the [[shardTopK]] merge. None (a distributed
     * plan runs) when the serve is off or does not admit the corpus, and
     * (loudly) past the row cap: driver memory is a hard boundary. */
-  private def searchFlatLocal(
+  private[graft] def searchFlatLocal(
       data: DataFrame, batch: => Array[(Long, Array[Float])], k: Int, metric: String,
       excludeSelf: Boolean, padToK: Boolean): Option[DataFrame] = {
     val spark = data.sparkSession
@@ -207,10 +201,8 @@ object Knn {
 
   /** The Flat kernel as a [[shardTopK]] candidate function over
     * [[flatRows]]: one pass fills a top-k heap per batch entry, with the
-    * row join's distance kernels and (distance, label) order. An entry
-    * that scored rows but kept none (NaN distances, which the heap
-    * drops) yields one NaN candidate, as HNSW does, so that the merge
-    * pads it like the row join does. */
+    * row join's distance kernels and (distance, label) order; entries
+    * report as [[heapCandidates]] says. */
   private[graft] def flatCandidates(metric: String, k: Int, excludeSelf: Boolean)
       : (Iterator[InternalRow], Array[(Long, Array[Float])]) => Iterator[(Int, Double, Long)] = {
     val mid = VectorMath.metricId(metric)
@@ -234,14 +226,98 @@ object Knn {
           }
         }
       }
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        if (h.size == 0 && offered(qi)) Iterator.single((qi, Double.NaN, -1L))
-        else h.sorted.iterator.map { case (d, l) => (qi, d, l) }
+      heapCandidates(heaps, offered)
+    }
+  }
+
+  /** each batch entry's heap as candidates, best first; an entry that
+    * scored rows but kept none (NaN distances, which the heap drops)
+    * yields one NaN candidate, as HNSW does, so that the merge pads it
+    * like the row join does */
+  private def heapCandidates(heaps: Array[TopKHeap], offered: Array[Boolean]): Iterator[(Int, Double, Long)] =
+    heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
+      if (h.size == 0 && offered(qi)) Iterator.single((qi, Double.NaN, -1L))
+      else h.sorted.iterator.map { case (d, l) => (qi, d, l) }
+    }
+
+  /** How the probed-list kernel reads one index kind's
+    * (list_id int, label bigint, payload) rows: `payload` reads a row's
+    * vector or code once, `state` a batch entry's query state once per
+    * task, and `distance` compares the two. */
+  private[graft] trait ListScore[P] extends Serializable {
+    def payload(row: InternalRow): P
+    def state(entry: (Long, Array[Float])): Array[Float]
+    def distance(state: Array[Float], payload: P): Double
+  }
+
+  /** IVF's [[ListScore]]: the row's raw vector against the query, with
+    * [[flatCandidates]]' distance kernels */
+  private[graft] def vectorScore(metric: String): ListScore[Array[Float]] = {
+    val mid = VectorMath.metricId(metric)
+    new ListScore[Array[Float]] {
+      def payload(row: InternalRow): Array[Float] = row.getArray(2).toFloatArray()
+      def state(entry: (Long, Array[Float])): Array[Float] = entry._2
+      def distance(q: Array[Float], v: Array[Float]): Double = VectorMath.distArr(mid, v, q, 3.0)
+    }
+  }
+
+  /** batch entries by the lists their probe holds (`lists(entry)`) */
+  private def entriesByList(lists: Array[Seq[Int]]): Map[Int, Array[Int]] =
+    lists.indices.flatMap(qi => lists(qi).map(_ -> qi)).groupMap(_._1)(_._2).map { case (l, qis) => l -> qis.toArray }
+
+  /** The probed-list kernel of IVF and coded indexes as a [[shardTopK]]
+    * candidate function (FAISS `IndexIVF::search_preassigned`): each
+    * (list_id, label, payload) row is scored only against the batch
+    * entries whose probe (`lists(entry)`) holds its list, into one top-k
+    * heap per entry, in `vec.topk`'s (distance, label) order. It keys on
+    * each row's list, not on the partition, so any restriction of the
+    * scan keeps it exact. Entries report as [[heapCandidates]] says. */
+  private[graft] def probedCandidates[P](lists: Array[Seq[Int]], k: Int, ascending: Boolean, score: ListScore[P])
+      : (Iterator[InternalRow], Array[(Long, Array[Float])]) => Iterator[(Int, Double, Long)] = {
+    val byList = entriesByList(lists)
+    (rows, qs) => {
+      val states = qs.map(score.state)
+      val heaps = Array.fill(qs.length)(new TopKHeap(k, ascending))
+      val offered = new Array[Boolean](qs.length)
+      rows.foreach { row =>
+        val qis = byList.getOrElse(row.getInt(0), null)
+        if (qis != null && !row.isNullAt(2)) {
+          val label = row.getLong(1)
+          val p = score.payload(row)
+          var i = 0
+          while (i < qis.length) {
+            val qi = qis(i)
+            heaps(qi).insert(score.distance(states(qi), p), label)
+            offered(qi) = true
+            i += 1
+          }
+        }
+      }
+      heapCandidates(heaps, offered)
+    }
+  }
+
+  /** [[probedCandidates]]' scan without a heap: every (entry, distance,
+    * label) pair whose distance `within` keeps (a range search) */
+  private[graft] def probedHits[P](lists: Array[Seq[Int]], within: Double => Boolean, score: ListScore[P])
+      : (Iterator[InternalRow], Array[(Long, Array[Float])]) => Iterator[(Int, Double, Long)] = {
+    val byList = entriesByList(lists)
+    (rows, qs) => {
+      val states = qs.map(score.state)
+      rows.flatMap { row =>
+        val qis = byList.getOrElse(row.getInt(0), Array.emptyIntArray)
+        if (qis.isEmpty || row.isNullAt(2)) Iterator.empty
+        else {
+          val label = row.getLong(1)
+          val p = score.payload(row)
+          qis.iterator.map(qi => (qi, score.distance(states(qi), p), label)).filter(h => within(h._2))
+        }
       }
     }
   }
 
-  /** The shard top-k route of HNSW's graph shards and the Flat kernel:
+  /** The shard top-k route of HNSW's graph shards, the Flat kernel and
+    * the probed lists of IVF and coded indexes:
     * `candidates` yields one shard's (batch entry, distance, label)
     * candidates. Up to `IndexCatalog.localMergeBound` candidates
     * (entries × k × shards) one job returns them and [[mergeTopK]]

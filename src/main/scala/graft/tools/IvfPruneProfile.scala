@@ -167,31 +167,6 @@ object IvfPruneProfile {
         qc.unpersist()
       }
 
-      // ---- sub-batched wide batch: maxListsPerJob=16 routes the
-      // 100-query batch into bounded-union scans. Total records = the
-      // SUM of sub-batch unions (>= the single union — the knob bounds
-      // each scan's working set for SLO/memory, it cannot beat the
-      // union floor; reported honestly).
-      {
-        val qb = Tables(spark, sfDir, "embeddings").where(col("vec_id") < 100)
-          .select(col("vec_id").as("qid"), vec.vector(col("embedding")).as("qvec"))
-          .cache()
-        qb.count()
-        var minRecs = Long.MaxValue
-        (1 to 2).foreach { _ =>
-          val (_, _, r) = measured {
-            IndexCatalog.search(name, 5, qb,
-              Map("nprobe" -> "4", "maxListsPerJob" -> "16")).collect()
-          }
-          if (r < minRecs) minRecs = r
-        }
-        println(
-          s"""{"bench":"ivf_prune_subbatched","nlist":$nlist,"nprobe":4,"batch":100,""" +
-            s""""max_lists_per_job":16,"scan_records":$minRecs,""" +
-            s""""records_frac":${minRecs.toDouble / n}}""")
-        qb.unpersist()
-      }
-
       // nprobe sweep, full probe last (the denominator where pruning
       // cannot help). Two measured reps each; keep the min (first touch
       // pays FS cache warmup, irrelevant to the pruning question).

@@ -91,26 +91,6 @@ class IndexCatalogSpec extends SparkSpec {
     assert(recall >= 0.75, s"recall $recall")
   }
 
-  test("maxListsPerJob sub-batching returns the identical result set at any cap") {
-    IndexCatalog.create("t_ivf_sb", 2, "IDMap,IVF8,Flat", "l2sq", Map("nprobe" -> "3"))
-    IndexCatalog.add(grid, "t_ivf_sb")
-    val base = IndexCatalog.search("t_ivf_sb", 4, qs)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted
-    // caps from "one sub-batch per query signature" up to "no split":
-    // routing must never change WHAT is probed, only how scans group
-    for (cap <- Seq(1, 3, 4, 8)) {
-      val got = IndexCatalog.search("t_ivf_sb", 4, qs,
-        Map("maxListsPerJob" -> cap.toString))
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted
-      assert(got === base, s"cap=$cap diverged from the single-scan plan")
-    }
-    // exhaustive probe through the router stays exact
-    val exh = labelsOf(IndexCatalog.search("t_ivf_sb", 4, qs,
-      Map("nprobe" -> "8", "maxListsPerJob" -> "2")))
-    val want = labelsOf(Knn.searchFlat(grid, qs, 4, "l2sq"))
-    assert(exh === want)
-  }
-
   test("concurrent add/search/retrain race: per-entry locking keeps the catalog consistent") {
     // the reference's Go harness shape (main_test.go): writers append,
     // readers search, a maintainer retrains — all racing on ONE index.
@@ -949,22 +929,33 @@ class IndexCatalogSpec extends SparkSpec {
   }
 
   test("loaded IVF search prunes unprobed list partitions at the scan") {
-    import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_prune").toString
     IndexCatalog.create("t_prune", 2, "IDMap,IVF8,Flat", "l2sq", Map("nprobe" -> "1"))
     IndexCatalog.add(grid, "t_prune")
     IndexCatalog.save("t_prune", dir)
     IndexCatalog.destroy("t_prune")
     IndexCatalog.load("t_prune2", dir, spark)
-    val res = IndexCatalog.search("t_prune2", 4, qs.limit(1), Map("nprobe" -> "1"))
-    val plan = res.queryExecution.executedPlan.toString
-    // the static IN filter must land inside a NON-EMPTY PartitionFilters
-    // on the parquet scan (an empty "PartitionFilters: []" means the scan
-    // was materialized unpruned)
-    val segs = plan.split("PartitionFilters: \\[").drop(1)
-    assert(segs.exists(seg => !seg.startsWith("]") && seg.take(200).contains("list_id")),
-      plan.take(3000))
-    assert(res.count() === 4)
+    val layout = IndexCatalog.build("t_prune2").data
+    // the search job's input records: the static IN filter must prune
+    // the parquet scan to the probed list's files
+    val recordsRead = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m => recordsRead.addAndGet(m.inputMetrics.recordsRead))
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val res = try {
+      val r = IndexCatalog.search("t_prune2", 4, qs.limit(1), Map("nprobe" -> "1")).collect()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(res.length === 4)
+    // every hit lives in the one probed list; the scan read that list only
+    val probed = layout.where(col("label") === res.head.getLong(2)).select("list_id").head().getInt(0)
+    val listRows = layout.where(col("list_id") === probed).count()
+    assert(recordsRead.get === listRows, s"read ${recordsRead.get} records, list $probed holds $listRows")
+    assert(listRows < grid.count())
   }
 
   test("PQ training persists across save/load (same quantization, same results)") {
@@ -1131,7 +1122,7 @@ class IndexCatalogSpec extends SparkSpec {
 
   test("index params are parsed at create, each bad value naming its key") {
     val positive = Seq("maxIter", "coarseEfSearch", "coarseEfConstruction", "efConstruction",
-      "bands", "nprobe", "refine", "efSearch", "maxListsPerJob")
+      "bands", "nprobe", "refine", "efSearch")
     val cases = positive.map(_ -> Seq("0", "-1", "x")) ++ Seq(
       "seed" -> Seq("x"), // any long is a seed
       "adaptiveCutoff" -> Seq("0", "-1", "x", "1.5"),
@@ -1145,7 +1136,7 @@ class IndexCatalogSpec extends SparkSpec {
     }
     // valid edge values still create
     for ((key, ok) <- Seq("seed" -> "-1", "seed" -> "0", "adaptiveCutoff" -> "1",
-        "pad" -> "false", "maxListsPerJob" -> "1")) {
+        "pad" -> "false")) {
       IndexCatalog.create("t_param_ok", 2, "IDMap,IVF4,Flat", "l2sq", Map(key -> ok))
       IndexCatalog.destroy("t_param_ok")
     }

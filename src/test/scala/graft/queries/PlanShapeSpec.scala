@@ -62,12 +62,30 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("knn_ivf_filter: the label predicate joins the pruned-list scan, not a flat fallback") {
-    val plan = physical("knn_ivf_filter")
-    // the filter must appear as a scan-side predicate...
-    assert(plan.contains("% 2) = 0"), plan.take(3000))
-    // ...on the same plan that probes lists via the broadcast probe join
-    // (selector-inside-IVF), not a post-hoc full flat scan
-    assert(plan.contains("BroadcastHashJoin [list_id"), plan.take(3000))
+    // the selector runs inside the probed-list scan job (selector-inside-
+    // IVF): the search's one shard top-k job is submitted by IVF's
+    // restricted route and runs one stage, and no job scans the flat
+    // fallback. A job's call site is its stages' `details`.
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[Int])]()
+    val submitted = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      import org.apache.spark.scheduler._
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add((j.stageInfos.map(_.details).mkString("\n"), j.stageIds))
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        submitted.add(s.stageInfo.stageId)
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { physical("knn_ivf_filter"); org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val all = jobs.asScala.toSeq
+    val search = all.filter(_._1.contains("graft.search.Knn$.shardTopK"))
+    assert(search.size === 1, all.map(_._1.take(400)).mkString("\n---\n"))
+    assert(search.head._1.contains("IndexCatalog$IvfBuilt.searchRestricted"), search.head._1)
+    assert(search.head._2.count(s => submitted.contains(s)) === 1, search.head._1.take(400))
+    assert(!all.exists(_._1.contains("searchFlatFast")), all.map(_._1.take(400)).mkString("\n---\n"))
   }
 
   test("embed_quantize: pure projection, no exchange") {

@@ -63,7 +63,8 @@ class FaissSqlLocalSpec extends SparkSpec {
       val byQid = local.toMap
       assert(byQid.size === 8, call)
       assert(byQid(2L).nonEmpty && byQid(2L) === byQid(3L), call) // -0.0 is 0.0
-      assert(byQid(4L) === byQid(5L), call) // every NaN is one vector (no candidate: empty)
+      // every NaN is one vector (under pad, its list is k rows of label -1)
+      assert(byQid(4L) === byQid(5L), call)
     }
   }
 }
