@@ -20,7 +20,9 @@ import org.apache.spark.sql.types._
  * Every instance gives the IVF-compatible centroid table (list id =
  * row index), one executor kernel for assignment ([[CoarseAssign]]:
  * the n nearest lists, empty for a vector that probes nothing), one
- * driver-side probe, and its persistence.
+ * driver-side probe, and its persistence: each instance writes its own
+ * parts of a save (the centroid table, a graph's keyed adjacency at any
+ * nesting, IMI's half books) and [[Coarse.load]] reads them back.
  */
 sealed trait Coarse extends Serializable {
   def centroids: Array[Array[Float]]
@@ -43,10 +45,9 @@ sealed trait Coarse extends Serializable {
   def assign(v: Column): Column = coalesce(get(nearestCol(v, 1), lit(0)), lit(-1))
 
   /** write this quantizer into a save's parts directory: the centroid
-    * table under `dir` when given, and (`withGraph`) a graph's
-    * adjacency */
-  private[index] def save(
-      spark: SparkSession, path: String, dir: Option[String], withGraph: Boolean): Unit =
+    * table under `dir` when given; a graph adds its adjacency and IMI
+    * its half books ([[Coarse.load]] reads them back) */
+  private[index] def save(spark: SparkSession, path: String, dir: Option[String]): Unit =
     dir.foreach(d => Coarse.writeCentroids(spark, centroids, s"$path/$d"))
 }
 
@@ -88,23 +89,22 @@ final case class GraphCoarse(
     else _ => centroids.indices
 
   /** rebuilding the graph costs ~59 s driver-side at nlist = 65k
-    * (SURVEY §21.8), per loading driver, so a top-level save persists
-    * the adjacency with [[Coarse.graphKey]] of its build inputs */
-  override private[index] def save(
-      spark: SparkSession, path: String, dir: Option[String], withGraph: Boolean): Unit = {
-    super.save(spark, path, dir, withGraph)
-    if (withGraph) {
-      import spark.implicits._
-      val g = graph
-      g.labels.indices.map { i =>
-        (i, g.labels(i), g.vecs(i).toSeq, g.levels(i),
-          g.adj(i).map(_.toSeq).toSeq, g.dups(i).toSeq)
-      }.toDF("node_id", "label", "vec", "level", "adj", "dups")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse_graph")
-      Seq((Coarse.graphKey(centroids, m, efConstruction, metricId), g.entry, g.maxLevel))
-        .toDF("key", "entry", "max_level")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse_graph_meta")
-    }
+    * (SURVEY §21.8), per loading driver, so every save persists the
+    * adjacency with [[Coarse.graphKey]] of its build inputs, under a
+    * PCA/OPQ pretransform too (FAISS `write_index` writes the whole
+    * quantizer) */
+  override private[index] def save(spark: SparkSession, path: String, dir: Option[String]): Unit = {
+    super.save(spark, path, dir)
+    import spark.implicits._
+    val g = graph
+    g.labels.indices.map { i =>
+      (i, g.labels(i), g.vecs(i).toSeq, g.levels(i),
+        g.adj(i).map(_.toSeq).toSeq, g.dups(i).toSeq)
+    }.toDF("node_id", "label", "vec", "level", "adj", "dups")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse_graph")
+    Seq((Coarse.graphKey(centroids, m, efConstruction, metricId), g.entry, g.maxLevel))
+      .toDF("key", "entry", "max_level")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse_graph_meta")
   }
 
   override def toString: String = s"GraphCoarse(nlist=$nlist, m=$m, ef=$ef)"
@@ -136,9 +136,8 @@ final case class ImiCoarse(books: Array[Array[Array[Float]]]) extends Coarse {
     if (nprobe < nlist) qv => Imi.probeCells(qv, books, nprobe)
     else _ => 0 until nlist
 
-  override private[index] def save(
-      spark: SparkSession, path: String, dir: Option[String], withGraph: Boolean): Unit = {
-    super.save(spark, path, dir, withGraph)
+  override private[index] def save(spark: SparkSession, path: String, dir: Option[String]): Unit = {
+    super.save(spark, path, dir)
     Codec.writeBooks(spark, books, s"$path/pq_codebooks") // IMI shares PQ's book layout
   }
 
@@ -178,8 +177,21 @@ object Coarse {
     h
   }
 
+  /** the quantizer a save under `path` holds: with a centroid table
+    * `dir`, the one `fromTable` makes of it (a graph coarse takes back
+    * the save's adjacency through the key lookup it is handed, and
+    * rebuilds it on a mismatch); without one, IMI's half books. None
+    * when the save holds neither. */
+  private[index] def load(spark: SparkSession, path: String, dir: Option[String])(
+      fromTable: (Array[Array[Float]], Long => Option[Nsw.Graph]) => Coarse): Option[Coarse] =
+    dir match {
+      case Some(d) => Option.when(IndexCatalog.pathExists(spark, s"$path/$d"))(
+        fromTable(readCentroids(spark, s"$path/$d"), savedGraph(spark, path)))
+      case None => CodecSpec.restoreBooks(spark, path).map(ImiCoarse(_))
+    }
+
   /** the graph a save under `path` persisted, if its key is `key` */
-  private[index] def savedGraph(spark: SparkSession, path: String)(key: Long): Option[Nsw.Graph] =
+  private def savedGraph(spark: SparkSession, path: String)(key: Long): Option[Nsw.Graph] =
     Option.when(IndexCatalog.pathExists(spark, s"$path/coarse_graph_meta"))(
       spark.read.parquet(s"$path/coarse_graph_meta").collect()(0))
       .filter(_.getLong(0) == key)
@@ -204,7 +216,7 @@ object Coarse {
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
-  private[index] def readCentroids(spark: SparkSession, path: String): Array[Array[Float]] =
+  private def readCentroids(spark: SparkSession, path: String): Array[Array[Float]] =
     spark.read.parquet(path).collect().sortBy(_.getInt(0)).map(_.getSeq[Float](1).toArray)
 }
 

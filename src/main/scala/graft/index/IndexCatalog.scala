@@ -32,8 +32,11 @@ import graft.search.Knn
  *    (flat argmin, HNSW graph over the centroids, or IMI half books):
  *    IVF / IVF_HNSW / IMI build one [[IvfBuilt]] over it, coded indexes
  *    with nlist > 1 assign and probe through it, and it persists itself
- *  - save = parquet (partitioned by IVF list for partition pruning) +
- *    the trained state + a one-row meta DataFrame; load restores lazily
+ *  - save = parquet rows (a top-level IVF family's list-partitioned
+ *    layout, for partition pruning; every other index's canonical
+ *    (label, vec) rows) + each trained part (coarse quantizer with a
+ *    graph's adjacency, codec, pretransform), which writes and reads
+ *    itself + a one-row meta DataFrame; load restores lazily
  *  - the query DataFrame's columns are read by position ([[colAt]]),
  *    so any column names work
  */
@@ -83,15 +86,28 @@ object IndexCatalog {
     * (IvfBuilt over an [[ImiCoarse]]; Imi.scala). */
   case class ImiKind(nbits: Int) extends Kind
   case class HnswKind(m: Int) extends Kind
+  /** a pretransform wrapper: `inner` trains, stores and is searched in
+    * the transform's output space, through one [[PcaBuilt]] */
+  sealed trait PretransformKind extends Kind {
+    def inner: Kind
+    /** the (mean, components) transform trained on `pts` */
+    def trainTransform(pts: Array[Array[Float]], seed: Long): (Array[Float], Array[Array[Float]])
+  }
   /** pre-transform wrapper, e.g. "PCA16,IVF64,Flat" */
-  case class PcaKind(outDim: Int, inner: Kind) extends Kind
-  /** learned-rotation pre-transform, e.g. "OPQ8,PQ8" (dim preserved) */
-  case class OpqKind(m: Int, inner: Kind) extends Kind
+  case class PcaKind(outDim: Int, inner: Kind) extends PretransformKind {
+    def trainTransform(pts: Array[Array[Float]], seed: Long): (Array[Float], Array[Array[Float]]) =
+      Pca.train(pts, outDim)
+  }
+  /** learned-rotation pre-transform, e.g. "OPQ8,PQ8" (dim preserved): a
+    * transform with mean 0 whose components are the rotation */
+  case class OpqKind(m: Int, inner: Kind) extends PretransformKind {
+    def trainTransform(pts: Array[Array[Float]], seed: Long): (Array[Float], Array[Array[Float]]) =
+      (new Array[Float](pts(0).length), Opq.train(pts, m, seed = seed))
+  }
 
   /** the kind under at most one pretransform (nesting is rejected) */
   private def unwrapped(kind: Kind): Kind = kind match {
-    case PcaKind(_, inner) => inner
-    case OpqKind(_, inner) => inner
+    case p: PretransformKind => p.inner
     case k => k
   }
 
@@ -185,9 +201,10 @@ object IndexCatalog {
     def meta: IndexMeta
     def search(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String]): DataFrame
 
-    /** (label, vec) view of the indexed rows for exact flat scans —
-      * the built layout itself for raw-vector indexes; coded indexes
-      * (codes-only layout) override with the base-table plan */
+    /** (label, vec) view of the indexed rows for exact flat scans, one
+      * row per added row — the built layout itself for raw-vector
+      * indexes; coded (codes-only) and LSH (one row per band) layouts
+      * override with the base-table plan */
     def flatData: DataFrame = data
 
     /**
@@ -243,15 +260,13 @@ object IndexCatalog {
     // metric/kind compatibility errors at create, not deep inside a
     // later search: graph traversal supports L2/IP/cosine only (FAISS
     // HNSW is L2/IP), and a mismatch would silently rank by the wrong
-    // ordering
+    // ordering. A pretransform keeps the metric, so its inner kind decides.
     def isL2 = mid == VectorMath.L2SQ || mid == VectorMath.L2
-    e.kind match {
-      case HnswKind(_) | PcaKind(_, HnswKind(_)) | OpqKind(_, HnswKind(_))
-          if !Nsw.supportsMetric(mid) =>
+    unwrapped(e.kind) match {
+      case HnswKind(_) if !Nsw.supportsMetric(mid) =>
         throw new IllegalArgumentException(
           s"HNSW supports metrics l2sq/l2/ip/cosine, got '$metric'")
-      case CodedKind(_, _, _) | PcaKind(_, CodedKind(_, _, _)) | OpqKind(_, CodedKind(_, _, _))
-          if !isL2 =>
+      case CodedKind(_, _, _) if !isL2 =>
         throw new IllegalArgumentException(
           s"PQ/SQ/RQ/LSQ quantized search implements the FAISS L2 convention (code distance + L2 re-rank); got '$metric'")
       case ImiKind(_) if mid == VectorMath.IP =>
@@ -260,7 +275,8 @@ object IndexCatalog {
         // by an ordering its vectors are never searched with
         throw new IllegalArgumentException(
           s"IMI coarse quantization assigns by L2 (FAISS convention); metric '$metric' is unsupported")
-      case ImiKind(_) if dim % 2 != 0 =>
+      // under a PCA the inner dim is the projection's, which Imi.train checks
+      case ImiKind(_) if dim % 2 != 0 && !e.kind.isInstanceOf[PcaKind] =>
         throw new IllegalArgumentException(
           s"IMI2x splits the vector into two equal halves; dim $dim is odd")
       case _ => ()
@@ -540,7 +556,7 @@ object IndexCatalog {
     // (matches FAISS imbalance_factor over the probe-able lists)
     val listSizes = (b match {
       case _: IvfBuilt | _: CodedBuilt => b.data.where(col("list_id") >= 0)
-      case other => other.data.select(lit(0).as("list_id"), col("label"))
+      case other => other.flatData.select(lit(0).as("list_id"), col("label"))
     }).groupBy(col("list_id")).agg(count(lit(1)).as("sz"))
     val coarse = b match {
       case ivf: IvfBuilt => Some(ivf.coarse)
@@ -687,26 +703,7 @@ object IndexCatalog {
         e.coarse = Option.when(cents.nonEmpty)(coarseFor(e, e.kind, cents))
       case k @ (CodedKind(_, _, _) | ImiKind(_)) =>
         trainPointsKind(e, k, samplePoints(sample), seed)
-      case PcaKind(outDim, inner) =>
-        // train the transform, then train the inner kind in the
-        // PROJECTED space (that's where it will see data and queries).
-        // An empty sample is a no-op, like every other kind.
-        val pts = samplePoints(sample)
-        if (pts.nonEmpty) {
-          val (mean, comps) = Pca.train(pts, outDim)
-          e.trainedPca = Some((mean, comps))
-          trainPointsKind(e, inner, pts.map(Pca.projectArr(_, mean, comps)), seed)
-        }
-      case OpqKind(m, inner) =>
-        // same wrapper shape as PCA: the rotation lands in trainedPca
-        // (mean = 0) so projection + persistence reuse the PCA path
-        val pts = samplePoints(sample)
-        if (pts.nonEmpty) {
-          val comps = Opq.train(pts, m, seed = seed)
-          val zero = new Array[Float](pts(0).length)
-          e.trainedPca = Some((zero, comps))
-          trainPointsKind(e, inner, pts.map(Pca.projectArr(_, zero, comps)), seed)
-        }
+      case p: PretransformKind => trainPretransform(e, p, samplePoints(sample))
       case _ => // Flat/LSH/HNSW need no training
     }
     e.built.foreach(_.close())
@@ -766,9 +763,19 @@ object IndexCatalog {
         e.coarse = Option.when(nlist > 1)(
           coarseFor(e, kind, Pq.localKMeans(pts, math.min(nlist, pts.length), seed + 999, 10)))
         e.codec = Some(codec)
-      case PcaKind(_, _) | OpqKind(_, _) =>
+      case _: PretransformKind =>
         throw new IllegalArgumentException("nested pretransforms are not supported")
       case _ => // Flat/LSH/HNSW need no training
+    }
+
+  /** train a pretransform on `pts`, then its inner kind in the projected
+    * space, where it sees data and queries. An empty sample trains
+    * nothing, like every other kind. */
+  private def trainPretransform(e: Entry, p: PretransformKind, pts: Array[Array[Float]]): Unit =
+    if (pts.nonEmpty) {
+      val (mean, comps) = p.trainTransform(pts, seed(e))
+      e.trainedPca = Some((mean, comps))
+      trainPointsKind(e, p.inner, pts.map(Pca.projectArr(_, mean, comps)), seed(e))
     }
 
   /** materialize: train if needed, assign, cache. Locks only THIS
@@ -853,40 +860,13 @@ object IndexCatalog {
           // matching the pre-refactor KMeansTrainer behavior
           case _ => coarseFor(e, k, Array.empty)
         }))
-      case PcaKind(outDim, inner) =>
-        val (mean, comps) = e.trainedPca.getOrElse {
-          val pts = boundedSample(data)
-          if (pts.isEmpty)
-            throw new IllegalStateException(
-              "cannot auto-train a PCA pretransform on an empty index")
-          val trained = Pca.train(pts, outDim)
-          e.trainedPca = Some(trained)
-          // inner quantizers must also train in the projected space
-          trainPointsKind(e, inner, pts.map(Pca.projectArr(_, trained._1, trained._2)), seed(e))
-          trained
-        }
+      case p: PretransformKind =>
+        if (e.trainedPca.isEmpty) trainPretransform(e, p, boundedSample(data))
+        val (mean, comps) = e.trainedPca.getOrElse(throw new IllegalStateException(
+          s"cannot auto-train the pretransform of '${e.meta.factory}' on an empty index"))
         val proj = GraftBridge.column(
           PcaProject(GraftBridge.expression(col("vec")), mean, comps))
-        val projected = data.select(col("label"), proj.as("vec"))
-        new PcaBuilt(buildKind(e, inner, projected), mean, comps)
-      case OpqKind(m, inner) =>
-        val (mean, comps) = e.trainedPca.getOrElse {
-          val pts = boundedSample(data)
-          if (pts.isEmpty)
-            throw new IllegalStateException(
-              "cannot auto-train an OPQ pretransform on an empty index")
-          require(pts(0).length == e.meta.dim,
-            s"OPQ$m expects dim ${e.meta.dim} vectors")
-          val trained = (new Array[Float](e.meta.dim), Opq.train(pts, m, seed = seed(e)))
-          e.trainedPca = Some(trained)
-          // inner quantizers train in the ROTATED space
-          trainPointsKind(e, inner, pts.map(Pca.projectArr(_, trained._1, trained._2)), seed(e))
-          trained
-        }
-        val proj = GraftBridge.column(
-          PcaProject(GraftBridge.expression(col("vec")), mean, comps))
-        val rotated = data.select(col("label"), proj.as("vec"))
-        new PcaBuilt(buildKind(e, inner, rotated), mean, comps)
+        new PcaBuilt(buildKind(e, p.inner, data.select(col("label"), proj.as("vec"))), mean, comps)
     }
 
   /** the reference accepts recursive prefixed params ('ivf.efSearch',
@@ -1086,16 +1066,16 @@ object IndexCatalog {
   def reconstruct(name: String, ids: DataFrame): DataFrame = {
     val b = build(name)
     val idSet = ids.select(colAt(ids, 0).cast("long").as("label"))
-    val rows = b.data.join(broadcast(idSet), Seq("label"), "left_semi")
+    def rows(layout: DataFrame) = layout.join(broadcast(idSet), Seq("label"), "left_semi")
     b match {
       case c: CodedBuilt =>
-        rows.select(col("label"), GraftBridge.column(CodecDecode(
+        rows(c.data).select(col("label"), GraftBridge.column(CodecDecode(
           GraftBridge.expression(col("code")), c.codec)).as("vec"))
       case _: PcaBuilt =>
         throw new UnsupportedOperationException(
           "reconstruct through a PCA/OPQ pretransform is not supported " +
             "(codes live in projected space; a truncated transform has no inverse)")
-      case _ => rows.select(col("label"), col("vec"))
+      case _ => rows(b.flatData).select(col("label"), col("vec"))
     }
   }
 
@@ -1209,45 +1189,28 @@ object IndexCatalog {
     }.nextOption()
   }
 
+  /** One of two row layouts, then each trained part writes itself. A
+    * top-level IVF-family index writes its list-partitioned layout,
+    * which load serves file-backed without re-assigning; every other
+    * index writes its canonical (label, vec) rows, and load rebuilds
+    * its structure from them (projected again under a pretransform,
+    * encoded again when coded, banded or graphed again). */
   private def saveParts(
       e: Entry, b: BuiltIndex, spark: SparkSession, path: String): Unit = {
-    b match {
+    val coarse = b match {
       case ivf: IvfBuilt =>
-        ivf.data.write.mode("overwrite").option("compression", "zstd").partitionBy("list_id").parquet(s"$path/data")
-      case lsh: LshBuilt =>
-        // undo the per-band row duplication; distinct on (label, vec)
-        // keeps genuinely different vectors that share a label
-        lsh.data.select(col("label"), col("vec")).dropDuplicates("label", "vec")
-          .write.mode("overwrite").option("compression", "zstd").parquet(s"$path/data")
-      case pca: PcaBuilt =>
-        // inner data is in projected space; persist the ORIGINAL rows —
-        // the transform re-applies deterministically on load
+        ivf.data.write.mode("overwrite").option("compression", "zstd")
+          .partitionBy("list_id").parquet(s"$path/data")
+        Some(ivf.coarse) // an empty IVF keeps its zero-centroid table
+      case _ =>
         e.pending.get.select(col("label"), vec.vector(col("vec")).as("vec"))
           .write.mode("overwrite").option("compression", "zstd").parquet(s"$path/data")
-      case c: CodedBuilt =>
-        // coded layouts hold codes only; the canonical (label, vec)
-        // rows rebuild deterministically on load from the base plan
-        c.vecData.write.mode("overwrite").option("compression", "zstd").parquet(s"$path/data")
-      case other =>
-        // canonical (label, vec) layout rebuilds deterministically on load
-        other.data.select(col("label"), col("vec"))
-          .write.mode("overwrite").option("compression", "zstd").parquet(s"$path/data")
+        e.coarse
     }
-    // the coarse quantizer a top-level index was built with (an empty IVF
-    // keeps its zero-centroid table), or a pretransform's projected-space one
-    val coarse = b match {
-      case ivf: IvfBuilt => Some(ivf.coarse)
-      case c: CodedBuilt => c.coarse
-      case _ => e.coarse
-    }
-    coarse.foreach(_.save(spark, path, coarseDirOf(e.kind), withGraph = unwrapped(e.kind) == e.kind))
+    coarse.foreach(_.save(spark, path, coarseDirOf(e.kind)))
     e.codec.foreach(_.persist(spark, path))
+    e.trainedPca.foreach(Pca.save(spark, _, path))
     import spark.implicits._
-    e.trainedPca.foreach { case (mean, comps) =>
-      (Seq((-1, mean.toSeq)) ++ comps.zipWithIndex.map { case (c, j) => (j, c.toSeq) })
-        .toDF("row_idx", "vals")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/pca")
-    }
     // URL-encode keys/values: a raw ';' or '=' inside a param value
     // would corrupt (or crash) the k=v;k=v parse on load
     def esc(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
@@ -1291,42 +1254,28 @@ object IndexCatalog {
       .map { kv => val Array(k, v) = kv.split("=", 2); unesc(k) -> unesc(v) }.toMap
     create(name, m.getInt(1), m.getString(2), m.getString(3), params)
     val e = entry(name)
-    // the saved coarse quantizer: IMI's half books, else the centroid
-    // table (a graph coarse takes back its persisted adjacency when the
-    // build-input key matches, and rebuilds it otherwise)
+    // each trained part the save holds reads itself back; the rest of
+    // the index rebuilds lazily from the saved rows at the first build
     val inner = unwrapped(e.kind)
-    e.coarse = inner match {
-      case ImiKind(_) => CodecSpec.restoreBooks(spark, path).map(ImiCoarse(_))
-      case IvfKind(_) | IvfHnswKind(_, _) | CodedKind(_, _, _) =>
-        coarseDirOf(e.kind).map(d => s"$path/$d").filter(pathExists(spark, _)).map(d =>
-          coarseFor(e, inner, Coarse.readCentroids(spark, d), Coarse.savedGraph(spark, path)))
-      case _ => None
-    }
+    e.coarse = Coarse.load(spark, path, coarseDirOf(e.kind))(coarseFor(e, inner, _, _))
     inner match {
       case CodedKind(spec, _, _) => e.codec = spec.restore(spark, path)
       case _ =>
     }
+    e.trainedPca = Pca.load(spark, path)
+    val data = spark.read.parquet(s"$path/data")
+    e.pending = Some(data.select(col("label"), col("vec")))
     e.kind match {
       case IvfKind(_) | IvfHnswKind(_, _) | ImiKind(_) =>
-        val data = spark.read.parquet(s"$path/data")
-        e.pending = Some(data.select(col("label"), col("vec")))
-        // rebuild from the partitioned layout without re-assigning.
-        // NOT cached: the scan must stay file-backed so the static
-        // probed-list filter prunes partitions on disk (a cache would
-        // materialize every list on first search)
+        // serve the partitioned layout without re-assigning. NOT cached:
+        // the scan must stay file-backed so the static probed-list filter
+        // prunes partitions on disk (a cache would materialize every list
+        // on first search)
         e.built = Some(new IvfBuilt(
           data.select(col("list_id"), col("label"), col("vec")), e.meta,
           e.coarse.getOrElse(throw new IllegalStateException(
             s"the index saved at '$path' holds no coarse quantizer"))))
       case _ =>
-        e.pending = Some(spark.read.parquet(s"$path/data").select(col("label"), col("vec")))
-        if (pathExists(spark, s"$path/pca")) {
-          val rows = spark.read.parquet(s"$path/pca").collect().sortBy(_.getInt(0))
-          val mean = rows.find(_.getInt(0) == -1).get.getSeq[Float](1).toArray
-          val comps = rows.filter(_.getInt(0) >= 0).sortBy(_.getInt(0))
-            .map(_.getSeq[Float](1).toArray)
-          e.trainedPca = Some((mean, comps))
-        }
     }
     // restore the auto-id watermark persisted at save() time (the FAISS
     // ntotal analog) — later 1-column adds must not reuse saved labels;
@@ -1562,7 +1511,7 @@ object IndexCatalog {
       private[index] val hasAppends: Boolean = false)
       extends BuiltIndex {
 
-    /** base-table (label, vec) view for exact flat scans, re-rank and save() */
+    /** base-table (label, vec) view for exact flat scans and re-rank */
     private[index] def vecData: DataFrame =
       raw.select(col("label").cast("long").as("label"), vec.vector(col("vec")).as("vec"))
     override def flatData: DataFrame = vecData
@@ -1914,7 +1863,8 @@ object IndexCatalog {
   }
 
   final class LshBuilt(
-      val data: DataFrame, // (bucket bigint, label bigint, vec array<float>)
+      val data: DataFrame, // (bucket bigint, label bigint, vec array<float>): one row per band
+      override val flatData: DataFrame, // the unbanded (label, vec) input plan, NOT cached here
       val meta: IndexMeta, bands: Int, bitsPerBand: Int, seed: Long)
       extends BuiltIndex {
 
@@ -1922,9 +1872,7 @@ object IndexCatalog {
       searchRestricted(batch, k, params, identity)
 
     /** bucket probing over the restricted rows (the banded layout keeps
-      * `label`, so predicates/semi-joins apply before the bucket join;
-      * also fixes duplicate top-k labels the flat fallback would emit
-      * from the per-band row duplication) */
+      * `label`, so predicates/semi-joins apply before the bucket join) */
     override def searchRestricted(
         batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
         restrict: DataFrame => DataFrame): DataFrame = {
@@ -1957,7 +1905,7 @@ object IndexCatalog {
           col("label"), col("vec"))
         .repartition(col("bucket"))
         .cache()
-      new LshBuilt(bucketed, meta, bands, bitsPerBand, seed)
+      new LshBuilt(bucketed, data, meta, bands, bitsPerBand, seed)
     }
   }
 }

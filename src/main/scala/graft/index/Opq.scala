@@ -13,10 +13,14 @@ package graft.index
  *   for the SVD  X' Y = U S V'.
  *
  * The rotation is stored in the SAME (mean, comps) shape as the PCA
- * transform (mean = 0, comps = R rows), so projection (PcaProject),
- * the PcaBuilt wrapper, and the save/load persistence path are all
- * reused unchanged. A rotation is an isometry, so L2/IP/cosine search
- * through it is exact up to the inner index's own approximation.
+ * transform (mean = 0, comps = R rows), so OPQ and PCA share one
+ * pretransform body: `IndexCatalog.OpqKind` differs from `PcaKind`
+ * only in how it trains the transform, and projection (PcaProject),
+ * the inner index's training in the projected space, the PcaBuilt
+ * wrapper and the `pca` save part are one code path (the inner
+ * index's trained parts, a graph coarse's adjacency included, save as
+ * they do at top level). A rotation is an isometry, so L2/IP/cosine
+ * search through it is exact up to the inner index's own approximation.
  *
  * Training is driver-side on the usual bounded sample, seeded and
  * chunk-deterministic (localKMeans); the per-iteration PQ re-trains use

@@ -1,5 +1,6 @@
 package graft.index
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -58,6 +59,26 @@ object Pca {
     }.toArray
     (mean.map(_.toFloat), comps)
   }
+
+  /** write a trained transform into a save's `pca` part: the mean as
+    * row -1, component j as row j (OPQ's rotation, mean 0, shares it) */
+  private[index] def save(
+      spark: SparkSession, transform: (Array[Float], Array[Array[Float]]), path: String): Unit = {
+    import spark.implicits._
+    val (mean, comps) = transform
+    (Seq((-1, mean.toSeq)) ++ comps.zipWithIndex.map { case (c, j) => (j, c.toSeq) })
+      .toDF("row_idx", "vals")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/pca")
+  }
+
+  /** the transform a save under `path` holds, if it holds one */
+  private[index] def load(
+      spark: SparkSession, path: String): Option[(Array[Float], Array[Array[Float]])] =
+    Option.when(IndexCatalog.pathExists(spark, s"$path/pca")) {
+      val rows = spark.read.parquet(s"$path/pca").collect().sortBy(_.getInt(0))
+      (rows.find(_.getInt(0) == -1).get.getSeq[Float](1).toArray,
+        rows.filter(_.getInt(0) >= 0).map(_.getSeq[Float](1).toArray))
+    }
 
   /** driver-side twin of [[project]] for already-materialized samples */
   def projectArr(v: Array[Float], mean: Array[Float], comps: Array[Array[Float]]): Array[Float] = {

@@ -223,6 +223,93 @@ class IndexCatalogSpec extends SparkSpec {
     assert(labelsOf(IndexCatalog.search("t_cg_sql", 4, qs)) === beforeSq)
   }
 
+  test("a graph coarse under PCA/OPQ persists its adjacency; load takes it; a key mismatch rebuilds") {
+    import spark.implicits._
+    // the list sizes' skew: 8.0 (= nlist) when every vector sits in one list
+    def imbalanceOf(nm: String) = IndexCatalog.stats(nm).head().getDouble(2)
+    for (fac <- Seq("IDMap,PCA2,IVF8_HNSW4,Flat", "IDMap,OPQ2,IVF8_HNSW4,Flat",
+                    "IDMap,PCA2,IVF8_HNSW4,PQ2", "IDMap,OPQ2,IVF8_HNSW4,PQ2")) {
+      val nm = "t_wcg_" + fac.filter(_.isLetterOrDigit)
+      IndexCatalog.create(nm, 2, fac, "l2sq", Map("nprobe" -> "1", "refine" -> "8"))
+      IndexCatalog.add(grid, nm)
+      val rowsBefore = resultRowsOf(nm)
+      val skewBefore = imbalanceOf(nm)
+      assert(skewBefore < 8.0, fac)
+      val dir = Files.createTempDirectory("graft_wrapped_cg").toString
+      IndexCatalog.save(nm, dir)
+      IndexCatalog.destroy(nm)
+      val v1 = new java.io.File(dir).list().find(_.startsWith("v1-")).get
+      assert(new java.io.File(s"$dir/$v1/coarse_graph").isDirectory, fac)
+      assert(new java.io.File(s"$dir/$v1/coarse_graph_meta").isDirectory, fac)
+      IndexCatalog.load(nm, dir, spark)
+      assert(resultRowsOf(nm) === rowsBefore, fac)
+      IndexCatalog.destroy(nm)
+      // tamper the adjacency under the right key: with no edges the walk
+      // stops at the entry node, so a load that takes the saved graph puts
+      // every vector into the entry's list
+      val graph = spark.read.parquet(s"$dir/$v1/coarse_graph").collect().map { r =>
+        (r.getInt(0), r.getLong(1), r.getSeq[Float](2), r.getInt(3),
+          r.getSeq[AnyRef](4).map(_ => Seq.empty[Int]), r.getSeq[Long](5))
+      }.toSeq
+      graph.toDF("node_id", "label", "vec", "level", "adj", "dups")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/$v1/coarse_graph")
+      IndexCatalog.load(nm, dir, spark)
+      assert(imbalanceOf(nm) === 8.0, s"$fac: the load did not take the saved adjacency")
+      IndexCatalog.destroy(nm)
+      // tamper the key too: the load rebuilds the graph and serves as before the save
+      val meta = spark.read.parquet(s"$dir/$v1/coarse_graph_meta").head()
+      Seq((meta.getLong(0) + 1, meta.getInt(1), meta.getInt(2))).toDF("key", "entry", "max_level")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/$v1/coarse_graph_meta")
+      IndexCatalog.load(nm, dir, spark)
+      assert(resultRowsOf(nm) === rowsBefore, fac)
+      assert(imbalanceOf(nm) === skewBefore, fac)
+      IndexCatalog.destroy(nm)
+    }
+  }
+
+  test("save -> destroy -> load serves the same rows for every kind but HNSW") {
+    import spark.implicits._
+    // SearchBatchCompatSpec's kinds over 96 seeded 8-d vectors on a 1/8
+    // grid; HNSW rebuilds its shard graphs from the loaded partitioning
+    // (its recall across a save is the HNSW save/load test's)
+    val rnd = new java.util.Random(11)
+    val data = (0 until 96).map(i => (i.toLong, Array.fill(8)((rnd.nextInt(33) - 16) / 8.0f)))
+    val corpus = data.toDF("label", "vec")
+    val q8 = (100 until 103).map(i => (i.toLong, data(i - 90)._2.map(_ + 0.0625f))).toDF("qid", "qvec")
+    def rowsOf(nm: String) = IndexCatalog.search(nm, 4, q8).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted.toSeq
+    val kinds = SearchBatchCompatSpec.kinds.filterNot(_._1 == "bc_hnsw") ++ Seq(
+      ("rt_pcaivfhnsw", "IDMap,PCA2,IVF8_HNSW4,Flat", Map("nprobe" -> "2")),
+      ("rt_opqivfhnswpq", "IDMap,OPQ2,IVF8_HNSW4,PQ2", Map("nprobe" -> "2", "refine" -> "2")))
+    for ((kindName, fac, params) <- kinds) {
+      val nm = "t_rt_" + kindName
+      IndexCatalog.create(nm, 8, fac, "l2sq", params)
+      IndexCatalog.add(corpus, nm)
+      val before = rowsOf(nm)
+      val dir = Files.createTempDirectory("graft_rt").toString
+      IndexCatalog.save(nm, dir)
+      IndexCatalog.destroy(nm)
+      IndexCatalog.load(nm, dir, spark)
+      assert(rowsOf(nm) === before, fac)
+      IndexCatalog.destroy(nm)
+    }
+    // an LSH index holding one (label, vec) row twice keeps both copies
+    IndexCatalog.create("t_rt_lshdup", 8, "IDMap,LSH4", "l2sq", Map("bands" -> "6"))
+    IndexCatalog.add(corpus, "t_rt_lshdup")
+    IndexCatalog.add(corpus.where(col("label") === 12L), "t_rt_lshdup")
+    def radiusOf(nm: String) = IndexCatalog.searchRadius(nm, 9.0, q8).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    val (before, radiusBefore) = (rowsOf("t_rt_lshdup"), radiusOf("t_rt_lshdup"))
+    assert(IndexCatalog.stats("t_rt_lshdup").head().getLong(0) === 97L)
+    val dir = Files.createTempDirectory("graft_rt_lsh").toString
+    IndexCatalog.save("t_rt_lshdup", dir)
+    IndexCatalog.destroy("t_rt_lshdup")
+    IndexCatalog.load("t_rt_lshdup", dir, spark)
+    assert(rowsOf("t_rt_lshdup") === before)
+    assert(radiusOf("t_rt_lshdup") === radiusBefore)
+    assert(IndexCatalog.stats("t_rt_lshdup").head().getLong(0) === 97L)
+  }
+
   test("IMI2x: exhaustive probe exact, partial probe useful recall, grammar + guards") {
     // grammar
     assert(IndexCatalog.parseFactory("IMI2x4,Flat") === IndexCatalog.ImiKind(4))
@@ -694,6 +781,25 @@ class IndexCatalogSpec extends SparkSpec {
     res.groupBy(_.getLong(0)).values.foreach { rows =>
       assert(rows.map(_.getLong(2)).distinct.length === rows.length, "duplicate labels in top-k")
     }
+  }
+
+  test("LSH's flat view holds each added row once: radius, narrow pre-filter, reconstruct and stats") {
+    import spark.implicits._
+    IndexCatalog.create("t_lsh_fv", 2, "IDMap,LSH8", "l2sq", Map("bands" -> "4"))
+    IndexCatalog.add(grid, "t_lsh_fv")
+    IndexCatalog.create("t_lsh_fv_flat", 2, "IDMap,Flat", "l2sq")
+    IndexCatalog.add(grid, "t_lsh_fv_flat")
+    def radiusRows(nm: String) = IndexCatalog.searchRadius(nm, 2.5, qs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    assert(radiusRows("t_lsh_fv") === radiusRows("t_lsh_fv_flat"))
+    val narrow = IndexCatalog.searchFilterAdaptive("t_lsh_fv", 4, qs, col("label") < 10).collect()
+    assert(narrow.nonEmpty && narrow.forall(_.getString(4) == "prefilter_scan"))
+    narrow.groupBy(_.getLong(0)).values.foreach { rows =>
+      assert(rows.map(_.getLong(2)).distinct.length === rows.length, "one label at several ranks")
+    }
+    val rec = IndexCatalog.reconstruct("t_lsh_fv", Seq(0L, 17L, 123L).toDF("id")).collect()
+    assert(rec.map(_.getLong(0)).sorted.toSeq === Seq(0L, 17L, 123L))
+    assert(IndexCatalog.stats("t_lsh_fv").head().getLong(0) === 256L)
   }
 
   test("save/load round-trips an IVF index") {

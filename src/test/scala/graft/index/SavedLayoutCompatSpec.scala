@@ -5,7 +5,9 @@ import graft.SparkSpec
 /**
  * Saved-layout compatibility: the indexes under test resources
  * `compat/` were written by an earlier release's `IndexCatalog.save`
- * (200 seeded 4-d vectors on a 1/8 grid, created with the params below).
+ * (200 seeded 4-d vectors on a 1/8 grid, created with the params below;
+ * `pcaivfhnsw` by the first release that saves a graph coarse under a
+ * pretransform).
  * Loading them must reproduce that release's search rows and decoded
  * codes exactly. A same-build save/load round trip cannot catch a change
  * to the persisted format; this spec can.
@@ -43,6 +45,16 @@ class SavedLayoutCompatSpec extends SparkSpec {
     (2, 0, 15, 0.234375), (2, 1, 172, 0.46875), (2, 2, 31, 0.609375), (2, 3, 94, 1.640625),
     (2, 4, 8, 1.90625))
 
+  // nprobe = 1 rows under a PCA2 pretransform (its flat and graph coarse agree here)
+  private val pcaProbe1Rows = Seq((0, 0, 180, 0.036934483430801635),
+    (0, 1, 23, 0.060907884548644375), (0, 2, 142, 0.0646359069036464),
+    (0, 3, 39, 0.0717958187854677), (0, 4, 182, 0.12199016603199908),
+    (1, 0, 88, 0.01696898963191984), (1, 1, 152, 0.03179254507757051),
+    (1, 2, 187, 0.041088386597361526), (1, 3, 52, 0.049266638693580944),
+    (1, 4, 158, 0.054448816333845684), (2, 0, 169, 0.018288161753766907),
+    (2, 1, 80, 0.07400060554675747), (2, 2, 128, 0.13193266169623996),
+    (2, 3, 15, 0.22235220879849749), (2, 4, 172, 0.3175163496537863))
+
   private val cases = Seq(
     // (fixture, factory, params at save, search rows, reconstruct of labels
     // 0, 17, 123 — None where a pretransform makes reconstruct throw)
@@ -74,25 +86,28 @@ class SavedLayoutCompatSpec extends SparkSpec {
         (1, 3, 67, 0.890625), (1, 4, 101, 1.09375), (2, 0, 15, 0.234375), (2, 1, 172, 0.46875),
         (2, 2, 31, 0.609375), (2, 3, 94, 1.640625), (2, 4, 8, 1.90625)),
       rawRec),
-    ("pcaivf", "IDMap,PCA2,IVF4,Flat", Map("nprobe" -> "1"),
-      Seq((0, 0, 180, 0.036934483430801635), (0, 1, 23, 0.060907884548644375),
-        (0, 2, 142, 0.0646359069036464), (0, 3, 39, 0.0717958187854677),
-        (0, 4, 182, 0.12199016603199908), (1, 0, 88, 0.01696898963191984),
-        (1, 1, 152, 0.03179254507757051), (1, 2, 187, 0.041088386597361526),
-        (1, 3, 52, 0.049266638693580944), (1, 4, 158, 0.054448816333845684),
-        (2, 0, 169, 0.018288161753766907), (2, 1, 80, 0.07400060554675747),
-        (2, 2, 128, 0.13193266169623996), (2, 3, 15, 0.22235220879849749),
-        (2, 4, 172, 0.3175163496537863)),
-      None),
+    ("pcaivf", "IDMap,PCA2,IVF4,Flat", Map("nprobe" -> "1"), pcaProbe1Rows, None),
     ("ivfhnswpq", "IDMap,IVF4_HNSW4,PQ2", Map("nprobe" -> "1", "refine" -> "2"), ivfProbe1Rows,
       Some(Map(0L -> Seq(0.875f, 0.5f, 0.875f, -2.0f),
         17L -> Seq(0.375f, 1.625f, 0.4375f, -1.875f),
-        123L -> Seq(0.75f, 0.625f, 0.875f, -0.75f)))))
+        123L -> Seq(0.75f, 0.625f, 0.875f, -0.75f)))),
+    // a graph coarse under a pretransform, with its `coarse_graph[_meta]`
+    ("pcaivfhnsw", "IDMap,PCA2,IVF4_HNSW4,Flat", Map("nprobe" -> "1"), pcaProbe1Rows, None))
+
+  private def fixtureDir(fixture: String): String =
+    new java.io.File(getClass.getResource(s"/compat/$fixture").toURI).getPath
+
+  /** the one claimed version directory of a save */
+  private def versionDir(save: String): java.io.File =
+    new java.io.File(save).listFiles().filter(_.getName.startsWith("v1-")).head
+
+  private def partsOf(save: String): Set[String] =
+    versionDir(save).listFiles().filter(_.isDirectory).map(_.getName).toSet
 
   for ((fixture, factory, params, rows, decoded) <- cases)
     test(s"$factory saved by an earlier release loads with its search rows and decoded codes") {
       import spark.implicits._
-      val dir = new java.io.File(getClass.getResource(s"/compat/$fixture").toURI).getPath
+      val dir = fixtureDir(fixture)
       val name = s"t_compat_$fixture"
       IndexCatalog.load(name, dir, spark)
       assert(IndexCatalog.meta(name).factory === factory)
@@ -106,4 +121,20 @@ class SavedLayoutCompatSpec extends SparkSpec {
         assert(rec === want)
       }
     }
+
+  test("a fresh save of each fixture's vectors writes exactly the fixture's parts") {
+    for ((fixture, factory, params, _, _) <- cases) {
+      val dir = fixtureDir(fixture)
+      val name = s"t_parts_$fixture"
+      IndexCatalog.create(name, 4, factory, "l2sq", params)
+      IndexCatalog.add(spark.read.parquet(s"${versionDir(dir)}/data").select("label", "vec"), name)
+      val out = java.nio.file.Files.createTempDirectory(s"graft_parts_$fixture").toString
+      IndexCatalog.save(name, out)
+      IndexCatalog.destroy(name)
+      // the one difference: saves stopped writing IMI's K^2 product table
+      // to `centroids` (load always rebuilt the quantizer from the half books)
+      val dropped = if (fixture == "imi") Set("centroids") else Set.empty[String]
+      assert(partsOf(out) === partsOf(dir) -- dropped, fixture)
+    }
+  }
 }
