@@ -116,7 +116,7 @@ sealed trait Codec extends Serializable {
   private[index] def scratchLen: Int = 0
 
   def scorer(queries: Array[(Long, Array[Float])]): CodedScorer =
-    new CodedScorer(this, queries.map { case (qid, q) => qid -> prepare(q) }.toMap)
+    new CodedScorer(this, queries.map { case (_, q) => prepare(q) })
 
   /** write the trained state into a save's parts directory (FAISS
     * saves trained quantizers in the index file) */
@@ -232,20 +232,21 @@ final case class SqCodec(vmin: Array[Float], vdiff: Array[Float], variant: Sq.Va
 /**
  * One query batch's code scoring, as the probed-list kernel reads it:
  * a row's code (column 2) once per row, each batch entry's prepared
- * state — its qid's LUT or query vector — once per task, and `distance`
+ * state — its LUT or query vector, by entry, so that two entries with
+ * one qid score with their own vectors — once per task, and `distance`
  * once per (code, entry), always after a `state` on the same instance.
  * Instances are deserialized per task, so the decode scratch needs no
  * locking.
  */
-final class CodedScorer(codec: Codec, prepared: Map[Long, Array[Float]])
+final class CodedScorer(codec: Codec, prepared: Array[Array[Float]])
     extends graft.search.Knn.ListScore[Array[Byte]] {
   // task-local scratch for the RQ/LSQ additive decode: avoids a
   // dim-length allocation PER CANDIDATE in the scan loop
   @transient private var scratch: Array[Float] = _
   def payload(row: InternalRow): Array[Byte] = row.getBinary(2)
-  def state(entry: (Long, Array[Float])): Array[Float] = {
+  def state(qi: Int, entry: (Long, Array[Float])): Array[Float] = {
     if (scratch == null) scratch = new Array[Float](codec.scratchLen)
-    prepared(entry._1)
+    prepared(qi)
   }
   def distance(ctx: Array[Float], code: Array[Byte]): Double =
     codec.distance(ctx, code, 0, code.length, scratch)

@@ -883,11 +883,17 @@ object IndexCatalog {
     collapsed.toMap ++ plain
   }
 
-  /** k-NN batch searches started since JVM start (calls, not rows
-    * scanned) — lets specs assert that executing one SQL `faiss_search`
-    * statement searched exactly once (a call duplicated by an optimizer
-    * rule would add a second search node, and a second search) */
+  /** batch searches (k-NN, filtered or range) started since JVM start
+    * (calls, not rows scanned) — lets specs assert that executing one
+    * SQL `faiss_search` statement searched exactly once (a call
+    * duplicated by an optimizer rule would add a second search node, and
+    * a second search), and that it searched at execution, whether or
+    * not the search ran a job */
   val searchesPlanned = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** bytes of the driver replicas ([[ShardReplica]]) the catalog's
+    * built indexes hold now */
+  private[graft] def replicaBytes: Long = ShardReplica.admittedBytes
 
   /** an entry point's one query collect, checked against index `name`'s dim */
   private def batchOf(name: String, queries: DataFrame): Array[(Long, Array[Float])] =
@@ -900,9 +906,11 @@ object IndexCatalog {
   /**
    * faiss_search twin: top-k per query row. The query batch is
    * collected and dim-checked at the call. On HNSW, Flat, IVF (IVF_HNSW,
-   * IMI) and coded indexes the search job runs at the call too (its
-   * errors surface here): HNSW, Flat and IVF return a local frame, and a
-   * coded index returns the exact re-rank of the candidates it found.
+   * IMI) and coded indexes the search runs at the call too (its errors
+   * surface here): HNSW, Flat and IVF return a local frame, and a coded
+   * index returns the exact re-rank of the candidates it found. An HNSW
+   * or Flat index held as a driver replica ([[ShardReplica]]) searches
+   * in-process with no job; any other runs one.
    * A batch whose shard candidates pass [[localMergeBound]] returns the
    * distributed ranking instead, and LSH returns its search plan; both
    * run when acted on.
@@ -937,8 +945,10 @@ object IndexCatalog {
 
   private[graft] def searchRadiusBatch(
       name: String, radius: Double, batch: Array[(Long, Array[Float])],
-      params: Map[String, String]): DataFrame =
+      params: Map[String, String]): DataFrame = {
+    searchesPlanned.incrementAndGet()
     build(name).searchRadius(batch, radius, searchParams(name, params))
+  }
 
   /**
    * faiss_search result-shape twin: one row per query carrying
@@ -978,6 +988,7 @@ object IndexCatalog {
       name: String, k: Int, queries: DataFrame, filter: Column,
       params: Map[String, String] = Map.empty): DataFrame = {
     val batch = batchOf(name, queries)
+    searchesPlanned.incrementAndGet()
     build(name).searchRestricted(batch, k, searchParams(name, params), _.where(filter))
   }
 
@@ -997,6 +1008,7 @@ object IndexCatalog {
       name: String, k: Int, batch: Array[(Long, Array[Float])], ids: DataFrame,
       params: Map[String, String]): DataFrame = {
     val idSet = ids.select(colAt(ids, 0).cast("long").as("label"))
+    searchesPlanned.incrementAndGet()
     build(name).searchRestricted(batch, k, searchParams(name, params),
       _.join(idSet, Seq("label"), "left_semi"))
   }
@@ -1329,15 +1341,32 @@ object IndexCatalog {
     override def close(): Unit = inner.close()
   }
 
-  /** Flat: the driver-local serve when it is on and admits the corpus
-    * (keyed by this cached layout, so it collects once), else the shard
-    * top-k kernel. Filtered searches take the kernel over the restricted
-    * scan ([[BuiltIndex.searchRestricted]]): a per-call restricted frame
-    * would collect a new driver copy on every call. */
+  /** Flat: the shard top-k kernel over the cached layout's partitions,
+    * run in-process over the index's [[ShardReplica]] when the replica
+    * budget admits one (taken on the first search: a sizing pass, then
+    * one collect), else in one job. A filtered search reads the
+    * replica's twin rows that pass its restriction when that folds on
+    * the driver ([[ShardReplica.restricted]]); any other takes the
+    * kernel over the restricted scan ([[BuiltIndex.searchRestricted]]). */
   final class FlatBuilt(val data: DataFrame, val meta: IndexMeta) extends BuiltIndex {
+    private[graft] val replica = new ShardReplica.Slot(data.sparkSession.sparkContext,
+      ShardReplica.flatBytes(data), ShardReplica.ofFlat(data))
+
     def search(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String]): DataFrame =
-      Knn.searchFlatLocal(data, batch, k, meta.metric, excludeSelf = false, padOf(params))
-        .getOrElse(Knn.searchFlatFast(data, batch, k, meta.metric, padToK = padOf(params)))
+      Knn.flatTopK(data.sparkSession, Knn.flatShards(data), replica.get.map(_.shards), batch, k, meta.metric,
+        excludeSelf = false, padOf(params))
+
+    override def searchRestricted(
+        batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
+        restrict: DataFrame => DataFrame): DataFrame =
+      replica.get.flatMap(_.restricted(data.sparkSession, restrict)) match {
+        case Some(rows) =>
+          Knn.flatTopK(data.sparkSession, Knn.flatShards(restrict(flatData).select(col("label"), col("vec"))),
+            Some(rows), batch, k, meta.metric, excludeSelf = false, padOf(params))
+        case None => super.searchRestricted(batch, k, params, restrict)
+      }
+
+    override def close(): Unit = { replica.close(); super.close() }
   }
 
   /** IVF, IVF_HNSW and IMI: raw vectors in the inverted lists of one
@@ -1623,7 +1652,8 @@ object IndexCatalog {
 
   /** most shard candidates (queries × k × shards) a shard top-k request
     * ([[Knn.shardTopK]]: HNSW's graph shards, the partitions of the Flat
-    * and probed-list kernels) sends to the driver to merge there: 2^20, or fewer when
+    * and probed-list kernels, or a replica's shards in-process) merges on
+    * the driver: 2^20, or fewer when
     * `spark.driver.maxResultSize` (0: unlimited) leaves less than 128
     * bytes a candidate (a task result holds each as a boxed
     * (entry, distance, label) triple). Past it the shards' top-k are
@@ -1674,16 +1704,49 @@ object IndexCatalog {
     * (qid, vector) pairs from `queries`' first two columns, null rows
     * dropped BEFORE the cap so they never count toward it. With an
     * index's `meta`, each dim is checked on the driver (FAISS's
-    * d == index->d assertion) before any search job is planned. */
+    * d == index->d assertion) before any search job is planned. A local
+    * table (`Seq(...).toDF`) is read in place: the same qid cast and
+    * vector conversion are evaluated over its rows, and no query is
+    * planned; any other frame is collected through [[collectBounded]]. */
   private[graft] def queryBatch(
       queries: DataFrame, what: String, meta: Option[IndexMeta] = None): Array[(Long, Array[Float])] = {
-    val batch = collectBounded(
-      queries
-        .select(colAt(queries, 0).cast("long").as("qid"), vec.vector(colAt(queries, 1)).as("qvec"))
-        .where(col("qid").isNotNull && col("qvec").isNotNull),
-      what).map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    val pairs = queries.select(colAt(queries, 0).cast("long").as("qid"), vec.vector(colAt(queries, 1)).as("qvec"))
+    val batch = localRows(pairs.queryExecution.analyzed) match {
+      case Some(rows) =>
+        val kept = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+        checkBatchSize(kept.length, maxQueryBatch(queries.sparkSession), what)
+        kept.map { r =>
+          val a = r.getArray(1)
+          // a null element reads as 0, as the collected Row's unboxing reads it
+          r.getLong(0) -> Array.tabulate(a.numElements())(i => if (a.isNullAt(i)) 0f else a.getFloat(i))
+        }.toArray
+      case None =>
+        collectBounded(pairs.where(col("qid").isNotNull && col("qvec").isNotNull), what)
+          .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    }
     checkDims(batch, meta)
     batch
+  }
+
+  /** the rows of a plan of projections over a local relation, evaluated
+    * as Spark's ConvertToLocalRelation folds them; None for any other
+    * plan, or one holding an expression that must not run here */
+  private def localRows(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, InterpretedMutableProjection, Unevaluable}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project, SubqueryAlias}
+    plan match {
+      case r: LocalRelation if !r.isStreaming => Some(r.data)
+      case SubqueryAlias(_, child) => localRows(child)
+      case Project(list, child) if list.forall(e => e.deterministic &&
+          !e.exists(x => x.isInstanceOf[Unevaluable] && !x.isInstanceOf[AttributeReference])) =>
+        localRows(child).map { rows =>
+          val proj = new InterpretedMutableProjection(list, child.output)
+          proj.initialize(0)
+          rows.map(proj(_).copy())
+        }
+      case _ => None
+    }
   }
 
   /** [[queryBatch]] over vectors already in driver memory (SQL
@@ -1740,12 +1803,15 @@ object IndexCatalog {
    * since graph edges can't span executors. efConstruction/efSearch
    * match the reference's parameter names.
    *
-   * `search` and a narrow `searchRestricted` run that job when they are
+   * `search` and a narrow `searchRestricted` search when they are
    * called, like the reference's in-process faiss_search, and return a
    * local result frame: a failing search (an executor lost, a bad
-   * parameter) surfaces at the call, not at a later action. A batch
-   * whose shard candidates (queries × k × shards) pass
-   * [[localMergeBound]] is too big to send to the driver: it returns
+   * parameter) surfaces at the call, not at a later action. When the
+   * replica budget admits the graphs (sized at build), the first search
+   * collects them into the index's [[ShardReplica]] and every search
+   * then walks them in-process with no job; otherwise each search runs
+   * one job. A batch whose shard candidates (queries × k × shards) pass
+   * [[localMergeBound]] is too big to merge on the driver: it returns
    * the distributed plan that ranks them with [[Knn.rankResults]]
    * instead, run when acted on.
    *
@@ -1760,20 +1826,28 @@ object IndexCatalog {
       val data: DataFrame, // (label, vec) — retained for filtered/exact paths + save
       val meta: IndexMeta,
       graphs: org.apache.spark.rdd.RDD[Nsw.Graph],
-      m: Int)
+      m: Int,
+      replicaBytes: Long) // the graphs' replica, estimated at build
       extends BuiltIndex {
 
+    private[graft] val replica = new ShardReplica.Slot(data.sparkSession.sparkContext,
+      replicaBytes, ShardReplica.ofGraphs(graphs))
+
     def search(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String]): DataFrame =
-      searchShards(batch, k, params, None)
+      searchShards(batch, k, params, graphs.map(g => (g, null: Long => Boolean)),
+        replica.get.map(_.shards.map(_.map(g => (g, null: Long => Boolean)))))
 
     /**
      * Selector inside the graph search (FAISS applies its IDSelector
      * within HNSW traversal, faiss_extension.cpp:940-1000). A NARROW
      * restriction (a Catalyst filter — searchFilter's predicate) keeps
      * the cached shard partitioning, so each shard's allowed labels
-     * (the restricted label scan, planned once, as an InternalRow RDD)
-     * ride zipPartitions to its own graph: no shuffle, no broadcast,
-     * traversal keeps full connectivity and only allowed labels surface.
+     * ride to its own graph: no shuffle, no broadcast, traversal keeps
+     * full connectivity and only allowed labels surface. On a replica
+     * they are the shard's twin rows that pass the restriction, read on
+     * the driver when it folds there ([[ShardReplica.restricted]]);
+     * otherwise the restricted label scan, planned once as an
+     * InternalRow RDD, rides zipPartitions.
      * A shuffling restriction (searchFilterSet's LEFT SEMI id join)
      * breaks shard alignment — that path stays the EXACT flat scan of
      * the restricted set (pushdown-friendly, and exact beats
@@ -1782,38 +1856,44 @@ object IndexCatalog {
     override def searchRestricted(
         batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
         restrict: DataFrame => DataFrame): DataFrame = {
-      val labels = restrict(data.select(col("label"), col("vec"))).select(col("label"))
-      import org.apache.spark.sql.catalyst.plans.logical._
-      val narrow = !labels.queryExecution.optimizedPlan.exists {
-        case _: Aggregate | _: Join | _: Window | _: RepartitionOperation | _: Deduplicate => true
-        case s: Sort => s.global
-        case _ => false
+      val local = replica.get.flatMap { r =>
+        r.restricted(data.sparkSession, restrict).map(_.zip(r.shards).map { case (rows, gs) =>
+          val allowed = HnswBuilt.allowedOf(rows.iterator)
+          gs.map(g => (g, allowed))
+        })
       }
+      lazy val labels = restrict(data.select(col("label"), col("vec"))).select(col("label"))
       lazy val labelRows = labels.queryExecution.toRdd
-      if (!narrow || labelRows.getNumPartitions != graphs.getNumPartitions)
+      def narrow: Boolean = {
+        import org.apache.spark.sql.catalyst.plans.logical._
+        !labels.queryExecution.optimizedPlan.exists {
+          case _: Aggregate | _: Join | _: Window | _: RepartitionOperation | _: Deduplicate => true
+          case s: Sort => s.global
+          case _ => false
+        }
+      }
+      // a restriction that folds on the driver is a filter, so narrow
+      if (local.isEmpty && (!narrow || labelRows.getNumPartitions != graphs.getNumPartitions))
         super.searchRestricted(batch, k, params, restrict)
-      else searchShards(batch, k, params, Some(labelRows))
+      else searchShards(batch, k, params,
+        graphs.zipPartitions(labelRows) { (git, rit) =>
+          val allowed = HnswBuilt.allowedOf(rit)
+          git.map(g => (g, allowed))
+        },
+        local)
     }
 
     /** the request path: every shard graph is searched for the whole
-      * batch (each under its own shard's allowed labels when
-      * shard-aligned `allowedLabels` rows are given), and the shards'
-      * top-k are merged by [[Knn.shardTopK]] */
+      * batch, each under its shard's selector (null: every label), and
+      * the shards' top-k are merged by [[Knn.shardTopK]], in-process over
+      * `local` (the replica's shards) when given */
     private def searchShards(batch: Array[(Long, Array[Float])], k: Int, params: Map[String, String],
-        allowedLabels: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]]
-    ): DataFrame = {
+        shards: => org.apache.spark.rdd.RDD[(Nsw.Graph, Long => Boolean)],
+        local: Option[Array[Array[(Nsw.Graph, Long => Boolean)]]]): DataFrame = {
       val efSearch = positiveIntParam(params, "efSearch", math.max(2 * k, 64))
       val metricId = VectorMath.metricId(meta.metric)
-      val shards = allowedLabels match {
-        case None => graphs.map(g => (g, null: Long => Boolean))
-        case Some(rows) =>
-          graphs.zipPartitions(rows) { (git, rit) =>
-            val allowed = new java.util.HashSet[Long]()
-            rit.foreach(r => allowed.add(r.getLong(0)))
-            git.map(g => (g, allowed.contains: Long => Boolean))
-          }
-      }
-      Knn.shardTopK(data.sparkSession, shards, batch, k, VectorMath.smallerIsCloser(metricId), padOf(params)) {
+      Knn.shardTopK(data.sparkSession, shards, batch, k, VectorMath.smallerIsCloser(metricId), padOf(params),
+          local) {
         (shard, qs) => shard.flatMap { case (g, allowed) =>
           qs.indices.iterator.flatMap { qi =>
             Nsw.search(g, qs(qi)._2, k, efSearch, metricId, allowed).iterator.map { case (d, l) => (qi, d, l) }
@@ -1824,7 +1904,7 @@ object IndexCatalog {
 
     /** driver snapshot of the per-shard graphs for injected replay
       * oracles — None past `maxNodes` total (gate-scale verification
-      * surface; the serving path never collects graphs). The cap is
+      * surface; the serving replica is the budgeted [[replica]]). The cap is
       * enforced by a DISTRIBUTED count BEFORE anything is collected,
       * and vectors are stripped executor-side: an over-cap corpus
       * never reaches the driver, and an under-cap snapshot carries
@@ -1836,12 +1916,20 @@ object IndexCatalog {
     }
 
     override def close(): Unit = {
+      replica.close()
       graphs.unpersist(blocking = false)
       super.close()
     }
   }
 
   object HnswBuilt {
+    /** the labels of (label, ...) rows, as a graph walk's selector */
+    private def allowedOf(rows: Iterator[org.apache.spark.sql.catalyst.InternalRow]): Long => Boolean = {
+      val allowed = new java.util.HashSet[Long]()
+      rows.foreach(r => allowed.add(r.getLong(0)))
+      allowed.contains
+    }
+
     def build(data: DataFrame, meta: IndexMeta, m: Int): HnswBuilt = {
       val efC = positiveIntParam(meta.params, "efConstruction", math.max(64, 2 * m))
       val metricId = VectorMath.metricId(meta.metric)
@@ -1857,8 +1945,9 @@ object IndexCatalog {
         .mapPartitions(it => Iterator.single(Nsw.build(it.toArray, m, efC, metricId)),
           preservesPartitioning = true)
         .cache()
-      graphs.count() // materialize graph construction once
-      new HnswBuilt(cached, meta, graphs, m)
+      // materializes graph construction once, and sizes the graphs' replica
+      val replicaBytes = graphs.map(ShardReplica.graphBytes).fold(0L)(_ + _)
+      new HnswBuilt(cached, meta, graphs, m, replicaBytes)
     }
   }
 

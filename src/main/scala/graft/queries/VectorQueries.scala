@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.vec
+import graft.index.IndexCatalog
 import graft.search.Knn
 
 /**
@@ -42,12 +43,19 @@ object VectorQueries {
         Tables.quant4(col("distance")).as("distance"))
   }
 
-  /** knn_flat_l2 through the DRIVER-LOCAL serving tier (bit-equal by
-    * design; this gate proves it against the same DuckDB oracle) */
+  /** knn_flat_l2 through the DRIVER-LOCAL serving tier: a catalog
+    * `IDMap,Flat` index, searched in-process over its driver replica
+    * (bit-equal by design; this gate proves it against the same DuckDB
+    * oracle) */
   private def knnLocalQuery(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set(graft.search.Knn.LocalServeThresholdConf, Long.MaxValue.toString)
-    try knnQuery("l2sq")(s, dir)
-    finally s.conf.unset(graft.search.Knn.LocalServeThresholdConf)
+    val name = "q_knn_flat_local"
+    if (IndexCatalog.exists(name)) IndexCatalog.destroy(name)
+    IndexCatalog.create(name, 64, "IDMap,Flat", "l2sq")
+    IndexCatalog.add(data(s, dir), name)
+    IndexCatalog.search(name, K, queriesDf(s, dir))
+      .select(
+        col("qid"), col("rank"), col("label"),
+        Tables.quant4(col("distance")).as("distance"))
   }
 
   /** binary IVF (FAISS IndexBinaryIVF shape): sign-bit codes, Hamming

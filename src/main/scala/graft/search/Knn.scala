@@ -16,8 +16,11 @@ import graft.functions.{vec, TopKHeap, VectorMath}
  * (duckdb-faiss-ext README "faiss_search"; test/sql/faiss.test).
  *
  * Every index search over a batch already on the driver ends in the
- * shard top-k route ([[shardTopK]]): one job runs a per-shard candidate
- * function and the driver merges the shards' top-k, with no shuffle.
+ * shard top-k route ([[shardTopK]]): a per-shard candidate function runs
+ * over every shard, in one job or, for an index that holds a driver
+ * replica of its shards ([[graft.index.ShardReplica]]: small HNSW and
+ * Flat indexes), in-process with no job; the driver merges the shards'
+ * top-k, with no shuffle.
  * The candidate functions live here: the Flat kernel
  * ([[flatCandidates]], for `knnJoin` and every catalog Flat path), the
  * probed-list kernel of IVF and coded indexes ([[probedCandidates]],
@@ -43,33 +46,6 @@ object Knn {
     * always takes the kernel. Like every Knn conf, a non-integer or
     * negative value throws naming the key. */
   private[graft] val FastFlatThresholdConf = "spark.graft.knn.fastFlatThresholdBytes"
-
-  /** Corpus-size ceiling (bytes, from optimizer plan stats) BELOW which
-    * [[searchFlat]] and a catalog Flat `search` serve the whole batch
-    * DRIVER-LOCALLY: the corpus is materialized once per DataFrame
-    * instance (same contract as `.cache()` — a new DataFrame
-    * re-collects) and every subsequent batch runs the Flat candidate
-    * function ([[flatCandidates]]) over that copy in-process, followed
-    * by the same merge as [[shardTopK]], skipping Spark's per-job
-    * plan/schedule/collect cost entirely. This is the serving shape the
-    * reference gets for free from an in-process FAISS index — at N = 2k
-    * the distributed scan pays 100x its compute in fixed job overhead.
-    * Results are bit-identical to the distributed plans (same function,
-    * same deterministic (distance, label) heap order; parity-spec'd).
-    * Default 0 = OFF: the distributed plan is the 100 TB default and
-    * the gates exercise it; serving deployments with small/replica
-    * indexes opt in. Row cap `localServeMaxRows` (default 1M) bounds
-    * driver memory LOUDLY — above it the distributed plan runs. */
-  private[graft] val LocalServeThresholdConf = "spark.graft.knn.localServeThresholdBytes"
-  private[graft] val LocalServeMaxRowsConf = "spark.graft.knn.localServeMaxRows"
-
-  // driver-resident [[flatRows]] corpora keyed by the DataFrame's
-  // QueryExecution — which does NOT override equals, so WeakHashMap's
-  // lookup degenerates to reference identity (a structurally-equal but
-  // distinct DataFrame re-collects; no deep plan hashing per lookup)
-  // and the entry lives exactly as long as the serving DataFrame does
-  private[graft] val localCorpora = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[AnyRef, Array[InternalRow]]())
 
   /** widen CPU-bound narrow scans to the session parallelism (no-op on
     * real multi-split inputs) — shared by the search paths and the
@@ -112,31 +88,27 @@ object Knn {
       metric: String,
       excludeSelf: Boolean = false,
       padToK: Boolean = false): DataFrame = {
-    // the batch is collected only by the driver-side routes (at most once)
-    lazy val batch = collectBatch(queries)
-    searchFlatLocal(data, batch, k, metric, excludeSelf, padToK).getOrElse {
-      val packThresh = graft.index.IndexCatalog.confLong(data.sparkSession, FastFlatThresholdConf, 1L << 30)
-      if (packThresh > 0 && knownSize(data).exists(_ >= packThresh)) {
-        // big-corpus path. Measured at the 1000x rung (1e10 pairs,
-        // knn_flat_big): the row join pays ~0.46 us/output-row of join
-        // plumbing plus as much again in the per-pair aggregate (412 s);
-        // a chunk-packed ListTopKScan re-serialized the corpus (215 s for
-        // the pack alone) and was rejected. The kernel touches each row
-        // once; same kernels and heap order -> bit-identical (spec'd).
-        searchFlatFast(data, batch, k, metric, excludeSelf = excludeSelf, padToK = padToK)
-      } else {
-        // null query rows carry no meaningful identity or vector; every
-        // path drops them (keeps fast/local/declarative outputs identical)
-        val cleanQueries = queries.where(col("qid").isNotNull && col("qvec").isNotNull)
-        val d = vec.dist(metric, col("vec"), col("qvec"))
-        val joined = widen(data).crossJoin(broadcast(cleanQueries))
-        val filtered = if (excludeSelf) joined.where(col("label") =!= col("qid")) else joined
-        // distance materializes in a codegen'd projection (fused loop inside
-        // WholeStageCodegen); the aggregate then only reads plain columns
-        rankResults(
-          filtered.select(col("qid"), col("label"), d.as("_dist")),
-          k, VectorMath.smallerIsCloser(VectorMath.metricId(metric)), padToK)
-      }
+    val packThresh = graft.index.IndexCatalog.confLong(data.sparkSession, FastFlatThresholdConf, 1L << 30)
+    if (packThresh > 0 && knownSize(data).exists(_ >= packThresh)) {
+      // big-corpus path. Measured at the 1000x rung (1e10 pairs,
+      // knn_flat_big): the row join pays ~0.46 us/output-row of join
+      // plumbing plus as much again in the per-pair aggregate (412 s);
+      // a chunk-packed ListTopKScan re-serialized the corpus (215 s for
+      // the pack alone) and was rejected. The kernel touches each row
+      // once; same kernels and heap order -> bit-identical (spec'd).
+      searchFlatFast(data, collectBatch(queries), k, metric, excludeSelf = excludeSelf, padToK = padToK)
+    } else {
+      // null query rows carry no meaningful identity or vector; every
+      // path drops them (keeps the kernel and declarative outputs identical)
+      val cleanQueries = queries.where(col("qid").isNotNull && col("qvec").isNotNull)
+      val d = vec.dist(metric, col("vec"), col("qvec"))
+      val joined = widen(data).crossJoin(broadcast(cleanQueries))
+      val filtered = if (excludeSelf) joined.where(col("label") =!= col("qid")) else joined
+      // distance materializes in a codegen'd projection (fused loop inside
+      // WholeStageCodegen); the aggregate then only reads plain columns
+      rankResults(
+        filtered.select(col("qid"), col("label"), d.as("_dist")),
+        k, VectorMath.smallerIsCloser(VectorMath.metricId(metric)), padToK)
     }
   }
 
@@ -162,45 +134,15 @@ object Knn {
     Some(sizeEst).filter(_ != BigInt(data.sparkSession.sessionState.conf.defaultSizeInBytes))
   }
 
-  /** the Flat kernel's input rows: (label bigint, vec array<float>) */
-  private def flatRows(data: DataFrame): DataFrame =
-    data.select(col("label").cast("long").as("label"), vec.vector(col("vec")).as("vec"))
-
-  /** Driver-local flat serve (see [[LocalServeThresholdConf]]):
-    * [[flatCandidates]] run in-process over a one-time driver copy of a
-    * SMALL corpus, then the [[shardTopK]] merge. None (a distributed
-    * plan runs) when the serve is off or does not admit the corpus, and
-    * (loudly) past the row cap: driver memory is a hard boundary. */
-  private[graft] def searchFlatLocal(
-      data: DataFrame, batch: => Array[(Long, Array[Float])], k: Int, metric: String,
-      excludeSelf: Boolean, padToK: Boolean): Option[DataFrame] = {
-    val spark = data.sparkSession
-    val localThresh = graft.index.IndexCatalog.confLong(spark, LocalServeThresholdConf, 0L)
-    if (localThresh == 0 || !knownSize(data).exists(_ <= localThresh)) return None
-    val key = data.queryExecution
-    var corpus = localCorpora.get(key)
-    if (corpus == null) {
-      val maxRows = graft.index.IndexCatalog.confLong(spark, LocalServeMaxRowsConf, 1L << 20)
-      // clamp so the +1 below can't overflow to a negative limit
-      val cap = math.min(maxRows, Int.MaxValue - 1L).toInt
-      corpus = GraftBridge.collectInternal(flatRows(
-          data.where(col("label").isNotNull && col("vec").isNotNull)) // null rows never count
-        .limit(cap + 1))._2
-      if (corpus.length > cap) {
-        System.err.println(
-          s"[graft] local-serve corpus exceeds $LocalServeMaxRowsConf=$cap rows; " +
-            "falling back to the distributed plan")
-        return None
-      }
-      localCorpora.put(key, corpus)
-    }
-    val qs = batch
-    Some(mergeTopK(spark, qs, k, VectorMath.smallerIsCloser(VectorMath.metricId(metric)), padToK,
-      flatCandidates(metric, k, excludeSelf)(corpus.iterator, qs)))
-  }
+  /** the Flat kernel's shard inputs: `data`'s widened partitions as
+    * (label bigint, vec array<float>) rows */
+  private[graft] def flatShards(data: DataFrame): RDD[InternalRow] =
+    widen(data).select(col("label").cast("long").as("label"), vec.vector(col("vec")).as("vec"))
+      .queryExecution.toRdd
 
   /** The Flat kernel as a [[shardTopK]] candidate function over
-    * [[flatRows]]: one pass fills a top-k heap per batch entry, with the
+    * [[flatShards]]' rows (any row whose columns 0 and 1 are the label
+    * and the vector): one pass fills a top-k heap per batch entry, with the
     * row join's distance kernels and (distance, label) order; entries
     * report as [[heapCandidates]] says. */
   private[graft] def flatCandidates(metric: String, k: Int, excludeSelf: Boolean)
@@ -242,11 +184,11 @@ object Knn {
 
   /** How the probed-list kernel reads one index kind's
     * (list_id int, label bigint, payload) rows: `payload` reads a row's
-    * vector or code once, `state` a batch entry's query state once per
-    * task, and `distance` compares the two. */
+    * vector or code once, `state` the query state of batch entry `qi`
+    * once per task, and `distance` compares the two. */
   private[graft] trait ListScore[P] extends Serializable {
     def payload(row: InternalRow): P
-    def state(entry: (Long, Array[Float])): Array[Float]
+    def state(qi: Int, entry: (Long, Array[Float])): Array[Float]
     def distance(state: Array[Float], payload: P): Double
   }
 
@@ -256,7 +198,7 @@ object Knn {
     val mid = VectorMath.metricId(metric)
     new ListScore[Array[Float]] {
       def payload(row: InternalRow): Array[Float] = row.getArray(2).toFloatArray()
-      def state(entry: (Long, Array[Float])): Array[Float] = entry._2
+      def state(qi: Int, entry: (Long, Array[Float])): Array[Float] = entry._2
       def distance(q: Array[Float], v: Array[Float]): Double = VectorMath.distArr(mid, v, q, 3.0)
     }
   }
@@ -276,7 +218,7 @@ object Knn {
       : (Iterator[InternalRow], Array[(Long, Array[Float])]) => Iterator[(Int, Double, Long)] = {
     val byList = entriesByList(lists)
     (rows, qs) => {
-      val states = qs.map(score.state)
+      val states = Array.tabulate(qs.length)(qi => score.state(qi, qs(qi)))
       val heaps = Array.fill(qs.length)(new TopKHeap(k, ascending))
       val offered = new Array[Boolean](qs.length)
       rows.foreach { row =>
@@ -303,7 +245,7 @@ object Knn {
       : (Iterator[InternalRow], Array[(Long, Array[Float])]) => Iterator[(Int, Double, Long)] = {
     val byList = entriesByList(lists)
     (rows, qs) => {
-      val states = qs.map(score.state)
+      val states = Array.tabulate(qs.length)(qi => score.state(qi, qs(qi)))
       rows.flatMap { row =>
         val qis = byList.getOrElse(row.getInt(0), Array.emptyIntArray)
         if (qis.isEmpty || row.isNullAt(2)) Iterator.empty
@@ -320,24 +262,59 @@ object Knn {
     * the probed lists of IVF and coded indexes:
     * `candidates` yields one shard's (batch entry, distance, label)
     * candidates. Up to `IndexCatalog.localMergeBound` candidates
-    * (entries × k × shards) one job returns them and [[mergeTopK]]
-    * merges them on the driver; past it, the distributed [[rankResults]]
-    * ranks them when acted on. Both key a top-k by qid. */
+    * (entries × k × shards) [[mergeTopK]] merges them on the driver:
+    * over a `replica` of the shards (the same shards, in partition
+    * order) `candidates` runs in-process on the [[replicaPool]], with no
+    * job; otherwise one job returns them. Past the bound, the
+    * distributed [[rankResults]] ranks `shards`' candidates when acted
+    * on. Both key a top-k by qid. `shards` is planned only when a job
+    * reads it. */
   private[graft] def shardTopK[S](
-      spark: SparkSession, shards: RDD[S], batch: Array[(Long, Array[Float])], k: Int,
-      ascending: Boolean, padToK: Boolean)(
+      spark: SparkSession, shards: => RDD[S], batch: Array[(Long, Array[Float])], k: Int,
+      ascending: Boolean, padToK: Boolean, replica: Option[Array[Array[S]]] = None)(
       candidates: (Iterator[S], Array[(Long, Array[Float])]) => Iterator[(Int, Double, Long)]): DataFrame = {
     require(k > 0, "k must be positive")
-    val perShard = shards.mapPartitions(candidates(_, batch))
-    if (batch.length.toLong * k * shards.getNumPartitions > graft.index.IndexCatalog.localMergeBound(spark)) {
+    lazy val perShard = shards.mapPartitions(candidates(_, batch))
+    val nShards = replica.fold(perShard.getNumPartitions)(_.length)
+    if (batch.length.toLong * k * nShards > graft.index.IndexCatalog.localMergeBound(spark)) {
       import spark.implicits._
       val qids = batch.map(_._1)
       rankResults(perShard.map { case (qi, d, l) => (qids(qi), l, d) }.toDF("qid", "label", "_dist"),
         k, ascending, padToK)
     } else {
-      val shardCands = spark.sparkContext.runJob(perShard, (it: Iterator[(Int, Double, Long)]) => it.toArray)
+      val shardCands = replica match {
+        case Some(local) =>
+          val pool = replicaPool(spark)
+          local.map { shard =>
+            pool.submit(new java.util.concurrent.Callable[Array[(Int, Double, Long)]] {
+              def call(): Array[(Int, Double, Long)] = candidates(shard.iterator, batch).toArray
+            })
+          }.map { f =>
+            try f.get() catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+          }
+        case None => spark.sparkContext.runJob(perShard, (it: Iterator[(Int, Double, Long)]) => it.toArray)
+      }
       mergeTopK(spark, batch, k, ascending, padToK, shardCands.iterator.flatMap(_.iterator))
     }
+  }
+
+  @volatile private var pool: java.util.concurrent.ExecutorService = _
+
+  /** the one pool that runs replica shards in-process: at most
+    * `defaultParallelism` daemon threads, made on first use */
+  private def replicaPool(spark: SparkSession): java.util.concurrent.ExecutorService = {
+    if (pool == null) synchronized {
+      if (pool == null) {
+        val threads = new java.util.concurrent.atomic.AtomicInteger()
+        pool = java.util.concurrent.Executors.newFixedThreadPool(
+          math.max(1, spark.sparkContext.defaultParallelism), { (r: Runnable) =>
+            val t = new Thread(r, s"graft-replica-${threads.incrementAndGet()}")
+            t.setDaemon(true)
+            t
+          })
+      }
+    }
+    pool
   }
 
   /** [[rankResults]]' output schema: (qid, rank, label, distance), none nullable */
@@ -489,7 +466,14 @@ object Knn {
       metric: String,
       excludeSelf: Boolean = false,
       padToK: Boolean = false): DataFrame =
-    shardTopK(data.sparkSession, flatRows(widen(data)).queryExecution.toRdd, qArr, k,
-      VectorMath.smallerIsCloser(VectorMath.metricId(metric)), padToK)(
+    flatTopK(data.sparkSession, flatShards(data), None, qArr, k, metric, excludeSelf, padToK)
+
+  /** [[searchFlatFast]] over given shards: `replica`, when given, holds
+    * `shards`' rows in partition order and is searched in-process */
+  private[graft] def flatTopK(
+      spark: SparkSession, shards: => RDD[InternalRow], replica: Option[Array[Array[InternalRow]]],
+      qArr: Array[(Long, Array[Float])], k: Int, metric: String, excludeSelf: Boolean,
+      padToK: Boolean): DataFrame =
+    shardTopK(spark, shards, qArr, k, VectorMath.smallerIsCloser(VectorMath.metricId(metric)), padToK, replica)(
       flatCandidates(metric, k, excludeSelf))
 }

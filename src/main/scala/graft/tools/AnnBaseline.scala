@@ -123,13 +123,15 @@ object AnnBaseline {
         graft.search.Knn.searchFlatFast(corpus, graft.search.Knn.collectBatch(queries), K, "l2sq"))
 
       // driver-local serving tier: the in-process shape the reference
-      // gets from FAISS — one driver copy of a SMALL corpus, then
-      // pure-JVM batches with the identical kernels (bit-equal,
-      // spec-pinned). This is what removes Spark's ~0.2 s fixed job
-      // cost at the honest N=2k rung; the 1M-row cap bounds it.
-      spark.conf.set(graft.search.Knn.LocalServeThresholdConf, Long.MaxValue.toString)
-      try run("flat_local", () => graft.search.Knn.searchFlat(corpus, queries, K, "l2sq"))
-      finally spark.conf.unset(graft.search.Knn.LocalServeThresholdConf)
+      // gets from FAISS — a catalog Flat index searched over its driver
+      // replica with the identical kernels (bit-equal, spec-pinned). This
+      // is what removes Spark's ~0.2 s fixed job cost at the honest N=2k
+      // rung; the replica budget bounds it (past it, one job a batch).
+      val flat = s"bb_flat_$corpusName"
+      if (IndexCatalog.exists(flat)) IndexCatalog.destroy(flat)
+      IndexCatalog.create(flat, 64, "IDMap,Flat", "l2sq")
+      IndexCatalog.add(corpus, flat)
+      run("flat_local", () => IndexCatalog.search(flat, K, queries))
 
       val ivf = s"bb_ivf_$corpusName"
       if (IndexCatalog.exists(ivf)) IndexCatalog.destroy(ivf)

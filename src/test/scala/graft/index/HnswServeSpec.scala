@@ -14,7 +14,7 @@ import graft.sql.GraftFunctions
  * must return, row for row and with the same schema, what the
  * distributed top-k route it replaced returns over the same shard graphs
  * (that route is kept below as [[ReferenceShardRoute]]), and a request
- * must run one job.
+ * must run no job on the index's driver replica and one job without it.
  */
 class HnswServeSpec extends SparkSpec {
   import HnswServeSpec._
@@ -37,6 +37,27 @@ class HnswServeSpec extends SparkSpec {
   }
 
   private def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  /** the (jobs, stages, shuffle bytes) `f` runs, counted by a listener
+    * between two drains of the bus */
+  private def counted(f: => Any): (Int, Int, Long) = {
+    var jobs = 0
+    var stages = 0
+    var shuffleBytes = 0L
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      import org.apache.spark.scheduler._
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = stages += 1
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = Option(t.taskMetrics).foreach { m =>
+        shuffleBytes += m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead
+      }
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { f; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    (jobs, stages, shuffleBytes)
+  }
 
   test("driver merge equals the distributed top-k route: metrics, pad, k past a shard, " +
     "an empty shard, one label on two shards, a NaN query, a repeated qid, narrow filters") {
@@ -96,26 +117,9 @@ class HnswServeSpec extends SparkSpec {
     IndexCatalog.create(name, Dim, "IDMap,HNSW8")
     IndexCatalog.add(points(new java.util.Random(5), 64).toDF("label", "vec"), name)
     val qs = queries
+    // the index with no replica: its searches take the runJob route
+    IndexCatalog.build(name).asInstanceOf[IndexCatalog.HnswBuilt].replica.close()
     IndexCatalog.search(name, 5, qs).collect() // builds outside the count
-    var jobs = 0
-    var stages = 0
-    var shuffleBytes = 0L
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      import org.apache.spark.scheduler._
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = stages += 1
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = Option(t.taskMetrics).foreach { m =>
-        shuffleBytes += m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead
-      }
-    }
-    def counted(f: => Any): (Int, Int, Long) = {
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      jobs = 0; stages = 0; shuffleBytes = 0L
-      spark.sparkContext.addSparkListener(listener)
-      try { f; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
-      finally spark.sparkContext.removeSparkListener(listener)
-      (jobs, stages, shuffleBytes)
-    }
     assert(counted(IndexCatalog.search(name, 5, qs).collect()) === ((1, 1, 0L)), "search")
     assert(counted(IndexCatalog.searchFilter(name, 5, qs, col("label") % 2 === 0).collect()) ===
       ((1, 1, 0L)), "searchFilter")
@@ -124,6 +128,31 @@ class HnswServeSpec extends SparkSpec {
     val sql = spark.sql(s"SELECT qid, faiss_search('$name', 5, qvec) AS rs FROM hs_jobs_q")
     assert(counted(sql.queryExecution.executedPlan)._1 === 0, "SQL faiss_search planning")
     assert(counted(assert(sql.collect().length === 5)) === ((1, 1, 0L)), "SQL faiss_search collect")
+    IndexCatalog.destroy(name)
+  }
+
+  test("an HNSW search, a narrow searchFilter and SQL faiss_search over a local query table run no job " +
+    "on the replica and return the runJob route's rows") {
+    import spark.implicits._
+    val name = "hs_replica"
+    IndexCatalog.create(name, Dim, "IDMap,HNSW8")
+    IndexCatalog.add(points(new java.util.Random(5), 64).toDF("label", "vec"), name)
+    val qs = queries
+    IndexCatalog.search(name, 5, qs).collect() // builds and takes the replica outside the count
+    val filter = col("label") % 2 === 0
+    def both() = (rowsOf(IndexCatalog.search(name, 5, qs)), rowsOf(IndexCatalog.searchFilter(name, 5, qs, filter)))
+    val replicated = both()
+    assert(counted(IndexCatalog.search(name, 5, qs).collect()) === ((0, 0, 0L)), "search")
+    assert(counted(IndexCatalog.searchFilter(name, 5, qs, filter).collect()) === ((0, 0, 0L)), "searchFilter")
+    GraftFunctions.registerAll(spark)
+    qs.createOrReplaceTempView("hs_replica_q")
+    val sql = spark.sql(s"SELECT qid, faiss_search('$name', 5, qvec) AS rs FROM hs_replica_q")
+    assert(counted(sql.queryExecution.executedPlan)._1 === 0, "SQL faiss_search planning")
+    assert(counted(assert(sql.collect().length === 5)) === ((0, 0, 0L)), "SQL faiss_search collect")
+    // the same index with its replica dropped: the runJob route, with the same rows
+    IndexCatalog.build(name).asInstanceOf[IndexCatalog.HnswBuilt].replica.close()
+    assert(both() === replicated)
+    IndexCatalog.destroy(name)
   }
 
   test("a batch past the driver-merge bound ranks the shards' top-k in the distributed " +

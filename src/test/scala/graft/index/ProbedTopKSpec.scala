@@ -197,15 +197,39 @@ class ProbedTopKSpec extends SparkSpec {
     val qs = Seq((0L, Array(0.2f, 0f)), (1L, Array(7.7f, 3.1f)), (1L, Array(2f, 2f))).toDF("qid", "qvec")
     def filtered(): Seq[Seq[String]] = Seq(
       rowsOf(IndexCatalog.searchFilter(name, 3, qs, col("label") % 2 === 0)),
-      rowsOf(IndexCatalog.searchFilter(name, 3, qs, col("label") > 40)))
-    val off = filtered()
-    spark.conf.set(Knn.LocalServeThresholdConf, Long.MaxValue.toString)
-    try {
-      IndexCatalog.search(name, 3, qs).collect() // the unfiltered search collects the layout once
-      val before = Knn.localCorpora.size()
-      assert(filtered() === off)
-      assert(Knn.localCorpora.size() <= before)
-    } finally spark.conf.unset(Knn.LocalServeThresholdConf)
+      rowsOf(IndexCatalog.searchFilter(name, 3, qs, col("label") > 40)),
+      rowsOf(IndexCatalog.searchFilter(name, 3, qs, element_at(col("vec"), 2) < 3f)))
+    IndexCatalog.search(name, 3, qs).collect() // takes the replica
+    val held = IndexCatalog.replicaBytes
+    val local = filtered()
+    assert(IndexCatalog.replicaBytes === held)
+    IndexCatalog.build(name).asInstanceOf[IndexCatalog.FlatBuilt].replica.close()
+    assert(IndexCatalog.replicaBytes < held)
+    assert(filtered() === local)
+    IndexCatalog.destroy(name)
+  }
+
+  test("a coded batch scores each entry with its own query state: a repeated qid's entries each " +
+    "equal the entry scanned alone") {
+    import spark.implicits._
+    val name = "ptk_repeated"
+    val rnd = new java.util.Random(31)
+    IndexCatalog.create(name, 4, "IDMap,IVF4,PQ2", "l2sq", Map("nprobe" -> "4"))
+    IndexCatalog.add((0 until 120).map(i => (i.toLong, Array.fill(4)(rnd.nextInt(17) / 4f))).toDF("label", "vec"), name)
+    val c = IndexCatalog.build(name).asInstanceOf[CodedBuilt]
+    val rows = c.data.queryExecution.toRdd.map(_.copy()).collect() // (list_id, label, code)
+    // qid 0 three times, with three different vectors
+    val batch = Array((0L, Array(0.5f, 1f, 2f, 3f)), (1L, Array(3f, 3f, 0f, 1f)),
+      (0L, Array(3.5f, 0f, 1.5f, 0.25f)), (0L, Array(2f, 2f, 2f, 2f)))
+    def scan(qs: Array[(Long, Array[Float])]): Seq[(Int, Double, Long)] =
+      Knn.probedCandidates(Array.fill(qs.length)(0 until 4: Seq[Int]), 8, ascending = true, c.codec.scorer(qs))(
+        rows.iterator, qs).toSeq
+    val together = scan(batch)
+    for (qi <- batch.indices) {
+      val alone = scan(Array(batch(qi)))
+      assert(alone.nonEmpty)
+      assert(together.filter(_._1 == qi).map(c => (c._2, c._3)) === alone.map(c => (c._2, c._3)), s"entry $qi")
+    }
     IndexCatalog.destroy(name)
   }
 }
@@ -247,30 +271,31 @@ private object ReferenceIvfRoute {
 
 /** The coded row plan as it stood before the probed-list kernel (the
   * packed chunk scan it replaced ranked identically): probe pairs joined
-  * to the restricted, list-pruned codes (crossed with the qids when there
-  * is one list), each code scored for its qid, the top k x refine labels
-  * per qid kept by `vec.topk`, then the exact re-rank. */
+  * to the restricted, list-pruned codes (crossed with the batch entries
+  * when there is one list), each code scored with its batch entry's
+  * query state, the top k x refine labels per qid kept by `vec.topk`,
+  * then the exact re-rank. */
 private object ReferenceCodedRoute {
   def search(c: CodedBuilt, qArr: Array[(Long, Array[Float])], k: Int, refine: Int, nprobe: Int,
       pad: Boolean, restrict: DataFrame => DataFrame): DataFrame = {
     val spark = c.data.sparkSession
     import spark.implicits._
     val scorer = c.codec.scorer(qArr)
-    val codeDist = udf((code: Array[Byte], qid: Long) => scorer.distance(scorer.state((qid, null)), code))
+    val codeDist = udf((code: Array[Byte], entry: Int) => scorer.distance(scorer.state(entry, null), code))
     val base = restrict(c.data)
     val candSource = c.coarse match {
       case Some(coarse) =>
         val probeOne = coarse.probe(nprobe)
-        val pairs = qArr.toSeq.flatMap { case (qid, qv) => probeOne(qv).map(l => (qid, l)) }
-        val lists = pairs.map(_._2).distinct
+        val pairs = qArr.toSeq.zipWithIndex.flatMap { case ((qid, qv), e) => probeOne(qv).map(l => (e, qid, l)) }
+        val lists = pairs.map(_._3).distinct
         val pruned =
           if (lists.size < coarse.nlist) base.where(col("list_id").isInCollection(lists)) else base
-        pruned.join(broadcast(pairs.toDF("qid", "list_id")), "list_id")
+        pruned.join(broadcast(pairs.toDF("entry", "qid", "list_id")), "list_id")
       case None =>
-        base.crossJoin(broadcast(qArr.map(_._1).toSeq.toDF("qid")))
+        base.crossJoin(broadcast(qArr.map(_._1).toSeq.zipWithIndex.map(_.swap).toDF("entry", "qid")))
     }
     val cands = candSource
-      .select(col("qid"), col("label"), codeDist(col("code"), col("qid")).as("_code_dist"))
+      .select(col("qid"), col("label"), codeDist(col("code"), col("entry")).as("_code_dist"))
       .groupBy(col("qid"))
       .agg(vec.topk(k * refine, col("_code_dist"), col("label"), ascending = true).as("nn"))
       .select(col("qid"), explode(col("nn.label")).as("label"))

@@ -46,30 +46,42 @@ class KnnSpec extends SparkSpec {
     assert(packedPad === rowPad)
   }
 
+  /** `data`'s Flat kernel search, served in-process over a driver replica of its shards */
+  private def replicaSearch(data: org.apache.spark.sql.DataFrame, queries: org.apache.spark.sql.DataFrame,
+      k: Int, metric: String, excludeSelf: Boolean = false, pad: Boolean = false) =
+    graft.index.ShardReplicaSpec.replicaFlat(data, Knn.collectBatch(queries), k, metric, excludeSelf, pad)
+
   test("driver-local serve is bit-equal to the distributed plan (metrics, excludeSelf, pad) and caches per DataFrame") {
     import spark.implicits._
     val queries = Seq(
       (0L, Array(0.2f, 0.0f)), (7L, Array(9.6f, 4.4f)), (55L, Array(5.0f, 5.0f)))
       .toDF("qid", "qvec")
-    def run(local: Boolean, metric: String, exSelf: Boolean, pad: Boolean) = {
-      if (local) spark.conf.set(Knn.LocalServeThresholdConf, Long.MaxValue.toString)
-      try Knn.searchFlat(data, queries, 4, metric, excludeSelf = exSelf, padToK = pad)
+    def run(local: Boolean, metric: String, exSelf: Boolean, pad: Boolean) =
+      (if (local) replicaSearch(data, queries, 4, metric, exSelf, pad)
+       else Knn.searchFlat(data, queries, 4, metric, excludeSelf = exSelf, padToK = pad))
         .collect().map(_.toString).sorted.toSeq
-      finally spark.conf.unset(Knn.LocalServeThresholdConf)
-    }
     for (metric <- Seq("l2sq", "ip", "cosine", "l1"); exSelf <- Seq(false, true)) {
       assert(run(local = true, metric, exSelf, pad = false) ===
         run(local = false, metric, exSelf, pad = false), s"metric=$metric excludeSelf=$exSelf")
     }
     assert(run(local = true, "l2sq", exSelf = false, pad = true) ===
       run(local = false, "l2sq", exSelf = false, pad = true))
-    // local plan is a LocalRelation (no distributed scan in the plan)
-    spark.conf.set(Knn.LocalServeThresholdConf, Long.MaxValue.toString)
+    // a catalog Flat index's DataFrame is taken as a replica on the first search only
+    val name = "knn_local_once"
+    graft.index.IndexCatalog.create(name, 2, "IDMap,Flat")
+    graft.index.IndexCatalog.add(data, name)
     try {
-      val plan = Knn.searchFlat(data, queries, 3, "l2sq")
-        .queryExecution.optimizedPlan.toString
+      val before = graft.index.IndexCatalog.replicaBytes
+      val first = graft.index.IndexCatalog.search(name, 3, queries)
+      val held = graft.index.IndexCatalog.replicaBytes
+      assert(held > before)
+      val second = graft.index.IndexCatalog.search(name, 3, queries)
+      assert(graft.index.IndexCatalog.replicaBytes === held)
+      assert(second.collect().toSeq === first.collect().toSeq)
+      // the local plan is a LocalRelation (no distributed scan in the plan)
+      val plan = second.queryExecution.optimizedPlan.toString
       assert(plan.contains("LocalRelation"), plan.take(300))
-    } finally spark.conf.unset(Knn.LocalServeThresholdConf)
+    } finally graft.index.IndexCatalog.destroy(name)
   }
 
   test("driver-local serve merges a repeated qid into one top-k, row for row as the distributed plan") {
@@ -78,12 +90,10 @@ class KnnSpec extends SparkSpec {
     val queries = Seq(
       (0L, Array(0.2f, 0.0f)), (7L, Array(9.6f, 4.4f)), (0L, Array(5.0f, 5.0f)))
       .toDF("qid", "qvec")
-    def run(local: Boolean, exSelf: Boolean, pad: Boolean) = {
-      if (local) spark.conf.set(Knn.LocalServeThresholdConf, Long.MaxValue.toString)
-      try Knn.searchFlat(data, queries, 4, "l2sq", excludeSelf = exSelf, padToK = pad)
+    def run(local: Boolean, exSelf: Boolean, pad: Boolean) =
+      (if (local) replicaSearch(data, queries, 4, "l2sq", exSelf, pad)
+       else Knn.searchFlat(data, queries, 4, "l2sq", excludeSelf = exSelf, padToK = pad))
         .collect().map(_.toString).sorted.toSeq
-      finally spark.conf.unset(Knn.LocalServeThresholdConf)
-    }
     for (exSelf <- Seq(false, true); pad <- Seq(false, true)) {
       val local = run(local = true, exSelf, pad)
       assert(local === run(local = false, exSelf, pad), s"excludeSelf=$exSelf pad=$pad")
@@ -94,20 +104,22 @@ class KnnSpec extends SparkSpec {
   test("driver-local serve: over-cap corpus falls back to the distributed plan; oversized batch fails loudly") {
     import spark.implicits._
     val queries = Seq((0L, Array(0.2f, 0.0f))).toDF("qid", "qvec")
-    spark.conf.set(Knn.LocalServeThresholdConf, Long.MaxValue.toString)
-    spark.conf.set(Knn.LocalServeMaxRowsConf, "5") // 100-row corpus exceeds it
+    val name = "knn_local_refused"
+    graft.index.IndexCatalog.create(name, 2, "IDMap,Flat")
+    graft.index.IndexCatalog.add(data, name)
     try {
-      val res = Knn.searchFlat(data, queries, 3, "l2sq").orderBy("rank").collect()
+      // the budget has no room: the index is refused its replica
+      val res = graft.index.ShardReplicaSpec.withBudgetFull(spark) {
+        graft.index.IndexCatalog.search(name, 3, queries).orderBy("rank").collect()
+      }
       assert(res.map(_.getLong(2)).toSeq === Seq(0L, 1L, 10L)) // distributed fallback answered
-      spark.conf.unset(Knn.LocalServeMaxRowsConf)
       spark.conf.set(graft.index.IndexCatalog.MaxQueryBatchConf, "0")
       val ex = intercept[IllegalStateException] {
-        Knn.searchFlat(data, queries, 3, "l2sq").collect()
+        graft.index.IndexCatalog.search(name, 3, queries).collect()
       }
       assert(ex.getMessage.contains("query batch exceeds"))
     } finally {
-      spark.conf.unset(Knn.LocalServeThresholdConf)
-      spark.conf.unset(Knn.LocalServeMaxRowsConf)
+      graft.index.IndexCatalog.destroy(name)
       spark.conf.unset(graft.index.IndexCatalog.MaxQueryBatchConf)
     }
   }
@@ -115,25 +127,17 @@ class KnnSpec extends SparkSpec {
   test("Knn confs: a non-integer or negative value throws naming the key") {
     import spark.implicits._
     val queries = Seq((0L, Array(0.2f, 0.0f))).toDF("qid", "qvec")
-    for (key <- Seq(Knn.FastFlatThresholdConf, Knn.LocalServeThresholdConf, Knn.LocalServeMaxRowsConf,
-           AnnJoin.PinPairsThresholdConf);
+    for (key <- Seq(Knn.FastFlatThresholdConf, AnnJoin.PinPairsThresholdConf);
          bad <- Seq("x", "-5")) {
-      // the row cap is read only on the local-serve path
-      if (key == Knn.LocalServeMaxRowsConf)
-        spark.conf.set(Knn.LocalServeThresholdConf, Long.MaxValue.toString)
       spark.conf.set(key, bad)
       try {
-        // a fresh DataFrame: a corpus already held for `data` would skip the cap
         val corpus = data.select(col("label"), col("vec"))
         val e = intercept[IllegalArgumentException](
           if (key == AnnJoin.PinPairsThresholdConf)
             AnnJoin.ivfJoin(queries, corpus, k = 3, nlist = 2, nprobe = 1).collect()
           else Knn.searchFlat(corpus, queries, 3, "l2sq").collect())
         assert(e.getMessage.contains(key), s"$key=$bad: ${e.getMessage}")
-      } finally {
-        spark.conf.unset(key)
-        spark.conf.unset(Knn.LocalServeThresholdConf)
-      }
+      } finally spark.conf.unset(key)
     }
   }
 
@@ -232,9 +236,7 @@ class KnnSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq
     val kernel = Knn.searchFlatFast(data.repartition(3), Knn.collectBatch(queries), 3, "l2sq", padToK = true)
       .collect().map(_.toString).sorted.toSeq
-    spark.conf.set(Knn.LocalServeThresholdConf, Long.MaxValue.toString)
-    val local = try Knn.searchFlat(data, queries, 3, "l2sq", padToK = true).collect().map(_.toString).sorted.toSeq
-      finally spark.conf.unset(Knn.LocalServeThresholdConf)
+    val local = replicaSearch(data, queries, 3, "l2sq", pad = true).collect().map(_.toString).sorted.toSeq
     assert(rowJoin.filter(_.startsWith("[1,")) ===
       (0 until 3).map(r => s"[1,$r,-1,${Double.MaxValue}]"))
     assert(kernel === rowJoin, "kernel")

@@ -16,8 +16,9 @@ import graft.index.IndexCatalog
  * per-shard function: the driver merge must return, row for row, what
  * [[Knn.rankResults]] returns over the same candidate rows (that route
  * is kept below as [[ReferenceFlatRoute]]) and what the row join of
- * [[Knn.searchFlat]] returns; a small batch runs one job with no
- * shuffle, and a batch past the merge bound keeps the distributed plan.
+ * [[Knn.searchFlat]] returns; a small batch runs no job on an index's
+ * driver replica and one job with no shuffle without one, and a batch
+ * past the merge bound keeps the distributed plan.
  */
 class ShardTopKSpec extends SparkSpec {
 
@@ -27,6 +28,27 @@ class ShardTopKSpec extends SparkSpec {
   }
 
   private def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  /** the (jobs, stages, shuffle bytes) `f` runs, counted by a listener
+    * between two drains of the bus */
+  private def counted(f: => Any): (Int, Int, Long) = {
+    var jobs = 0
+    var stages = 0
+    var shuffleBytes = 0L
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      import org.apache.spark.scheduler._
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = stages += 1
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = Option(t.taskMetrics).foreach { m =>
+        shuffleBytes += m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead
+      }
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { f; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    (jobs, stages, shuffleBytes)
+  }
 
   private def grid(n: Int): Seq[(Long, Array[Float])] =
     (0 until n).map(i => (i.toLong, Array((i % 10).toFloat, (i / 10).toFloat)))
@@ -66,33 +88,36 @@ class ShardTopKSpec extends SparkSpec {
     IndexCatalog.create(name, 2, "IDMap,Flat")
     IndexCatalog.add(grid(100).toDF("label", "vec"), name)
     val qs = Seq((0L, Array(0.2f, 0f)), (1L, Array(7.7f, 3.1f)), (1L, Array(2f, 2f))).toDF("qid", "qvec")
+    // the index with no replica: its searches take the runJob route
+    IndexCatalog.build(name).asInstanceOf[IndexCatalog.FlatBuilt].replica.close()
     IndexCatalog.search(name, 3, qs).collect() // builds outside the count
     // a corpus already split over the session's parallelism: nothing to widen
     val right = spark.createDataFrame(spark.sparkContext.parallelize(grid(100), 4)).toDF("label", "vec")
-    var jobs = 0
-    var stages = 0
-    var shuffleBytes = 0L
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      import org.apache.spark.scheduler._
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = stages += 1
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = Option(t.taskMetrics).foreach { m =>
-        shuffleBytes += m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead
-      }
-    }
-    def counted(f: => Any): (Int, Int, Long) = {
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      jobs = 0; stages = 0; shuffleBytes = 0L
-      spark.sparkContext.addSparkListener(listener)
-      try { f; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
-      finally spark.sparkContext.removeSparkListener(listener)
-      (jobs, stages, shuffleBytes)
-    }
     // the query batch is a local table: its collect runs no job
     assert(counted(assert(IndexCatalog.search(name, 3, qs).collect().length === 6)) === ((1, 1, 0L)), "search")
     assert(counted(IndexCatalog.searchFilter(name, 3, qs, col("label") % 2 === 0).collect()) === ((1, 1, 0L)),
       "searchFilter")
     assert(counted(Knn.knnJoin(qs, right, 3, "l2sq").collect()) === ((1, 1, 0L)), "knnJoin")
+    IndexCatalog.destroy(name)
+  }
+
+  test("Flat search and a Flat searchFilter over a small batch run no job on the replica and return " +
+    "the runJob route's rows") {
+    import spark.implicits._
+    val name = "stk_replica"
+    IndexCatalog.create(name, 2, "IDMap,Flat")
+    IndexCatalog.add(grid(100).toDF("label", "vec"), name)
+    val qs = Seq((0L, Array(0.2f, 0f)), (1L, Array(7.7f, 3.1f)), (1L, Array(2f, 2f))).toDF("qid", "qvec")
+    IndexCatalog.search(name, 3, qs).collect() // builds and takes the replica outside the count
+    val filter = col("label") % 2 === 0
+    def both() = (rowsOf(IndexCatalog.search(name, 3, qs)), rowsOf(IndexCatalog.searchFilter(name, 3, qs, filter)))
+    val replicated = both()
+    // the query batch is a local table: it is read with no job
+    assert(counted(assert(IndexCatalog.search(name, 3, qs).collect().length === 6)) === ((0, 0, 0L)), "search")
+    assert(counted(IndexCatalog.searchFilter(name, 3, qs, filter).collect()) === ((0, 0, 0L)), "searchFilter")
+    // the same index with its replica dropped: the runJob route, with the same rows
+    IndexCatalog.build(name).asInstanceOf[IndexCatalog.FlatBuilt].replica.close()
+    assert(both() === replicated)
     IndexCatalog.destroy(name)
   }
 
@@ -133,9 +158,7 @@ class ShardTopKSpec extends SparkSpec {
       val reference = rowsOf(ReferenceFlatRoute.search(data, batch, c.k, c.metric, c.excludeSelf, c.pad))
       val queries = c.batch.toDF("qid", "qvec")
       val rowJoin = rowsOf(Knn.searchFlat(data, queries, c.k, c.metric, c.excludeSelf, c.pad))
-      spark.conf.set(Knn.LocalServeThresholdConf, Long.MaxValue.toString)
-      val local = try rowsOf(Knn.searchFlat(data, queries, c.k, c.metric, c.excludeSelf, c.pad))
-        finally spark.conf.unset(Knn.LocalServeThresholdConf)
+      val local = rowsOf(graft.index.ShardReplicaSpec.replicaFlat(data, batch, c.k, c.metric, c.excludeSelf, c.pad))
       (merged == reference) :| s"merge $merged != reference $reference" &&
         (merged == rowJoin) :| s"merge $merged != row join $rowJoin" &&
         (merged == local) :| s"merge $merged != local serve $local"
